@@ -1,245 +1,58 @@
-"""Batched md5 for the Arrow kernels — no per-row Python hashing.
+"""Batched md5 for the Arrow kernels: one stdlib md5 path.
 
 The corpus kernels (minhash/simhash shingles, positional shingles, CDC
-boundary windows) hash one short string per shingle/token. Per-row
-``hashlib.md5(...)`` calls inside the batch loop were the dominant
-per-task cost of the dedup tier (r13 verdict item 3, guide §4.2: hand
-whole batches to vectorized native libraries — pyarrow.compute, NumPy,
-pandas, Polars, DuckDB — rather than looping over rows in Python).
+chunk hashes) hash one short string or byte slice per shingle/token.
+Each function here hashes a whole batch in one comprehension of
+``md5(...).digest()`` calls (no Python int per value), joins the
+16-byte digests into one bytes object, and reads the first 8 bytes of
+every digest with a single big-endian ``np.frombuffer`` view. Python
+workers never import DuckDB for this.
 
-This module hashes a whole batch in one call:
-
-- preferred path: DuckDB's vectorized ``md5_number_upper()`` over an
-  Arrow string array — a UBIGINT (the digest's first 8 bytes read
-  little-endian), so no 32-char hex string is materialized per row;
-  the oracle's prefix-60 value is ``byteswap(upper) >> 4`` (measured
-  0.11 s / 245k shingles vs 0.20 s for the hex-substr form and 0.31 s
-  for the memoized per-row ``hashlib`` loop on the sf0.1 corpus —
-  0.64 s unmemoized, the fresh-data regime that matters at scale);
-- hex fallback: ``('0x' || substr(md5(s),1,15))::BIGINT`` when the
-  DuckDB build lacks the number variant;
-- no-DuckDB fallback: one tight ``hashlib`` loop — same digests.
-
-The digest contract is unchanged and oracle-load-bearing:
+The digest contract is oracle-load-bearing:
 ``int(md5(utf8).hexdigest()[:15], 16)`` — the top 60 bits of the
-digest big-endian (bit-for-bit what DuckDB's hex form computes, pinned
-in tests/test_text_signals.py and the dedup-tier oracle rows).
+digest read big-endian, i.e. ``first_8_bytes >> 4`` (pinned in
+tests/test_md5_batch.py, tests/test_text_signals.py and the dedup-tier
+oracle rows).
 
-Overlapping shingles cannot share one Arrow buffer (offsets must be
-monotone), so ``md5_prefix60_slices`` materializes the slice bytes in
-bounded chunks with a single NumPy gather each — the §4.2
-offsets-over-one-buffer pattern, k× the text bytes per chunk, far
-cheaper than building k per-shingle Python strings, and capped at
-``_CHUNK`` slices so executor memory stays bounded regardless of batch
-size (§5).
-
-DuckDB runs with ``threads=1``: the kernel executes inside a Spark
-task, and per-task work must stay single-threaded so the engine's
-parallelism (and the bench's core-count contract) is Spark's alone.
+Overlapping shingles are hashed straight from ``memoryview`` slices of
+the shared token buffer, so no per-shingle copy of the text bytes is
+ever built: a batch holds only its 16-byte digests.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-_DUCK = None
-_DUCK_FAILED = False
-_HAS_NUM = False
-_CHUNK = 262_144  # slices per gather+hash chunk (bounds peak memory)
-
-_HEX_SQL = "SELECT ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM _md5_batch_in"
-_NUM_SQL = "SELECT md5_number_upper(s) AS h FROM _md5_batch_in"
+try:  # CPython's built-in md5: the digests hashlib.md5 gives, at about
+    # half its per-call cost on short inputs (no OpenSSL context set-up)
+    from _md5 import md5
+except ImportError:  # interpreter built without the built-in module
+    from hashlib import md5
 
 
-def _duck():
-    """Lazy per-process DuckDB connection (guide §4.5: heavyweight init
-    once per worker, amortized over every batch; Python workers are
-    reused across tasks)."""
-    global _DUCK, _DUCK_FAILED, _HAS_NUM
-    if _DUCK is None and not _DUCK_FAILED:
-        import os
-
-        if os.environ.get("SPARK_GRAFT_MD5_IMPL", "") == "hashlib":
-            _DUCK_FAILED = True  # explicit opt-out (diagnosis/benchmarks)
-            return None
-        try:
-            import duckdb
-
-            con = duckdb.connect()
-            con.execute("SET threads=1")
-            try:
-                con.execute("SELECT md5_number_upper('probe')").fetchall()
-                _HAS_NUM = True
-            except Exception:  # noqa: BLE001 — older build: hex path
-                _HAS_NUM = False
-            _DUCK = con
-        except Exception:  # noqa: BLE001 — no duckdb: hashlib fallback
-            _DUCK_FAILED = True
-    return _DUCK
-
-
-def _run_prefix60(con, tbl) -> np.ndarray:
-    import pyarrow as pa  # noqa: F401 — tbl is already Arrow
-
-    con.register("_md5_batch_in", tbl)
-    try:
-        h = (
-            con.execute(_NUM_SQL if _HAS_NUM else _HEX_SQL)
-            .fetch_arrow_table()
-            .column("h")
-            .to_numpy()
-        )
-    finally:
-        con.unregister("_md5_batch_in")
-    if _HAS_NUM:
-        # md5_number_upper = first 8 digest bytes little-endian; the
-        # hexdigest()[:15] contract is the first 7.5 bytes big-endian
-        h = (h.astype(np.uint64).byteswap() >> np.uint64(4)).astype(np.int64)
-    return np.ascontiguousarray(h, dtype=np.int64)
-
-
-def _prefix60_hashlib(strings) -> np.ndarray:
-    import hashlib
-
-    md5 = hashlib.md5
-    return np.fromiter(
-        (int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4 for s in strings),
-        dtype=np.int64,
-        count=len(strings),
-    )
-
-
-# Below this many values a tight C hashlib loop (~0.7 µs/value) beats
-# the DuckDB path: the per-call round trip costs ~2-3 ms warm, and a
-# FRESH Python worker (Spark reclaims idle workers between queries)
-# pays the duckdb import + connect (~0.3-0.5 s) on first use — measured
-# as bimodal kernel-stage walls. 32k puts every deduped k<=3 shingle
-# batch, token vocabulary, and probe set on the always-warm stdlib
-# loop; only genuinely large batches (positional k-shingles of a big
-# corpus split) amortize the vectorized scan.
-_SMALL_BATCH = 32768
+def _prefix60(digests: list[bytes]) -> np.ndarray:
+    # 16-byte digests back to back: every other big-endian u8 is a
+    # digest's first 8 bytes; >> 4 keeps the hexdigest()[:15] bits
+    return (np.frombuffer(b"".join(digests), ">u8")[::2] >> 4).astype(np.int64)
 
 
 def md5_prefix60_strings(strings) -> np.ndarray:
     """``int(md5(s).hexdigest()[:15], 16)`` for every string, as int64."""
-    if len(strings) == 0:
-        return np.empty(0, dtype=np.int64)
-    con = _duck() if len(strings) >= _SMALL_BATCH else None
-    if con is None:
-        return _prefix60_hashlib(strings)
-    import pyarrow as pa
-
-    return _run_prefix60(
-        con, pa.table({"s": pa.array(strings, type=pa.large_string())})
-    )
+    return _prefix60([md5(s.encode()).digest() for s in strings])
 
 
 def md5_prefix60_slices(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Prefix-60 md5 of ``buf[starts[i] : starts[i]+lens[i]]`` per i.
 
     ``buf`` is a uint8 array of ASCII bytes (the tokenizer only emits
-    [a-z0-9 ]). Chunked vectorized gathers build the concatenated slice
-    buffers; one DuckDB call per chunk hashes them.
+    [a-z0-9 ]).
     """
-    n = len(starts)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    con = _duck() if n >= _SMALL_BATCH else None
-    if con is None:
-        mv = memoryview(buf)
-        import hashlib
-
-        md5 = hashlib.md5
-        return np.fromiter(
-            (
-                int.from_bytes(md5(mv[s : s + ln]).digest()[:8], "big") >> 4
-                for s, ln in zip(starts.tolist(), lens.tolist())
-            ),
-            dtype=np.int64,
-            count=n,
-        )
-    import pyarrow as pa
-
-    starts = np.asarray(starts, dtype=np.int64)
-    lens32 = np.asarray(lens, dtype=np.int32)
-    out = np.empty(n, dtype=np.int64)
-    for c0 in range(0, n, _CHUNK):
-        c1 = min(c0 + _CHUNK, n)
-        m = c1 - c0
-        L = lens32[c0:c1]
-        S = starts[c0:c1]
-        total = int(L.sum(dtype=np.int64))
-        # int32 offsets unless this chunk's bytes exceed them
-        # (pathologically long tokens): then int64 + LargeString
-        odt, cls = (
-            (np.int32, pa.StringArray)
-            if total < 2**31
-            else (np.int64, pa.LargeStringArray)
-        )
-        offsets = _scratch(f"off_{odt.__name__}", m + 1, odt)
-        offsets[0] = 0
-        np.cumsum(L, out=offsets[1:])
-        # position j of the chunk buffer reads buf[S[i] + (j - offsets[i])].
-        # Built as cumsum of a delta vector (+1 inside a slice, a jump at
-        # each slice start) entirely in REUSED scratch buffers: fresh
-        # multi-MB allocations here re-fault their pages on every call,
-        # and under co-tenant memory pressure those faults measured
-        # 0.8-2.3 s spikes (vs ~0.1 s warm) — the scratch pool pays them
-        # once per worker process.
-        if total < 2**31 and not (L == 0).any():
-            delta = _scratch("delta", total, np.int64)
-            delta.fill(1)
-            delta[0] = S[0]
-            if m > 1:
-                delta[offsets[1:m]] = S[1:] - S[:-1] - L[:-1].astype(np.int64) + 1
-            pos = _scratch("pos", total, np.int64)
-            np.cumsum(delta, out=pos)
-            values = _scratch("values", total, np.uint8)
-            np.take(buf, pos, out=values)
-        else:  # empty slices or >2 GiB chunk: the plain allocation path
-            pos = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(offsets[:-1].astype(np.int64), L)
-                + np.repeat(S, L)
-            )
-            values = np.ascontiguousarray(buf[pos])
-        arr = cls.from_buffers(m, pa.py_buffer(offsets), pa.py_buffer(values))
-        out[c0:c1] = _run_prefix60(con, pa.table({"s": arr}))
-    return out
-
-
-_SCRATCH: dict = {}
-
-
-def _scratch(name: str, size: int, dtype) -> np.ndarray:
-    """Growable per-process scratch arrays (views of cached buffers)."""
-    a = _SCRATCH.get(name)
-    if a is None or a.size < size:
-        a = np.empty(max(int(size * 1.25), 1024), dtype=dtype)
-        _SCRATCH[name] = a
-    return a[:size]
+    mv = memoryview(buf)
+    return _prefix60(
+        [md5(mv[s : s + n]).digest() for s, n in zip(starts.tolist(), lens.tolist())]
+    )
 
 
 def md5_hex_strings(strings) -> list[str]:
     """Full 32-char md5 hexdigest per string (CDC chunk hashes)."""
-    if len(strings) == 0:
-        return []
-    con = _duck() if len(strings) >= _SMALL_BATCH else None
-    if con is None:
-        import hashlib
-
-        return [hashlib.md5(s.encode()).hexdigest() for s in strings]
-    import pyarrow as pa
-
-    tbl = pa.table({"s": pa.array(strings, type=pa.large_string())})
-    con.register("_md5_batch_in", tbl)
-    try:
-        out = (
-            con.execute("SELECT md5(s) AS h FROM _md5_batch_in")
-            .fetch_arrow_table()
-            .column("h")
-            .to_pylist()
-        )
-    finally:
-        con.unregister("_md5_batch_in")
-    return out
+    return [md5(s.encode()).hexdigest() for s in strings]

@@ -60,30 +60,18 @@ def shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-# token/shingle -> md5-prefix hash, memoized across rows (corpus
-# vocabulary is far smaller than token count).
-_HASH_CACHE: dict[str, int] = {}
+_SCRATCH: dict = {}
 
 
-def _md5_hash(s: str) -> int:
-    h = _HASH_CACHE.get(s)
-    if h is None:
-        import hashlib
+def _scratch(name: str, size: int, dtype):
+    """Growable per-process scratch arrays (views of cached buffers)."""
+    import numpy as np
 
-        h = int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-        if len(_HASH_CACHE) < 1_000_000:  # bound executor memory
-            _HASH_CACHE[s] = h
-    return h
-
-
-def _shingle_list(text: str | None, n: int, pat) -> list[int]:
-    toks = [x for x in pat.split(text.lower()) if x] if text else []
-    hs = dict.fromkeys(  # distinct shingles then distinct hashes,
-        # first-occurrence order — mirrors list_distinct twice
-        _md5_hash(" ".join(toks[i : i + n])) % HASH_MOD
-        for i in range(max(len(toks) - (n - 1), 0))
-    )
-    return list(hs)
+    a = _SCRATCH.get(name)
+    if a is None or a.size < size:
+        a = np.empty(max(int(size * 1.25), 1024), dtype=dtype)
+        _SCRATCH[name] = a
+    return a[:size]
 
 
 def _batch_shingle_hashes(texts, n: int, pat, mod: int | None = None):
@@ -95,7 +83,8 @@ def _batch_shingle_hashes(texts, n: int, pat, mod: int | None = None):
     start to token i+n-1's end — tokens are ASCII by construction, so
     char offsets are byte offsets). Per SHINGLE everything is one NumPy
     gather + one batched md5 (functions/md5_batch). Digests identical
-    to the per-row ``_md5_hash`` form; the oracle contract is untouched.
+    to ``int(md5(shingle).hexdigest()[:15], 16)``; the oracle contract
+    is untouched.
 
     Returns ``(counts, flat)``: shingle count per doc (int64 array, doc
     order) and the flat int64 hash array in (doc, position) order.
@@ -188,7 +177,7 @@ def _shingle_kernel_factory(n: int):
     def kernel(texts):
         counts, flat = _batch_shingle_hashes(texts, n, pat, mod=HASH_MOD)
         # pd.unique = first-occurrence-order distinct (C hash table) —
-        # same order/content as the dict.fromkeys form in _shingle_list;
+        # mirrors list_distinct in the oracle's shingle SQL;
         # ndarray elements avoid per-hash Python int materialization
         return pd.Series(
             [
@@ -233,8 +222,6 @@ def _signature_kernel_factory(n: int):
             # temporaries per call, whose page faults stalled the
             # kernel for SECONDS under co-tenant memory pressure
             # (measured 0.4 s -> 3-6 s intermittents; rss flat).
-            from data_pipeline_project_spark.functions.md5_batch import _scratch
-
             prod = _scratch("mh_prod", 16 * len(dist), np.int64).reshape(
                 16, len(dist)
             )
@@ -416,8 +403,6 @@ def _simhash_kernel_factory(bits: int):
             # to one (ntok,) scratch row — the (ntok, 60) matrix form
             # allocated ~130 MB fresh per call, whose page faults
             # stall for seconds under co-tenant memory pressure.
-            from data_pipeline_project_spark.functions.md5_batch import _scratch
-
             offs = np.empty(len(nz), dtype=np.int64)
             offs[0] = 0
             np.cumsum(dl[nz][:-1], out=offs[1:])

@@ -366,12 +366,12 @@ def set_union_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     at these sizes cache materialization costs more than the repeated
     pushed-down scans, so the scans stay.
 
-    r14 opt (verdict item 5): EXCEPT as distinct + LEFT ANTI join —
-    Spark plans exceptAll through a sort-based replicate-rows rewrite;
-    `A EXCEPT B == distinct(A) ANTI JOIN B` is the set-semantics
-    identity (the trailing .distinct() collapsed exceptAll's multiset
-    result anyway), and the anti join hash-builds the small distinct
-    key set instead of sorting both sides at scale."""
+    EXCEPT is ``DataFrame.subtract`` (SQL EXCEPT DISTINCT): Spark
+    rewrites it into a distinct + null-safe LEFT ANTI hash join (keys
+    ``coalesce(k, 0), isnull(k)``), so there is no sort-based
+    replicate-rows Generate (exceptAll's plan), and a NULL key on both
+    sides is removed as SQL EXCEPT removes it. A plain equi anti join
+    (``k = k``) never matches NULL and would keep it."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     building = c.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
@@ -380,7 +380,7 @@ def set_union_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u = building.union(with_f).distinct()
     i = building.intersect(with_f)
-    e = building.dropDuplicates(["c_custkey"]).join(with_f, "c_custkey", "left_anti")
+    e = building.subtract(with_f)
     return (
         u.agg(F.count(F.lit(1)).alias("n")).select(F.lit("union").alias("op"), "n")
         .unionAll(i.agg(F.count(F.lit(1)).alias("n")).select(F.lit("intersect").alias("op"), "n"))
@@ -751,24 +751,18 @@ def approx_distinct_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer now exists only in the last per-partition merge (rows =
     groups x partitions). Paired A/B 1.43 -> 0.63 s median."""
     orders = _t(spark, sf_dir, "orders")
-    # null keys filtered up front: COUNT(DISTINCT c) and the HLL both
-    # skip nulls, so the deduped-pairs rewrite must too. Known
-    # assumption (r13 advice, accepted): a priority group whose
-    # custkeys are ALL null would drop out entirely here where the
-    # grouped original emitted it with exact_custkeys=0 — impossible
-    # on this schema (o_custkey is a join key, never null), so group
-    # coverage is preserved without re-joining the unfiltered frame.
-    pairs = orders.where(F.col("o_custkey").isNotNull()).groupBy(
-        "o_orderpriority", "o_custkey"
-    ).agg(F.lit(1).alias("_one"))
+    # a (priority, NULL) pair survives the dedup, so every priority
+    # group is emitted; count(o_custkey) and the HLL both skip it, as
+    # COUNT(DISTINCT o_custkey) does (an all-NULL group gives 0, TRUE)
+    pairs = orders.groupBy("o_orderpriority", "o_custkey").agg(
+        F.lit(1).alias("_one")
+    )
+    n = F.count("o_custkey")
     return pairs.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("exact_custkeys"),
+        n.alias("exact_custkeys"),
         (
-            F.abs(
-                F.approx_count_distinct("o_custkey", 0.02)
-                - F.count(F.lit(1))
-            )
-            <= F.count(F.lit(1)) * F.lit(0.05)
+            F.abs(F.approx_count_distinct("o_custkey", 0.02) - n)
+            <= n * F.lit(0.05)
         ).alias("approx_within_bounds"),
     )
 

@@ -1,10 +1,10 @@
-"""functions/md5_batch — the r14 batched-md5 helpers behind the dedup/
+"""functions/md5_batch — the batched-md5 helpers behind the dedup/
 corpus Arrow kernels. The digest contract is oracle-load-bearing
-(int(md5(utf8).hexdigest()[:15], 16)), so every path — DuckDB
-vectorized, small-batch hashlib shortcut, slice gather — must agree
-with hashlib bit-for-bit."""
+(int(md5(utf8).hexdigest()[:15], 16)), so the one hashing path must
+agree with hashlib bit-for-bit at every batch size."""
 
 import hashlib
+import subprocess
 import sys
 from pathlib import Path
 
@@ -36,53 +36,63 @@ EDGE = [
 ]
 
 
-def test_prefix60_strings_small_batch_matches_hashlib():
-    # below _SMALL_BATCH => hashlib loop path
-    got = md5_batch.md5_prefix60_strings(EDGE)
-    assert got.dtype == np.int64
-    assert got.tolist() == [_ref60(s) for s in EDGE]
+# sizes span one value, a typical kernel batch and a batch above the
+# 32,768 values where an earlier version switched hashing engines
+SIZES = (1, 50, 40_000)
 
 
-def test_prefix60_strings_large_batch_matches_hashlib():
-    strings = [f"value-{i}-{'p' * (i % 37)}" for i in range(md5_batch._SMALL_BATCH + 500)]
+@pytest.mark.parametrize("n", SIZES)
+def test_prefix60_strings_matches_hashlib(n):
+    strings = (EDGE + [f"value-{i}-{'p' * (i % 37)}" for i in range(n)])[:n]
     got = md5_batch.md5_prefix60_strings(strings)
+    assert got.dtype == np.int64
     assert got.tolist() == [_ref60(s) for s in strings]
 
 
-def test_prefix60_slices_both_paths_match_hashlib():
-    # build a shared ascii buffer with overlapping slices
+@pytest.mark.parametrize("n", SIZES)
+def test_prefix60_slices_matches_hashlib(n):
+    # a shared ascii buffer with overlapping slices, empty ones included
     base = b"the quick brown fox jumps over the lazy dog 0123456789 " * 300
     buf = np.frombuffer(base, dtype=np.uint8)
     rng = np.random.RandomState(7)
-    for n in (50, md5_batch._SMALL_BATCH + 100):  # hashlib path, duck path
-        starts = rng.randint(0, len(base) - 64, size=n).astype(np.int64)
-        lens = rng.randint(0, 64, size=n).astype(np.int64)  # incl. empty
-        got = md5_batch.md5_prefix60_slices(buf, starts, lens)
-        want = [
-            int(hashlib.md5(base[s : s + ln]).hexdigest()[:15], 16)
-            for s, ln in zip(starts.tolist(), lens.tolist())
-        ]
-        assert got.tolist() == want
+    starts = rng.randint(0, len(base) - 64, size=n).astype(np.int64)
+    lens = rng.randint(0, 64, size=n).astype(np.int64)
+    got = md5_batch.md5_prefix60_slices(buf, starts, lens)
+    assert got.dtype == np.int64
+    want = [
+        int(hashlib.md5(base[s : s + ln]).hexdigest()[:15], 16)
+        for s, ln in zip(starts.tolist(), lens.tolist())
+    ]
+    assert got.tolist() == want
 
 
 def test_md5_hex_strings_matches_hashlib():
-    big = [f"doc {i} body" for i in range(md5_batch._SMALL_BATCH + 10)]
-    for strings in (EDGE, big):  # small + large paths
+    for n in SIZES:
+        strings = (EDGE + [f"doc {i} body" for i in range(n)])[:n]
         got = md5_batch.md5_hex_strings(strings)
         assert got == [hashlib.md5(s.encode()).hexdigest() for s in strings]
 
 
-def test_hashlib_fallback_env_knob(monkeypatch):
-    # the opt-out knob must force the loop path and still agree
-    monkeypatch.setenv("SPARK_GRAFT_MD5_IMPL", "hashlib")
-    monkeypatch.setattr(md5_batch, "_DUCK", None)
-    monkeypatch.setattr(md5_batch, "_DUCK_FAILED", False)
-    strings = [f"k{i}" for i in range(md5_batch._SMALL_BATCH + 5)]
-    got = md5_batch.md5_prefix60_strings(strings)
-    assert got.tolist() == [_ref60(s) for s in strings]
-    assert md5_batch._DUCK is None  # duckdb never engaged
-    # restore lazy init for later tests in this process
-    monkeypatch.setattr(md5_batch, "_DUCK_FAILED", False)
+def test_kernels_never_import_duckdb():
+    """The md5 kernels and their callers run in Python workers without
+    DuckDB: a fresh interpreter importing every caller and calling all
+    three functions has no duckdb module loaded."""
+    code = """
+import sys
+import numpy as np
+import data_pipeline_project_spark.operators.dedup
+import data_pipeline_project_spark.operators.text
+import data_pipeline_project_spark.operators.corpus
+import data_pipeline_project_spark.streaming.distinct_stream
+from data_pipeline_project_spark.functions import md5_batch as m
+big = [f"s{i}" for i in range(40_000)]
+m.md5_prefix60_strings(big)
+m.md5_hex_strings(big)
+buf = np.frombuffer(b"abc def " * 10_000, dtype=np.uint8)
+m.md5_prefix60_slices(buf, np.arange(40_000, dtype=np.int64), np.full(40_000, 5))
+assert "duckdb" not in sys.modules, "duckdb imported"
+"""
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True, timeout=300)
 
 
 def test_empty_inputs():
