@@ -8,8 +8,8 @@ file on the first bad row (F7), then bulk-casting types (P4/P5).
 Spark-first re-expression: every predicate is a columnar expression
 evaluated in whole-stage codegen; error messages are conditionally-null
 string expressions combined with ``concat_ws``; the file-level
-all-or-nothing gate is a broadcast anti-join against the (tiny)
-distinct set of bad files. ~150k rows/s pandas becomes JVM-vectorized
+all-or-nothing gate is a literal IN-filter on the (tiny) collected set
+of bad files. ~150k rows/s pandas becomes JVM-vectorized
 and embarrassingly parallel over files/partitions — no Python in the
 hot path at all.
 """
@@ -19,6 +19,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,21 +34,19 @@ ERROR_COL = "error_reason"
 ROW_COL = "_csv_row"  # CSV line number: header = 1, first data row = 2
 
 
-def normalize_na_tokens(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """P3/S5 — map the reference's NA token list ('', '#N/A', 'NULL',
-    'NaN', ...; pipeline.py:286) to real nulls. Spark's CSV reader only
-    honors a single nullValue, so extra tokens are normalized post-read
-    with a columnar isin()."""
-    cols = list(cols or df.columns)
+def na_token_columns(cols: Sequence[str]) -> dict[str, Column]:
+    """P3/S5 — the ``withColumns`` map that turns the reference's NA
+    token list ('', '#N/A', 'NULL', 'NaN', ...; pipeline.py:286) into
+    real nulls. Spark's CSV reader only honors a single nullValue, so
+    extra tokens are normalized post-read with a columnar isin(). A
+    stream builds the map once and applies it to every micro-batch."""
     tokens = [t for t in NA_TOKENS if t]  # '' handled separately (trim first)
-    return df.withColumns(
-        {
-            c: F.when(
-                F.trim(F.col(c)) == "", F.lit(None).cast("string")
-            ).when(F.col(c).isin(tokens), F.lit(None).cast("string")).otherwise(F.col(c))
-            for c in cols
-        }
-    )
+    return {
+        c: F.when(
+            F.trim(F.col(c)) == "", F.lit(None).cast("string")
+        ).when(F.col(c).isin(tokens), F.lit(None).cast("string")).otherwise(F.col(c))
+        for c in cols
+    }
 
 
 def parse_timestamp_lenient(col: Column) -> Column:
@@ -155,37 +154,34 @@ def split_valid_invalid(
     rules: Sequence[Rule],
     file_col: str | None = None,
     strict: bool = True,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """F7 — split into (valid, invalid) frames.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """F7 — split into (valid, invalid, flagged) frames.
+
+    The flagged frame (``df`` plus ``error_reason``) is persisted, so
+    the bad-file probe, both splits and every downstream output (the
+    raw, aggregate and quarantine sinks) read it once instead of each
+    re-running the scan and the rules. It is returned so the caller can
+    ``unpersist`` it once its outputs are written.
 
     strict + file_col: ANY bad row poisons its whole file
     (pipeline.py:161-165) — valid rows of a poisoned file land in the
-    invalid frame's file set. The distinct bad-file set is tiny by
-    construction (error rate ~20% of files in the reference generator),
-    so it broadcasts; no shuffle of the big side.
+    invalid frame. The distinct bad-file names are collected in one job,
+    which also fills the cache; like the header probe of
+    ``run_sensor_batch`` the list is bounded by the batch's file COUNT,
+    never its bytes. The split is then a null-safe literal IN-filter: a
+    row whose file is NULL never matches and stays valid, as it would
+    under an anti-join on the file column.
 
     lenient (strict=False): row-level split only (the historical
     `MainPipeline` variant).
-
-    persist=True materializes the flagged frame once: the bad-file set,
-    both splits, and every downstream output (raw/agg/quarantine sinks)
-    otherwise re-run the scan + rule evaluation per consumer. The
-    pipeline writes 3-4 outputs per batch, so this is a ~4x saving;
-    the cache is batch-sized and evicted LRU.
     """
-    flagged = with_error_reason(df, rules)
-    if persist:
-        from pyspark import StorageLevel
-
-        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
+    flagged = with_error_reason(df, rules).persist(StorageLevel.MEMORY_AND_DISK)
     row_bad = F.col(ERROR_COL) != ""
     if strict and file_col is not None:
-        bad_files = flagged.where(row_bad).select(file_col).distinct()
-        valid = flagged.join(F.broadcast(bad_files), file_col, "left_anti")
-        invalid = flagged.join(F.broadcast(bad_files), file_col, "left_semi")
-        return valid, invalid
-    return flagged.where(~row_bad), flagged.where(row_bad)
+        bad = [r[0] for r in flagged.where(row_bad).select(file_col).distinct().collect()]
+        hit = F.coalesce(F.col(file_col).isin(bad), F.lit(False))
+        return flagged.where(~hit), flagged.where(hit), flagged
+    return flagged.where(~row_bad), flagged.where(row_bad), flagged
 
 
 def cast_validated(df: DataFrame) -> DataFrame:

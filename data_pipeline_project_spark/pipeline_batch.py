@@ -4,7 +4,7 @@ control flow.
 
     read CSVs (all-string, NA tokens, lineage, line numbers)
       → validate F1-F8 (columnar rules)
-      → strict per-file gate (broadcast anti-join) or lenient row split
+      → strict per-file gate (IN-filter on collected bad files) or lenient row split
       → cast valid rows (P4/P5)           → raw table      (K1)
       → long-format aggregates (A1-A8)    → agg table      (K2)
       → invalid rows + per-file reasons   → quarantine     (K5)
@@ -16,6 +16,7 @@ code runs unchanged in ``foreachBatch`` under Structured Streaming.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +27,7 @@ from data_pipeline_project_spark.operators.aggregates import long_format_stats
 from data_pipeline_project_spark.operators.validation import (
     ERROR_COL,
     ROW_COL,
+    Rule,
     cast_validated,
     file_error_summary,
     sensor_rules,
@@ -47,6 +49,11 @@ class SensorBatchResult:
     aggregates: DataFrame  # long-format stats (aggregated_sensor_data shape)
     quarantined_rows: DataFrame  # all rows of rejected files, with error_reason
     quarantine_log: DataFrame  # one reason line per rejected file (K5)
+    cached: DataFrame  # the persisted flagged frame all four read
+
+    def release(self) -> None:
+        """Drop the cached flagged frame once every output is written."""
+        self.cached.unpersist()
 
 
 def run_sensor_batch(
@@ -77,23 +84,30 @@ def run_sensor_batch(
         aggregates=result.aggregates,
         quarantined_rows=result.quarantined_rows,
         quarantine_log=result.quarantine_log.unionByName(bad_log),
+        cached=result.cached,
     )
 
 
 def process_sensor_frame(
     df: DataFrame,
     config: PipelineConfig | None = None,
+    rules: Sequence[Rule] | None = None,
 ) -> SensorBatchResult:
     """Validate/split/cast/aggregate one already-read sensor frame.
 
     Shared verbatim between the batch entry point and the streaming
     ``foreachBatch`` (SURVEY.md §7 M3 — the cleanest Spark idiom for
-    the reference's whole-file micro-batching).
+    the reference's whole-file micro-batching). ``rules`` defaults to
+    ``sensor_rules(config.bounds)``; the stream builds them once and
+    passes them to every micro-batch. In strict mode the call runs one
+    job (the bad-file probe) and leaves the flagged frame cached until
+    ``release()``.
     """
     config = config or PipelineConfig()
-    rules = sensor_rules(config.bounds)
-    valid, invalid = split_valid_invalid(
-        df, rules, file_col=FILE_COL, strict=config.strict, persist=True
+    if rules is None:
+        rules = sensor_rules(config.bounds)
+    valid, invalid, flagged = split_valid_invalid(
+        df, rules, file_col=FILE_COL, strict=config.strict
     )
 
     raw = cast_validated(valid).select(
@@ -115,6 +129,7 @@ def process_sensor_frame(
         aggregates=aggregates,
         quarantined_rows=quarantined_rows,
         quarantine_log=quarantine_log,
+        cached=flagged,
     )
 
 

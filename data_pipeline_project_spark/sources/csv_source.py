@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_project_spark.config import EXPECTED_COLUMNS
-from data_pipeline_project_spark.operators.validation import ROW_COL, normalize_na_tokens
+from data_pipeline_project_spark.operators.validation import ROW_COL, na_token_columns
 
 FILE_COL = "file_name"
 
@@ -57,7 +57,7 @@ def read_sensor_csv(
         .csv(path)
         .select(F.col("_metadata.file_name").alias(FILE_COL), "*")
     )
-    df = normalize_na_tokens(df, EXPECTED_COLUMNS)
+    df = df.withColumns(na_token_columns(EXPECTED_COLUMNS))
     if with_row_numbers:
         w = Window.partitionBy(FILE_COL).orderBy(F.monotonically_increasing_id())
         df = df.withColumn(ROW_COL, F.row_number().over(w) + 1)

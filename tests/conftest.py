@@ -1,5 +1,6 @@
 import os
 import sys
+import zlib
 from pathlib import Path
 
 import pytest
@@ -303,9 +304,31 @@ SLOW_TESTS = {
 }
 
 
+def pytest_addoption(parser):
+    parser.addoption(
+        "--slow-slice",
+        metavar="I/N",
+        help="keep only the slow-tier tests whose crc32(nodeid) %% N == I "
+        "(run one slice with: pytest tests/ -m slow --slow-slice I/N)",
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         fname = os.path.basename(str(item.fspath))
         base = item.name.split("[", 1)[0]
         if fname in SLOW_FILES or f"{fname}::{base}" in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    spec = config.getoption("--slow-slice")
+    if not spec:
+        return
+    i, n = (int(x) for x in spec.split("/"))
+    if not 0 <= i < n:
+        raise pytest.UsageError(f"--slow-slice {spec}: need 0 <= I < N")
+    keep, drop = [], []
+    for item in items:
+        other = item.get_closest_marker("slow") and zlib.crc32(item.nodeid.encode()) % n != i
+        (drop if other else keep).append(item)
+    if drop:
+        config.hook.pytest_deselected(items=drop)
+        items[:] = keep

@@ -1,10 +1,15 @@
 """Structured Streaming pipeline tests: exactly-once file handling,
 strict gate inside micro-batches, upsert replay idempotency."""
 
+import os
 import time
 
+import pytest
+
 from data_pipeline_project_spark.pipeline_batch import run_sensor_batch
-from data_pipeline_project_spark.sinks import ParquetAppendSink, ParquetUpsertSink
+from data_pipeline_project_spark.sinks import ParquetAppendSink, ParquetUpsertSink, Sink
+from data_pipeline_project_spark.sinks.manifest import read_version
+from data_pipeline_project_spark.streaming.lakehouse_ingest import lakehouse_append_batch_fn
 from data_pipeline_project_spark.streaming.sensor_stream import run_sensor_stream
 
 HEADER = "timestamp,sensor_id,temperature,humidity,pressure"
@@ -159,6 +164,119 @@ def test_upsert_replay_idempotent(spark, tmp_path):
     sink.write(res.aggregates)  # replay
     out = spark.read.parquet(str(tmp_path / "agg"))
     assert out.count() == 3
+
+
+def test_stream_epochs_release_their_cache(spark, tmp_path):
+    """Each epoch caches its flagged frame once and drops it when its
+    sinks are done: five one-file epochs leave no persisted RDD."""
+    data = tmp_path / "data"
+    data.mkdir()
+    for i in range(5):
+        _write(data, f"f{i}.csv", [f"2025-05-26 1{i}:00:00,S{i},20.0,0.5,1000.0"])
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    q = run_sensor_stream(
+        spark, str(data),
+        ParquetAppendSink(str(tmp_path / "raw")),
+        ParquetAppendSink(str(tmp_path / "agg")),
+        ParquetAppendSink(str(tmp_path / "quar")),
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+        max_files_per_trigger=1,
+    )
+    _run_until_done(q)
+    assert q.exception() is None
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 5
+    assert spark.read.parquet(str(tmp_path / "raw")).count() == 5
+    assert jsc.getPersistentRDDs().size() == before
+
+
+class _LakehouseSink(Sink):
+    """A stream sink appending to a manifest table, as the benchmark's
+    stream does; ``fail_epoch`` makes its first write of that epoch
+    raise before anything is committed."""
+
+    def __init__(self, spark, path, sink_id, fail_epoch=None):
+        self.append = lakehouse_append_batch_fn(spark, path, sink_id)
+        self.fail_epoch = fail_epoch
+
+    def write(self, df, epoch_id=None):
+        if epoch_id == self.fail_epoch:
+            self.fail_epoch = None
+            raise RuntimeError("raw sink unavailable")
+        self.append(df, epoch_id)
+
+    def outcome(self, epoch_id):
+        return [r["replayed"] for r in self.append.results if r["batch_id"] == epoch_id]
+
+
+class _RecordingSink(ParquetAppendSink):
+    def __init__(self, path):
+        super().__init__(path)
+        self.epochs = []
+
+    def write(self, df, epoch_id=None):
+        super().write(df, epoch_id)
+        self.epochs.append(epoch_id)
+
+
+def test_sink_failure_mid_epoch_replays_exactly_once(spark, tmp_path):
+    """K6 with concurrent commits: the raw sink raises in epoch 1 while
+    the aggregate sink commits it. The query fails before the
+    quarantine write; the restart from the same checkpoint skips the
+    aggregate replay by its stream_append stamp and redoes the raw
+    one, so each table ends with every row exactly once."""
+    data = tmp_path / "data"
+    data.mkdir()
+    files = {
+        "a0.csv": ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0",
+                   "2025-05-26 10:05:00,S2,21.0,0.5,1000.0"],
+        "a1.csv": ["2025-05-26 10:10:00,S1,abc,0.5,1000.0"],
+        "b0.csv": ["2025-05-26 11:00:00,S1,22.0,0.5,1000.0",
+                   "2025-05-26 11:05:00,S3,23.0,0.5,1000.0"],
+        "b1.csv": ["2025-05-26 11:10:00,S2,20.0,0.5,1000.0",
+                   "2025-05-26 11:15:00,S2,99.0,0.5,1000.0"],
+    }
+    t0 = time.time() - 100
+    for k, (name, rows) in enumerate(files.items()):
+        _write(data, name, rows)
+        os.utime(data / name, (t0 + k, t0 + k))  # two files per epoch, in order
+    raw_path, agg_path = str(tmp_path / "raw"), str(tmp_path / "agg")
+    quar_path, ckpt = str(tmp_path / "quar"), str(tmp_path / "ckpt")
+
+    def start(raw, agg, quar):
+        return run_sensor_stream(
+            spark, str(data), raw, agg, quar, ckpt,
+            trigger={"availableNow": True}, max_files_per_trigger=2,
+        )
+
+    raw = _LakehouseSink(spark, raw_path, "raw", fail_epoch=1)
+    agg = _LakehouseSink(spark, agg_path, "agg")
+    quar = _RecordingSink(quar_path)
+    q = start(raw, agg, quar)
+    with pytest.raises(Exception, match="raw sink unavailable"):
+        q.awaitTermination(120)
+    assert raw.outcome(1) == [] and agg.outcome(1) == [False]
+    assert quar.epochs == [0]
+    assert read_version(spark, raw_path).count() == 2  # a0 only
+
+    raw = _LakehouseSink(spark, raw_path, "raw")
+    agg = _LakehouseSink(spark, agg_path, "agg")
+    quar = _RecordingSink(quar_path)
+    q = start(raw, agg, quar)
+    _run_until_done(q)
+    assert q.exception() is None
+    assert raw.outcome(1) == [False] and agg.outcome(1) == [True]
+    assert quar.epochs == [1]
+
+    got_raw = read_version(spark, raw_path)
+    assert got_raw.count() == 4  # a0 + b0, once each
+    assert got_raw.select("file_name", "timestamp").distinct().count() == 4
+    got_agg = read_version(spark, agg_path)
+    assert got_agg.count() == 12  # 4 (file, sensor) pairs x 3 metrics
+    assert got_agg.select("file_name", "sensor_id", "metric_name").distinct().count() == 12
+    got_quar = spark.read.parquet(quar_path)
+    assert sorted(r.file_name for r in got_quar.collect()) == ["a1.csv", "b1.csv", "b1.csv"]
 
 
 def test_upsert_rewrites_only_affected_partitions(spark, tmp_path):

@@ -338,3 +338,52 @@ def test_header_probe_driver_and_executor_paths_agree(spark, tmp_path, monkeypat
     assert [f for f, _h in driver_rows] == [
         "crlf_header.csv", "ok.csv", "short_header.csv"
     ]
+
+
+def test_split_matches_broadcast_join_form(spark, tmp_path):
+    """The strict split's literal IN-filter returns the same rows as the
+    broadcast left_anti/left_semi join on the bad-file set it replaced,
+    a row with a NULL file name included (valid, as under the anti-join)."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_project_spark.operators.validation import (
+        ERROR_COL,
+        sensor_rules,
+        split_valid_invalid,
+        with_error_reason,
+    )
+    from data_pipeline_project_spark.sources.csv_source import FILE_COL, read_sensor_csv
+
+    d = tmp_path / "data"
+    d.mkdir()
+    write_csv(d, "clean1.csv", ["2025-05-26 10:00:00,S1,20.0,0.50,1000.0",
+                                "2025-05-26 10:05:00,S2,21.0,0.50,1000.0"])
+    write_csv(d, "clean2.csv", ["2025-05-26 11:00:00,S3,22.0,0.50,1000.0"])
+    write_csv(d, "poisoned.csv", ["2025-05-26 12:00:00,S1,20.0,0.50,1000.0",
+                                  "2025-05-26 12:05:00,S1,abc,0.50,1000.0"])
+    write_csv(d, "header_only.csv", [])
+    df = read_sensor_csv(spark, str(d))
+    null_row = spark.createDataFrame(
+        [(None, "2025-05-26 13:00:00", "S4", "20.0", "0.50", "1000.0", 2)],
+        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema),
+    )
+    df = df.unionByName(null_row)
+    rules = sensor_rules(ValidationBounds())
+
+    valid, invalid, flagged = split_valid_invalid(df, rules, file_col=FILE_COL)
+    ref = with_error_reason(df, rules)
+    bad_files = ref.where(F.col(ERROR_COL) != "").select(FILE_COL).distinct()
+    ref_valid = ref.join(F.broadcast(bad_files), FILE_COL, "left_anti")
+    ref_invalid = ref.join(F.broadcast(bad_files), FILE_COL, "left_semi")
+
+    def rows(frame):
+        return sorted(map(tuple, frame.select(*ref.columns).collect()), key=repr)
+
+    try:
+        assert rows(valid) == rows(ref_valid)
+        assert rows(invalid) == rows(ref_invalid)
+        assert {r[FILE_COL] for r in valid.collect()} == {"clean1.csv", "clean2.csv", None}
+        assert {r[FILE_COL] for r in invalid.collect()} == {"poisoned.csv"}
+        assert invalid.count() == 2
+    finally:
+        flagged.unpersist()
