@@ -782,11 +782,10 @@ def _audio_fp60(x) -> int:
     time frames x 4 log-spaced frequency bands; bit(frame, band) = 1
     iff that band's power exceeds the FRAME's mean band power. The
     within-frame comparison makes the bit pattern the frame's spectral
-    SHAPE: invariant to global and per-frame amplitude scaling in
-    exact arithmetic (all four energies scale together; in float, a
-    band energy sitting exactly ON the frame mean is a knife-edge that
-    rounding can flip — at most a few bits, inside the near-dup
-    search's Hamming radius), robust to added low-level noise
+    SHAPE: invariant to global and per-frame amplitude scaling (all
+    four energies scale together; a band must beat the mean by a
+    relative 1e-9, so one that ties it in exact arithmetic reads 0
+    whichever way float rounding lands), robust to added low-level noise
     under a dominant tone, and local in time — an edit to one section
     flips at most that section's 4 bits, which is what lets
     banded-Hamming near-dup search work on it (the same design rule as
@@ -817,9 +816,9 @@ def _audio_fp60(x) -> int:
         e = np.array(
             [spec[edges[b] : edges[b + 1]].sum() for b in range(n_bands)]
         )
-        mean = e.mean()
+        bar = e.mean() * (1 + 1e-9)  # tie margin: see the docstring
         for b in range(n_bands):
-            if e[b] > mean:
+            if e[b] > bar:
                 h |= 1 << (f * n_bands + b)
     return h
 

@@ -591,7 +591,8 @@ MAINTENANCE_DEFAULTS = {
     "log_amplification": 8.0,
     # files lacking NDV sketches blind the distribution-driven join
     # advice; below this coverage, advise analyze_table (bootstrap-era
-    # files are the usual gap — optimistic commits sketch inline)
+    # and streaming micro-batch files are the usual gap — the stream
+    # sinks commit sketch-free, other optimistic commits sketch inline)
     "ndv_coverage_min": 1.0,
 }
 

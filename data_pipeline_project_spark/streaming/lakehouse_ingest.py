@@ -24,6 +24,16 @@ JSON read per version until the sink's newest stamp is found); within
 a run it is cached. Two DIFFERENT sinks (distinct sink_ids) on one
 table interleave freely — their appends commute.
 
+Sketches: a micro-batch commit is its staged write, footer stats
+(min/max/nulls) and the manifest write — it passes
+``collect_ndv=False``, so no second Spark job reads the just-written
+files back for NDV/bloom sketches. Those files are short-lived:
+the sink's ``maintenance_every`` cycle compacts them and sketches the
+output inline, or runs its ``analyze`` action while coverage is
+below ``ndv_coverage_min``; ``analyze_table`` backfills on demand.
+Cheap stats at write time, distinct-value stats on ANALYZE — Delta
+Lake's split.
+
 Reference scope: the reference's streaming sink is per-file MySQL
 inserts with a processed/ move (`pipeline.py:211-324`); this is that
 idea's lakehouse counterpart with snapshot isolation.
@@ -88,7 +98,9 @@ def lakehouse_append_batch_fn(
     loss to a concurrent writer is swallowed and retried at the next
     cycle, never surfaced into the stream. Without it, a
     1-batch-per-second ingest produces 86,400 small files a day and
-    an unbounded snapshot log."""
+    an unbounded snapshot log. Appends commit sketch-free (module
+    docstring), so a table ingested without ``maintenance_every``
+    needs ``analyze_table`` before join advice can use its NDVs."""
     from data_pipeline_project_spark.sinks.manifest import (
         append_snapshot,
         snapshot_versions,
@@ -120,7 +132,7 @@ def lakehouse_append_batch_fn(
         else:
             res = append_snapshot(
                 spark, table_path, batch, key_col=key_col,
-                commit_extra=stamp,
+                commit_extra=stamp, collect_ndv=False,
             )
         state["last"] = batch_id
         state["committed"] += 1

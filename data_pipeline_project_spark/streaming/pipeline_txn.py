@@ -27,10 +27,12 @@ Guarantees, end to end:
   replays it.
 
 At 100 TB: per batch = one O(churn) append + one zone-map-targeted
-merge + one marker write; nothing scales with table size. The
-aggregate recompute is per-batch-group (incremental), not a global
-rollup — the same incremental contract the reference's per-file
-aggregate upsert has.
+merge + one marker write; nothing scales with table size. The raw
+append commits sketch-free (``collect_ndv=False``, as in
+streaming/lakehouse_ingest.py); ``analyze_table`` sketches its
+files. The aggregate recompute is per-batch-group (incremental), not
+a global rollup — the same incremental contract the reference's
+per-file aggregate upsert has.
 """
 
 from __future__ import annotations
@@ -106,7 +108,8 @@ def txn_pipeline_batch_fn(
         aggs = builder(batch, key_col)
         with transaction([raw_path, agg_path]) as t:
             res = append_snapshot(
-                spark, raw_path, batch, commit_extra=stamp
+                spark, raw_path, batch, commit_extra=stamp,
+                collect_ndv=False,
             )
             mres = merge_upsert(spark, duck, agg_path, key_col, aggs)
         state["last"] = batch_id

@@ -6,10 +6,11 @@
    two latest heals — and must be O(1), independent of table size
    (measured at two table scales to show flatness).
 
-2. NDV SKETCH COMMIT COST: append commit wall with COLLECT_NDV on vs
-   off at 1x and 8x file sizes. The sketch is one DuckDB columnar
-   read of the just-written file — cost scales with the ADDED bytes
-   (the envelope), never the table.
+2. NDV SKETCH COMMIT COST: append commit wall with
+   ``append_snapshot(..., collect_ndv=...)`` on vs off at 1x and 8x
+   file sizes. The sketch is an executor-side Spark job that reads
+   back the just-written file — cost scales with the ADDED bytes (the
+   envelope), never the table.
 
 3. PARTITION-EVOLUTION PRUNING: a day-era + hour-era mixed table;
    read_time_range must plan strictly fewer files than the full scan
@@ -32,7 +33,6 @@ def main():
     import duckdb
     from pyspark.sql import SparkSession, functions as F
 
-    from data_pipeline_project_spark.sinks import manifest as M
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
     from data_pipeline_project_spark.sinks.manifest import (
         append_snapshot,
@@ -125,13 +125,11 @@ def main():
             (F.col("id") % 1000).alias("v"),
             F.format_string("s-%d", F.col("id") % 5000).alias("s"),
         ).coalesce(1)
-        M.COLLECT_NDV = False
         t0 = time.time()
-        append_snapshot(spark, path, add)
+        append_snapshot(spark, path, add, collect_ndv=False)
         off = time.time() - t0
-        M.COLLECT_NDV = True
         t0 = time.time()
-        append_snapshot(spark, path, add)
+        append_snapshot(spark, path, add, collect_ndv=True)
         on = time.time() - t0
         m = read_manifest(os.path.join(path, "_manifests", "latest.json"))
         added_bytes = max(f["bytes"] for f in m["files"])

@@ -22,10 +22,23 @@ from data_pipeline_project_spark.streaming.lakehouse_ingest import (
 SCHEMA = "k long, v long"
 
 
-def _write_source_file(spark, src_dir, lo, hi):
-    spark.range(lo, hi).select(
+def _batch(spark, lo, hi):
+    return spark.range(lo, hi).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    ).coalesce(1).write.mode("append").parquet(src_dir)
+    ).coalesce(1)
+
+
+def _ndv_coverage(table):
+    from data_pipeline_project_spark.sinks.manifest import _ndv_is_current
+
+    files = read_manifest(
+        os.path.join(table, "_manifests", "latest.json")
+    )["files"]
+    return sum(1 for f in files if _ndv_is_current(f)) / len(files)
+
+
+def _write_source_file(spark, src_dir, lo, hi):
+    _batch(spark, lo, hi).write.mode("append").parquet(src_dir)
 
 
 def test_stream_appends_exactly_once_across_restart(spark, tmp_path):
@@ -170,3 +183,57 @@ def test_ingest_coexists_with_concurrent_merge(spark, duck, tmp_path):
     assert live.count() == 510
     assert {r.v for r in live.where("k = 5").collect()} == {-1}
     assert live.where("k >= 9000").count() == 10
+
+
+def test_micro_batch_commit_runs_no_sketch_job(spark, tmp_path, monkeypatch):
+    """A stream's micro-batch commit is its staged write, footer stats
+    and the manifest write: no sketch job reads the new files back.
+    A direct append_snapshot on the same table still sketches."""
+    from data_pipeline_project_spark.sinks import manifest as M
+
+    calls = []
+    real = M._sketch_files
+
+    def _counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(M, "_sketch_files", _counting)
+    table = str(tmp_path / "table")
+    fn = lakehouse_append_batch_fn(spark, table, "sinkN", key_col="k")
+    fn(_batch(spark, 0, 50), 0)  # bootstrap: listing-based, metadata-only
+    fn(_batch(spark, 50, 100), 1)
+    fn(_batch(spark, 100, 150), 2)
+    assert calls == []
+    head = read_manifest(os.path.join(table, "_manifests", "latest.json"))
+    assert head["app"]["stream_append"]["batch_id"] == 2
+    assert len(head["files"]) == 3
+    assert not any("ndv" in f or "bloom" in f for f in head["files"])
+
+    M.append_snapshot(spark, table, _batch(spark, 150, 200), key_col="k")
+    assert calls == [1]
+    head = read_manifest(os.path.join(table, "_manifests", "latest.json"))
+    assert [f for f in head["files"] if "ndv" in f and "bloom" in f]
+
+
+def test_maintenance_cycle_restores_sketch_coverage(spark, tmp_path):
+    """The sink's own maintenance cycle brings sketch coverage back:
+    every third batch compacts the micro-batch files and analyzes what
+    is left, so the head is fully sketched right after it."""
+    table = str(tmp_path / "table")
+    fn = lakehouse_append_batch_fn(
+        spark, table, "sinkM", maintenance_every=3, duck=None
+    )
+    cov = []
+    for i in range(6):
+        fn(_batch(spark, i * 100, (i + 1) * 100), i)
+        cov.append(_ndv_coverage(table))
+    assert cov[0] == 0.0 and cov[1] == 0.0
+    assert cov[2] == 1.0 and cov[5] == 1.0
+    assert cov[3] < 1.0 and cov[4] < 1.0
+    ran = [
+        r["maintenance"]["executed"] for r in fn.results if "maintenance" in r
+    ]
+    assert len(ran) == 2
+    assert all({"compact", "analyze"} <= set(x) for x in ran), ran
+    assert read_version(spark, table).count() == 600

@@ -8,7 +8,7 @@ Driver-side only — no Spark session needed, so hypothesis can run
 hundreds of examples cheaply.
 """
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from data_pipeline_project_spark.sinks.manifest import _zone_map_candidates
@@ -46,15 +46,18 @@ def test_bisect_pruning_matches_naive_oracle(zone_maps, keys):
     ),
     gain=st.floats(0.05, 4.0, allow_nan=False),
 )
+# a short periodic signal tiles into 15 identical frames whose active
+# bands tie the frame mean: without the tie margin, rounding flipped
+# the same bit in every frame (15 bits)
+@example(sig=[1.0, 0, 0, 0, 1, 1, 0, 0], gain=3.9375)
 def test_audio_fingerprint_amplitude_invariant(sig, gain):
     """Scaling the whole signal changes no spectral-shape bit in exact
     arithmetic (every band energy scales by gain², including the frame
-    mean) — in FLOAT, a frame whose band energy sits exactly on the
-    mean is a knife-edge that rounding can flip at one scale and not
-    the other (hypothesis found one: a periodic signal whose active
-    bands tie the mean). The honest property is therefore a small
-    Hamming bound, which is exactly what the banded near-dup search
-    tolerates by design (audio_near_pairs radius)."""
+    mean). In FLOAT, a band energy sitting exactly on the mean is a
+    knife-edge; _audio_fp60's relative tie margin reads it as 0 at
+    every scale. The property keeps a small Hamming bound, which is
+    what the banded near-dup search tolerates by design
+    (audio_near_pairs radius)."""
     import numpy as np
 
     from data_pipeline_project_spark.operators.multimodal import _audio_fp60

@@ -82,6 +82,10 @@ def test_batches_publish_pair_atomically_and_replay_skips(
     aggs = {r.sensor_id: r.record_count
             for r in read_version(spark, agg).collect()}
     assert aggs[1] == 10  # last batch's per-key count (merge replaces)
+    # the raw appends commit sketch-free: no NDV read-back per batch
+    head = M.read_manifest(os.path.join(raw, "_manifests", "latest.json"))
+    assert len(head["files"]) > 1
+    assert not any("ndv" in f for f in head["files"])
 
     fn(_batch(spark, 1), 1)  # replay
     assert fn.results[-1]["replayed"] is True
