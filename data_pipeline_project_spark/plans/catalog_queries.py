@@ -73,9 +73,8 @@ def stats_catalog_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stats_catalog_")
     path = os.path.join(work, "t")
     # bootstrap (write_versioned_manifest) is metadata-only by
-    # contract, so no NDV gating is needed — and as of r12 the gate is
-    # a commit_optimistic PARAMETER (collect_ndv=False), never a
-    # module-global flip a concurrent commit could observe
+    # contract, so no NDV gating is needed — sketching happens only in
+    # the optimistic commit paths, gated by their collect_ndv parameter
     try:
         write_range_clustered(li, path, "l_orderkey", 4)
         write_versioned_manifest(path)

@@ -501,7 +501,6 @@ def _stats_decode(v, kind):
 # merges count the entry as uncovered). The probe side hashes Python
 # values with the pure-Python XXH64 twin (verified bit-for-bit against
 # F.xxhash64), so no JVM round-trip is needed at plan time.
-COLLECT_NDV = True
 _NDV_REGISTERS = 128  # HLL m: se ~ 1.04/sqrt(128) = 9.2% — planner-grade
 _SKETCH_FILES_PER_JOB = 32  # files per sketch job: bounds per-job agg state
 _NDV_MAX_COLS = 8
@@ -1214,9 +1213,7 @@ def _native_bloom_opts(entries: list, key_col: str, n_out: int = 1) -> dict:
     }
 
 
-def _file_entry(
-    root: str, rel: str, md=None, priority_cols=(), collect_ndv=None
-) -> dict:
+def _file_entry(root: str, rel: str, md=None, priority_cols=()) -> dict:
     """One manifest file entry — size, footer row count, and the
     column-stats index — from a single footer read (``md`` lets a
     caller that already read the footer pass it in). ``priority_cols``
@@ -1225,11 +1222,9 @@ def _file_entry(
     dropped qualified columns. STRICTLY METADATA-ONLY as of r12: NDV
     sketches and blooms are computed executor-side in one batched
     Spark job over a commit's whole added set (_attach_sketches) —
-    never per-file on the driver (``collect_ndv`` is accepted and
-    ignored for caller compatibility)."""
+    never per-file on the driver."""
     import pyarrow.parquet as pq
 
-    del collect_ndv  # r12: data reads never happen here
     full = os.path.join(root, rel)
     if md is None:
         md = pq.read_metadata(full)
@@ -1259,14 +1254,10 @@ def write_manifest(path: str, manifest_path: str | None = None) -> dict:
     for f in _data_files(path):
         md = pq.read_metadata(f)
         total_rows += md.num_rows
-        # collect_ndv=False: the LISTING path must stay metadata-only
-        # (footers, never data) — at bootstrap scale sketching would
-        # read the whole table; analyze_table backfills explicitly
-        files.append(
-            _file_entry(
-                path, os.path.relpath(f, path), md, collect_ndv=False
-            )
-        )
+        # the LISTING path stays metadata-only (footers, never data) —
+        # at bootstrap scale sketching would read the whole table;
+        # analyze_table backfills explicitly
+        files.append(_file_entry(path, os.path.relpath(f, path), md))
     manifest = {
         "root": os.path.abspath(path),
         "n_files": len(files),
@@ -1462,21 +1453,18 @@ def verify_snapshot(manifest: dict | str) -> list[str]:
 
 
 def _select_candidates(
-    spark, zone_maps, keys_df, key_col: str, prune: str, blooms=None
+    spark, zone_maps, keys_df, key_col: str, blooms=None
 ) -> list[str]:
-    """Dispatch between the two candidate-selection strategies:
-    ``driver`` collects the (distinct) keys and runs the sorted-bisect
-    scan — right for human-scale change batches (millions of keys);
-    ``spark`` runs the bucketed range join with the keys never leaving
-    the cluster — right for CDC-scale batches (and required beyond
-    driver memory); ``auto`` picks spark above SPARK_PRUNE_THRESHOLD
-    distinct keys. Integer, float, boolean, string, date, and
-    timestamp keys all bucket via an order-preserving rank (see
-    _rank_py); only unranked stat types (decimals, exotics) fall back
-    to the driver path under auto."""
+    """Pick between the two candidate-selection strategies by the
+    change batch's distinct key count: up to SPARK_PRUNE_THRESHOLD the
+    driver collects the keys and runs the sorted-bisect scan (plus the
+    bloom passes below) — right for human-scale change batches; above
+    it the bucketed range join runs with the keys never leaving the
+    cluster — right for CDC-scale batches (and required beyond driver
+    memory). Integer, float, boolean, string, date, and timestamp keys
+    all bucket via an order-preserving rank (see _rank_py); unranked
+    stat types (decimals, exotics) fall back to the driver path."""
     distinct_keys = keys_df.select(key_col).distinct()
-    if prune not in ("auto", "driver", "spark"):
-        raise ValueError(f"prune must be auto|driver|spark, got {prune!r}")
     # NaN float keys defeat zone-map pruning entirely: parquet writers
     # exclude NaN from footer min/max, so a file holding NaN rows has
     # finite bounds and NO file can be proven clean of the key. Worse,
@@ -1490,9 +1478,7 @@ def _select_candidates(
 
         if distinct_keys.where(F.isnan(key_col)).limit(1).count() > 0:
             return [f for f, _, _ in zone_maps]
-    if prune == "spark":
-        return _zone_map_candidates_spark(spark, zone_maps, distinct_keys, key_col)
-    if prune == "auto" and distinct_keys.count() > SPARK_PRUNE_THRESHOLD:
+    if distinct_keys.count() > SPARK_PRUNE_THRESHOLD:
         try:
             return _zone_map_candidates_spark(
                 spark, zone_maps, distinct_keys, key_col
@@ -1637,6 +1623,54 @@ def _snapshot_zone_maps(
     return sorted((f, lo, hi) for f, lo, hi in rows), rel_by_path, blooms
 
 
+def _keyed_rewrite(
+    spark, path: str, keys_df: DataFrame, key_col: str, rel_by_path: dict,
+    dv_relpaths: list, head: dict | None, tag: str,
+):
+    """The per-file copy-on-write step of the key-shaped writers
+    (merge_upsert, delete_rows_targeted): returns ``rewrite_one(f) ->
+    (rows dropped from f, new relpath)``, ``(0, None)`` == untouched.
+    Each call reads ``f`` DV-filtered, drops the rows whose key is in
+    the BROADCAST key set, writes the survivors beside the original's
+    live location as ``<stem>.{tag}.parquet`` (``tag`` embeds the
+    writer's version and stamp, so racing writers never share a name;
+    ``f`` may be a _removed/ path a racing rewrite already moved — a
+    commit-time conflict, but the data phase stays well-formed), and
+    tombstones the original. Files are independent (own staging dir,
+    own tombstone), so callers fan out through _run_rewrites.
+
+    Native blooms survive the rewrite (r13): sized per file from its
+    own head entry's sketch, so high-NDV files keep their parquet SBBF
+    through churn instead of shedding it."""
+    from pyspark.sql import functions as F
+
+    kdf = F.broadcast(keys_df.select(F.col(key_col)).distinct())
+    entry_by_rel = {e["path"]: e for e in head["files"]} if head else {}
+
+    def rewrite_one(f: str) -> tuple[int, str | None]:
+        src = _dv_filter(spark, spark.read.parquet(f), path, dv_relpaths)
+        before = src.count()
+        survivors = src.join(kdf, key_col, "left_anti")
+        after = survivors.count()
+        if after == before:
+            return 0, None  # zone map said maybe; the data says no match
+        rel = rel_by_path[f]
+        new_rel = os.path.join(
+            os.path.dirname(rel),
+            f"{os.path.basename(rel)[:-len('.parquet')]}.{tag}.parquet",
+        )
+        nb = (
+            _native_bloom_opts([entry_by_rel[rel]], key_col)
+            if rel in entry_by_rel
+            else {}
+        )
+        _write_single_file(survivors, path, new_rel, nb)
+        _tombstone(path, rel)
+        return before - after, new_rel
+
+    return rewrite_one
+
+
 def delete_rows_targeted(
     spark,
     duck,
@@ -1644,7 +1678,6 @@ def delete_rows_targeted(
     key_col: str,
     keys_df: DataFrame,
     duck_type: str = "BIGINT",
-    prune: str = "auto",
     commit: bool = False,
 ) -> dict:
     """Targeted row deletion (the GDPR/right-to-be-forgotten shape):
@@ -1691,9 +1724,8 @@ def delete_rows_targeted(
     referencing them — "right to be forgotten" compliance is
     delete + manifest pin + vacuum, exactly as in Delta Lake.
 
-    ``prune``: candidate-selection strategy — see
-    :func:`_select_candidates` (auto = driver bisect for human-scale
-    key sets, Spark bucketed range join beyond
+    Candidate selection: see :func:`_select_candidates` (driver bisect
+    for human-scale key sets, Spark bucketed range join beyond
     SPARK_PRUNE_THRESHOLD)."""
     import os
     import uuid as _uuid
@@ -1727,79 +1759,12 @@ def delete_rows_targeted(
         dv_relpaths = table_dv(path)
         blooms = {}
     candidates = _select_candidates(
-        spark, zone_maps, keys_df, key_col, prune, blooms=blooms
+        spark, zone_maps, keys_df, key_col, blooms=blooms
     )
-    kdf = F.broadcast(keys_df.select(F.col(key_col)).distinct())
-    # native blooms survive the rewrite (r13) — see merge_upsert
-    entry_by_rel = (
-        {e["path"]: e for e in head["files"]} if pending else {}
+    rewrite_one = _keyed_rewrite(
+        spark, path, keys_df, key_col, rel_by_path, dv_relpaths,
+        head if pending else None, f"d{version}-{stamp}",
     )
-
-    def rewrite_one(f: str) -> tuple[int, str | None]:
-        """Returns (rows deleted from this file, new file's relpath) —
-        (0, None) == untouched. Independent per file (own tmp dir, own
-        tombstone path, atomic renames), so the loop parallelizes:
-        Spark's scheduler is thread-safe and each iteration is a small
-        job whose latency would otherwise serialize."""
-        import shutil
-
-        src = _dv_filter(spark, spark.read.parquet(f), path, dv_relpaths)
-        before = src.count()
-        survivors = src.join(kdf, key_col, "left_anti")
-        after = survivors.count()
-        if after == before:
-            return 0, None  # zone map said maybe; the data says no match
-        rel = rel_by_path[f]
-        base = os.path.basename(rel)
-        new_rel = os.path.join(
-            os.path.dirname(rel),
-            f"{base[:-len('.parquet')]}.d{version}-{stamp}.parquet",
-        )
-        new_name = os.path.join(path, new_rel)
-        d = os.path.dirname(new_name)
-        tmp_dir = new_name + ".rewrite"
-        nb = (
-            _native_bloom_opts([entry_by_rel[rel]], key_col)
-            if rel in entry_by_rel
-            else {}
-        )
-        survivors.coalesce(1).write.mode("overwrite").options(
-            **nb
-        ).parquet(tmp_dir)
-        part = [
-            p
-            for p in os.listdir(tmp_dir)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        ]
-        os.replace(os.path.join(tmp_dir, part[0]), new_name)
-        # Hadoop's local FS keeps .<name>.crc checksum sidecars keyed by
-        # file name: the new file's checksum follows it to its new name
-        # (a stale sidecar makes every later read fail ChecksumException).
-        src_crc = os.path.join(tmp_dir, f".{part[0]}.crc")
-        if os.path.exists(src_crc):
-            os.replace(
-                src_crc,
-                os.path.join(d, f".{os.path.basename(new_name)}.crc"),
-            )
-        # Tombstone, don't overwrite-in-place: older manifests pin the
-        # original name — it must either resolve to the ORIGINAL bytes
-        # (in _removed/ until vacuum) or fail loudly, never silently
-        # serve the survivors-only rewrite.
-        live = os.path.join(path, rel)
-        tomb = os.path.join(path, REMOVED_DIR, rel)
-        if os.path.exists(live):
-            os.makedirs(os.path.dirname(tomb), exist_ok=True)
-            os.replace(live, tomb)
-            ld, lbase = os.path.split(live)
-            old_crc = os.path.join(ld, f".{lbase}.crc")
-            if os.path.exists(old_crc):
-                os.replace(
-                    old_crc,
-                    os.path.join(os.path.dirname(tomb), f".{lbase}.crc"),
-                )
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        return before - after, new_rel
-
     rewrites = _run_rewrites(rewrite_one, candidates)
     out = {
         "files_total": len(zone_maps),
@@ -1841,7 +1806,6 @@ def delete_rows_dv(
     key_col: str,
     keys_df: DataFrame,
     duck_type: str = "BIGINT",
-    prune: str = "auto",
 ) -> dict:
     """Merge-on-read DELETE via a deletion vector (Delta/Iceberg v2
     position deletes): instead of rewriting every file a key matches,
@@ -1896,7 +1860,7 @@ def delete_rows_dv(
         prev_dv = table_dv(path)
         blooms = {}
     candidates = _select_candidates(
-        spark, zone_maps, keys_df, key_col, prune, blooms=blooms
+        spark, zone_maps, keys_df, key_col, blooms=blooms
     )
     if not candidates:
         return {
@@ -2129,10 +2093,9 @@ def write_versioned_manifest(
         manifest["partition_spec"] = partition_spec
     with open(vpath, "w") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
-    tmp = os.path.join(mdir, "latest.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(mdir, "latest.json"))
+    # monotonic: a racing writer may already have committed (and
+    # published) a higher version while this listing ran
+    _update_latest_monotonic(mdir, manifest)
     return manifest
 
 
@@ -2616,7 +2579,7 @@ def commit_optimistic(
     added_entries: list[dict] | None = None,
     stats_priority_cols: tuple | list = (),
     partition_spec: dict | None = None,
-    collect_ndv: bool | None = None,
+    collect_ndv: bool = True,
 ) -> dict:
     """Commit a snapshot as an explicit DELTA against the current head:
     body = head.files − ``removed`` + ``added`` — metadata reads touch
@@ -2658,8 +2621,6 @@ def commit_optimistic(
     schema pin instead of inheriting the head's — restoring to a
     snapshot that predates a schema evolution must read under the
     old files' footer schemas again, not the newer pin."""
-    import pyarrow.parquet as pq
-
     mdir = os.path.join(path, "_manifests")
     os.makedirs(mdir, exist_ok=True)
     txn = _current_txn()
@@ -2670,14 +2631,13 @@ def commit_optimistic(
     # (their footers and sketches don't change across rebases): footer
     # stats on the driver (metadata-only), NDV/bloom sketches in one
     # executor-side Spark job (r12 — ``collect_ndv`` gates it per
-    # call; None defers to the module default. An explicit parameter,
-    # not a global flip: concurrent commits in one process must not
-    # see each other's gate, r11 ADVICE).
+    # call: an explicit parameter, not a global flip, so concurrent
+    # commits in one process never see each other's gate, r11 ADVICE).
     added_entry_objs = [
         _file_entry(path, rel, priority_cols=stats_priority_cols)
         for rel in added
     ]
-    if (COLLECT_NDV if collect_ndv is None else collect_ndv):
+    if collect_ndv:
         _attach_sketches(
             path, added_entry_objs, priority_cols=stats_priority_cols
         )
@@ -3410,8 +3370,9 @@ QUARANTINE_DIR = "_quarantine"
 def _move_with_crc(src: str, dst: str) -> None:
     """Atomic rename carrying the Hadoop ``.crc`` sidecar along — a
     stale sidecar left behind throws ChecksumException on later reads.
-    The one move primitive every directory-realigning step here uses
-    (crash recovery, restore)."""
+    The one move primitive every file move here uses: staged parts
+    landing (_move_staged_parts, _write_single_file), tombstones
+    (_tombstone), crash recovery and restore."""
     os.makedirs(os.path.dirname(dst), exist_ok=True)
     os.replace(src, dst)
     sd, sb = os.path.split(src)
@@ -3421,6 +3382,43 @@ def _move_with_crc(src: str, dst: str) -> None:
             crc,
             os.path.join(os.path.dirname(dst), f".{os.path.basename(dst)}.crc"),
         )
+
+
+def _write_single_file(df, root: str, rel: str, options=None) -> None:
+    """Land ``df`` as ONE parquet file at ``root/rel``: ``coalesce(1)``
+    into the ``<target>.rewrite`` staging dir, rename its single part
+    (and sidecar) into place, drop the staging dir. The add half of
+    every copy-on-write file swap (targeted merge/delete, predicate
+    DML, compaction); a crash leaves only the ``*.rewrite`` dir, which
+    recover_to_last_manifest sweeps."""
+    import shutil
+
+    tmp_dir = os.path.join(root, rel) + ".rewrite"
+    df.coalesce(1).write.mode("overwrite").options(**(options or {})).parquet(
+        tmp_dir
+    )
+    part = next(
+        p
+        for p in sorted(os.listdir(tmp_dir))
+        if p.endswith(".parquet") and not p.startswith((".", "_"))
+    )
+    _move_with_crc(os.path.join(tmp_dir, part), os.path.join(root, rel))
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+
+
+def _tombstone(root: str, rel: str) -> bool:
+    """The remove half of a copy-on-write file swap: move the live
+    file ``root/rel`` (and its sidecar) into ``_removed/`` — never
+    delete or overwrite it, since older manifests pin the name and
+    must keep resolving to the ORIGINAL bytes until vacuum. A file a
+    racing rewrite already moved is left where it is (the race is a
+    commit-time conflict, never a data-phase crash). Returns whether
+    this call moved it."""
+    live = os.path.join(root, rel)
+    if not os.path.exists(live):
+        return False
+    _move_with_crc(live, os.path.join(root, REMOVED_DIR, rel))
+    return True
 
 
 def recover_to_last_manifest(path: str) -> dict:
@@ -3444,14 +3442,15 @@ def recover_to_last_manifest(path: str) -> dict:
        moved to ``_quarantine/r{k}/`` (uncommitted output: ``.m{N}`` /
        ``bulk-v{N}`` rewrites, partial append parts) — quarantined,
        not deleted, so an operator can inspect before discarding;
-    3. leftover hidden staging dirs (``.bulk.*.staging``, ``*.rewrite``)
-       are removed outright (never referenced by anything).
+    3. leftover staging dirs — the hidden ``.*.staging`` dirs of
+       multi-part writes (``.bulk.v{N}.staging``, ...) and the
+       ``<target>.rewrite`` dirs of single-file rewrites and compaction
+       — are removed outright (never referenced by anything).
 
     Returns {version, restored, quarantined, staging_removed,
     claims_removed}. Raises FileNotFoundError if the table has no
-    manifest to recover to.
-    ``.crc`` sidecars travel with their files both directions, same as
-    every other move in this module.
+    manifest to recover to. Every move goes through _move_with_crc,
+    so checksum sidecars travel with their files both directions.
     """
     import shutil
 
@@ -3479,7 +3478,8 @@ def recover_to_last_manifest(path: str) -> dict:
     # staging sweep BEFORE the quarantine scan, so a crashed tmp dir's
     # part files are deleted with their dir instead of being mistaken
     # for live data (merge_bulk stages under ".bulk.v{N}.staging",
-    # hidden; targeted rewrites under "<file>.parquet.rewrite", visible)
+    # hidden; single-file rewrites and compaction under
+    # "<file>.parquet.rewrite", visible)
     staging_removed = 0
     for root, dirs, _files in os.walk(path):
         for d in list(dirs):
@@ -3565,13 +3565,12 @@ def _move_staged_parts(
 ) -> list[str]:
     """Move every staged parquet part — possibly under hive partition
     subdirectories, which are preserved — into the table under the
-    deterministic stamped names ``name_fn(i)`` yields, carrying Hadoop
-    ``.crc`` sidecars alongside (a stale sidecar throws
-    ChecksumException on later reads). Returns the added relpaths in
-    walk order. Shared by every writer that stages then moves in
-    (merge_upsert, append_snapshot, partitioned bulk rewrites) so the
-    commit can be an explicit delta and a concurrent lister never
-    half-sees an in-flight write.
+    deterministic stamped names ``name_fn(i)`` yields, each through
+    :func:`_move_with_crc` (sidecars travel along). Returns the added
+    relpaths in walk order. Shared by every writer that stages then
+    moves in (merge_upsert, append_snapshot, partitioned bulk
+    rewrites) so the commit can be an explicit delta and a concurrent
+    lister never half-sees an in-flight write.
 
     ``drop_empty=True`` skips zero-row parts (one footer read each):
     an input partition that held no rows still emits a part file, and
@@ -3594,21 +3593,9 @@ def _move_staged_parts(
             ).num_rows == 0:
                 continue
             pdir = os.path.relpath(sroot, staging)
-            pdir = "" if pdir == "." else pdir
             name = name_fn(i)
-            dst_rel = os.path.join(pdir, name) if pdir else name
-            os.makedirs(
-                os.path.join(path, pdir) if pdir else path, exist_ok=True
-            )
-            os.replace(os.path.join(sroot, p), os.path.join(path, dst_rel))
-            crc = os.path.join(sroot, f".{p}.crc")
-            if os.path.exists(crc):
-                os.replace(
-                    crc,
-                    os.path.join(path, pdir, f".{name}.crc")
-                    if pdir
-                    else os.path.join(path, f".{name}.crc"),
-                )
+            dst_rel = name if pdir == "." else os.path.join(pdir, name)
+            _move_with_crc(os.path.join(sroot, p), os.path.join(path, dst_rel))
             added.append(dst_rel)
             i += 1
     return added
@@ -3621,7 +3608,7 @@ def append_snapshot(
     key_col: str | None = None,
     commit_extra: dict | None = None,
     max_retries: int = MAX_COMMIT_RETRIES,
-    collect_ndv: bool | None = None,
+    collect_ndv: bool = True,
 ) -> dict:
     """INSERT INTO under the snapshot model: stage ``df``, move the
     parts in under stamped names (inside partition directories on hive
@@ -3768,7 +3755,6 @@ def merge_upsert(
     key_col: str,
     updates_df: DataFrame,
     duck_type: str = "BIGINT",
-    prune: str = "auto",
     rewrite: str = "targeted",
     commit_extra: dict | None = None,
     schema_evolution: bool = False,
@@ -3801,8 +3787,9 @@ def merge_upsert(
     normalized to the target's before writing — see the cast below).
     Returns {version, files_rewritten, rows_updated, rows_inserted}.
 
-    Scale envelope: candidate SELECTION is unbounded (``prune="spark"``
-    never moves keys to the driver), but the REWRITE phase broadcasts
+    Scale envelope: candidate SELECTION is unbounded (above
+    SPARK_PRUNE_THRESHOLD distinct keys it never moves keys to the
+    driver — see _select_candidates), but the REWRITE phase broadcasts
     the distinct update keys for the per-file anti-join — sound to
     ~10⁷–10⁸ numeric keys (hundreds of MB broadcast). Beyond that the
     update set is no longer "targeted": selectivity is table-scale, a
@@ -3995,7 +3982,7 @@ def merge_upsert(
         )
     if candidates is None:
         candidates = _select_candidates(
-            spark, zone_maps, updates_df, key_col, prune, blooms=blooms
+            spark, zone_maps, updates_df, key_col, blooms=blooms
         )
         if (
             rewrite == "auto"
@@ -4010,83 +3997,10 @@ def merge_upsert(
                 spark, path, key_col, updates_df, commit_extra=commit_extra
             )
 
-    kdf = F.broadcast(updates_df.select(F.col(key_col)).distinct())
-    # native blooms survive the rewrite (r13): size per CANDIDATE file
-    # from its own sketch — high-NDV files keep their parquet SBBF
-    # through churn instead of shedding it (the capability-decay gap
-    # the r12 verdict flagged)
-    entry_by_rel = (
-        {e["path"]: e for e in head["files"]} if pending else {}
+    rewrite_one = _keyed_rewrite(
+        spark, path, updates_df, key_col, rel_by_path, dv_relpaths,
+        head if pending else None, f"m{version}-{stamp}",
     )
-
-    def rewrite_one(f: str) -> tuple[int, str | None]:
-        """Returns (rows replaced out of this file, rewritten file's new
-        relpath) — (0, None) == untouched. Per-file work is independent
-        (own tmp dir, own tombstone path, atomic renames), so the loop
-        parallelizes across candidates — see _run_rewrites."""
-        src = _dv_filter(spark, spark.read.parquet(f), path, dv_relpaths)
-        before = src.count()
-        survivors = src.join(kdf, key_col, "left_anti")
-        after = survivors.count()
-        if after == before:
-            return 0, None  # zone map said maybe; the data says no match
-        # The new file lands beside the ORIGINAL's live location (``f``
-        # may be a _removed/ tombstone path if a racing rewrite beat us
-        # to the move — that race is a commit-time conflict, but the
-        # data phase must stay well-formed). Name embeds the writer's
-        # stamp: two racing writers rewriting the same stem must never
-        # overwrite each other's output.
-        rel = rel_by_path[f]
-        base = os.path.basename(rel)
-        new_rel = os.path.join(
-            os.path.dirname(rel),
-            f"{base[:-len('.parquet')]}.m{version}-{stamp}.parquet",
-        )
-        new_name = os.path.join(path, new_rel)
-        d = os.path.dirname(new_name)
-        tmp_dir = new_name + ".rewrite"
-        nb = (
-            _native_bloom_opts([entry_by_rel[rel]], key_col)
-            if rel in entry_by_rel
-            else {}
-        )
-        survivors.coalesce(1).write.mode("overwrite").options(
-            **nb
-        ).parquet(tmp_dir)
-        part = [
-            p
-            for p in os.listdir(tmp_dir)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        ]
-        os.replace(os.path.join(tmp_dir, part[0]), new_name)
-        src_crc = os.path.join(tmp_dir, f".{part[0]}.crc")
-        if os.path.exists(src_crc):
-            os.replace(
-                src_crc,
-                os.path.join(d, f".{os.path.basename(new_name)}.crc"),
-            )
-        # Tombstone, don't delete: the replaced file moves to the hidden
-        # _removed/ retention area (directory scans skip underscore
-        # prefixes) so older snapshots stay readable until vacuum().
-        live = os.path.join(path, rel)
-        tomb = os.path.join(path, REMOVED_DIR, rel)
-        if os.path.exists(live):
-            os.makedirs(os.path.dirname(tomb), exist_ok=True)
-            os.replace(live, tomb)
-            ld = os.path.dirname(live)
-            old_crc = os.path.join(ld, f".{base}.crc")
-            if os.path.exists(old_crc):
-                os.replace(
-                    old_crc,
-                    os.path.join(os.path.dirname(tomb), f".{base}.crc"),
-                )
-        # else: a racing rewrite already tombstoned it — the original
-        # bytes already sit at the tombstone path (we just read them
-        # from there); the conflict surfaces at commit (removed ∩
-        # removed), never as a data-phase crash.
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        return before - after, new_rel
-
     rewrites = _run_rewrites(rewrite_one, candidates)
     rows_updated = sum(n for n, _ in rewrites)
     removed_rels = [
@@ -4433,15 +4347,7 @@ def _commit_bulk_rewrite(
                 f"tombstone collision: {tomb} already exists — refusing to "
                 f"overwrite bytes an older snapshot may pin"
             )
-        os.makedirs(os.path.dirname(tomb), exist_ok=True)
-        os.replace(f, tomb)
-        d, base = os.path.split(f)
-        old_crc = os.path.join(d, f".{base}.crc")
-        if os.path.exists(old_crc):
-            os.replace(
-                old_crc,
-                os.path.join(os.path.dirname(tomb), f".{base}.crc"),
-            )
+        _tombstone(path, rel)
     shutil.rmtree(staging, ignore_errors=True)
 
     # a whole-table rewrite materializes every pending logical change
@@ -4618,8 +4524,6 @@ def _rewrite_file_where(
     partition columns (directory-encoded), like rewrite_table does
     table-wide; the original tombstones into _removed/ so older
     manifests stay reproducible."""
-    import shutil
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -4661,41 +4565,11 @@ def _rewrite_file_where(
         os.path.dirname(rel),
         f"{base[:-len('.parquet')]}.{tag}{version}-{stamp}.parquet",
     )
-    new_name = os.path.join(root, new_rel)
     written = None
     if mode == "update" or out.limit(1).count():
-        tmp_dir = new_name + ".rewrite"
-        out.coalesce(1).write.mode("overwrite").parquet(tmp_dir)
-        part = [
-            p
-            for p in os.listdir(tmp_dir)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        ]
-        os.replace(os.path.join(tmp_dir, part[0]), new_name)
-        src_crc = os.path.join(tmp_dir, f".{part[0]}.crc")
-        if os.path.exists(src_crc):
-            os.replace(
-                src_crc,
-                os.path.join(
-                    os.path.dirname(new_name),
-                    f".{os.path.basename(new_name)}.crc",
-                ),
-            )
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+        _write_single_file(out, root, new_rel)
         written = new_rel
-    # tombstone the original (never rewrite bytes under a pinned name)
-    live = os.path.join(root, rel)
-    tomb = os.path.join(root, REMOVED_DIR, rel)
-    if os.path.exists(live):
-        os.makedirs(os.path.dirname(tomb), exist_ok=True)
-        os.replace(live, tomb)
-        ld, lbase = os.path.split(live)
-        old_crc = os.path.join(ld, f".{lbase}.crc")
-        if os.path.exists(old_crc):
-            os.replace(
-                old_crc,
-                os.path.join(os.path.dirname(tomb), f".{lbase}.crc"),
-            )
+    _tombstone(root, rel)
     return matched, written
 
 
@@ -5227,9 +5101,7 @@ def rewrite_partition(
     # tombstone the replaced originals (copy-on-write: never rewrite
     # bytes a pinned manifest references)
     for rel in rels:
-        live = os.path.join(path, rel)
-        if os.path.exists(live):
-            _move_with_crc(live, os.path.join(path, REMOVED_DIR, rel))
+        _tombstone(path, rel)
 
     manifest = commit_optimistic(
         path,
@@ -5759,12 +5631,8 @@ def restore_table(
     tombstoned = 0
     for f in head["files"]:
         rel = f["path"]
-        if rel in target_rels:
-            continue
-        live = os.path.join(path, rel)
-        if os.path.exists(live):
-            _move_with_crc(live, os.path.join(path, REMOVED_DIR, rel))
-            tombstoned += 1
+        if rel not in target_rels:
+            tombstoned += _tombstone(path, rel)
     return {
         "version": manifest["version"],
         "restored_to": version,
@@ -6315,7 +6183,6 @@ def compact_snapshot(
     ``row_preserving``: a compaction and a MERGE on files it didn't
     touch both commit (the loser rebases); a merge that rewrote a
     compacted file, or a DV landing on one, is a detected conflict."""
-    import shutil
     import uuid as _uuid
 
     pending = committed_versions(path, resolve_in_doubt=True)
@@ -6398,9 +6265,6 @@ def compact_snapshot(
 
             merged = merged.sort(F.col(cluster_col))
         rows = merged.count()
-        tmp_dir = os.path.join(
-            path, f".compact.v{version}.{stamp}.{idx}.staging"
-        )
         # native blooms survive compaction (r13): the merged output's
         # key NDV is the group's merged sketch — exactly when several
         # sub-cap files compact into one saturated file, the manifest
@@ -6413,39 +6277,12 @@ def compact_snapshot(
             if cluster_col is not None and pending
             else {}
         )
-        merged.coalesce(1).write.mode("overwrite").options(**nb).parquet(
-            tmp_dir
-        )
-        parts = [
-            p
-            for p in os.listdir(tmp_dir)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        ]
         # stamped name: racing maintenance jobs never share an output
         name = f"part-compact-v{version}-{stamp}-{idx:04d}.parquet"
         target_rel = f"{pdir}/{name}" if pdir else name
-        target = os.path.join(path, target_rel)
-        os.replace(os.path.join(tmp_dir, parts[0]), target)
-        crc = os.path.join(tmp_dir, f".{parts[0]}.crc")
-        if os.path.exists(crc):
-            os.replace(
-                crc, os.path.join(os.path.dirname(target), f".{name}.crc")
-            )
+        _write_single_file(merged, path, target_rel, nb)
         for rel in srels:
-            live = os.path.join(path, rel)
-            tomb = os.path.join(path, REMOVED_DIR, rel)
-            if not os.path.exists(live):
-                continue  # already tombstoned by a racer: conflict at commit
-            os.makedirs(os.path.dirname(tomb), exist_ok=True)
-            os.replace(live, tomb)
-            d, base = os.path.split(live)
-            old_crc = os.path.join(d, f".{base}.crc")
-            if os.path.exists(old_crc):
-                os.replace(
-                    old_crc,
-                    os.path.join(os.path.dirname(tomb), f".{base}.crc"),
-                )
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+            _tombstone(path, rel)  # a racer's earlier move: conflict at commit
         return rows, target_rel
 
     results = _run_rewrites(compact_partition, list(enumerate(plan)))

@@ -711,6 +711,38 @@ def test_metadata_commit_coexists_with_writers(spark, duck, tmp_path):
     assert {r.v for r in live.where("k = 5").collect()} == {-1}
 
 
+def test_overtaken_listing_commit_never_rolls_latest_back(tmp_path, monkeypatch):
+    """write_versioned_manifest publishes latest.json monotonically: a
+    listing commit (v2) overtaken by another (v3) between claiming its
+    slot and publishing must leave latest.json at v3. A plain
+    unconditional replace rolled the head back to v2, so table_renames
+    and table_schema read a stale head until a later committed_versions
+    healed it. No Spark: the table is one pyarrow-written file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    pq.write_table(pa.table({"k": [1, 2, 3]}), os.path.join(path, "p0.parquet"))
+    write_versioned_manifest(path)
+
+    real = M.write_manifest
+    overtaker = []
+
+    def racing_listing(p, manifest_path=None):
+        out = real(p, manifest_path)
+        monkeypatch.setattr(M, "write_manifest", real)  # overtake once
+        overtaker.append(write_versioned_manifest(p, renames={"k0": "k"}))
+        return out
+
+    monkeypatch.setattr(M, "write_manifest", racing_listing)
+    assert write_versioned_manifest(path)["version"] == 2
+    assert overtaker[0]["version"] == 3
+    latest = M.read_manifest(os.path.join(path, "_manifests", "latest.json"))
+    assert latest["version"] == 3
+    assert M.table_renames(path) == {"k0": "k"}
+
+
 def test_retry_exhaustion_fails_loudly_and_recovers(spark, duck, tmp_path):
     """Contention beyond MAX_COMMIT_RETRIES: a writer that loses the
     CAS on every attempt (a commuting append lands in each of its

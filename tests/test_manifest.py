@@ -566,9 +566,30 @@ def test_zone_map_pruning_scales_to_cdc_size_key_batches(spark, duck, tmp_path):
     assert wall < 120, f"100k-key merge took {wall:.1f}s"
 
 
-def test_spark_side_zone_map_pruning(spark, duck, tmp_path):
-    """The billion-key escape hatch: prune='spark' selects candidate
-    files with a bucketed range join — the keys never reach the driver.
+def _force_spark_prune(monkeypatch) -> list:
+    """Make every change batch count as CDC-scale (SPARK_PRUNE_THRESHOLD
+    0), so candidate selection runs the Spark bucketed range join, and
+    record each call of it that RETURNED (a TypeError fallback to the
+    driver path would not count). Returns the call log."""
+    from data_pipeline_project_spark.sinks import manifest as M
+
+    calls = []
+    real = M._zone_map_candidates_spark
+
+    def counted(*args, **kwargs):
+        out = real(*args, **kwargs)
+        calls.append(len(out))
+        return out
+
+    monkeypatch.setattr(M, "SPARK_PRUNE_THRESHOLD", 0)
+    monkeypatch.setattr(M, "_zone_map_candidates_spark", counted)
+    return calls
+
+
+def test_spark_side_zone_map_pruning(spark, duck, tmp_path, monkeypatch):
+    """The billion-key escape hatch: above SPARK_PRUNE_THRESHOLD keys,
+    candidate selection runs a bucketed range join — the keys never
+    reach the driver.
     Asserts (1) candidate parity with the driver bisect path on random
     zone maps incl. None-stat files, (2) delete/merge end-to-end
     through the spark path match the driver path's results, (3) the
@@ -602,6 +623,7 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path):
     assert spark_c == driver_c
 
     # (2) end-to-end through the spark path
+    calls = _force_spark_prune(monkeypatch)
     path = str(tmp_path / "t")
     df = spark.range(0, 20_000).select(
         F2.col("id").alias("user_id"), (F2.col("id") % 13).alias("v")
@@ -611,16 +633,16 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path):
     updates = spark.range(0, 3_000).select(
         (F2.col("id") + 19_000).alias("user_id"), F2.lit(-5).alias("v")
     )
-    stats = merge_upsert(spark, duck, path, "user_id", updates, prune="spark")
+    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    assert len(calls) == 1
     assert stats["rows_updated"] == 1_000 and stats["rows_inserted"] == 2_000
     live = spark.read.parquet(path)
     assert live.count() == 22_000
     assert live.where((F2.col("user_id") >= 19_000) & (F2.col("v") != -5)).count() == 0
 
     del_keys = spark.createDataFrame([(5,), (21_500,)], ["user_id"])
-    dstats = delete_rows_targeted(
-        spark, duck, path, "user_id", del_keys, prune="spark"
-    )
+    dstats = delete_rows_targeted(spark, duck, path, "user_id", del_keys)
+    assert len(calls) == 2
     assert dstats["rows_deleted"] == 2
     # fresh read: delete is copy-on-write (survivors under a NEW name,
     # original tombstoned), so a DataFrame planned before the delete
@@ -649,14 +671,16 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path):
         )
 
 
-def test_spark_side_zone_map_pruning_string_and_date_keys(spark, duck, tmp_path):
+def test_spark_side_zone_map_pruning_string_and_date_keys(
+    spark, duck, tmp_path, monkeypatch
+):
     """r9: the spark-side prune extends beyond integer stats via an
     order-preserving rank (7-byte big-endian UTF-8 prefix for strings —
     zero-padded, so 'b' ranks above 'aaa'; epoch days for dates).
     Asserts (1) candidate parity with the driver path on adversarial
     string keys (shared 8+-byte prefixes collapsing to one bucket,
     unicode, empty string, boundary hits), (2) date-key parity, (3) an
-    end-to-end string-keyed merge through prune='spark', (4) exact
+    end-to-end string-keyed merge through the spark path, (4) exact
     integer DIV bucketing at ranks beyond double precision (2^53+)."""
     import datetime
     import random
@@ -729,7 +753,8 @@ def test_spark_side_zone_map_pruning_string_and_date_keys(spark, duck, tmp_path)
     assert _zone_map_candidates_spark(spark, bmaps, bk, "k") == \
         _zone_map_candidates(bmaps, bkeys)
 
-    # (3) end-to-end: string-keyed table, merge through prune='spark'
+    # (3) end-to-end: string-keyed table, merge through the spark path
+    calls = _force_spark_prune(monkeypatch)
     path = str(tmp_path / "t")
     df = spark.range(0, 5_000).select(
         F2.format_string("user-%07d", F2.col("id")).alias("uid"),
@@ -742,9 +767,8 @@ def test_spark_side_zone_map_pruning_string_and_date_keys(spark, duck, tmp_path)
         + [(f"zuser-{i}", -6) for i in range(10)],
         "uid string, v bigint",
     )
-    stats = merge_upsert(
-        spark, duck, path, "uid", updates, duck_type="VARCHAR", prune="spark"
-    )
+    stats = merge_upsert(spark, duck, path, "uid", updates, duck_type="VARCHAR")
+    assert len(calls) == 1
     assert stats["rows_updated"] == 100 and stats["rows_inserted"] == 10
     live = spark.read.parquet(path)
     assert live.count() == 5_010
@@ -753,13 +777,15 @@ def test_spark_side_zone_map_pruning_string_and_date_keys(spark, duck, tmp_path)
     assert live.where("uid like 'zuser%' and v != -6").count() == 10 - 10
 
 
-def test_spark_side_zone_map_pruning_timestamp_keys(spark, duck, tmp_path):
+def test_spark_side_zone_map_pruning_timestamp_keys(
+    spark, duck, tmp_path, monkeypatch
+):
     """r10: timestamp keys rank as epoch MICROS (unix_micros Spark-side,
     exact integer timedelta division driver-side), retiring the last
     key type that collected keys to the driver above the bisect path.
     Asserts (1) candidate parity with the driver path on sub-second,
     DST-boundary, and pre-epoch stats, (2) an end-to-end
-    timestamp-keyed merge and DV delete through prune='spark'."""
+    timestamp-keyed merge and DV delete through the spark path."""
     import datetime
 
     from pyspark.sql import functions as F2
@@ -805,7 +831,8 @@ def test_spark_side_zone_map_pruning_timestamp_keys(spark, duck, tmp_path):
 
     assert _rank_py(dst.replace(tzinfo=utc)) == _rank_py(dst)
 
-    # (2) end-to-end: timestamp-keyed table through prune='spark'
+    # (2) end-to-end: timestamp-keyed table through the spark path
+    calls = _force_spark_prune(monkeypatch)
     path = str(tmp_path / "t")
     base = spark.range(0, 5_000).select(
         F2.timestamp_micros(
@@ -822,9 +849,9 @@ def test_spark_side_zone_map_pruning_timestamp_keys(spark, duck, tmp_path):
         F2.lit(-5).cast("long").alias("v"),
     )
     stats = merge_upsert(
-        spark, duck, path, "event_ts", upd, duck_type="TIMESTAMP",
-        prune="spark",
+        spark, duck, path, "event_ts", upd, duck_type="TIMESTAMP"
     )
+    assert len(calls) == 1
     assert stats["rows_updated"] == 100 and stats["rows_inserted"] == 100
     live = spark.read.parquet(path)
     assert live.count() == 5_100
@@ -836,13 +863,16 @@ def test_spark_side_zone_map_pruning_timestamp_keys(spark, duck, tmp_path):
             [(datetime.datetime.utcfromtimestamp(1_700_000_000),)],
             "event_ts timestamp",
         ),
-        duck_type="TIMESTAMP", prune="spark",
+        duck_type="TIMESTAMP",
     )
+    assert len(calls) == 2
     assert dstats["rows_deleted"] == 1
     assert read_version(spark, path).count() == 5_099
 
 
-def test_spark_side_zone_map_pruning_float_keys(spark, duck, tmp_path):
+def test_spark_side_zone_map_pruning_float_keys(
+    spark, duck, tmp_path, monkeypatch
+):
     """r10: float keys rank via the IEEE-754 total-order bit trick
     (doubleToRawLongBits JVM-side, struct.unpack driver-side; negative
     half reflected), retiring the last COMMON key type on the driver
@@ -854,7 +884,7 @@ def test_spark_side_zone_map_pruning_float_keys(spark, duck, tmp_path):
     (2) candidate parity with the driver path on mixed-sign maps
     (shift path) incl. ±inf stats and out-of-range keys, (3) integer
     maps spanning most of int64 (the latent pre-r10 ANSI overflow
-    crash), (4) an end-to-end float-keyed merge through prune='spark',
+    crash), (4) an end-to-end float-keyed merge through the spark path,
     (5) boolean stats rank too."""
     import math
 
@@ -919,8 +949,9 @@ def test_spark_side_zone_map_pruning_float_keys(spark, duck, tmp_path):
     assert _zone_map_candidates_spark(spark, imaps, ik, "k") == \
         _zone_map_candidates(imaps, ikeys)
 
-    # (4) end-to-end: float-keyed table through prune='spark' (keys on
+    # (4) end-to-end: float-keyed table through the spark path (keys on
     # both sides of zero, so the table's own stats force the shift)
+    calls = _force_spark_prune(monkeypatch)
     path = str(tmp_path / "t")
     base = spark.range(0, 5_000).select(
         ((F2.col("id") - 2_500) * 0.25).alias("score"),
@@ -932,9 +963,8 @@ def test_spark_side_zone_map_pruning_float_keys(spark, duck, tmp_path):
         ((F2.col("id") - 2_500) * 0.25).alias("score"),
         F2.lit(-5).cast("long").alias("v"),
     )
-    stats = merge_upsert(
-        spark, duck, path, "score", upd, duck_type="DOUBLE", prune="spark"
-    )
+    stats = merge_upsert(spark, duck, path, "score", upd, duck_type="DOUBLE")
+    assert len(calls) == 1
     assert stats["rows_updated"] == 300 and stats["rows_inserted"] == 0
     live = spark.read.parquet(path)
     assert live.count() == 5_000

@@ -27,7 +27,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_pipeline_project_spark.sinks import manifest as M
 from data_pipeline_project_spark.sinks.layout import (
     join_plan_advice,
     write_range_clustered,
@@ -278,12 +277,10 @@ def test_commit_and_analyze_never_read_data_on_the_driver(
     assert abs(got["ndv"] - 7_000) / 7_000 <= 0.28
 
 
-def test_collect_ndv_gate_and_bootstrap_is_metadata_only(
-    spark, duck, tmp_path, monkeypatch
-):
+def test_collect_ndv_gate_and_bootstrap_is_metadata_only(spark, duck, tmp_path):
     """Bootstrap NEVER sketches (the listing path stays metadata-only
     — sketching there would data-scan the whole table); appends sketch
-    their added file unless COLLECT_NDV is off; analyze_table
+    their added file unless collect_ndv=False; analyze_table
     backfills the bootstrap era explicitly."""
     path = str(tmp_path / "t")
     spark.range(0, 1_000).select(
@@ -292,15 +289,14 @@ def test_collect_ndv_gate_and_bootstrap_is_metadata_only(
     write_versioned_manifest(path)
     assert "ndv" not in _latest(path)["files"][0]
 
-    monkeypatch.setattr(M, "COLLECT_NDV", False)
     append_snapshot(
         spark, path,
         spark.createDataFrame([(5000, 2)], "k long, v long"),
+        collect_ndv=False,
     )
     assert not any(f.get("ndv") for f in _latest(path)["files"])
     assert table_column_ndv(path, "k") is None
 
-    monkeypatch.setattr(M, "COLLECT_NDV", True)
     append_snapshot(
         spark, path,
         spark.createDataFrame([(6000, 3)], "k long, v long"),

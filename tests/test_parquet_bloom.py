@@ -126,7 +126,7 @@ def _candidates(spark, duck, path, target):
     return _select_candidates(
         spark, zone_maps,
         spark.createDataFrame([(target,)], "sk long"),
-        "sk", "driver", blooms=blooms,
+        "sk", blooms=blooms,
     )
 
 
