@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from data_pipeline_project_spark.operators.dedup import shingle_hashes
 
@@ -171,28 +172,43 @@ def pack_sequences(
     )
 
 
-def _positional_shingle_kernel_factory(n: int):
-    """POSITIONAL (non-distinct) k-shingle hashes — unlike
-    dedup._shingle_kernel_factory, every position keeps its hash so
-    span offsets survive; no minhash range-mod, full 60-bit digests.
-    One batched md5 per Arrow batch, no per-shingle Python hashing
-    (guide §4.2 / r13 verdict item 3; digest contract unchanged)."""
+def _positional_shingle_rows(k: int, doc_id_type):
+    """``mapInArrow`` generator over (doc_id, text) batches: one
+    (doc_id, pos, sh) row per POSITIONAL (non-distinct) ``k``-shingle.
+    Unlike dedup._shingle_kernel_factory every position keeps its hash,
+    so span offsets survive; no minhash range-mod, full 60-bit digests.
+    One batched md5 per Arrow batch (dedup._batch_shingle_hashes), and
+    the rows leave the kernel flat — no per-doc list column for the JVM
+    to explode. doc_id is gathered with ``take``, so a NULL id stays
+    NULL; a NULL or short text yields no rows."""
     import re
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from data_pipeline_project_spark.operators.dedup import _batch_shingle_hashes
 
     pat = re.compile("[^a-z0-9]+")
+    schema = StructType(
+        [
+            StructField("doc_id", doc_id_type),
+            StructField("pos", LongType()),
+            StructField("sh", LongType()),
+        ]
+    )
 
-    def kernel(texts):
-        counts, flat = _batch_shingle_hashes(texts, n, pat)
-        # ndarray elements: Arrow list-encoding reads int64 buffers
-        # directly — no per-hash Python int materialization
-        return pd.Series(np.split(flat, np.cumsum(counts)[:-1]))
+    def rows(batches):
+        for b in batches:
+            counts, flat = _batch_shingle_hashes(b.column(1).to_pylist(), k, pat)
+            doc = np.repeat(np.arange(b.num_rows, dtype=np.int64), counts)
+            first = np.cumsum(counts) - counts  # each doc's first row
+            pos = np.arange(len(flat), dtype=np.int64) - first[doc]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(doc)), pa.array(pos), pa.array(flat)],
+                names=["doc_id", "pos", "sh"],
+            )
 
-    return kernel
+    return rows, schema
 
 
 def duplicate_passages(
@@ -216,9 +232,10 @@ def duplicate_passages(
     1. every positional ``k``-token shingle is hashed (one scan, no
        shuffle yet);
     2. shingles are grouped by hash and only those seen in 2..``max_df``
-       distinct docs survive — the df cap bounds the self-join fan-out
-       exactly like an LSH band-bucket cap, so work scales with truly
-       duplicated content, not corpus size squared;
+       distinct non-null doc ids survive (a shingle repeated inside
+       one doc counts that doc once) — the df cap bounds the self-join
+       fan-out exactly like an LSH band-bucket cap, so work scales with
+       truly duplicated content, not corpus size squared;
     3. the surviving (doc, pos, hash) rows self-join on the hash: a
        match at positions (pa, pb) lies on diagonal ``pa - pb``, and a
        COPIED PASSAGE is a consecutive run along one diagonal;
@@ -242,28 +259,21 @@ def duplicate_passages(
             "min_tokens silently under-reports duplicates"
         )
     from data_pipeline_project_spark.functions.persist_scope import scoped_persist
-    from data_pipeline_project_spark.operators.similarity import _udf
 
     # Positional shingle hashes via an Arrow kernel, not the
     # ngrams()+md5 expression form: the interpreted HOF tree under a
-    # Generate measured ~35 s/pass at 5k docs, while the hashlib memo
+    # Generate measured ~35 s/pass at 5k docs, while the batched md5
     # kernel (identical digests — the oracle's '0x'||substr(md5,1,15)
-    # contract) runs the same pass in well under a second. Same
-    # trade-off, same digest contract as dedup.shingle_hashes.
-    sh_arr = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _udf(
-            f"pos_shingle_hashes_{k}",
-            _positional_shingle_kernel_factory(k),
-            "array<long>",
-        )(F.col(text_col)).alias("_shs"),
-    )
+    # contract) runs the same pass in well under a second. The kernel
+    # emits the exploded rows itself (mapInArrow): a list-returning
+    # pandas_udf under posexplode would run TWICE per row, because
+    # Catalyst infers size(list) > 0 from the Generate and pushes that
+    # filter below the projection computing the UDF.
+    rows, schema = _positional_shingle_rows(k, docs.schema[id_col].dataType)
     # The shingle table feeds the df aggregate AND the join probe side:
-    # persist it (query-scoped) so the Arrow kernel runs once per build.
+    # persist it (query-scoped) so the kernel runs once per build.
     sh = scoped_persist(
-        sh_arr.select("doc_id", F.posexplode("_shs").alias("pos", "sh")).select(
-            "doc_id", F.col("pos").cast("bigint").alias("pos"), "sh"
-        )
+        docs.select(F.col(id_col), F.col(text_col)).mapInArrow(rows, schema)
     )
 
     eligible = (

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from data_pipeline_project_spark.functions.expr import let
 from data_pipeline_project_spark.operators.text import HASH_MOD, tokens
@@ -241,28 +242,49 @@ def _signature_kernel_factory(n: int):
     return kernel
 
 
-def _jaccard_kernel(a, b):
-    import pandas as pd
-
+def _jaccard_scores(a, b) -> list[float]:
     out = []
     for xa, xb in zip(a, b):
         sa, sb = set(xa), set(xb)
         inter = len(sa & sb)
         union = len(sa) + len(sb) - inter
         out.append(round(inter / union, 6) if union else 0.0)
-    return pd.Series(out)
+    return out
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two hash-set columns — Arrow kernel (Python
-    set ops) instead of interpreted array_intersect/array_union, the
-    dominant cost of all-pairs verification. len ratios are exact ints
-    -> identical doubles -> identical round(.,6) in both engines.
-    (round on a double never lands on an exact .5 tie at 1e-6, so
-    Python banker's vs SQL half-up cannot diverge here.)"""
-    from data_pipeline_project_spark.operators.similarity import _udf
+def jaccard_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs: (id_a, id_b,
+    sh_a, sh_b) hash-set rows in, (id_a, id_b, jaccard) out for the
+    pairs with jaccard >= ``threshold``.
 
-    return _udf("jaccard", _jaccard_kernel, "double")(a, b)
+    One mapInPandas pass scores each pair with Python set ops (not the
+    interpreted array_intersect/array_union that dominated all-pairs
+    verification cost) and drops the failing pairs inside the kernel.
+    A Column UDF filtered on its own result would run twice per pair:
+    Catalyst pushes the filter below the projection that computes it. len ratios are exact ints -> identical doubles ->
+    identical round(.,6) in both engines (round on a double never
+    lands on an exact .5 tie at 1e-6, so Python banker's vs SQL
+    half-up cannot diverge here)."""
+    import numpy as np
+    import pandas as pd
+
+    schema = StructType(
+        [pairs.schema["id_a"], pairs.schema["id_b"], StructField("jaccard", DoubleType())]
+    )
+
+    def verify(frames):
+        for f in frames:
+            j = np.asarray(_jaccard_scores(f["sh_a"], f["sh_b"]), dtype=np.float64)
+            keep = j >= threshold
+            yield pd.DataFrame(
+                {
+                    "id_a": f["id_a"].to_numpy()[keep],
+                    "id_b": f["id_b"].to_numpy()[keep],
+                    "jaccard": j[keep],
+                }
+            )
+
+    return pairs.select("id_a", "id_b", "sh_a", "sh_b").mapInPandas(verify, schema)
 
 
 def shingle_hashes(text: Column, n: int = 3) -> Column:
@@ -311,11 +333,13 @@ def minhash_lsh_pairs(
         _signature_kernel_factory(n),
         "struct<sh:array<long>,mh:array<long>>",
     )
+    # The empty-set filter goes on the CACHED rows: inside the persisted
+    # plan Catalyst would push it below the projection computing the
+    # signature UDF and run the kernel twice per doc.
     base = scoped_persist(
         docs.select(F.col(id_col).alias("doc_id"), sig_udf(F.col(text_col)).alias("s"))
         .select("doc_id", F.col("s.sh").alias("sh"), F.col("s.mh").alias("mh"))
-        .where(F.size("sh") > 0)
-    )
+    ).where(F.size("sh") > 0)
 
     bands = base.select(
         "doc_id",
@@ -353,14 +377,7 @@ def minhash_lsh_pairs(
 
     a = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    return jaccard_pairs(candidates.join(a, "id_a").join(b, "id_b"), threshold)
 
 
 def _simhash_kernel_factory(bits: int):

@@ -19,6 +19,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 EMB_DIM = 64
 # 8 bits -> 256 buckets. The testdata embeddings are weakly clustered
@@ -194,15 +195,44 @@ def cosine_near_pairs(
     # mirrored (id_b, id_a) orientation is cut by the id_a < id_b
     # filter. The dedup was a no-op costing the query's widest shuffle
     # (every scored candidate pair) — removed (r13).
-    return (
-        left.join(right, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= threshold)
+    return cosine_pairs(
+        left.join(right, "bucket").where(F.col("id_a") < F.col("id_b")), threshold
+    )
+
+
+def cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact-cosine verification of candidate pairs: (id_a, id_b, va,
+    vb) double-vector rows in, (id_a, id_b, cosine_sim) out for the
+    pairs with ``round(cosine, 6) >= threshold``.
+
+    One mapInPandas pass scores each pair (the _cosine_kernel fold) and
+    drops, inside the kernel, every pair whose raw score is more than
+    1e-6 below the threshold; rounding moves a score by at most 5e-7,
+    so no passing pair is lost. Spark then applies round(., 6) and the
+    threshold itself, so the rounding is Spark's. A Column UDF filtered
+    on its own result would run twice per pair: Catalyst pushes the
+    filter below the projection that computes it. A NaN score (zero
+    vector) is kept: Spark orders NaN above every number."""
+    schema = StructType(
+        [pairs.schema["id_a"], pairs.schema["id_b"], StructField("cosine_sim", DoubleType())]
+    )
+    floor = threshold - 1e-6
+
+    def score(frames):
+        for f in frames:
+            sim = _cosine_kernel(f["va"], f["vb"]).to_numpy(dtype=np.float64)
+            keep = ~(sim < floor)
+            yield pd.DataFrame(
+                {
+                    "id_a": f["id_a"].to_numpy()[keep],
+                    "id_b": f["id_b"].to_numpy()[keep],
+                    "cosine_sim": sim[keep],
+                }
+            )
+
+    raw = pairs.select("id_a", "id_b", "va", "vb").mapInPandas(score, schema)
+    return raw.withColumn("cosine_sim", F.round("cosine_sim", 6)).where(
+        F.col("cosine_sim") >= threshold
     )
 
 

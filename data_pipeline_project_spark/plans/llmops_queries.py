@@ -205,20 +205,17 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     validate the LSH paths, not to run corpus-wide: dedup_minhash_lsh
     is the full-corpus scale path."""
     from data_pipeline_project_spark.functions.persist_scope import scoped_persist
-    from data_pipeline_project_spark.operators.dedup import jaccard, shingle_hashes
+    from data_pipeline_project_spark.operators.dedup import jaccard_pairs, shingle_hashes
 
     d = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < 500)
+    # filter the cached rows, not inside the persisted plan (where it
+    # would be pushed below the kernel's projection and run it twice)
     base = scoped_persist(
         d.select(F.col("doc_id"), shingle_hashes(F.col("text")).alias("sh"))
-        .where(F.size("sh") > 0)
-    )
+    ).where(F.size("sh") > 0)
     a = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", jaccard("sh_a", "sh_b").alias("jaccard"))
-        .where(F.col("jaccard") >= 0.3)
-    )
+    return jaccard_pairs(a.join(b, F.col("id_a") < F.col("id_b")), 0.3)
 
 
 # ---- embedding similarity --------------------------------------------------
@@ -685,25 +682,39 @@ def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-data cleaning pass: quality + language +
     length filters, then exact dedup keeping the smallest doc id — the
     C4-style end-to-end selection every corpus build runs. One narrow
-    kernel scan, one filter, then keeper selection as a window over the
-    content hash (min(doc_id) per md5(text) group): a single parallel
-    hash shuffle, no join and no broadcast — the keeper set is
-    corpus-sized, so broadcasting it would OOM the driver at scale."""
-    from data_pipeline_project_spark.operators.text import text_stats_struct
+    kernel scan that also applies the filter, then keeper selection as
+    a window over the content hash (min(doc_id) per md5(text) group): a
+    single parallel hash shuffle, no join and no broadcast — the keeper
+    set is corpus-sized, so broadcasting it would OOM the driver at
+    scale."""
+    import pandas as pd
 
-    d = load_table(spark, "documents", sf_dir)
-    scored = d.select(
-        "doc_id", "text", text_stats_struct(F.col("text")).alias("s")
-    ).select(
-        "doc_id", "text",
-        F.col("s.n_tokens").alias("n_tokens"),
-        F.col("s.quality").alias("quality"),
-        F.col("s.detected_lang").alias("detected_lang"),
-    )
-    filtered = scored.where(
-        (F.col("quality") >= 0.6)
-        & (F.col("detected_lang") == "en")
-        & F.col("n_tokens").between(10, 1000)
+    from data_pipeline_project_spark.operators.text import _text_stats_kernel
+
+    d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+
+    # The filter runs inside the kernel pass: a filter on the fields of
+    # the text-stats UDF would be pushed below the projection computing
+    # it and run the kernel twice per document.
+    def passing(frames):
+        for f in frames:
+            s = _text_stats_kernel(f["text"])
+            keep = (
+                (s["quality"] >= 0.6)
+                & (s["detected_lang"] == "en")
+                & s["n_tokens"].between(10, 1000)
+            ).to_numpy()
+            yield pd.DataFrame(
+                {
+                    "doc_id": f["doc_id"].to_numpy()[keep],
+                    "text": f["text"].to_numpy()[keep],
+                    "n_tokens": s["n_tokens"].to_numpy()[keep],
+                    "quality": s["quality"].to_numpy()[keep],
+                }
+            )
+
+    filtered = d.mapInPandas(
+        passing, "doc_id long, text string, n_tokens int, quality double"
     )
     # r13 plan audit: windowing on md5(text) does NOT ship the text —
     # Catalyst projects the partition expression to a _w0 column and
@@ -1770,9 +1781,12 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     proj = random_projection(emb, vec_col="embedding", k=_JL_K)
+    # posexplode_outer + a pos filter, not posexplode: Catalyst infers
+    # size(proj) > 0 from an inner Generate and pushes it below the
+    # projection computing the kernel, which then runs twice per row.
     return proj.select(
-        "vec_id", F.posexplode("proj").alias("pos", "raw")
-    ).select(
+        "vec_id", F.posexplode_outer("proj").alias("pos", "raw")
+    ).where(F.col("pos").isNotNull()).select(
         "vec_id",
         (F.col("pos") + 1).cast("bigint").alias("dim_idx"),
         F.round(F.col("raw"), 6).alias("value"),
@@ -2421,25 +2435,21 @@ def minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path's counts hash-check exactly."""
     from data_pipeline_project_spark.functions.persist_scope import scoped_persist
     from data_pipeline_project_spark.operators.dedup import (
-        jaccard,
+        jaccard_pairs,
         minhash_lsh_pairs,
         shingle_hashes,
     )
 
     d = load_table(spark, "documents", sf_dir)
     prefix = d.where(F.col("doc_id") < 500)
+    # filter the cached rows (see dedup_ngram_jaccard)
     base = scoped_persist(
-        prefix.select("doc_id", shingle_hashes(F.col("text")).alias("sh")).where(
-            F.size("sh") > 0
-        )
-    )
+        prefix.select("doc_id", shingle_hashes(F.col("text")).alias("sh"))
+    ).where(F.size("sh") > 0)
     a = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    true_pairs = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", jaccard("sh_a", "sh_b").alias("jaccard"))
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
+    true_pairs = jaccard_pairs(a.join(b, F.col("id_a") < F.col("id_b")), 0.5).select(
+        "id_a", "id_b"
     )
     found = (
         minhash_lsh_pairs(d, threshold=0.5)

@@ -7,6 +7,7 @@ stream table + documents/embeddings for the LLM-ops surface.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +29,32 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# session -> {resolved path: ((st_mtime_ns, st_size), inferred schema)}
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, which infers the schema with a
+    Spark job, the first time; later loads of the unchanged path reuse
+    that exact schema and start no job. A rewrite changes the file's
+    (or directory's) mtime or size and so is inferred afresh. The
+    schema is Spark's own, never a pyarrow footer read: pyarrow maps
+    TIMESTAMP(NANOS) differently from Spark's nanosAsLong reader."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:  # not a local path: no cheap change check
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = memo.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[real] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -36,7 +63,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # rejects unless read as long. Runtime-settable, so this also
         # covers driver-supplied sessions built without our factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong it arrives
     # as epoch-nanos LongType — convert to a true timestamp (values are
     # microsecond-aligned in the testdata, so the division is exact).
@@ -45,6 +72,11 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
             # integer div — a double division here loses precision at
             # epoch-nanos magnitude (2^53 < 1.7e18) and shifts values 1us
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # NOTE: a load reads the schema Spark inferred for the same path
+    # earlier in this session, unless the file (or directory) has
+    # changed since: _read_parquet keys it on st_mtime_ns and st_size.
+    # Without it every query build pays a one-task inference job per
+    # table it loads.
     # NOTE: the testdata ships every table as single-row-group parquet,
     # so scans are unsplittable and run on one core. Measured both
     # ways: repartitioning documents/embeddings to session parallelism

@@ -180,6 +180,44 @@ def test_duplicate_passages_planted_span(spark):
     assert r.b_start == 6
 
 
+def test_duplicate_passages_df_cap_counts_distinct_non_null_docs(spark):
+    """The max_df cap counts the DISTINCT non-null doc ids holding a
+    shingle: a shingle repeated inside doc 1 counts doc 1 once, and the
+    NULL-id copy of the a..l passage counts nothing (with it, or with
+    doc 1 twice, the a..l shingles reach df 4 and max_df=3 would drop
+    them). A NULL text yields no shingles; a NULL id pairs with no one."""
+    from data_pipeline_project_spark.operators.corpus import duplicate_passages
+
+    d = spark.createDataFrame(
+        [
+            (1, "a b c d e f g h i j k l a b c d e f"),
+            (2, "a b c d e f g h i j k l"),
+            (None, "a b c d e f g h i j k l"),
+            (3, None),
+            (4, "x y"),
+            (5, "a b c d e f g h i j k l m"),
+            (6, "u v w x y z q"),
+            (7, "r u v w x y z"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def spans(max_df):
+        out = duplicate_passages(d, k=3, min_tokens=4, max_df=max_df).collect()
+        return sorted(tuple(r) for r in out)
+
+    # every a..l shingle has df 3 (docs 1, 2, 5): capped at 2, kept at 3
+    assert spans(2) == [(6, 7, 0, 1, 6)]
+    assert spans(3) == [
+        (1, 2, 0, 0, 12),
+        (1, 2, 12, 0, 6),
+        (1, 5, 0, 0, 12),
+        (1, 5, 12, 0, 6),
+        (2, 5, 0, 0, 12),
+        (6, 7, 0, 1, 6),
+    ]
+
+
 def test_duplicate_passages_spans_are_verbatim(spark):
     """Every reported span on the real corpus is a verbatim token-level
     match between the two documents (and the set is non-vacuous)."""

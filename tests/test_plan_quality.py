@@ -164,6 +164,9 @@ def test_clean_corpus_no_corpus_sized_broadcast(spark):
     assert "BroadcastExchange" not in plan, plan
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(md5" in plan or "hashpartitioning(_w" in plan, plan
+    # the window ships md5(text), never the text itself
+    exchanged = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert exchanged and not any("text#" in x for x in exchanged), plan
 
 
 def test_bucketed_join_removes_shuffle(spark, tmp_path):
@@ -218,6 +221,62 @@ def test_range_join_bucketed_equi_rewrite(spark):
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, plan
 
 
+def _split_top_level(s: str) -> list[str]:
+    """The comma-separated items of the bracketed list that opens
+    ``s`` (commas nested in ()/[] belong to their item)."""
+    items, depth, start = [], 0, 1
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+            if depth == 0:
+                items.append(s[start:i].strip())
+                return [x for x in items if x]
+        elif ch == "," and depth == 1:
+            items.append(s[start:i].strip())
+            start = i + 1
+    return items
+
+
+def duplicate_python_evals(plan: str) -> list[str]:
+    """Python UDFs that two distinct eval nodes of a formatted plan
+    both compute. A UDF prints as ``name(inputs)#resultId``, so two
+    nodes listing the same string run the same kernel over the same
+    input attributes twice — what Catalyst produces when it pushes a
+    filter on a UDF result below the projection that computes it."""
+    nodes: dict[str, set[str]] = {}
+    node = None
+    for line in plan.splitlines():
+        m = re.match(r"\((\d+)\) (ArrowEvalPython|BatchEvalPython)\b", line)
+        if m:
+            node = m.group(1)
+        elif line.startswith("(") or not line.strip():
+            node = None
+        elif node and line.startswith("Arguments: "):
+            for udf in _split_top_level(line[len("Arguments: "):]):
+                nodes.setdefault(udf, set()).add(node)
+    return sorted(udf for udf, ids in nodes.items() if len(ids) > 1)
+
+
+def test_duplicate_python_evals_detector():
+    """The sweep's detector on a hand-written plan: the pushed-down
+    twin of one UDF is flagged, two different UDFs are not."""
+    plan = "\n".join([
+        "(7) ArrowEvalPython",
+        "Input [2]: [doc_id#0L, text#1]",
+        "Arguments: [kernel(text#1)#5, f(struct(a, b#2, c#3))#6], [pythonUDF0#12], 200",
+        "",
+        "(10) ArrowEvalPython",
+        "Input [2]: [doc_id#0L, text#1]",
+        "Arguments: [kernel(text#1)#5], [pythonUDF0#13], 200",
+        "",
+        "(11) ArrowEvalPython",
+        "Arguments: [kernel(text#9)#8], [pythonUDF0#14], 200",
+    ])
+    assert duplicate_python_evals(plan) == ["kernel(text#1)#5"]
+
+
 # Queries whose physical plan legitimately contains a broadcast
 # nested-loop join: each broadcasts a bounded side by design.
 _BNLJ_BY_DESIGN = {
@@ -263,6 +322,8 @@ def test_registry_wide_plan_sweep(spark):
             problems.append(f"{name}: BroadcastNestedLoopJoin (not allowlisted)")
         if "BatchEvalPython" in plan:
             problems.append(f"{name}: row-at-a-time Python UDF")
+        for udf in duplicate_python_evals(plan):
+            problems.append(f"{name}: {udf} evaluated by two Python nodes")
         if "SinglePartition" in plan and name not in _SINGLE_PARTITION_BY_DESIGN:
             problems.append(f"{name}: SinglePartition exchange (not allowlisted)")
     assert not problems, problems
@@ -357,6 +418,8 @@ def test_deregistered_query_plan_sweep(spark):
             problems.append(f"{fn_name}: BroadcastNestedLoopJoin")
         if "BatchEvalPython" in plan:
             problems.append(f"{fn_name}: row-at-a-time Python UDF")
+        for udf in duplicate_python_evals(plan):
+            problems.append(f"{fn_name}: {udf} evaluated by two Python nodes")
         if "SinglePartition" in plan and fn_name not in single_ok:
             problems.append(f"{fn_name}: SinglePartition exchange")
     assert not problems, problems
