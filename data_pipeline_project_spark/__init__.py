@@ -17,7 +17,17 @@ Everything is DataFrame/SQL-first: logical plans are declared
 declaratively and Catalyst/Tungsten pick the physical strategy.
 """
 
+from pyspark import TaskContext
+
 from data_pipeline_project_spark.session import get_spark
+
+if TaskContext.get() is not None:
+    # Imported inside a PySpark task, i.e. while a worker unpickles a
+    # package kernel: stop the worker re-reading pyspark.zip and the
+    # Spark jar before each of its later tasks.
+    from data_pipeline_project_spark.functions import zip_finders
+
+    zip_finders.install()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

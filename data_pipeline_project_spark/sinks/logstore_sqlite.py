@@ -48,6 +48,7 @@ from __future__ import annotations
 import os
 import sqlite3
 import threading
+import time
 
 from data_pipeline_project_spark.sinks.logstore import (
     LogStore,
@@ -96,8 +97,6 @@ class SQLiteCASLogStore(LogStore):
         return f"{os.getpid()}:{threading.get_ident()}"
 
     def _cas_insert(self, db_path: str, key: str) -> bool:
-        import time
-
         conn = self._conn(db_path)
         try:
             with conn:  # one fcntl-serialized transaction
@@ -140,6 +139,12 @@ class SQLiteCASLogStore(LogStore):
             os.path.join(d, _DB_NAME), os.path.abspath(path)
         )
         if not won:
+            # the winner links its file only after its CAS commits: wait
+            # for it, so the caller reads the winner's marker (bounded: a
+            # winner that crashed after its CAS never links it)
+            deadline = time.monotonic() + self.busy_timeout_secs
+            while not os.path.exists(path) and time.monotonic() < deadline:
+                time.sleep(0.005)
             return False
         # content atomic-with-creation for readers: write-then-link
         tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"

@@ -82,9 +82,12 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # ways: repartitioning documents/embeddings to session parallelism
     # made the doc-heavy queries 2-3x SLOWER at this scale — 32 tiny
     # partitions cost more in task + Python-worker round-trips than the
-    # parallelism returns. At cluster scale real corpora arrive as many
-    # files/row groups and the scan parallelizes on its own; don't
-    # hand-repartition small inputs.
+    # parallelism returns. Much of that round-trip was a fixed ~100 ms
+    # per Python task spent re-reading pyspark.zip and the Spark jar,
+    # which functions/zip_finders.py now skips; splitting single-file
+    # inputs has not been re-measured since. At cluster scale real
+    # corpora arrive as many files/row groups and the scan parallelizes
+    # on its own; don't hand-repartition small inputs.
     return df
 
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 import json
 import multiprocessing as mp
 import os
+import threading
+import time
 
 import pytest
 
@@ -102,6 +104,38 @@ def test_publish_once_exactly_one_winner_and_untorn_reads(tmp_path, ctx):
     winner_pid = wins[0][1]
     # every process read the WINNER's content — atomic with creation
     assert all(r[3] == winner_pid for r in results), results
+
+
+def test_publish_once_loser_waits_for_the_winners_marker(tmp_path, monkeypatch):
+    """The winner links its marker only after its CAS commits. A loser
+    whose CAS fails in that gap must not return until the marker
+    exists: its caller reads the outcome from the file next."""
+    marker = str(tmp_path / "_txns" / "t-gap.json")
+    cas_won = threading.Event()
+    real_link = os.link
+
+    def slow_link(src, dst):
+        cas_won.set()
+        time.sleep(0.3)
+        real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", slow_link)
+    store = SQLiteCASLogStore()
+    won = []
+    winner = threading.Thread(
+        target=lambda: won.append(
+            store.publish_once(marker, json.dumps({"by": "winner"}))
+        )
+    )
+    winner.start()
+    try:
+        assert cas_won.wait(timeout=30)
+        assert not store.publish_once(marker, json.dumps({"by": "loser"}))
+        with open(marker) as fh:
+            assert json.load(fh) == {"by": "winner"}
+    finally:
+        winner.join(timeout=30)
+    assert won == [True]
 
 
 def test_release_unburns_a_swept_version(tmp_path):
