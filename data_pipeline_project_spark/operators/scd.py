@@ -19,9 +19,9 @@ Plan shape at 100 TB (dim huge, change batch comparatively small):
   changes, a lead-window chains valid_to. Catalyst reuses the same
   exchange for both windows (same partitioning and ordering).
 
-Combined with partition-pruned upsert (``sinks.ParquetUpsertSink``)
-this is the MERGE INTO pattern of a lakehouse table format, expressed
-as pure DataFrame ops.
+Its output applied with ``sinks.manifest.merge_upsert`` is the MERGE
+INTO pattern of a lakehouse table format, expressed as pure DataFrame
+ops.
 
 Reference scope note: the reference's aggregate upsert (K2,
 `pipeline.py:227-245`) is type-1 overwrite-by-key; type 2 history is

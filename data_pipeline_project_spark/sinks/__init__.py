@@ -4,7 +4,6 @@ from data_pipeline_project_spark.sinks.sinks import (
     JdbcAppendSink,
     JdbcUpsertSink,
     ParquetAppendSink,
-    ParquetUpsertSink,
     Sink,
     bootstrap_database,
     connect_with_retry,
@@ -13,7 +12,6 @@ from data_pipeline_project_spark.sinks.sinks import (
 __all__ = [
     "Sink",
     "ParquetAppendSink",
-    "ParquetUpsertSink",
     "JdbcAppendSink",
     "JdbcUpsertSink",
     "bootstrap_database",

@@ -6159,10 +6159,10 @@ def compact_snapshot(
     stay readable until vacuum), and the post-state is pinned as a new
     version. Files already at target size are untouched byte-for-byte,
     so the cost is proportional to the fragmentation, not the table.
-    Complements sinks/compact.py's partition-directory compactor: this
-    one is manifest-native (every maintenance op is a version) and is
-    what the streaming CDC/ingest paths should run periodically —
-    their micro-batch appends are exactly the small files this merges.
+    It is the package's one compactor: manifest-native (every
+    maintenance op is a version) and what the streaming CDC/ingest
+    paths run periodically — their micro-batch appends are exactly the
+    small files this merges.
 
     Hive-partitioned layouts compact PER PARTITION DIRECTORY (r10):
     each directory holding ≥2 small files merges into one stamped file

@@ -9,12 +9,15 @@ Reference semantics:
   micro-batch replays safe (K3/K6);
 - DDL bootstrap (K8): setup_database_in_mysql.py:58-103.
 
-Engine design: `Sink.write(df, epoch_id)` so the same object drops into
-``foreachBatch`` unchanged. Parquet implementations are the test/CI
-mirror (and the honest 100 TB path — columnar files + dedup-by-key
-beats row-wise JDBC at scale); JDBC implementations carry the
-reference's MySQL semantics and are exercised only where a database
-exists.
+Engine design: `Sink.write(df, epoch_id)`, called once per output in
+each stream epoch. The stream's sink is the manifest table
+(``streaming/lakehouse_ingest.ManifestTableSink``): each append carries
+the epoch id as a batch stamp, so a replayed epoch is skipped. For the
+aggregates that leaves the table the K2 upsert would: the unique key
+includes file_name, and the checkpointed file source delivers each file
+in exactly one epoch. ``ParquetAppendSink`` is a plain batch sink; the
+JDBC implementations carry the reference's MySQL semantics and are
+exercised only where a database exists.
 """
 
 from __future__ import annotations
@@ -55,112 +58,19 @@ class Sink(ABC):
     def write(self, df: DataFrame, epoch_id: int | None = None) -> None: ...
 
 
-class _FormatAppendSink(Sink):
-    """K1 — append-only fact sink over any columnar format. Partitioning
-    column(s) keep the table prunable at scale (e.g. by date); files
-    stay immutable."""
+class ParquetAppendSink(Sink):
+    """K1 — append-only parquet fact sink; files stay immutable.
 
-    _format = "parquet"
+    It keeps no record of the epochs it wrote, so a replayed epoch
+    appends its rows again: inside ``run_sensor_stream``, where a
+    failing output replays the whole epoch, it is not replay-safe —
+    use ``streaming.lakehouse_ingest.ManifestTableSink`` there."""
 
-    def __init__(self, path: str, partition_by: Sequence[str] = ()):  # noqa: D107
+    def __init__(self, path: str):  # noqa: D107
         self.path = path
-        self.partition_by = list(partition_by)
 
     def write(self, df: DataFrame, epoch_id: int | None = None) -> None:
-        w = df.write.mode("append").format(self._format)
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.save(self.path)
-
-
-class ParquetAppendSink(_FormatAppendSink):
-    _format = "parquet"
-
-
-class OrcAppendSink(_FormatAppendSink):
-    """ORC-standardized-lake variant: ORC carries its own stripe-level
-    zone maps, so Spark's filter pushdown works identically (asserted
-    in tests/test_sinks.py)."""
-
-    _format = "orc"
-
-
-class ParquetUpsertSink(Sink):
-    """K2 — upsert keyed on ``keys``: last write wins per key.
-
-    Without a transactional table format, upsert-into-parquet is
-    read-merge-overwrite — but scoped to the partitions the batch
-    touches, not the whole table: the table is partitioned by
-    ``partition_by`` (must be a subset of ``keys``, so a key's row can
-    never move between partitions), the merge reads only the affected
-    partitions (partition pruning), and the overwrite uses dynamic
-    partition-overwrite so untouched partitions' files are never
-    rewritten. Per-micro-batch cost is O(affected partitions), not
-    O(table) — for the sensor agg table partitioned by file_name, a
-    batch of k files rewrites k partitions of a table that grows
-    forever. Replaying the same batch is idempotent — the property the
-    reference's unique-key upsert provides (K3/K6). At 100 TB one would
-    point this interface at Delta/Iceberg MERGE INTO instead; the
-    interface is the contract, the format is a deployment choice.
-
-    ``partition_by=()`` degenerates to a full-table rewrite — only for
-    tiny bounded tables.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str],
-        partition_by: Sequence[str] = (),
-    ):  # noqa: D107
-        self.path = path
-        self.keys = list(keys)
-        self.partition_by = list(partition_by)
-        if not set(self.partition_by) <= set(self.keys):
-            raise ValueError(
-                "partition_by must be a subset of keys: an updated row "
-                "must land in the same partition as the row it replaces"
-            )
-
-    def _affected_filter(self, df: DataFrame):
-        """Predicate selecting the batch's partitions (pruning pushes it
-        to the directory listing). Driver traffic is one small collect:
-        distinct partition tuples of one micro-batch."""
-        parts = df.select(self.partition_by).distinct().collect()
-        cond = F.lit(False)
-        for p in parts:
-            tup = F.lit(True)
-            for c in self.partition_by:
-                tup = tup & (F.col(c) == F.lit(p[c]))
-            cond = cond | tup
-        return cond
-
-    def write(self, df: DataFrame, epoch_id: int | None = None) -> None:
-        spark = df.sparkSession
-        try:
-            existing = spark.read.parquet(self.path)
-            have_existing = True
-        except Exception:
-            have_existing = False
-        if have_existing:
-            if self.partition_by:
-                existing = existing.where(self._affected_filter(df))
-            merged = existing.join(
-                df.select(self.keys).distinct(), self.keys, "left_anti"
-            ).unionByName(df)
-        else:
-            merged = df
-        # Materialize before overwrite: the plan reads the same path it
-        # overwrites.
-        out = merged.cache()
-        out.count()
-        writer = out.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by).option(
-                "partitionOverwriteMode", "dynamic"
-            )
-        writer.parquet(self.path)
-        out.unpersist()
+        df.write.mode("append").parquet(self.path)
 
 
 class JdbcAppendSink(Sink):

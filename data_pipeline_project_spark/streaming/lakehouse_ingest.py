@@ -46,6 +46,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from data_pipeline_project_spark.sinks.sinks import Sink
+
 
 def _last_committed_batch(table_path: str, sink_id: str) -> int:
     """Highest batch_id this sink ever committed to the table, -1 if
@@ -75,18 +77,17 @@ def _last_committed_batch(table_path: str, sink_id: str) -> int:
     return -1
 
 
-def lakehouse_append_batch_fn(
-    spark,
-    table_path: str,
-    sink_id: str,
-    key_col: str | None = None,
-    maintenance_every: int | None = None,
-    maintenance_thresholds: dict | None = None,
-    duck=None,
-):
-    """The foreachBatch function (factored out so tests can drive it
-    directly, replays included). Returns a closure recording each
-    batch's outcome in ``closure.results``.
+class ManifestTableSink(Sink):
+    """The stream's manifest-table sink: each epoch is one intent-stamped
+    append, skipped when this ``sink_id`` already committed it. A
+    ``Sink`` for ``run_sensor_stream`` and, called as ``fn(batch,
+    batch_id)``, a ``foreachBatch`` function; each epoch's outcome is
+    appended to ``.results``.
+
+    ``key_col`` only stamps the appended rows' key range into the
+    commit intent, so a concurrent keyed merge or delete over that
+    range is a detected conflict (see ``append_snapshot``); it does not
+    turn the append into an upsert.
 
     ``maintenance_every=N`` makes the table SELF-HEALING under
     continuous ingest: after every Nth committed batch the sink runs
@@ -101,29 +102,51 @@ def lakehouse_append_batch_fn(
     an unbounded snapshot log. Appends commit sketch-free (module
     docstring), so a table ingested without ``maintenance_every``
     needs ``analyze_table`` before join advice can use its NDVs."""
-    from data_pipeline_project_spark.sinks.manifest import (
-        append_snapshot,
-        snapshot_versions,
-        write_versioned_manifest,
-    )
 
-    state = {"last": None, "committed": 0}
-    results: list[dict] = []
+    def __init__(
+        self,
+        spark,
+        table_path: str,
+        sink_id: str,
+        key_col: str | None = None,
+        maintenance_every: int | None = None,
+        maintenance_thresholds: dict | None = None,
+        duck=None,
+    ):  # noqa: D107
+        self.spark = spark
+        self.table_path = table_path
+        self.sink_id = sink_id
+        self.key_col = key_col
+        self.maintenance_every = maintenance_every
+        self.maintenance_thresholds = maintenance_thresholds
+        self.duck = duck
+        self.results: list[dict] = []
+        self._last: int | None = None
+        self._committed = 0
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if state["last"] is None:
-            state["last"] = _last_committed_batch(table_path, sink_id)
-        if batch_id <= state["last"]:
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        self.write(batch, batch_id)
+
+    def write(self, df: DataFrame, epoch_id: int) -> None:
+        from data_pipeline_project_spark.sinks.manifest import (
+            append_snapshot,
+            snapshot_versions,
+            write_versioned_manifest,
+        )
+
+        if self._last is None:
+            self._last = _last_committed_batch(self.table_path, self.sink_id)
+        if epoch_id <= self._last:
             # checkpoint-rollback replay: this batch's rows are already
             # pinned by an earlier commit — skip, don't double-append
-            results.append({"batch_id": batch_id, "replayed": True})
+            self.results.append({"batch_id": epoch_id, "replayed": True})
             return
-        stamp = {"stream_append": {"sink_id": sink_id, "batch_id": batch_id}}
-        if not snapshot_versions(table_path):
+        stamp = {"stream_append": {"sink_id": self.sink_id, "batch_id": epoch_id}}
+        if not snapshot_versions(self.table_path):
             # first-ever commit: listing-based bootstrap (the table may
             # not exist yet; there is no head to delta against)
-            batch.write.mode("append").parquet(table_path)
-            m = write_versioned_manifest(table_path, extra=stamp)
+            df.write.mode("append").parquet(self.table_path)
+            m = write_versioned_manifest(self.table_path, extra=stamp)
             res = {
                 "version": m["version"],
                 "files_added": m["n_files"],
@@ -131,19 +154,21 @@ def lakehouse_append_batch_fn(
             }
         else:
             res = append_snapshot(
-                spark, table_path, batch, key_col=key_col,
+                self.spark, self.table_path, df, key_col=self.key_col,
                 commit_extra=stamp, collect_ndv=False,
             )
-        state["last"] = batch_id
-        state["committed"] += 1
-        if maintenance_every and state["committed"] % maintenance_every == 0:
+        self._last = epoch_id
+        self._committed += 1
+        if self.maintenance_every and self._committed % self.maintenance_every == 0:
             res["maintenance"] = _maintain_best_effort(
-                spark, duck, table_path, key_col, maintenance_thresholds
+                self.spark, self.duck, self.table_path, self.key_col,
+                self.maintenance_thresholds,
             )
-        results.append({"batch_id": batch_id, "replayed": False, **res})
+        self.results.append({"batch_id": epoch_id, "replayed": False, **res})
 
-    _apply.results = results  # type: ignore[attr-defined]
-    return _apply
+
+# the function-style name perfbench's sink imports
+lakehouse_append_batch_fn = ManifestTableSink
 
 
 def _maintain_best_effort(
@@ -190,12 +215,12 @@ def start_lakehouse_append_stream(
     merges/deletes (see append_snapshot). The per-batch outcomes ride
     ``q.batch_results``. ``maintenance_every=N`` triggers a
     conflict-safe run_maintenance after every Nth committed batch —
-    see lakehouse_append_batch_fn."""
+    see ManifestTableSink."""
     if sink_id is None:
         sink_id = hashlib.md5(
             os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:12]
-    fn = lakehouse_append_batch_fn(
+    fn = ManifestTableSink(
         spark, table_path, sink_id, key_col,
         maintenance_every=maintenance_every,
         maintenance_thresholds=maintenance_thresholds,

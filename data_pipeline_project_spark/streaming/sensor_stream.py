@@ -22,9 +22,11 @@ returned, as the reference quarantines after its database writes.
 Retry semantics (K6): a failing sink raises → the query stops and
 restarts from the checkpoint, replaying the batch. Because the raw and
 aggregate commits run concurrently, the other one may already have
-landed when one fails, so EVERY sink must make its replay idempotent:
-the upsert sink's key (K2/K3), or the lakehouse sink's ``stream_append``
-batch stamp, which skips an epoch it already committed.
+landed when one fails, and a failing quarantine write follows both, so
+EVERY sink must make its replay idempotent: ``ManifestTableSink``'s
+``stream_append`` batch stamp, which skips an epoch it already
+committed, or the JDBC upsert's unique key (K2/K3). ``ParquetAppendSink``
+appends a replayed epoch again.
 """
 
 from __future__ import annotations

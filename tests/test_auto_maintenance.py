@@ -31,7 +31,7 @@ from data_pipeline_project_spark.sinks.manifest import (
     snapshot_rowcount,
 )
 from data_pipeline_project_spark.streaming.lakehouse_ingest import (
-    lakehouse_append_batch_fn,
+    ManifestTableSink,
 )
 
 # aggressive thresholds so a short test run crosses them the way a
@@ -51,7 +51,7 @@ def _batch(spark, i, n=200):
 
 def test_ingest_with_auto_maintenance_bounded_and_exact(spark, tmp_path):
     path = str(tmp_path / "t")
-    fn = lakehouse_append_batch_fn(
+    fn = ManifestTableSink(
         spark, path, "sink-a",
         maintenance_every=5, maintenance_thresholds=_T, duck=None,
     )
@@ -78,7 +78,7 @@ def test_ingest_with_auto_maintenance_bounded_and_exact(spark, tmp_path):
 
 def test_replay_skipped_with_maintenance_interleaved(spark, tmp_path):
     path = str(tmp_path / "t")
-    fn = lakehouse_append_batch_fn(
+    fn = ManifestTableSink(
         spark, path, "sink-a",
         maintenance_every=2, maintenance_thresholds=_T, duck=None,
     )
@@ -87,9 +87,9 @@ def test_replay_skipped_with_maintenance_interleaved(spark, tmp_path):
     fn(_batch(spark, 3).coalesce(1), 3)  # checkpoint-rollback replay
     assert snapshot_rowcount(path) == 6 * 200
     assert fn.results[-1]["replayed"] is True
-    # a fresh sink closure (restart) recovers the high-water mark
+    # a fresh sink instance (restart) recovers the high-water mark
     # through the maintenance commits' version churn
-    fn2 = lakehouse_append_batch_fn(spark, path, "sink-a", duck=None)
+    fn2 = ManifestTableSink(spark, path, "sink-a", duck=None)
     fn2(_batch(spark, 5).coalesce(1), 5)
     assert fn2.results[-1]["replayed"] is True
     assert snapshot_rowcount(path) == 6 * 200
@@ -103,7 +103,7 @@ def test_maintenance_conflict_swallowed(spark, tmp_path, monkeypatch):
         raise M.ConcurrentSnapshotError("injected loss")
 
     monkeypatch.setattr(L, "run_maintenance", _lose)
-    fn = lakehouse_append_batch_fn(
+    fn = ManifestTableSink(
         spark, path, "sink-a", maintenance_every=2, duck=None
     )
     for i in range(4):

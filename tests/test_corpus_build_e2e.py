@@ -2,7 +2,7 @@
 JSONL drops → streaming ingest (quarantine + dedup) → quality/language
 cleaning → near-dup cluster keeper selection → benchmark
 decontamination → repetition filter → deterministic split → sequence
-packing → sharded training output → compaction. Each stage is
+packing → sharded training output → versioning and compaction. Each stage is
 unit/oracle-tested on its own; this guards their COMPOSITION and the
 determinism of the final artifact (two identical builds must produce
 byte-identical shard membership and packing)."""
@@ -23,7 +23,11 @@ from data_pipeline_project_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from data_pipeline_project_spark.operators.text import text_stats_struct, token_hash
-from data_pipeline_project_spark.sinks.compact import compact_dataset
+from data_pipeline_project_spark.sinks.manifest import (
+    compact_snapshot,
+    read_version,
+    write_versioned_manifest,
+)
 from data_pipeline_project_spark.sinks.sinks import shard_id
 from data_pipeline_project_spark.streaming.corpus_ingest import start_corpus_ingest
 
@@ -158,29 +162,21 @@ def _build(spark, tmp, tag):
         "doc_id", "text", "source", "shard", "pack_seq", "token_offset"
     ).repartition(16).write.partitionBy("shard").parquet(str(root / "train"))
 
-    # 4. compaction: the fragmented write shrinks, rows intact
-    before = spark.read.parquet(str(root / "train")).count()
-    stats = compact_dataset(
-        spark, str(root / "train"), target_file_bytes=32 * 1024 * 1024,
-        partition_cols=["shard"],
-    )
-    assert stats.partitions_compacted >= 1
-    assert stats.files_after < stats.files_before
-    assert spark.read.parquet(str(root / "train")).count() == before
-
-    # 5. version the finished corpus: the manifest pins the exact file
-    # set a training run would consume, and the pinned snapshot must
-    # read back the same rows even though compaction just rewrote files
-    from data_pipeline_project_spark.sinks.manifest import (
-        read_version,
-        write_versioned_manifest,
-    )
-
-    m = write_versioned_manifest(str(root / "train"))
+    # 4. version the finished corpus, then compact it: the manifest pins
+    # the exact file set a training run would consume, compaction merges
+    # each shard's fragments into one file and tombstones them, and both
+    # the pinned version and the compacted head read back every row
+    train_path = str(root / "train")
+    before = spark.read.parquet(train_path).count()
+    m = write_versioned_manifest(train_path)
     assert m["version"] == 1
-    assert read_version(spark, str(root / "train"), 1).count() == before
+    stats = compact_snapshot(spark, train_path)
+    assert stats["version"] == 2 and stats["partitions_compacted"] >= 1
+    assert stats["files_compacted"] > stats["partitions_compacted"]
+    assert read_version(spark, train_path, 1).count() == before
+    assert read_version(spark, train_path).count() == before
 
-    out = spark.read.parquet(str(root / "train"))
+    out = read_version(spark, train_path)
     return {
         s: sorted((r.doc_id, r.pack_seq, r.token_offset) for r in rows)
         for s, rows in (

@@ -15,7 +15,7 @@ from data_pipeline_project_spark.sinks.manifest import (
     write_versioned_manifest,
 )
 from data_pipeline_project_spark.streaming.lakehouse_ingest import (
-    lakehouse_append_batch_fn,
+    ManifestTableSink,
     start_lakehouse_append_stream,
 )
 
@@ -96,7 +96,7 @@ def test_batch_replay_is_a_noop(spark, tmp_path):
     ).write.parquet(table)
     write_versioned_manifest(table)
 
-    fn = lakehouse_append_batch_fn(spark, table, "sinkA")
+    fn = ManifestTableSink(spark, table, "sinkA")
     b0 = spark.range(100, 120).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
@@ -110,15 +110,15 @@ def test_batch_replay_is_a_noop(spark, tmp_path):
     assert fn.results[-1]["replayed"] is True
     assert read_version(spark, table).count() == 90
 
-    # cold sink (fresh closure, e.g. after a driver crash): recovers
+    # cold sink (fresh instance, e.g. after a driver crash): recovers
     # the high-water mark from the manifests and still skips
-    fn_cold = lakehouse_append_batch_fn(spark, table, "sinkA")
+    fn_cold = ManifestTableSink(spark, table, "sinkA")
     fn_cold(b0, 1)
     assert fn_cold.results[-1]["replayed"] is True
     assert read_version(spark, table).count() == 90
 
     # a DIFFERENT sink id is a different logical stream: it appends
-    fn_b = lakehouse_append_batch_fn(spark, table, "sinkB")
+    fn_b = ManifestTableSink(spark, table, "sinkB")
     fn_b(
         spark.range(200, 210).select(
             F.col("id").alias("k"), (F.col("id") % 7).alias("v")
@@ -127,7 +127,7 @@ def test_batch_replay_is_a_noop(spark, tmp_path):
     )
     assert read_version(spark, table).count() == 100
     # and sinkA's high-water mark survives sinkB's interleaved commit
-    fn_a2 = lakehouse_append_batch_fn(spark, table, "sinkA")
+    fn_a2 = ManifestTableSink(spark, table, "sinkA")
     fn_a2(b0, 1)
     assert fn_a2.results[-1]["replayed"] is True
 
@@ -148,7 +148,7 @@ def test_ingest_coexists_with_concurrent_merge(spark, duck, tmp_path):
     write_range_clustered(df, table, "k", 3)
     write_versioned_manifest(table)
 
-    fn = lakehouse_append_batch_fn(spark, table, "sinkC")
+    fn = ManifestTableSink(spark, table, "sinkC")
 
     class _InterposeOnce:
         def __init__(self, run):
@@ -200,7 +200,7 @@ def test_micro_batch_commit_runs_no_sketch_job(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(M, "_sketch_files", _counting)
     table = str(tmp_path / "table")
-    fn = lakehouse_append_batch_fn(spark, table, "sinkN", key_col="k")
+    fn = ManifestTableSink(spark, table, "sinkN", key_col="k")
     fn(_batch(spark, 0, 50), 0)  # bootstrap: listing-based, metadata-only
     fn(_batch(spark, 50, 100), 1)
     fn(_batch(spark, 100, 150), 2)
@@ -221,7 +221,7 @@ def test_maintenance_cycle_restores_sketch_coverage(spark, tmp_path):
     every third batch compacts the micro-batch files and analyzes what
     is left, so the head is fully sketched right after it."""
     table = str(tmp_path / "table")
-    fn = lakehouse_append_batch_fn(
+    fn = ManifestTableSink(
         spark, table, "sinkM", maintenance_every=3, duck=None
     )
     cov = []

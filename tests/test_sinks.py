@@ -145,34 +145,3 @@ def test_jdbc_upsert_retries_flaky_connection(spark, tmp_path):
     assert os.path.getsize(attempts) == 3  # 2 failures + 1 success
     with open(rows_out) as fh:
         assert len(fh.readlines()) == 2
-
-
-# ---- ORC sink/source roundtrip ---------------------------------------------
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC append sink: content-identical roundtrip, partition pruning,
-    and predicate pushdown into the ORC scan."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_project_spark.sinks.sinks import OrcAppendSink
-    from tests.conftest import SF_SMALL
-
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").limit(2000)
-    path = str(tmp_path / "orc_lineitem")
-    OrcAppendSink(path, partition_by=["l_returnflag"]).write(li)
-
-    back = spark.read.orc(path)
-    assert sorted(c for c in back.columns) == sorted(li.columns)
-    a = sorted(map(tuple, li.select(*sorted(li.columns)).collect()))
-    b = sorted(map(tuple, back.select(*sorted(li.columns)).collect()))
-    assert a == b
-
-    q = back.where((F.col("l_returnflag") == "A") & (F.col("l_quantity") > 25)).select(
-        "l_orderkey", "l_quantity"
-    )
-    plan = q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,25.0)]" in plan, plan
-    # partition filter pruned at planning, not scanned
-    assert "l_returnflag" not in plan.split("PushedFilters")[1].split("]")[0], plan

@@ -1,5 +1,6 @@
 """Structured Streaming pipeline tests: exactly-once file handling,
-strict gate inside micro-batches, upsert replay idempotency."""
+strict gate inside micro-batches, replay idempotency of the
+manifest-table sink."""
 
 import os
 import time
@@ -7,9 +8,9 @@ import time
 import pytest
 
 from data_pipeline_project_spark.pipeline_batch import run_sensor_batch
-from data_pipeline_project_spark.sinks import ParquetAppendSink, ParquetUpsertSink, Sink
+from data_pipeline_project_spark.sinks import ParquetAppendSink
 from data_pipeline_project_spark.sinks.manifest import read_version
-from data_pipeline_project_spark.streaming.lakehouse_ingest import lakehouse_append_batch_fn
+from data_pipeline_project_spark.streaming.lakehouse_ingest import ManifestTableSink
 from data_pipeline_project_spark.streaming.sensor_stream import run_sensor_stream
 
 HEADER = "timestamp,sensor_id,temperature,humidity,pressure"
@@ -63,13 +64,9 @@ def test_stream_end_to_end(spark, tmp_path):
     quar_path = str(tmp_path / "quar")
     ckpt = str(tmp_path / "ckpt")
 
-    raw_sink = ParquetAppendSink(raw_path)
-    agg_sink = ParquetUpsertSink(
-        agg_path,
-        keys=["sensor_id", "file_name", "metric_name", "aggregation_time"],
-        partition_by=["file_name"],
-    )
-    quar_sink = ParquetAppendSink(quar_path)
+    raw_sink = ManifestTableSink(spark, raw_path, "raw")
+    agg_sink = ManifestTableSink(spark, agg_path, "agg")
+    quar_sink = ManifestTableSink(spark, quar_path, "quar")
 
     q = run_sensor_stream(
         spark, str(data), raw_sink, agg_sink, quar_sink, ckpt,
@@ -77,12 +74,12 @@ def test_stream_end_to_end(spark, tmp_path):
     )
     _run_until_done(q)
 
-    raw = spark.read.parquet(raw_path)
+    raw = read_version(spark, raw_path)
     assert raw.count() == 2  # only f1 rows; f2 strict-quarantined
     assert {r.file_name for r in raw.collect()} == {"f1.csv"}
-    agg = spark.read.parquet(agg_path)
+    agg = read_version(spark, agg_path)
     assert agg.count() == 3  # 1 sensor x 3 metrics
-    quar = spark.read.parquet(quar_path)
+    quar = read_version(spark, quar_path)
     assert quar.count() == 1
 
     # late-arriving file: restart from checkpoint processes ONLY f3
@@ -93,10 +90,11 @@ def test_stream_end_to_end(spark, tmp_path):
         trigger={"availableNow": True},
     )
     _run_until_done(q2)
-    raw2 = spark.read.parquet(raw_path)
+    raw2 = read_version(spark, raw_path)
     assert raw2.count() == 3  # f1 rows NOT duplicated
-    agg2 = spark.read.parquet(agg_path)
+    agg2 = read_version(spark, agg_path)
     assert agg2.count() == 6  # S1+S2, 3 metrics each
+    assert read_version(spark, quar_path).count() == 1
 
 
 def test_archive_moves_consumed_files(spark, tmp_path):
@@ -111,16 +109,12 @@ def test_archive_moves_consumed_files(spark, tmp_path):
     data.mkdir()
     archive = tmp_path / "archive"
     _write(data, "f1.csv", ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0"])
+    written = ["f1.csv"]
 
-    sinks = dict(
-        raw_sink=ParquetAppendSink(str(tmp_path / "raw")),
-        agg_sink=ParquetUpsertSink(
-            str(tmp_path / "agg"),
-            keys=["sensor_id", "file_name", "metric_name", "aggregation_time"],
-            partition_by=["file_name"],
-        ),
-        quarantine_sink=ParquetAppendSink(str(tmp_path / "quar")),
-    )
+    sinks = {
+        f"{name}_sink": ManifestTableSink(spark, str(tmp_path / name), name)
+        for name in ("raw", "agg", "quarantine")
+    }
 
     def archived():
         return [p.name for p in archive.rglob("*.csv")]
@@ -137,6 +131,7 @@ def test_archive_moves_consumed_files(spark, tmp_path):
     if "f1.csv" not in archived():
         # a fresh batch forces the source to commit the previous one
         _write(data, "f2.csv", ["2025-05-26 11:00:00,S2,21.0,0.5,1000.0"])
+        written.append("f2.csv")
         run_once()
     deadline = time.time() + 30
     while "f1.csv" not in archived() and time.time() < deadline:
@@ -146,24 +141,29 @@ def test_archive_moves_consumed_files(spark, tmp_path):
         f"f1.csv not archived; archive={archived()}, src={list(data.iterdir())}"
     )
     assert not (data / "f1.csv").exists()  # moved, not copied
+    raw = read_version(spark, str(tmp_path / "raw")).collect()
+    assert sorted(r.file_name for r in raw) == written  # each file's row once
 
 
 def test_upsert_replay_idempotent(spark, tmp_path):
-    """K2/K3 — replaying the same batch through the upsert sink leaves
-    one row per key (the reference's unique-key upsert property)."""
+    """K2/K3 — replaying an epoch's aggregates through the manifest-table
+    sink leaves one row per key (the reference's unique-key upsert
+    property): the same sink skips it, and so does a new sink with the
+    same sink_id, which recovers the epoch from the table's history."""
     d = tmp_path / "data"
     d.mkdir()
     _write(d, "f1.csv", ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0"])
     res = run_sensor_batch(spark, str(d))
-    sink = ParquetUpsertSink(
-        str(tmp_path / "agg"),
-        keys=["sensor_id", "file_name", "metric_name", "aggregation_time"],
-        partition_by=["file_name"],
-    )
-    sink.write(res.aggregates)
-    sink.write(res.aggregates)  # replay
-    out = spark.read.parquet(str(tmp_path / "agg"))
+    path = str(tmp_path / "agg")
+    sink = ManifestTableSink(spark, path, "agg")
+    sink.write(res.aggregates, 0)
+    sink.write(res.aggregates, 0)  # replay
+    restarted = ManifestTableSink(spark, path, "agg")
+    restarted(res.aggregates, 0)  # replay after a restart, as foreachBatch calls it
+    assert [r["replayed"] for r in sink.results + restarted.results] == [False, True, True]
+    out = read_version(spark, path)
     assert out.count() == 3
+    assert out.select("sensor_id", "metric_name").distinct().count() == 3
 
 
 def test_stream_epochs_release_their_cache(spark, tmp_path):
@@ -191,33 +191,74 @@ def test_stream_epochs_release_their_cache(spark, tmp_path):
     assert jsc.getPersistentRDDs().size() == before
 
 
-class _LakehouseSink(Sink):
-    """A stream sink appending to a manifest table, as the benchmark's
-    stream does; ``fail_epoch`` makes its first write of that epoch
-    raise before anything is committed."""
+class _FailingSink(ManifestTableSink):
+    """A manifest-table sink whose first write of ``fail_epoch`` raises
+    before anything is committed."""
 
     def __init__(self, spark, path, sink_id, fail_epoch=None):
-        self.append = lakehouse_append_batch_fn(spark, path, sink_id)
+        super().__init__(spark, path, sink_id)
         self.fail_epoch = fail_epoch
 
-    def write(self, df, epoch_id=None):
+    def write(self, df, epoch_id):
         if epoch_id == self.fail_epoch:
             self.fail_epoch = None
-            raise RuntimeError("raw sink unavailable")
-        self.append(df, epoch_id)
+            raise RuntimeError(f"{self.sink_id} sink unavailable")
+        super().write(df, epoch_id)
 
     def outcome(self, epoch_id):
-        return [r["replayed"] for r in self.append.results if r["batch_id"] == epoch_id]
+        return [r["replayed"] for r in self.results if r["batch_id"] == epoch_id]
 
 
-class _RecordingSink(ParquetAppendSink):
-    def __init__(self, path):
-        super().__init__(path)
-        self.epochs = []
+# two files per epoch: a valid and a bad one in each
+_EPOCH_FILES = {
+    "a0.csv": ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0",
+               "2025-05-26 10:05:00,S2,21.0,0.5,1000.0"],
+    "a1.csv": ["2025-05-26 10:10:00,S1,abc,0.5,1000.0"],
+    "b0.csv": ["2025-05-26 11:00:00,S1,22.0,0.5,1000.0",
+               "2025-05-26 11:05:00,S3,23.0,0.5,1000.0"],
+    "b1.csv": ["2025-05-26 11:10:00,S2,20.0,0.5,1000.0",
+               "2025-05-26 11:15:00,S2,99.0,0.5,1000.0"],
+}
 
-    def write(self, df, epoch_id=None):
-        super().write(df, epoch_id)
-        self.epochs.append(epoch_id)
+
+def _two_epoch_stream(spark, tmp_path):
+    """Write ``_EPOCH_FILES`` with ordered mtimes; return the table paths
+    and a function that starts the sensor stream over them, two files
+    per epoch, on one checkpoint, with a new ``_FailingSink`` per
+    output (the one named ``fail`` raises in epoch 1)."""
+    data = tmp_path / "data"
+    data.mkdir()
+    t0 = time.time() - 100
+    for k, (name, rows) in enumerate(_EPOCH_FILES.items()):
+        _write(data, name, rows)
+        os.utime(data / name, (t0 + k, t0 + k))
+    paths = {name: str(tmp_path / name) for name in ("raw", "agg", "quar")}
+
+    def start(fail=None):
+        sinks = {
+            name: _FailingSink(spark, path, name, 1 if name == fail else None)
+            for name, path in paths.items()
+        }
+        q = run_sensor_stream(
+            spark, str(data), sinks["raw"], sinks["agg"], sinks["quar"],
+            str(tmp_path / "ckpt"),
+            trigger={"availableNow": True}, max_files_per_trigger=2,
+        )
+        return q, sinks
+
+    return start, paths
+
+
+def _assert_exactly_once(spark, paths):
+    got_raw = read_version(spark, paths["raw"])
+    assert got_raw.count() == 4  # a0 + b0, once each
+    assert got_raw.select("file_name", "timestamp").distinct().count() == 4
+    got_agg = read_version(spark, paths["agg"])
+    assert got_agg.count() == 12  # 4 (file, sensor) pairs x 3 metrics
+    assert got_agg.select("file_name", "sensor_id", "metric_name").distinct().count() == 12
+    got_quar = read_version(spark, paths["quar"])
+    assert sorted(r.file_name for r in got_quar.collect()) == ["a1.csv", "b1.csv", "b1.csv"]
+    assert got_quar.select("file_name", "_csv_row").distinct().count() == 3
 
 
 def test_sink_failure_mid_epoch_replays_exactly_once(spark, tmp_path):
@@ -226,94 +267,41 @@ def test_sink_failure_mid_epoch_replays_exactly_once(spark, tmp_path):
     quarantine write; the restart from the same checkpoint skips the
     aggregate replay by its stream_append stamp and redoes the raw
     one, so each table ends with every row exactly once."""
-    data = tmp_path / "data"
-    data.mkdir()
-    files = {
-        "a0.csv": ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0",
-                   "2025-05-26 10:05:00,S2,21.0,0.5,1000.0"],
-        "a1.csv": ["2025-05-26 10:10:00,S1,abc,0.5,1000.0"],
-        "b0.csv": ["2025-05-26 11:00:00,S1,22.0,0.5,1000.0",
-                   "2025-05-26 11:05:00,S3,23.0,0.5,1000.0"],
-        "b1.csv": ["2025-05-26 11:10:00,S2,20.0,0.5,1000.0",
-                   "2025-05-26 11:15:00,S2,99.0,0.5,1000.0"],
-    }
-    t0 = time.time() - 100
-    for k, (name, rows) in enumerate(files.items()):
-        _write(data, name, rows)
-        os.utime(data / name, (t0 + k, t0 + k))  # two files per epoch, in order
-    raw_path, agg_path = str(tmp_path / "raw"), str(tmp_path / "agg")
-    quar_path, ckpt = str(tmp_path / "quar"), str(tmp_path / "ckpt")
-
-    def start(raw, agg, quar):
-        return run_sensor_stream(
-            spark, str(data), raw, agg, quar, ckpt,
-            trigger={"availableNow": True}, max_files_per_trigger=2,
-        )
-
-    raw = _LakehouseSink(spark, raw_path, "raw", fail_epoch=1)
-    agg = _LakehouseSink(spark, agg_path, "agg")
-    quar = _RecordingSink(quar_path)
-    q = start(raw, agg, quar)
+    start, paths = _two_epoch_stream(spark, tmp_path)
+    q, sinks = start(fail="raw")
     with pytest.raises(Exception, match="raw sink unavailable"):
         q.awaitTermination(120)
-    assert raw.outcome(1) == [] and agg.outcome(1) == [False]
-    assert quar.epochs == [0]
-    assert read_version(spark, raw_path).count() == 2  # a0 only
+    assert sinks["raw"].outcome(1) == [] and sinks["agg"].outcome(1) == [False]
+    assert [r["batch_id"] for r in sinks["quar"].results] == [0]
+    assert read_version(spark, paths["raw"]).count() == 2  # a0 only
 
-    raw = _LakehouseSink(spark, raw_path, "raw")
-    agg = _LakehouseSink(spark, agg_path, "agg")
-    quar = _RecordingSink(quar_path)
-    q = start(raw, agg, quar)
+    q, sinks = start()
     _run_until_done(q)
     assert q.exception() is None
-    assert raw.outcome(1) == [False] and agg.outcome(1) == [True]
-    assert quar.epochs == [1]
-
-    got_raw = read_version(spark, raw_path)
-    assert got_raw.count() == 4  # a0 + b0, once each
-    assert got_raw.select("file_name", "timestamp").distinct().count() == 4
-    got_agg = read_version(spark, agg_path)
-    assert got_agg.count() == 12  # 4 (file, sensor) pairs x 3 metrics
-    assert got_agg.select("file_name", "sensor_id", "metric_name").distinct().count() == 12
-    got_quar = spark.read.parquet(quar_path)
-    assert sorted(r.file_name for r in got_quar.collect()) == ["a1.csv", "b1.csv", "b1.csv"]
+    assert sinks["raw"].outcome(1) == [False] and sinks["agg"].outcome(1) == [True]
+    assert sinks["quar"].outcome(1) == [False]
+    _assert_exactly_once(spark, paths)
 
 
-def test_upsert_rewrites_only_affected_partitions(spark, tmp_path):
-    """K2 at scale: a batch must rewrite only the partitions it touches
-    — untouched partitions' files stay byte-identical (dynamic
-    partition overwrite), so per-batch cost is O(batch), not O(table)."""
-    import hashlib
-    from pathlib import Path
+def test_quarantine_failure_replays_exactly_once(spark, tmp_path):
+    """K6 on the last output: the quarantine sink raises in epoch 1
+    after raw and aggregates have committed it. The restart skips both
+    of their replays by the stream_append stamp and commits the
+    quarantine rows once, so no table holds a row twice."""
+    start, paths = _two_epoch_stream(spark, tmp_path)
+    q, sinks = start(fail="quar")
+    with pytest.raises(Exception, match="quar sink unavailable"):
+        q.awaitTermination(120)
+    assert sinks["raw"].outcome(1) == [False] and sinks["agg"].outcome(1) == [False]
+    assert sinks["quar"].outcome(1) == []
+    assert read_version(spark, paths["quar"]).count() == 1  # a1 only
 
-    d = tmp_path / "data"
-    d.mkdir()
-    _write(d, "f1.csv", ["2025-05-26 10:00:00,S1,20.0,0.5,1000.0"])
-    _write(d, "f2.csv", ["2025-05-26 11:00:00,S2,21.0,0.6,1001.0"])
-    res = run_sensor_batch(spark, str(d))
-    agg_path = tmp_path / "agg"
-    sink = ParquetUpsertSink(
-        str(agg_path),
-        keys=["sensor_id", "file_name", "metric_name", "aggregation_time"],
-        partition_by=["file_name"],
-    )
-    sink.write(res.aggregates)
-
-    def snapshot(part_dir: Path):
-        return {
-            f.name: (f.stat().st_mtime_ns, hashlib.md5(f.read_bytes()).hexdigest())
-            for f in part_dir.glob("*.parquet")
-        }
-
-    f1_before = snapshot(agg_path / "file_name=f1.csv")
-    assert f1_before  # the partition exists and has data files
-
-    # disjoint batch: touches only f2's partition
-    sink.write(res.aggregates.where("file_name = 'f2.csv'"))
-
-    assert snapshot(agg_path / "file_name=f1.csv") == f1_before
-    out = spark.read.parquet(str(agg_path))
-    assert out.count() == 6  # 2 sensors x 3 metrics, no dup keys
+    q, sinks = start()
+    _run_until_done(q)
+    assert q.exception() is None
+    assert sinks["raw"].outcome(1) == [True] and sinks["agg"].outcome(1) == [True]
+    assert sinks["quar"].outcome(1) == [False]
+    _assert_exactly_once(spark, paths)
 
 
 def test_streaming_ewma_stateful(spark, tmp_path):
