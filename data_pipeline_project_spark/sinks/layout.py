@@ -140,38 +140,22 @@ def write_zordered(
     )
 
 
-def file_zone_maps(
-    duck, path: str, col: str, duck_type: str = "BIGINT"
-) -> list[tuple[str, object, object]]:
+def file_zone_maps(path: str, col: str) -> list[tuple[str, object, object]]:
     """Per-file (file, min, max) for ``col`` straight from the parquet
-    footers (no data read) — the pruning metadata any engine consults.
-    Used by tests to prove layout quality; handy as an ops probe.
-    DuckDB surfaces footer stats as strings; ``duck_type`` casts them
-    so min/max aggregate over row groups in value order. Files under
-    underscore-prefixed directories (_manifests/, _removed/ tombstones)
-    are excluded — DuckDB's glob does not share Spark's hidden-path
-    convention, and treating a retention tombstone as live data would
-    double-count it."""
-    rows = duck.execute(
-        f"""
-        SELECT file_name,
-               min(try_cast(stats_min_value AS {duck_type})),
-               max(try_cast(stats_max_value AS {duck_type}))
-        FROM parquet_metadata(?)
-        WHERE path_in_schema = ?
-        GROUP BY file_name
-        """,
-        [f"{path}/**/*.parquet", col],
-    ).fetchall()
-    import os
+    footers of the data files under ``path`` (no data read) — the
+    pruning metadata any engine consults. Used by tests to prove
+    layout quality; handy as an ops probe. The listing skips
+    underscore- and dot-prefixed directories (_manifests/, _removed/
+    tombstones, staging), as Spark's reader does: a retention
+    tombstone counted as live data would double-count it. Read through
+    manifest._key_zone_maps, so types and missing ranges behave as in
+    candidate selection."""
+    from data_pipeline_project_spark.sinks.manifest import (
+        _data_files,
+        _key_zone_maps,
+    )
 
-    def _hidden(f: str) -> bool:
-        rel = os.path.relpath(f, path)
-        return any(
-            seg.startswith(("_", ".")) for seg in rel.split(os.sep)
-        )
-
-    return [(f, lo, hi) for f, lo, hi in rows if not _hidden(f)]
+    return _key_zone_maps([(f, None) for f in _data_files(path)], col)
 
 
 def overlap_fraction(
@@ -198,15 +182,7 @@ def prune_files(
     ]
 
 
-def read_pruned(
-    spark,
-    duck,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    duck_type: str = "BIGINT",
-):
+def read_pruned(spark, path: str, col: str, lo, hi):
     """Statistics-driven file-level pruning: list the parquet files
     whose footer zone maps can contain ``col`` in [lo, hi] and scan
     ONLY those, with the residual predicate still applied (the stats
@@ -220,7 +196,7 @@ def read_pruned(
     ``spark.read.parquet(dir)`` consults footers only per ROW GROUP
     after listing + opening every file — at 100 TB the listing itself
     is the cost a file-level prune avoids."""
-    zone_maps = file_zone_maps(duck, path, col, duck_type)
+    zone_maps = file_zone_maps(path, col)
     files = prune_files(zone_maps, lo, hi)
     pred = F.col(col).between(F.lit(lo), F.lit(hi))
     if not files:
@@ -295,7 +271,7 @@ def write_bloom_filtered(
 def parquet_data_bytes(path: str) -> int:
     """Total bytes of the data files under ``path`` (hidden dirs and
     non-parquet sidecars excluded) — the probe the bloom test uses:
-    this container's duckdb (1.0) and pyarrow (16.1) predate the
+    pyarrow 16.1, the package's footer reader, predates the
     footer's bloom_filter_offset exposure, so presence is proven by
     the deterministic size delta the serialized filters add (same
     data, same encoding, only the filters differ)."""
@@ -345,10 +321,8 @@ def drop_partitions_before(path: str, cutoff_dt: str) -> dict:
 
 
 def table_health(
-    duck,
     path: str,
     key_col: str | None = None,
-    duck_type: str = "BIGINT",
     small_file_bytes: int = 32 * 1024 * 1024,
 ) -> dict:
     """Maintenance audit of a manifest table — everything an operator
@@ -373,10 +347,15 @@ def table_health(
     import pyarrow.parquet as pq
 
     from data_pipeline_project_spark.sinks.manifest import (
+        PARTITION_FMTS,
         QUARANTINE_DIR,
         REMOVED_DIR,
         _data_files,
         _dv_positions_by_file,
+        _key_zone_maps,
+        _ndv_is_current,
+        _resolve_snapshot_file,
+        read_manifest,
         snapshot_versions,
         table_dv,
     )
@@ -453,70 +432,51 @@ def table_health(
             }
             for d, ss in sorted(by_dir.items())
         }
+    # the head manifest (None for a plain directory): sketch coverage,
+    # the partition-era audit and the clustering audit all read it
+    latest = os.path.join(path, "_manifests", "latest.json")
+    head = None
+    if os.path.exists(latest):
+        try:
+            head = read_manifest(latest)
+        except FileNotFoundError:
+            pass
     # NDV sketch coverage (r11): files without a sketch blind the
     # distribution-driven advice (join cardinality, skew, in-memory
     # broadcast sizing); analyze_table backfills them explicitly
-    if files:
-        try:
-            from data_pipeline_project_spark.sinks.manifest import (
-                read_manifest as _rm,
-            )
-
-            _lm = os.path.join(path, "_manifests", "latest.json")
-            if os.path.exists(_lm):
-                _mm = _rm(_lm)
-                n_ = max(1, _mm["n_files"])
-                from data_pipeline_project_spark.sinks.manifest import (
-                    _ndv_is_current,
-                )
-
-                health["ndv_coverage"] = (
-                    sum(
-                        1 for f in _mm["files"]
-                        if _ndv_is_current(f) or f["rows"] == 0
-                    ) / n_
-                )
-        except FileNotFoundError:
-            pass
+    if files and head is not None:
+        health["ndv_coverage"] = sum(
+            1 for f in head["files"] if _ndv_is_current(f) or f["rows"] == 0
+        ) / max(1, head["n_files"])
     # partition-era audit (r11): on a spec-evolved table, classify
     # each file's derived-column directory value by which era's
     # format produced it — files still under a non-current granularity
     # are the lazy-migration backlog maintenance should work through
-    import os as _os
-
-    latest_m = _os.path.join(path, "_manifests", "latest.json")
-    if _os.path.exists(latest_m):
-        from data_pipeline_project_spark.sinks.manifest import (
-            PARTITION_FMTS,
-            read_manifest as _read_manifest,
-        )
-
-        _m = _read_manifest(latest_m)
-        spec = _m.get("partition_spec")
-        if spec:
-            by_len = {
-                len(PARTITION_FMTS[g][1].replace("%Y", "1234")
-                    .replace("%m", "12").replace("%d", "12")
-                    .replace("%H", "12")): g
-                for g in PARTITION_FMTS
-            }
-            eras: dict = {}
-            old_era = 0
-            for f in _m["files"]:
-                segs = [
-                    s for s in f["path"].replace("\\", "/").split("/")[:-1]
-                    if s.startswith(spec["derived"] + "=")
-                ]
-                if not segs:
-                    continue
-                val = segs[0].split("=", 1)[1]
-                g = by_len.get(len(val), "unknown")
-                eras[g] = eras.get(g, 0) + 1
-                if g != spec["granularity"]:
-                    old_era += 1
-            if eras:
-                health["partition_eras"] = eras
-                health["old_era_files"] = old_era
+    spec = head.get("partition_spec") if head is not None else None
+    if spec:
+        by_len = {
+            len(PARTITION_FMTS[g][1].replace("%Y", "1234")
+                .replace("%m", "12").replace("%d", "12")
+                .replace("%H", "12")): g
+            for g in PARTITION_FMTS
+        }
+        eras: dict = {}
+        old_era = 0
+        for f in head["files"]:
+            segs = [
+                s for s in f["path"].replace("\\", "/").split("/")[:-1]
+                if s.startswith(spec["derived"] + "=")
+            ]
+            if not segs:
+                continue
+            val = segs[0].split("=", 1)[1]
+            g = by_len.get(len(val), "unknown")
+            eras[g] = eras.get(g, 0) + 1
+            if g != spec["granularity"]:
+                old_era += 1
+        if eras:
+            health["partition_eras"] = eras
+            health["old_era_files"] = old_era
     # deletion-vector pressure: dead rows are a per-scan anti-join tax
     # until a whole-table rewrite materializes them away
     dv = table_dv(path)
@@ -525,43 +485,26 @@ def table_health(
         len(v) for v in _dv_positions_by_file(path, dv).values()
     )
     if key_col is not None and files:
-        # stats-in-the-log fast path (r10): when every pinned entry
-        # records stats for the key, the clustering audit reads ZERO
-        # footers — live dir == head pins is the writers' invariant,
-        # so the log's ranges are the directory's ranges
-        zm = None
-        latest = os.path.join(path, "_manifests", "latest.json")
-        if os.path.exists(latest):
-            from data_pipeline_project_spark.sinks.manifest import (
-                _stats_decode,
-                read_manifest,
-            )
-
-            ents = [
-                f for f in read_manifest(latest)["files"] if f["rows"] > 0
+        # the head's entries (live dir == head pins is the writers'
+        # invariant): the log's stats answer wherever an entry records
+        # the key, and only the rest cost a footer read; with no log,
+        # the directory's footers. Files with no range are left out.
+        if head is not None:
+            entries = [
+                (
+                    _resolve_snapshot_file(head["root"], f["path"])
+                    or os.path.join(head["root"], f["path"]),
+                    f,
+                )
+                for f in head["files"]
             ]
-            if ents and all(key_col in (f.get("stats") or {}) for f in ents):
-                # all-null entries ([None, None, "null", n]) have no
-                # range — skip them, exactly as the footer-probe path
-                # below filters None bounds; otherwise zm.sort() and
-                # the overlap comparison hit TypeError on None
-                zm = [
-                    (
-                        _stats_decode(f["stats"][key_col][0], f["stats"][key_col][2]),
-                        _stats_decode(f["stats"][key_col][1], f["stats"][key_col][2]),
-                    )
-                    for f in ents
-                    if f["stats"][key_col][2] != "null"
-                    and f["stats"][key_col][0] is not None
-                    and f["stats"][key_col][1] is not None
-                ]
-        if zm is None:
-            zm = [
-                (mn, mx)
-                for _, mn, mx in file_zone_maps(duck, path, key_col, duck_type)
-                if mn is not None and mx is not None
-            ]
-        zm.sort()
+        else:
+            entries = [(f, None) for f in files]
+        zm = sorted(
+            (mn, mx)
+            for _, mn, mx in _key_zone_maps(entries, key_col)
+            if mn is not None and mx is not None
+        )
         overlaps = sum(
             1 for (_, mx_a), (mn_b, _) in zip(zm, zm[1:]) if mn_b <= mx_a
         )
@@ -1053,11 +996,9 @@ def advised_join(
 
 def run_maintenance(
     spark,
-    duck,
     path: str,
     key_col: str | None = None,
     thresholds: dict | None = None,
-    duck_type: str = "BIGINT",
     target_file_bytes: int = 128 * 1024 * 1024,
     keep_versions: int = 2,
     dry_run: bool = False,
@@ -1096,8 +1037,7 @@ def run_maintenance(
     )
 
     health = table_health(
-        duck, path, key_col, duck_type,
-        small_file_bytes=target_file_bytes // 4,
+        path, key_col, small_file_bytes=target_file_bytes // 4
     )
     plan = maintenance_plan(health, thresholds)
     if dry_run:

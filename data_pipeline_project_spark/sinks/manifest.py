@@ -92,7 +92,7 @@ def _rank_py(v):
         return bits if bits >= 0 else -(1 << 63) - bits
     if isinstance(v, datetime.datetime):
         # Parquet stores timestamps as UTC-normalized epoch micros;
-        # DuckDB surfaces the stats as naive UTC wall clock. tz-aware
+        # the log decodes them as naive UTC wall clock. tz-aware
         # values normalize to the same instant first, so the rank is
         # the file's true [min,max] in epoch micros regardless of the
         # wall-clock zone (DST folds/gaps cannot reorder instants).
@@ -312,7 +312,7 @@ def _data_files(path: str) -> list[str]:
 _STATS_MAX_COLS = 32
 
 
-def _entry_stats(md, priority_cols=()) -> dict | None:
+def _entry_stats(md, priority_cols=()) -> tuple[dict | None, int]:
     """{column: [min, max, kind]} from a parquet FileMetaData's
     row-group statistics — the data-skipping index the manifest
     carries so candidate selection and pruned reads never re-open
@@ -326,8 +326,9 @@ def _entry_stats(md, priority_cols=()) -> dict | None:
 
     Timestamp caveat: Spark's DEFAULT parquet timestamp output is
     INT96, which the format defines as stats-less — such columns get
-    no log stats here and no footer stats in any engine (the DuckDB
-    probe sees NULLs too; candidate selection just keeps every file).
+    no log stats here and no footer stats in any engine (the footer
+    fallback of _key_zone_maps finds none either; candidate selection
+    just keeps every file).
     Sessions that set spark.sql.parquet.outputTimestampType to
     TIMESTAMP_MICROS get full timestamp skipping.
 
@@ -348,8 +349,8 @@ def _entry_stats(md, priority_cols=()) -> dict | None:
     the caller (_file_entry) records a ``stats_truncated`` count on
     the manifest ENTRY when the cap dropped anything, so 'every entry
     has stats for key_col' coverage failures are diagnosable from the
-    log instead of silently degrading every fast path to the footer
-    probe with no signal to the operator."""
+    log instead of silently sending files to the footer read with no
+    signal to the operator."""
     import datetime
 
     def _classify(v):
@@ -469,6 +470,51 @@ def _stats_decode(v, kind):
             microseconds=v
         )
     return v
+
+
+def _read_footer(f: str):
+    """One parquet footer (metadata only, no data pages): the only I/O
+    _key_zone_maps does, and the seam tests patch to prove that a
+    table whose log covers the key plans without it."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(f)
+
+
+def _key_zone_maps(entries, key_col: str) -> list[tuple[str, object, object]]:
+    """Sorted (path, min, max) of ``key_col`` over ``entries``, a list
+    of (resolved_path, manifest entry or None) — the zone maps every
+    candidate selection and clustering audit consults. Per entry, the
+    log's recorded stats answer when present; otherwise that one
+    file's footer is read and put through _entry_stats, so a log
+    entry without stats for the key (older commits, a wide-table cap)
+    costs one footer, not a probe of every file.
+
+    Zero-row files are left out (they hold no key), as are files whose
+    footer schema lacks the column (a column added after they were
+    written: every row reads NULL, which no key equals). A file whose
+    key has no range — no stats, INT96 timestamps, an all-NULL column,
+    or a type _entry_stats does not record (decimals, strings over 256
+    chars, binary) — maps to (path, None, None) and is never pruned."""
+    out = []
+    for f, entry in entries:
+        if entry is not None and entry["rows"] == 0:
+            continue
+        st = ((entry or {}).get("stats") or {}).get(key_col)
+        if st is None:
+            md = _read_footer(f)
+            if md.num_rows == 0 or key_col not in {
+                md.schema.column(i).path for i in range(md.num_columns)
+            }:
+                continue
+            st = (_entry_stats(md, priority_cols=(key_col,))[0] or {}).get(
+                key_col
+            )
+        if st is None:
+            out.append((f, None, None))
+        else:
+            out.append((f, _stats_decode(st[0], st[2]), _stats_decode(st[1], st[2])))
+    return sorted(out, key=lambda z: z[0])
 
 
 # Per-file NDV sketches in the manifest log (r11, executor-side r12) —
@@ -1556,8 +1602,8 @@ def _partition_values_of(rel: str) -> dict:
 
 
 def _snapshot_zone_maps(
-    duck, head: dict, key_col: str, duck_type: str
-) -> tuple[list[tuple[str, object, object]], dict]:
+    head: dict, key_col: str
+) -> tuple[list[tuple[str, object, object]], dict, dict]:
     """(resolved_path, min, max) zone maps for the HEAD snapshot's
     pinned files — the snapshot-isolated twin of layout.file_zone_maps.
     Concurrent writers make the directory an unreliable input: it may
@@ -1567,60 +1613,29 @@ def _snapshot_zone_maps(
     selection therefore reads exactly the head's file set, resolving
     files a racing rewrite has tombstoned through ``_removed/`` just
     like readers do. Returns (zone_maps, {resolved_path: manifest
-    relpath}).
+    relpath}, {resolved_path: manifest bloom}).
 
-    Stats-in-the-log fast path (r10): when EVERY pinned entry carries
-    recorded column stats for ``key_col`` (every commit since the
-    feature writes them), the zone maps come straight from the
-    manifest — ZERO footer I/O, so a targeted merge's planning cost
-    stops scaling with the table's file count (at 10⁶ files the
-    DuckDB footer probe is minutes of metadata reads; the log is one
-    JSON already in hand). Any entry without stats for the key (older
-    commits, exotic types) falls back to the footer probe for ALL
-    files — correctness never depends on which path ran."""
+    The ranges come from the log's recorded stats (r10) wherever an
+    entry carries them — ZERO footer I/O, so a targeted merge's
+    planning cost stops scaling with the table's file count (at 10⁶
+    files a footer probe is minutes of metadata reads; the log is one
+    JSON already in hand). An entry without stats for the key costs
+    one footer read for that file alone (see _key_zone_maps) —
+    correctness never depends on which path ran."""
     root = head["root"]
-    resolved, rel_by_path, blooms = [], {}, {}
+    entries, rel_by_path, blooms = [], {}, {}
     for f in head["files"]:
         live = _resolve_snapshot_file(root, f["path"])
         if live is None:
             raise FileNotFoundError(
                 f"snapshot file {f['path']} unresolvable (vacuumed?)"
             )
-        resolved.append(live)
+        entries.append((live, f))
         rel_by_path[live] = f["path"]
         b = (f.get("bloom") or {}).get(key_col)
         if b:
             blooms[live] = b
-    if not resolved:
-        return [], rel_by_path, blooms
-    # zero-row entries (no row groups, hence no stats) are exempt from
-    # the coverage check AND from the zone list — the footer probe's
-    # GROUP BY likewise never surfaces them, and a rowless file can
-    # never be a rewrite candidate
-    ents = [f for f in head["files"] if f["rows"] > 0]
-    if all(key_col in (f.get("stats") or {}) for f in ents):
-        path_by_rel = {rel: p for p, rel in rel_by_path.items()}
-        zone = sorted(
-            (
-                path_by_rel[f["path"]],
-                _stats_decode(f["stats"][key_col][0], f["stats"][key_col][2]),
-                _stats_decode(f["stats"][key_col][1], f["stats"][key_col][2]),
-            )
-            for f in ents
-        )
-        return zone, rel_by_path, blooms
-    rows = duck.execute(
-        f"""
-        SELECT file_name,
-               min(try_cast(stats_min_value AS {duck_type})),
-               max(try_cast(stats_max_value AS {duck_type}))
-        FROM parquet_metadata(?)
-        WHERE path_in_schema = ?
-        GROUP BY file_name
-        """,
-        [resolved, key_col],
-    ).fetchall()
-    return sorted((f, lo, hi) for f, lo, hi in rows), rel_by_path, blooms
+    return _key_zone_maps(entries, key_col), rel_by_path, blooms
 
 
 def _keyed_rewrite(
@@ -1673,11 +1688,9 @@ def _keyed_rewrite(
 
 def delete_rows_targeted(
     spark,
-    duck,
     path: str,
     key_col: str,
     keys_df: DataFrame,
-    duck_type: str = "BIGINT",
     commit: bool = False,
 ) -> dict:
     """Targeted row deletion (the GDPR/right-to-be-forgotten shape):
@@ -1744,9 +1757,7 @@ def delete_rows_targeted(
         head = read_manifest(
             os.path.join(path, "_manifests", f"v{pending[-1]}.json")
         )
-        zone_maps, rel_by_path, blooms = _snapshot_zone_maps(
-            duck, head, key_col, duck_type
-        )
+        zone_maps, rel_by_path, blooms = _snapshot_zone_maps(head, key_col)
         dv_relpaths = head.get("dv") or []
     else:
         if commit:
@@ -1754,7 +1765,7 @@ def delete_rows_targeted(
                 "commit=True needs an existing snapshot; bootstrap with "
                 "write_versioned_manifest first"
             )
-        zone_maps = file_zone_maps(duck, path, key_col, duck_type)
+        zone_maps = file_zone_maps(path, key_col)
         rel_by_path = {f: os.path.relpath(f, path) for f, _, _ in zone_maps}
         dv_relpaths = table_dv(path)
         blooms = {}
@@ -1801,11 +1812,9 @@ def delete_rows_targeted(
 
 def delete_rows_dv(
     spark,
-    duck,
     path: str,
     key_col: str,
     keys_df: DataFrame,
-    duck_type: str = "BIGINT",
 ) -> dict:
     """Merge-on-read DELETE via a deletion vector (Delta/Iceberg v2
     position deletes): instead of rewriting every file a key matches,
@@ -1851,12 +1860,10 @@ def delete_rows_dv(
         head = read_manifest(
             os.path.join(path, "_manifests", f"v{pending[-1]}.json")
         )
-        zone_maps, _rels, blooms = _snapshot_zone_maps(
-            duck, head, key_col, duck_type
-        )
+        zone_maps, _rels, blooms = _snapshot_zone_maps(head, key_col)
         prev_dv = head.get("dv") or []
     else:
-        zone_maps = file_zone_maps(duck, path, key_col, duck_type)
+        zone_maps = file_zone_maps(path, key_col)
         prev_dv = table_dv(path)
         blooms = {}
     candidates = _select_candidates(
@@ -3750,11 +3757,9 @@ def append_snapshot(
 
 def merge_upsert(
     spark,
-    duck,
     path: str,
     key_col: str,
     updates_df: DataFrame,
-    duck_type: str = "BIGINT",
     rewrite: str = "targeted",
     commit_extra: dict | None = None,
     schema_evolution: bool = False,
@@ -3961,12 +3966,10 @@ def merge_upsert(
             blooms = {}
             candidates = []
         else:
-            zone_maps, rel_by_path, blooms = _snapshot_zone_maps(
-                duck, head, key_col, duck_type
-            )
+            zone_maps, rel_by_path, blooms = _snapshot_zone_maps(head, key_col)
             candidates = None
     else:
-        zone_maps = file_zone_maps(duck, path, key_col, duck_type)
+        zone_maps = file_zone_maps(path, key_col)
         rel_by_path = {f: os.path.relpath(f, path) for f, _, _ in zone_maps}
         dv_relpaths = table_dv(path)
         blooms = {}

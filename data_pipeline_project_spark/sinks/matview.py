@@ -140,7 +140,6 @@ def _with_gk(df: DataFrame, keys: list[str]) -> DataFrame:
 
 def create_agg_view(
     spark,
-    duck,
     src_path: str,
     view_path: str,
     keys: list[str],
@@ -266,7 +265,6 @@ def _read_changes(
 
 def refresh_agg_view(
     spark,
-    duck,
     view_path: str,
     mode: str = "auto",
     verify_unique: bool = False,
@@ -424,8 +422,8 @@ def refresh_agg_view(
         from data_pipeline_project_spark.sinks.manifest import merge_upsert
 
         res = merge_upsert(
-            spark, duck, view_path, GROUP_KEY, final,
-            duck_type="BIGINT", rewrite="auto", commit_extra=stamp,
+            spark, view_path, GROUP_KEY, final,
+            rewrite="auto", commit_extra=stamp,
         )
         view_v = res["version"]
 
@@ -548,7 +546,6 @@ DISTINCT_SKETCH_THRESHOLD = 2_000_000
 
 def create_distinct_view(
     spark,
-    duck,
     src_path: str,
     view_path: str,
     keys: list[str],
@@ -638,7 +635,7 @@ def create_distinct_view(
 
 
 def refresh_distinct_view(
-    spark, duck, view_path: str, feed_shards: int | None = None
+    spark, view_path: str, feed_shards: int | None = None
 ) -> dict:
     """Advance a distinct-count view to the source's latest committed
     version. ``exact``: fold the window's per-(group, value) insert
@@ -759,8 +756,8 @@ def refresh_distinct_view(
         from data_pipeline_project_spark.sinks.manifest import merge_upsert
 
         res = merge_upsert(
-            spark, duck, view_path, GROUP_KEY, final,
-            duck_type="BIGINT", rewrite="auto", commit_extra=stamp,
+            spark, view_path, GROUP_KEY, final,
+            rewrite="auto", commit_extra=stamp,
         )
         view_v = res["version"]
     return {
@@ -798,7 +795,6 @@ def read_distinct_view(
 
 def create_recompute_view(
     spark,
-    duck,
     src_path: str,
     view_path: str,
     keys: list[str],
@@ -877,7 +873,7 @@ def _recompute_groups(facts: DataFrame, keys: list[str], exprs: dict) -> DataFra
 
 
 def refresh_recompute_view(
-    spark, duck, view_path: str, mode: str = "recompute",
+    spark, view_path: str, mode: str = "recompute",
     feed_shards: int | None = None,
 ) -> dict:
     """Advance a recompute-only view to the source's latest committed
@@ -945,8 +941,8 @@ def refresh_recompute_view(
         from data_pipeline_project_spark.sinks.manifest import merge_upsert
 
         res = merge_upsert(
-            spark, duck, view_path, GROUP_KEY, final,
-            duck_type="BIGINT", rewrite="auto", commit_extra=stamp,
+            spark, view_path, GROUP_KEY, final,
+            rewrite="auto", commit_extra=stamp,
         )
         view_v = res["version"]
     return {
@@ -973,7 +969,6 @@ def read_recompute_view(
 
 def maintain_agg_view_stream(
     spark,
-    duck,
     view_path: str,
     checkpoint_dir: str,
     mode: str = "auto",
@@ -1002,12 +997,12 @@ def maintain_agg_view_stream(
         if batch.isEmpty():
             return
         if spec.get("kind") == "distinct":
-            results.append(refresh_distinct_view(spark, duck, view_path))
+            results.append(refresh_distinct_view(spark, view_path))
         elif spec.get("kind") == "recompute":
-            results.append(refresh_recompute_view(spark, duck, view_path))
+            results.append(refresh_recompute_view(spark, view_path))
         else:
             results.append(
-                refresh_agg_view(spark, duck, view_path, mode=mode)
+                refresh_agg_view(spark, view_path, mode=mode)
             )
 
     q = (

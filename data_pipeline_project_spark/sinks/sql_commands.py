@@ -223,13 +223,10 @@ class LakehouseSQL:
 
     ``catalog`` is either a plain dict (session-scoped names) or a
     :class:`TableCatalog` (persistent, versioned, shared across
-    processes — r13); ``duck`` is the optional DuckDB connection some
-    twins use for zone-map probes (``None`` exercises the
-    stats-in-the-log fast path, same as the Python API)."""
+    processes — r13)."""
 
-    def __init__(self, spark, catalog, duck=None):
+    def __init__(self, spark, catalog):
         self.spark = spark
-        self.duck = duck
         if isinstance(catalog, dict):
             self.catalog = {k: v for k, v in catalog.items()}
         else:
@@ -397,7 +394,7 @@ class LakehouseSQL:
             key = _ident(on)
         src = _ident(m.group("s"))
         updates = self.spark.table(src)
-        return merge_upsert(self.spark, self.duck, path, key, updates)
+        return merge_upsert(self.spark, path, key, updates)
 
     def _delete(self, s: str):
         from data_pipeline_project_spark.sinks.manifest import (
@@ -433,8 +430,7 @@ class LakehouseSQL:
             # (k = v + 1, k IN (SELECT ...)): a rewrite-job predicate
             return delete_where(self.spark, path, pred)
         return delete_rows_targeted(
-            self.spark, self.duck, path, key,
-            self._keys_df(path, key, vals), commit=True,
+            self.spark, path, key, self._keys_df(path, key, vals), commit=True,
         )
 
     def _update(self, s: str):

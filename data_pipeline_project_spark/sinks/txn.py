@@ -9,7 +9,7 @@ Usage — the reference's exact flow::
 
     with transaction([raw_path, agg_path]):
         append_snapshot(spark, raw_path, validated_batch)
-        merge_upsert(spark, duck, agg_path, "sensor_id", new_aggs)
+        merge_upsert(spark, agg_path, "sensor_id", new_aggs)
     # exiting publishes BOTH atomically; an exception aborts BOTH
 
 Protocol (presumed-abort two-phase, one atomic decision point — see

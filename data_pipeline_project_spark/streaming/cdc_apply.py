@@ -66,13 +66,11 @@ def collapse_last_write_wins(
 
 def apply_cdc_stream(
     spark,
-    duck,
     changes: DataFrame,
     target_path: str,
     key_col: str,
     order_col: str,
     checkpoint_dir: str,
-    duck_type: str = "BIGINT",
     rewrite: str = "auto",
     delete_col: str | None = None,
     delete_mode: str = "dv",
@@ -130,24 +128,19 @@ def apply_cdc_stream(
             collapsed = collapsed.where(~flag).drop(delete_col)
             if dels.limit(1).count():
                 if delete_mode == "dv":
-                    d = delete_rows_dv(
-                        spark, duck, target_path, key_col, dels,
-                        duck_type=duck_type,
-                    )
+                    d = delete_rows_dv(spark, target_path, key_col, dels)
                 else:
                     # commit=True: the post-delete snapshot pins through
                     # the optimistic path (intent-stamped, multi-writer
                     # safe) instead of a listing-based manifest
                     d = delete_rows_targeted(
-                        spark, duck, target_path, key_col, dels,
-                        duck_type=duck_type, commit=True,
+                        spark, target_path, key_col, dels, commit=True
                     )
                 stats["rows_deleted"] = d["rows_deleted"]
         if not collapsed.isEmpty():
             stats.update(
                 merge_upsert(
-                    spark, duck, target_path, key_col, collapsed,
-                    duck_type=duck_type, rewrite=rewrite,
+                    spark, target_path, key_col, collapsed, rewrite=rewrite
                 )
             )
         stats["batch_id"] = batch_id
@@ -157,7 +150,7 @@ def apply_cdc_stream(
             )
 
             stats["maintenance"] = _maintain_best_effort(
-                spark, duck, target_path, key_col, maintenance_thresholds
+                spark, target_path, key_col, maintenance_thresholds
             )
         applied.append(stats)
 

@@ -111,7 +111,6 @@ class ManifestTableSink(Sink):
         key_col: str | None = None,
         maintenance_every: int | None = None,
         maintenance_thresholds: dict | None = None,
-        duck=None,
     ):  # noqa: D107
         self.spark = spark
         self.table_path = table_path
@@ -119,7 +118,6 @@ class ManifestTableSink(Sink):
         self.key_col = key_col
         self.maintenance_every = maintenance_every
         self.maintenance_thresholds = maintenance_thresholds
-        self.duck = duck
         self.results: list[dict] = []
         self._last: int | None = None
         self._committed = 0
@@ -161,7 +159,7 @@ class ManifestTableSink(Sink):
         self._committed += 1
         if self.maintenance_every and self._committed % self.maintenance_every == 0:
             res["maintenance"] = _maintain_best_effort(
-                self.spark, self.duck, self.table_path, self.key_col,
+                self.spark, self.table_path, self.key_col,
                 self.maintenance_thresholds,
             )
         self.results.append({"batch_id": epoch_id, "replayed": False, **res})
@@ -172,7 +170,7 @@ lakehouse_append_batch_fn = ManifestTableSink
 
 
 def _maintain_best_effort(
-    spark, duck, table_path: str, key_col, thresholds
+    spark, table_path: str, key_col, thresholds
 ) -> dict:
     """One conflict-safe maintenance pass: whatever the health audit
     says the table needs right now (usually: merge this sink's own
@@ -186,7 +184,7 @@ def _maintain_best_effort(
 
     try:
         out = run_maintenance(
-            spark, duck, table_path, key_col=key_col, thresholds=thresholds
+            spark, table_path, key_col=key_col, thresholds=thresholds
         )
         return {
             "executed": [e.get("action") for e in out["executed"]],
@@ -204,7 +202,6 @@ def start_lakehouse_append_stream(
     key_col: str | None = None,
     maintenance_every: int | None = None,
     maintenance_thresholds: dict | None = None,
-    duck=None,
 ):
     """Start (and return) the streaming query appending ``source``
     (a streaming DataFrame) into the manifest table at ``table_path``
@@ -224,7 +221,6 @@ def start_lakehouse_append_stream(
         spark, table_path, sink_id, key_col,
         maintenance_every=maintenance_every,
         maintenance_thresholds=maintenance_thresholds,
-        duck=duck,
     )
     q = (
         source.writeStream.foreachBatch(fn)

@@ -73,7 +73,6 @@ def sensor_batch_aggregates(batch: DataFrame, key_col: str) -> DataFrame:
 
 def txn_pipeline_batch_fn(
     spark,
-    duck,
     raw_path: str,
     agg_path: str,
     key_col: str,
@@ -111,7 +110,7 @@ def txn_pipeline_batch_fn(
                 spark, raw_path, batch, commit_extra=stamp,
                 collect_ndv=False,
             )
-            mres = merge_upsert(spark, duck, agg_path, key_col, aggs)
+            mres = merge_upsert(spark, agg_path, key_col, aggs)
         state["last"] = batch_id
         results.append(
             {
@@ -129,7 +128,6 @@ def txn_pipeline_batch_fn(
 
 def start_txn_pipeline_stream(
     spark,
-    duck,
     source: DataFrame,
     raw_path: str,
     agg_path: str,
@@ -148,7 +146,7 @@ def start_txn_pipeline_stream(
             os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:12]
     fn = txn_pipeline_batch_fn(
-        spark, duck, raw_path, agg_path, key_col, sink_id,
+        spark, raw_path, agg_path, key_col, sink_id,
         agg_builder=agg_builder,
     )
     q = (

@@ -33,12 +33,10 @@ from pyspark.sql import functions as F
 
 def replicate_table_stream(
     spark,
-    duck,
     src_path: str,
     dst_path: str,
     key_col: str,
     checkpoint_dir: str,
-    duck_type: str = "BIGINT",
     starting_version: int = 0,
 ):
     """Start (and return) the streaming query replicating ``src_path``'s
@@ -82,8 +80,7 @@ def replicate_table_stream(
             else:
                 if dels.limit(1).count():
                     delete_rows_targeted(
-                        spark, duck, dst_path, key_col, dels,
-                        duck_type=duck_type, commit=True,
+                        spark, dst_path, key_col, dels, commit=True
                     )
                 if ins.limit(1).count():
                     # Schema evolution follows the feed: when the source
@@ -119,8 +116,7 @@ def replicate_table_stream(
                         for f in ins.schema.fields
                     )
                     merge_upsert(
-                        spark, duck, dst_path, key_col, ins,
-                        duck_type=duck_type, rewrite="auto",
+                        spark, dst_path, key_col, ins, rewrite="auto",
                         schema_evolution=widened
                         or not set(ins.columns) <= set(rep_fields),
                     )

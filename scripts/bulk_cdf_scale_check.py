@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession, functions as F
 
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
@@ -53,7 +52,6 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.dataSource.register(TableChangesDataSource)
-    duck = duckdb.connect()
     work = tempfile.mkdtemp(prefix="bulk_cdf_scale_")
 
     def fresh(name):
@@ -77,7 +75,7 @@ def main():
 
     t_path = fresh("targeted")
     t0 = time.time()
-    merge_upsert(spark, duck, t_path, "k", updates, rewrite="targeted")
+    merge_upsert(spark, t_path, "k", updates, rewrite="targeted")
     t_targeted = time.time() - t0
     print(f"targeted CoW merge : {t_targeted:.1f}s")
 
@@ -98,7 +96,7 @@ def main():
     for frac, tag in ((0.001, "0.1%"), (0.01, "1%")):
         ks = rng.sample(range(n), int(n * frac))
         upd = spark.createDataFrame([(k, -3) for k in ks], "k long, v long")
-        merge_upsert(spark, duck, path, "k", upd)
+        merge_upsert(spark, path, "k", upd)
     feed = spark.read.format("tablechanges").option("path", path)
 
     t0 = time.time()

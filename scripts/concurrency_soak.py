@@ -59,7 +59,6 @@ class _InterposeChain:
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession, functions as F
 
     from data_pipeline_project_spark.sinks import manifest as M
@@ -87,7 +86,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
     work = tempfile.mkdtemp(prefix="conc_soak_")
 
     N, FILES = 900, 3
@@ -128,7 +126,7 @@ def main():
     def run_op(path, kind, payload):
         if kind == "merge":
             merge_upsert(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long, v long"),
             )
         elif kind == "append":
@@ -139,12 +137,12 @@ def main():
             )
         elif kind == "dv":
             delete_rows_dv(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long"),
             )
         elif kind == "delete":
             delete_rows_targeted(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long"), commit=True,
             )
         else:
@@ -247,7 +245,7 @@ def main():
     def run_op_part(path, i, kind, payload):
         if kind == "merge":
             merge_upsert(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long, v long, shard int"),
             )
         elif kind == "append":
@@ -260,12 +258,12 @@ def main():
             )
         elif kind == "dv":
             delete_rows_dv(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long"),
             )
         elif kind == "delete":
             delete_rows_targeted(
-                spark, duck, path, "k",
+                spark, path, "k",
                 spark.createDataFrame(payload, "k long"), commit=True,
             )
         else:
@@ -352,7 +350,7 @@ def main():
                 spark.createDataFrame(rows, "k long, v long").coalesce(1),
             )
             merge_upsert(
-                spark, duck, agg, "k",
+                spark, agg, "k",
                 spark.createDataFrame(aggs, "k long, v long"),
             )
 

@@ -25,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession, functions as F
 
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
@@ -46,7 +45,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
     work = tempfile.mkdtemp(prefix="dv_scale_")
     rng = random.Random(8)
 
@@ -65,10 +63,10 @@ def main():
         kdf = lambda: spark.createDataFrame([(k,) for k in keys], "k long")
 
         t0 = time.monotonic()
-        res_dv = delete_rows_dv(spark, duck, t_dv, "k", kdf())
+        res_dv = delete_rows_dv(spark, t_dv, "k", kdf())
         w_dv = time.monotonic() - t0
         t0 = time.monotonic()
-        res_cow = delete_rows_targeted(spark, duck, t_cow, "k", kdf())
+        res_cow = delete_rows_targeted(spark, t_cow, "k", kdf())
         write_versioned_manifest(t_cow)
         w_cow = time.monotonic() - t0
         assert res_dv["rows_deleted"] == res_cow["rows_deleted"] == 5_000
@@ -86,7 +84,7 @@ def main():
         for i in range(7):  # stack 7 more vectors
             more = rng.sample(range(0, n), 2_000)
             delete_rows_dv(
-                spark, duck, t_dv, "k",
+                spark, t_dv, "k",
                 spark.createDataFrame([(k,) for k in more], "k long"),
             )
         scan_8dv = scan(t_dv)

@@ -31,7 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession, functions as F
 
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
@@ -57,7 +56,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
 
     def build_source(src):
         df = spark.range(0, n).select(
@@ -81,13 +79,13 @@ def main():
         build_source(src)
         views = {m: os.path.join(work, f"{tag}_{m}") for m in modes}
         t0 = time.monotonic()
-        create_agg_view(spark, duck, src, views[modes[0]], ["g"], "v")
+        create_agg_view(spark, src, views[modes[0]], ["g"], "v")
         t_create = time.monotonic() - t0
-        create_agg_view(spark, duck, src, views[modes[1]], ["g"], "v")
+        create_agg_view(spark, src, views[modes[1]], ["g"], "v")
 
         t0 = time.monotonic()
         merge_upsert(
-            spark, duck, src, "k",
+            spark, src, "k",
             spark.createDataFrame(churn_rows(keys), "k long, g long, v long"),
         )
         t_merge = time.monotonic() - t0
@@ -95,7 +93,7 @@ def main():
         walls, results = {}, {}
         for mode, view in views.items():
             t0 = time.monotonic()
-            results[mode] = refresh_agg_view(spark, duck, view, mode=mode)
+            results[mode] = refresh_agg_view(spark, view, mode=mode)
             walls[mode] = time.monotonic() - t0
 
         a = sorted(map(tuple, read_agg_view(spark, views[modes[0]]).collect()))

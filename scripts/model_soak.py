@@ -31,7 +31,6 @@ class _TmpPath:
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession
 
     from tests.test_manifest_model import (
@@ -49,7 +48,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
 
     ran = 0
     for name, fn, base_seed in (
@@ -60,7 +58,7 @@ def main():
             seed = base_seed + i
             work = tempfile.mkdtemp(prefix=f"soak_{name}_{seed}_")
             try:
-                fn(spark, duck, _TmpPath(work), seed)
+                fn(spark, _TmpPath(work), seed)
                 ran += 1
                 print(f"{name} seed {seed}: ok")
             finally:

@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    import duckdb
     from pyspark.sql import SparkSession, functions as F
 
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
@@ -55,7 +54,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
     work = tempfile.mkdtemp(prefix="txn_scale_")
 
     # warm the JVM/py4j/commit paths once so the first timed sample
@@ -99,13 +97,13 @@ def main():
 
         t0 = time.time()
         append_snapshot(spark, raw_a, batch)
-        merge_upsert(spark, duck, agg_a, "k", aggs)
+        merge_upsert(spark, agg_a, "k", aggs)
         plain = time.time() - t0
 
         t0 = time.time()
         with transaction([raw_b, agg_b]):
             append_snapshot(spark, raw_b, batch)
-            merge_upsert(spark, duck, agg_b, "k", aggs)
+            merge_upsert(spark, agg_b, "k", aggs)
         txn = time.time() - t0
         print(
             f"txn overhead @ {rows} rows/{files} files: plain={plain:.2f}s "

@@ -42,7 +42,7 @@ def _latest(path):
     return read_manifest(os.path.join(path, "_manifests", "latest.json"))
 
 
-def test_table_health_survives_all_null_key_file(spark, duck, tmp_path):
+def test_table_health_survives_all_null_key_file(spark, tmp_path):
     """A file that is all-null in key_col must not crash the stats
     fast path — and the overlap audit must match what the footer
     probe (which always skipped None bounds) would report."""
@@ -69,12 +69,12 @@ def test_table_health_survives_all_null_key_file(spark, duck, tmp_path):
     assert null_entries, "fixture must produce an all-null-key stats entry"
     # every entry carries k-stats → the fast path is taken; before the
     # fix this raised TypeError from zm.sort() on None
-    health = table_health(duck, path, key_col="k")
+    health = table_health(path, key_col="k")
     assert 0.0 <= health["clustering_overlap"] <= 1.0
 
 
 def test_merge_upsert_nan_float_key_updates_not_duplicates(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
@@ -93,7 +93,7 @@ def test_merge_upsert_nan_float_key_updates_not_duplicates(
     updates = spark.createDataFrame(
         [(float("nan"), "C2"), (7.0, "D2")], "k double, v string"
     )
-    merge_upsert(spark, duck, path, "k", updates)
+    merge_upsert(spark, path, "k", updates)
 
     rows = spark.read.parquet(path).collect()
     nan_rows = [r for r in rows if r.k is not None and math.isnan(r.k)]
@@ -102,7 +102,7 @@ def test_merge_upsert_nan_float_key_updates_not_duplicates(
     assert {r.v for r in rows} == {"a", "b", "C2", "D2", "e"}
 
 
-def test_delete_targeted_nan_float_key_hits_the_row(spark, duck, tmp_path):
+def test_delete_targeted_nan_float_key_hits_the_row(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.createDataFrame(
         [(1.0, "a"), (float("nan"), "x"), (3.0, "b")], "k double, v string"
@@ -115,7 +115,7 @@ def test_delete_targeted_nan_float_key_hits_the_row(spark, duck, tmp_path):
     )
 
     keys = spark.createDataFrame([(float("nan"),)], "k double")
-    delete_rows_targeted(spark, duck, path, "k", keys)
+    delete_rows_targeted(spark, path, "k", keys)
 
     rows = spark.read.parquet(path).collect()
     assert not any(r.k is not None and math.isnan(r.k) for r in rows)
@@ -123,7 +123,7 @@ def test_delete_targeted_nan_float_key_hits_the_row(spark, duck, tmp_path):
 
 
 def test_wide_table_stats_keep_priority_key_and_mark_truncation(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """40 value columns alphabetically before the key column 'zz_key':
     the bare cap would have dropped the key's stats; with the merge
@@ -146,7 +146,7 @@ def test_wide_table_stats_keep_priority_key_and_mark_truncation(
     # a merge on zz_key rewrites the touched file; its commit threads
     # the key as a priority column → the new entry keeps zz_key stats
     updates = spark.range(10, 12).select(*cols)
-    merge_upsert(spark, duck, path, "zz_key", updates)
+    merge_upsert(spark, path, "zz_key", updates)
     m1 = _latest(path)
     new_entries = [
         f for f in m1["files"] if f["path"] not in {f0["path"]}

@@ -64,7 +64,7 @@ def _keyed_table(spark, tmp_path):
     return path
 
 
-def test_blooms_survive_analyze_table(spark, duck, tmp_path):
+def test_blooms_survive_analyze_table(spark, tmp_path):
     path = _keyed_table(spark, tmp_path)
     before = set(_bloom_files(path))
     assert len(before) == 4
@@ -75,13 +75,13 @@ def test_blooms_survive_analyze_table(spark, duck, tmp_path):
     )
     # and the pruning still works end-to-end after the re-pin
     out = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(97,)], "sk long"), commit=True,
     )
     assert out["files_rewritten"] == 1, out
 
 
-def test_blooms_survive_restore_table(spark, duck, tmp_path):
+def test_blooms_survive_restore_table(spark, tmp_path):
     path = _keyed_table(spark, tmp_path)
     target = snapshot_versions(path)[-1]
     before = set(_bloom_files(path))
@@ -97,7 +97,7 @@ def test_blooms_survive_restore_table(spark, duck, tmp_path):
     )
 
 
-def test_build_side_chosen_by_inmem_estimate(spark, duck, tmp_path):
+def test_build_side_chosen_by_inmem_estimate(spark, tmp_path):
     """Side A: tiny on disk, massively redundant (inflates past the
     threshold). Side B: bigger on disk, all-distinct (in-memory ~=
     disk, fits). The r11 picker chose A by disk bytes, tested only A,

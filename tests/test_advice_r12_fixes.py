@@ -174,7 +174,7 @@ def test_read_bitset_bogus_offset_fails_open(spark, tmp_path):
 # ------------------------------------------------------------------- #2
 
 
-def test_ryow_invisible_once_marker_aborted(spark, duck, tmp_path):
+def test_ryow_invisible_once_marker_aborted(spark, tmp_path):
     """A staged version whose marker has settled 'aborted' is invisible
     even to the OWNING thread: its data was never and will never be
     committed, so RYOW applies strictly to the in-doubt window."""
@@ -254,7 +254,7 @@ def test_skew_salts_are_deterministic_expressions(spark):
     assert {r.k: r.v_sum for r in summed.collect()} == base
 
 
-def test_advised_join_salt_is_deterministic(spark, duck, tmp_path):
+def test_advised_join_salt_is_deterministic(spark, tmp_path):
     """The salted-skew path of advised_join: plan free of rand, result
     equal to the plain join, and two physical runs byte-identical."""
     from data_pipeline_project_spark.sinks.layout import advised_join

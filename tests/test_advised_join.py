@@ -55,7 +55,7 @@ def _advised_checksum(df):
 
 
 def test_broadcast_strategy_builds_on_the_advised_side(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     fact = _mk(
         spark, str(tmp_path / "fact"),
@@ -78,7 +78,7 @@ def test_broadcast_strategy_builds_on_the_advised_side(
 
 
 def test_ndv_flip_forces_shuffle_despite_tiny_disk_bytes(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """The consumed NDV flip: the dense side is small enough ON DISK
     that Spark's own size heuristic would broadcast it — the advice's
@@ -114,7 +114,7 @@ def test_ndv_flip_forces_shuffle_despite_tiny_disk_bytes(
     assert (got.n, got.h) == (want.n, want.h)
 
 
-def test_provably_empty_join_skips_execution(spark, duck, tmp_path):
+def test_provably_empty_join_skips_execution(spark, tmp_path):
     a = _mk(
         spark, str(tmp_path / "a"),
         spark.range(0, 5_000).select(
@@ -132,7 +132,7 @@ def test_provably_empty_join_skips_execution(spark, duck, tmp_path):
     assert df.count() == 0
 
 
-def test_flagged_skew_salts_the_shuffle(spark, duck, tmp_path):
+def test_flagged_skew_salts_the_shuffle(spark, tmp_path):
     """40% of the fact's rows share one key: the advice flags skew and
     the executed shuffle joins on (k, _salt) — one hot key spreads
     over salt_buckets reducers. Result equality pinned against the

@@ -53,7 +53,7 @@ def test_ingest_with_auto_maintenance_bounded_and_exact(spark, tmp_path):
     path = str(tmp_path / "t")
     fn = ManifestTableSink(
         spark, path, "sink-a",
-        maintenance_every=5, maintenance_thresholds=_T, duck=None,
+        maintenance_every=5, maintenance_thresholds=_T,
     )
     n_batches = 20
     for i in range(n_batches):
@@ -80,7 +80,7 @@ def test_replay_skipped_with_maintenance_interleaved(spark, tmp_path):
     path = str(tmp_path / "t")
     fn = ManifestTableSink(
         spark, path, "sink-a",
-        maintenance_every=2, maintenance_thresholds=_T, duck=None,
+        maintenance_every=2, maintenance_thresholds=_T,
     )
     for i in range(6):
         fn(_batch(spark, i).coalesce(1), i)
@@ -89,7 +89,7 @@ def test_replay_skipped_with_maintenance_interleaved(spark, tmp_path):
     assert fn.results[-1]["replayed"] is True
     # a fresh sink instance (restart) recovers the high-water mark
     # through the maintenance commits' version churn
-    fn2 = ManifestTableSink(spark, path, "sink-a", duck=None)
+    fn2 = ManifestTableSink(spark, path, "sink-a")
     fn2(_batch(spark, 5).coalesce(1), 5)
     assert fn2.results[-1]["replayed"] is True
     assert snapshot_rowcount(path) == 6 * 200
@@ -104,7 +104,7 @@ def test_maintenance_conflict_swallowed(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(L, "run_maintenance", _lose)
     fn = ManifestTableSink(
-        spark, path, "sink-a", maintenance_every=2, duck=None
+        spark, path, "sink-a", maintenance_every=2
     )
     for i in range(4):
         fn(_batch(spark, i).coalesce(1), i)
@@ -115,7 +115,7 @@ def test_maintenance_conflict_swallowed(spark, tmp_path, monkeypatch):
     assert snapshot_rowcount(path) == 4 * 200  # ingest never stalled
 
 
-def test_cdc_apply_with_maintenance_converges(spark, duck, tmp_path):
+def test_cdc_apply_with_maintenance_converges(spark, tmp_path):
     from data_pipeline_project_spark.sinks.layout import (
         write_range_clustered,
     )
@@ -156,7 +156,7 @@ def test_cdc_apply_with_maintenance_converges(spark, duck, tmp_path):
         .json(src)
     )
     q = apply_cdc_stream(
-        spark, duck, changes, target, "k", "seq",
+        spark, changes, target, "k", "seq",
         str(tmp_path / "ckpt"),
         maintenance_every=2, maintenance_thresholds=_T,
     )
@@ -173,7 +173,7 @@ def test_cdc_apply_with_maintenance_converges(spark, duck, tmp_path):
             os.path.join(src, f"b{b}.json")
         )
         merge_upsert(
-            spark, duck, ref, "k",
+            spark, ref, "k",
             collapse_last_write_wins(batch, "k", "seq").drop("seq"),
         )
 

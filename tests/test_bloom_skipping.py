@@ -61,7 +61,7 @@ def _adversarial_table(spark, tmp_path):
     return path
 
 
-def test_appends_record_blooms_for_the_key(spark, duck, tmp_path):
+def test_appends_record_blooms_for_the_key(spark, tmp_path):
     path = _adversarial_table(spark, tmp_path)
     m = _latest(path)
     with_bloom = [f for f in m["files"] if (f.get("bloom") or {}).get("sk")]
@@ -70,13 +70,13 @@ def test_appends_record_blooms_for_the_key(spark, duck, tmp_path):
     assert b["kind"] == "int" and b["m"] == M._BLOOM_M_BITS
 
 
-def test_point_delete_prunes_to_the_true_file(spark, duck, tmp_path):
+def test_point_delete_prunes_to_the_true_file(spark, tmp_path):
     path = _adversarial_table(spark, tmp_path)
     before = read_version(spark, path).count()
     # sk=93 lives only in append 7, but [min,max] of every append
     # contains 93's range-mates — zone maps alone keep all 8
     res = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(93,)], "sk long"), commit=True,
     )
     assert res["rows_deleted"] == 250
@@ -87,10 +87,10 @@ def test_point_delete_prunes_to_the_true_file(spark, duck, tmp_path):
     )
 
 
-def test_point_merge_prunes_and_matches_semantics(spark, duck, tmp_path):
+def test_point_merge_prunes_and_matches_semantics(spark, tmp_path):
     path = _adversarial_table(spark, tmp_path)
     res = merge_upsert(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(97, 777, -9)], "sk long, k long, v long"),
     )
     assert res["files_rewritten"] == 1, res
@@ -99,19 +99,19 @@ def test_point_merge_prunes_and_matches_semantics(spark, duck, tmp_path):
     assert got.where((F.col("sk") == 97) & (F.col("v") == -9)).count() == 1
 
 
-def test_fail_open_on_bloomless_files(spark, duck, tmp_path):
+def test_fail_open_on_bloomless_files(spark, tmp_path):
     path = _adversarial_table(spark, tmp_path)
     # the bootstrap file has NO bloom: a key only it holds must still
     # be found (absent bloom keeps the file a candidate)
     res = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(-1,)], "sk long"), commit=True,
     )
     assert res["rows_deleted"] == 100
     assert read_version(spark, path).where(F.col("sk") == -1).count() == 0
 
 
-def test_saturated_cardinality_records_no_bloom(spark, duck, tmp_path):
+def test_saturated_cardinality_records_no_bloom(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(0, 10).select(
         F.col("id").alias("k"), F.lit(0).alias("v")
@@ -130,7 +130,7 @@ def test_saturated_cardinality_records_no_bloom(spark, duck, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["int", "str"])
-def test_no_false_negatives_randomized(spark, duck, tmp_path, kind):
+def test_no_false_negatives_randomized(spark, tmp_path, kind):
     """The correctness property that makes bloom pruning safe: every
     value actually present in a file must pass its bloom — across
     random draws and both canonical kinds (build-side Spark xxhash64

@@ -83,7 +83,7 @@ def _clean_interposer():
     M._test_claim_interposer = None
 
 
-def test_disjoint_merges_rebase_to_union(spark, duck, tmp_path):
+def test_disjoint_merges_rebase_to_union(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path)
 
@@ -96,10 +96,10 @@ def test_disjoint_merges_rebase_to_union(spark, duck, tmp_path):
     a_result = {}
 
     def run_a():
-        a_result.update(merge_upsert(spark, duck, path, "k", a_updates))
+        a_result.update(merge_upsert(spark, path, "k", a_updates))
 
     M._test_claim_interposer = _InterposeOnce(run_a)
-    b_result = merge_upsert(spark, duck, path, "k", b_updates)
+    b_result = merge_upsert(spark, path, "k", b_updates)
     M._test_claim_interposer = None
 
     # A won the race at v2; B rebased and committed v3
@@ -129,7 +129,7 @@ def test_disjoint_merges_rebase_to_union(spark, duck, tmp_path):
     assert m3["txn"]["key_min"] == 900
 
 
-def test_overlapping_merges_fail_loudly_and_recover(spark, duck, tmp_path):
+def test_overlapping_merges_fail_loudly_and_recover(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path)
 
@@ -137,39 +137,39 @@ def test_overlapping_merges_fail_loudly_and_recover(spark, duck, tmp_path):
     b_updates = _updates(spark, [(600, -4), (610, -5)])  # inside A's range
 
     def run_a():
-        merge_upsert(spark, duck, path, "k", a_updates)
+        merge_upsert(spark, path, "k", a_updates)
 
     M._test_claim_interposer = _InterposeOnce(run_a)
     with pytest.raises(ConcurrentSnapshotError, match="overlapping"):
-        merge_upsert(spark, duck, path, "k", b_updates)
+        merge_upsert(spark, path, "k", b_updates)
     M._test_claim_interposer = None
 
     # loser's data-phase output is uncommitted: recovery quarantines it
     # and restores any tombstones, then a rerun converges
     rec = recover_to_last_manifest(path)
     assert rec["version"] == 2
-    merge_upsert(spark, duck, path, "k", b_updates)
+    merge_upsert(spark, path, "k", b_updates)
     live = read_version(spark, path)
     got = {r.k: r.v for r in live.where("k in (5, 600, 610, 700)").collect()}
     assert got == {5: -1, 600: -4, 610: -5, 700: -2}
     assert live.count() == 1000
 
 
-def test_same_file_rewrite_conflict_detected(spark, duck, tmp_path):
+def test_same_file_rewrite_conflict_detected(spark, tmp_path):
     """Even with key-range disjointness unprovable the FILE rule fires:
     two writers rewriting the same file is a lost update."""
     path = str(tmp_path / "t")
     _table(spark, path, n=100, files=1)  # one file: all merges collide
 
     def run_a():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(1, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(1, -1)]))
 
     M._test_claim_interposer = _InterposeOnce(run_a)
     with pytest.raises(ConcurrentSnapshotError):
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(99, -2)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(99, -2)]))
 
 
-def test_dv_delete_rebases_and_rewrite_vs_dv_conflicts(spark, duck, tmp_path):
+def test_dv_delete_rebases_and_rewrite_vs_dv_conflicts(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path)
 
@@ -177,11 +177,11 @@ def test_dv_delete_rebases_and_rewrite_vs_dv_conflicts(spark, duck, tmp_path):
     # keys (targets file 4) — both commit, and the rebase keeps BOTH
     # A's rewrite and B's vector
     def run_a():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
 
     M._test_claim_interposer = _InterposeOnce(run_a)
     res = delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(990,)], "k long")
+        spark, path, "k", spark.createDataFrame([(990,)], "k long")
     )
     M._test_claim_interposer = None
     assert res["version"] == 3 and res["rows_deleted"] == 1
@@ -195,15 +195,15 @@ def test_dv_delete_rebases_and_rewrite_vs_dv_conflicts(spark, duck, tmp_path):
     # have read pre-DV rows and would resurrect the deleted ones)
     def run_dv():
         delete_rows_dv(
-            spark, duck, path, "k", spark.createDataFrame([(7,)], "k long")
+            spark, path, "k", spark.createDataFrame([(7,)], "k long")
         )
 
     M._test_claim_interposer = _InterposeOnce(run_dv)
     with pytest.raises(ConcurrentSnapshotError, match="deletion vector"):
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(8, -8)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(8, -8)]))
 
 
-def test_commit_without_intent_blocks_rebase(spark, duck, tmp_path):
+def test_commit_without_intent_blocks_rebase(spark, tmp_path):
     """A concurrent commit from an unknown writer (plain
     write_versioned_manifest, no txn stamp) can't be checked —
     the loser must fail, exactly as before the optimistic tier."""
@@ -215,10 +215,10 @@ def test_commit_without_intent_blocks_rebase(spark, duck, tmp_path):
 
     M._test_claim_interposer = _InterposeOnce(run_a)
     with pytest.raises(ConcurrentSnapshotError, match="no intent"):
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
 
 
-def test_real_thread_race_converges_to_union(spark, duck, tmp_path):
+def test_real_thread_race_converges_to_union(spark, tmp_path):
     """Two genuine threads, disjoint key ranges, no interposer: both
     merges must succeed (whichever order the CAS resolves) and the head
     must be the union. Spark's scheduler is thread-safe; the barrier
@@ -232,7 +232,7 @@ def test_real_thread_race_converges_to_union(spark, duck, tmp_path):
         try:
             upd = _updates(spark, pairs)
             barrier.wait(timeout=60)
-            results[name] = merge_upsert(spark, duck, path, "k", upd)
+            results[name] = merge_upsert(spark, path, "k", upd)
         except Exception as e:  # noqa: BLE001 — surfaced below
             errors.append((name, e))
 
@@ -253,7 +253,7 @@ def test_real_thread_race_converges_to_union(spark, duck, tmp_path):
     assert live.where("k >= 950 and k < 980 and v != -2").count() == 0
 
 
-def test_randomized_disjoint_writer_pairs(spark, duck, tmp_path):
+def test_randomized_disjoint_writer_pairs(spark, tmp_path):
     """Model-checker style: random disjoint (merge|dv) op pairs, always
     interleaved via the interposer, every outcome compared against the
     sequential reference (ops applied one after the other)."""
@@ -281,8 +281,8 @@ def test_randomized_disjoint_writer_pairs(spark, duck, tmp_path):
 
         def run(kind, df):
             if kind == "merge":
-                return merge_upsert(spark, duck, path, "k", df)
-            return delete_rows_dv(spark, duck, path, "k", df)
+                return merge_upsert(spark, path, "k", df)
+            return delete_rows_dv(spark, path, "k", df)
 
         M._test_claim_interposer = _InterposeOnce(lambda: run(kind_a, df_a))
         run(kind_b, df_b)
@@ -296,8 +296,8 @@ def test_randomized_disjoint_writer_pairs(spark, duck, tmp_path):
 
         def run_ref(kind, df):
             if kind == "merge":
-                return merge_upsert(spark, duck, ref, "k", df)
-            return delete_rows_dv(spark, duck, ref, "k", df)
+                return merge_upsert(spark, ref, "k", df)
+            return delete_rows_dv(spark, ref, "k", df)
 
         run_ref(kind_a, df_a)
         run_ref(kind_b, df_b)
@@ -305,7 +305,7 @@ def test_randomized_disjoint_writer_pairs(spark, duck, tmp_path):
         assert live == want, f"seed {seed}: interleaved != sequential"
 
 
-def test_compaction_interleaves_with_disjoint_merge(spark, duck, tmp_path):
+def test_compaction_interleaves_with_disjoint_merge(spark, tmp_path):
     """Compaction is row_preserving: a merge on files the compaction
     didn't touch and the compaction itself BOTH commit (the loser
     rebases); a merge that rewrote a compacted file is a detected
@@ -336,7 +336,7 @@ def test_compaction_interleaves_with_disjoint_merge(spark, duck, tmp_path):
     def run_merge():
         merged.update(
             merge_upsert(
-                spark, duck, path, "k", _updates(spark, [(10, -9), (11, -8)])
+                spark, path, "k", _updates(spark, [(10, -9), (11, -8)])
             )
         )
 
@@ -361,7 +361,7 @@ def test_compaction_interleaves_with_disjoint_merge(spark, duck, tmp_path):
     write_versioned_manifest(path)
 
     def run_conflicting_merge():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(6000, -99)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(6000, -99)]))
 
     M._test_claim_interposer = _InterposeOnce(run_conflicting_merge)
     with pytest.raises(ConcurrentSnapshotError, match="rewrote"):
@@ -374,7 +374,7 @@ def test_compaction_interleaves_with_disjoint_merge(spark, duck, tmp_path):
     assert {r.v for r in live2.where("k = 6000").collect()} == {-99}
 
 
-def test_committed_targeted_delete_rebases_and_conflicts(spark, duck, tmp_path):
+def test_committed_targeted_delete_rebases_and_conflicts(spark, tmp_path):
     """delete_rows_targeted(commit=True) rides the optimistic path: a
     delete and a disjoint merge both commit; a delete racing a merge
     that rewrote the same file fails loudly."""
@@ -386,11 +386,11 @@ def test_committed_targeted_delete_rebases_and_conflicts(spark, duck, tmp_path):
     _table(spark, path)
 
     def run_a():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
 
     M._test_claim_interposer = _InterposeOnce(run_a)
     res = delete_rows_targeted(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(990,)], "k long"), commit=True,
     )
     M._test_claim_interposer = None
@@ -404,18 +404,18 @@ def test_committed_targeted_delete_rebases_and_conflicts(spark, duck, tmp_path):
 
     # same-file race: both touch the low-key file
     def run_b():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(6, -6)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(6, -6)]))
 
     M._test_claim_interposer = _InterposeOnce(run_b)
     with pytest.raises(ConcurrentSnapshotError):
         delete_rows_targeted(
-            spark, duck, path, "k",
+            spark, path, "k",
             spark.createDataFrame([(7,)], "k long"), commit=True,
         )
     M._test_claim_interposer = None
     recover_to_last_manifest(path)
     res2 = delete_rows_targeted(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(7,)], "k long"), commit=True,
     )
     assert res2["rows_deleted"] == 1
@@ -434,7 +434,7 @@ def test_committed_targeted_delete_rebases_and_conflicts(spark, duck, tmp_path):
 
 
 def test_append_rebases_with_merge_dv_compaction_and_append(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """A blind append interleaved with a merge, a DV delete, a
     compaction, and ANOTHER append: all five commits land (losers
@@ -450,7 +450,7 @@ def test_append_rebases_with_merge_dv_compaction_and_append(
 
     # append ∥ merge
     def run_merge():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
 
     M._test_claim_interposer = _InterposeOnce(run_merge)
     r1 = append_snapshot(spark, path, _updates(spark, [(7000, -70)]))
@@ -460,7 +460,7 @@ def test_append_rebases_with_merge_dv_compaction_and_append(
     # append ∥ DV delete
     def run_dv():
         delete_rows_dv(
-            spark, duck, path, "k", spark.createDataFrame([(990,)], "k long")
+            spark, path, "k", spark.createDataFrame([(990,)], "k long")
         )
 
     M._test_claim_interposer = _InterposeOnce(run_dv)
@@ -509,7 +509,7 @@ def test_append_rebases_with_merge_dv_compaction_and_append(
         read_version(spark, path, v).count()
 
 
-def test_keyed_append_vs_overlapping_merge_conflicts(spark, duck, tmp_path):
+def test_keyed_append_vs_overlapping_merge_conflicts(spark, tmp_path):
     """An append that declares its key range is SERIALIZABLE w.r.t.
     that key: racing a merge whose range overlaps is a detected
     conflict (order matters: merge-then-append keeps the appended row,
@@ -521,7 +521,7 @@ def test_keyed_append_vs_overlapping_merge_conflicts(spark, duck, tmp_path):
 
     def run_merge():
         merge_upsert(
-            spark, duck, path, "k", _updates(spark, [(500, -5), (520, -6)])
+            spark, path, "k", _updates(spark, [(500, -5), (520, -6)])
         )
 
     M._test_claim_interposer = _InterposeOnce(run_merge)
@@ -534,7 +534,7 @@ def test_keyed_append_vs_overlapping_merge_conflicts(spark, duck, tmp_path):
 
     # disjoint keyed append both-commit
     def run_merge2():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(10, -7)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(10, -7)]))
 
     M._test_claim_interposer = _InterposeOnce(run_merge2)
     r = append_snapshot(
@@ -550,7 +550,7 @@ def test_keyed_append_vs_overlapping_merge_conflicts(spark, duck, tmp_path):
     assert m["txn"]["inserts_only"] and m["txn"]["key_min"] == 8000
 
 
-def test_append_vs_schema_change_conflicts(spark, duck, tmp_path):
+def test_append_vs_schema_change_conflicts(spark, tmp_path):
     """An append staged under the old schema pin must not land after a
     concurrent rename/drop commits — and the schema change itself
     refuses to rebase across a concurrent append."""
@@ -586,7 +586,7 @@ def test_append_vs_schema_change_conflicts(spark, duck, tmp_path):
 
 
 def test_bulk_rewrite_whole_table_intent_conflicts_everything(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """merge_bulk / delete_bulk / rewrite_table stamp whole_table: a
     racing optimistic writer that loses the CAS to one sees an explicit
@@ -607,7 +607,7 @@ def test_bulk_rewrite_whole_table_intent_conflicts_everything(
 
     M._test_claim_interposer = _InterposeOnce(run_bulk)
     with pytest.raises(ConcurrentSnapshotError, match="whole-table"):
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(900, -9)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(900, -9)]))
     M._test_claim_interposer = None
     recover_to_last_manifest(path)
     assert {r.v for r in read_version(spark, path).where(
@@ -691,7 +691,7 @@ def test_checked_write_append_carries_intent(spark, tmp_path):
     assert read_version(spark, path).count() == 1001
 
 
-def test_metadata_commit_coexists_with_writers(spark, duck, tmp_path):
+def test_metadata_commit_coexists_with_writers(spark, tmp_path):
     """A watermark-only metadata stamp (matview's no-change refresh) is
     row_preserving: racing a merge, BOTH commit."""
     from data_pipeline_project_spark.sinks.manifest import commit_metadata
@@ -700,7 +700,7 @@ def test_metadata_commit_coexists_with_writers(spark, duck, tmp_path):
     _table(spark, path)
 
     def run_merge():
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
 
     M._test_claim_interposer = _InterposeOnce(run_merge)
     m = commit_metadata(path, extra={"watermark": 42})
@@ -743,7 +743,7 @@ def test_overtaken_listing_commit_never_rolls_latest_back(tmp_path, monkeypatch)
     assert M.table_renames(path) == {"k0": "k"}
 
 
-def test_retry_exhaustion_fails_loudly_and_recovers(spark, duck, tmp_path):
+def test_retry_exhaustion_fails_loudly_and_recovers(spark, tmp_path):
     """Contention beyond MAX_COMMIT_RETRIES: a writer that loses the
     CAS on every attempt (a commuting append lands in each of its
     claim windows) exhausts its retries and raises the race-loss
@@ -784,14 +784,14 @@ def test_retry_exhaustion_fails_loudly_and_recovers(spark, duck, tmp_path):
     loser = _AlwaysLose()
     M._test_claim_interposer = loser
     with pytest.raises(ConcurrentSnapshotError, match="lost the commit race"):
-        merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
     M._test_claim_interposer = None
     assert loser.count == MAX_COMMIT_RETRIES
 
     # the loser's staged output is uncommitted; recovery quarantines it
     # and the rerun lands on top of every append
     recover_to_last_manifest(path)
-    res = merge_upsert(spark, duck, path, "k", _updates(spark, [(5, -1)]))
+    res = merge_upsert(spark, path, "k", _updates(spark, [(5, -1)]))
     assert res["version"] == 1 + MAX_COMMIT_RETRIES + 1
     live = read_version(spark, path)
     assert live.count() == 1000 + MAX_COMMIT_RETRIES
@@ -799,7 +799,7 @@ def test_retry_exhaustion_fails_loudly_and_recovers(spark, duck, tmp_path):
     assert live.where("k >= 10000").count() == MAX_COMMIT_RETRIES
 
 
-def test_real_three_thread_race_converges(spark, duck, tmp_path):
+def test_real_three_thread_race_converges(spark, tmp_path):
     """Three genuine threads — a merge, a DV delete, and a keyed
     append on disjoint key spaces — no interposer: all three commit
     (in whatever CAS order), and the head shows all three effects."""
@@ -819,11 +819,11 @@ def test_real_three_thread_race_converges(spark, duck, tmp_path):
 
     threads = [
         threading.Thread(target=run, args=("merge", lambda: merge_upsert(
-            spark, duck, path, "k",
+            spark, path, "k",
             _updates(spark, [(int(k), -1) for k in range(0, 20)]),
         ))),
         threading.Thread(target=run, args=("dv", lambda: delete_rows_dv(
-            spark, duck, path, "k",
+            spark, path, "k",
             spark.createDataFrame([(990,), (991,)], "k long"),
         ))),
         threading.Thread(target=run, args=("append", lambda: append_snapshot(

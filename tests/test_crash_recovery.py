@@ -61,13 +61,13 @@ def _data_parquets(path):
     return sorted(out)
 
 
-def _clean_run_state(spark, duck, tmp_path, bulk):
+def _clean_run_state(spark, tmp_path, bulk):
     ref = str(tmp_path / "ref")
     _mk_table(spark, ref)
     if bulk:
         merge_bulk(spark, ref, "k", _updates(spark), n_files=FILES)
     else:
-        merge_upsert(spark, duck, ref, "k", _updates(spark))
+        merge_upsert(spark, ref, "k", _updates(spark))
     return _rows(spark, ref)
 
 
@@ -102,7 +102,7 @@ def _assert_recovered_to_v1(spark, path, v1_rows):
     return stats
 
 
-def test_recover_after_partial_targeted_rewrite(spark, duck, tmp_path):
+def test_recover_after_partial_targeted_rewrite(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk_table(spark, path)
     v1 = _rows(spark, path)
@@ -120,12 +120,12 @@ def test_recover_after_partial_targeted_rewrite(spark, duck, tmp_path):
         for f in fs
     )
 
-    res = merge_upsert(spark, duck, path, "k", _updates(spark))
+    res = merge_upsert(spark, path, "k", _updates(spark))
     assert res["rows_inserted"] == 2
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=False)
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=False)
 
 
-def test_recover_after_partial_append(spark, duck, tmp_path):
+def test_recover_after_partial_append(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk_table(spark, path)
     v1 = _rows(spark, path)
@@ -137,11 +137,11 @@ def test_recover_after_partial_append(spark, duck, tmp_path):
     stats = _assert_recovered_to_v1(spark, path, v1)
     assert stats["quarantined"] == 1 and stats["restored"] == 0
 
-    merge_upsert(spark, duck, path, "k", _updates(spark))
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=False)
+    merge_upsert(spark, path, "k", _updates(spark))
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=False)
 
 
-def test_recover_after_bulk_staging_only(spark, duck, tmp_path):
+def test_recover_after_bulk_staging_only(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk_table(spark, path)
     v1 = _rows(spark, path)
@@ -156,7 +156,7 @@ def test_recover_after_bulk_staging_only(spark, duck, tmp_path):
     assert not os.path.exists(staging)
 
     merge_bulk(spark, path, "k", _updates(spark), n_files=FILES)
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=True)
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=True)
 
 
 def _simulate_bulk_movein(spark, path, tombstone: bool):
@@ -193,7 +193,7 @@ def _simulate_bulk_movein(spark, path, tombstone: bool):
                 )
 
 
-def test_recover_after_bulk_movein_before_tombstones(spark, duck, tmp_path):
+def test_recover_after_bulk_movein_before_tombstones(spark, tmp_path):
     """THE window where a blind rerun is wrong: old and new files are
     both live, so the raw view double-counts survivors and a rerun
     would merge duplicates into the output. Recovery quarantines the
@@ -209,10 +209,10 @@ def test_recover_after_bulk_movein_before_tombstones(spark, duck, tmp_path):
     assert stats["quarantined"] == FILES and stats["restored"] == 0
 
     merge_bulk(spark, path, "k", _updates(spark), n_files=FILES)
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=True)
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=True)
 
 
-def test_recover_after_bulk_tombstones_before_manifest(spark, duck, tmp_path):
+def test_recover_after_bulk_tombstones_before_manifest(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk_table(spark, path)
     v1 = _rows(spark, path)
@@ -223,16 +223,16 @@ def test_recover_after_bulk_tombstones_before_manifest(spark, duck, tmp_path):
     assert stats["restored"] == FILES and stats["quarantined"] == FILES
 
     merge_bulk(spark, path, "k", _updates(spark), n_files=FILES)
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=True)
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=True)
 
 
-def test_recovery_never_restores_committed_tombstones(spark, duck, tmp_path):
+def test_recovery_never_restores_committed_tombstones(spark, tmp_path):
     """Files tombstoned by a COMMITTED merge are referenced only by
     OLDER manifests; recovery must leave them in _removed (restoring
     them would resurrect replaced rows into the live view)."""
     path = str(tmp_path / "t")
     _mk_table(spark, path)
-    res = merge_upsert(spark, duck, path, "k", _updates(spark))
+    res = merge_upsert(spark, path, "k", _updates(spark))
     assert res["files_rewritten"] >= 1
     committed = _rows(spark, path)
 
@@ -256,7 +256,7 @@ def test_recovery_requires_a_manifest(spark, tmp_path):
 
 
 def test_concurrent_snapshot_claim_loses_loudly_then_recovers(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """Two writers racing for the same snapshot version: the O_EXCL
     claim of v{N}.json is the CAS, and the loser must raise
@@ -288,7 +288,7 @@ def test_concurrent_snapshot_claim_loses_loudly_then_recovers(
 
     monkeypatch.setattr(m, "_test_claim_interposer", competing_writer)
     with pytest.raises(m.ConcurrentSnapshotError, match="v2"):
-        merge_upsert(spark, duck, path, "k", _updates(spark))
+        merge_upsert(spark, path, "k", _updates(spark))
     monkeypatch.setattr(m, "_test_claim_interposer", None)
 
     # the loser had already rewritten/tombstoned/appended before its
@@ -297,12 +297,12 @@ def test_concurrent_snapshot_claim_loses_loudly_then_recovers(
     assert stats["claims_removed"] == 1  # the stale v2 claim
     assert stats["quarantined"] >= 1     # the loser's orphan output
 
-    res = merge_upsert(spark, duck, path, "k", _updates(spark))
+    res = merge_upsert(spark, path, "k", _updates(spark))
     assert res["version"] == 2
-    assert _rows(spark, path) == _clean_run_state(spark, duck, tmp_path, bulk=False)
+    assert _rows(spark, path) == _clean_run_state(spark, tmp_path, bulk=False)
 
 
-def test_vacuum_purges_quarantine_only_on_opt_in(spark, duck, tmp_path):
+def test_vacuum_purges_quarantine_only_on_opt_in(spark, tmp_path):
     """Quarantine is for human inspection; only an explicit
     vacuum(purge_quarantine=True) — the retention decision point —
     discards it."""
@@ -316,7 +316,7 @@ def test_vacuum_purges_quarantine_only_on_opt_in(spark, duck, tmp_path):
     qroot = os.path.join(path, QUARANTINE_DIR)
     assert os.path.isdir(qroot)
 
-    merge_upsert(spark, duck, path, "k", _updates(spark))  # v2, so vacuum has work
+    merge_upsert(spark, path, "k", _updates(spark))  # v2, so vacuum has work
     res = vacuum(path, keep_versions=1)
     assert res["quarantine_purged"] == 0 and os.path.isdir(qroot)
 

@@ -50,13 +50,13 @@ def _file_hashes(path):
     }
 
 
-def test_dv_delete_is_logical_and_time_travels(spark, duck, tmp_path):
+def test_dv_delete_is_logical_and_time_travels(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path)
     before = _file_hashes(path)
 
     res = delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5,), (17,), (9999,)], "k long"),  # 9999 absent
     )
     assert res["rows_deleted"] == 2 and res["dv_files"] == 1
@@ -71,26 +71,26 @@ def test_dv_delete_is_logical_and_time_travels(spark, duck, tmp_path):
 
     # idempotent replay: same keys match only dead rows -> no-op, no commit
     res2 = delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(5,), (17,)], "k long")
+        spark, path, "k", spark.createDataFrame([(5,), (17,)], "k long")
     )
     assert res2["rows_deleted"] == 0
     assert res2["version"] == res["version"]
 
     # a second dv delete stacks a second vector
     res3 = delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(100,)], "k long")
+        spark, path, "k", spark.createDataFrame([(100,)], "k long")
     )
     assert res3["rows_deleted"] == 1 and res3["dv_files"] == 2
     assert read_version(spark, path).count() == 397
 
 
 def test_rewrites_never_resurrect_and_materialize_the_vector(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = str(tmp_path / "t")
     _table(spark, path)
     delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(int(k),) for k in range(0, 40)], "k long"),
     )
 
@@ -98,7 +98,7 @@ def test_rewrites_never_resurrect_and_materialize_the_vector(
     # the merge INSERTS it back; k=50 is live and gets replaced; the
     # survivor rewrite must not resurrect the other 38 dead rows
     res = merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(1, -1), (50, -2)], "k long, v long"),
     )
     assert res["rows_updated"] == 1 and res["rows_inserted"] == 1
@@ -118,11 +118,11 @@ def test_rewrites_never_resurrect_and_materialize_the_vector(
     assert live_rows == sorted(map(tuple, live2.collect()))
 
 
-def test_compaction_materializes_dv_for_compacted_files(spark, duck, tmp_path):
+def test_compaction_materializes_dv_for_compacted_files(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path)
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(7,), (300,)], "k long")
+        spark, path, "k", spark.createDataFrame([(7,), (300,)], "k long")
     )
     before = sorted(map(tuple, read_version(spark, path).collect()))
     res = compact_snapshot(spark, path, small_bytes=1 << 30)
@@ -131,7 +131,7 @@ def test_compaction_materializes_dv_for_compacted_files(spark, duck, tmp_path):
     assert sorted(map(tuple, read_version(spark, path).collect())) == before
 
 
-def test_change_feeds_emit_dv_deletes(spark, duck, tmp_path):
+def test_change_feeds_emit_dv_deletes(spark, tmp_path):
     from data_pipeline_project_spark.sources.table_changes import (
         TableChangesDataSource,
     )
@@ -140,7 +140,7 @@ def test_change_feeds_emit_dv_deletes(spark, duck, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path, n=100)
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(3,), (98,)], "k long")
+        spark, path, "k", spark.createDataFrame([(3,), (98,)], "k long")
     )  # v2: files path-identical, only the vector differs
 
     ch = snapshot_changes(spark, path, 1, 2)
@@ -163,16 +163,16 @@ def test_change_feeds_emit_dv_deletes(spark, duck, tmp_path):
 
 
 def test_vacuum_drops_unreferenced_vectors_and_recovery_quarantines(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = str(tmp_path / "t")
     _table(spark, path)
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(1,)], "k long")
+        spark, path, "k", spark.createDataFrame([(1,)], "k long")
     )  # v2 pins dv A
     rewrite_table(spark, path, "k")  # v3 pins dv []
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(2, 0)], "k long, v long"),
     )  # v4
 
@@ -196,7 +196,7 @@ def test_vacuum_drops_unreferenced_vectors_and_recovery_quarantines(
     assert read_version(spark, path).count() == 399
 
 
-def test_matview_tracks_dv_churned_source(spark, duck, tmp_path):
+def test_matview_tracks_dv_churned_source(spark, tmp_path):
     from data_pipeline_project_spark.sinks.matview import (
         create_agg_view,
         read_agg_view,
@@ -211,15 +211,15 @@ def test_matview_tracks_dv_churned_source(spark, duck, tmp_path):
     )
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     # DV-delete an entire group's rows plus a few others
     g4 = [(int(r.k),) for r in spark.read.parquet(src).where("g = 4").collect()]
     delete_rows_dv(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(g4 + [(0,), (1,)], "k long"),
     )
-    res = refresh_agg_view(spark, duck, view, mode="delta")
+    res = refresh_agg_view(spark, view, mode="delta")
     assert res["groups_dropped"] == 1
     got = sorted(map(tuple, read_agg_view(spark, view).collect()))
     want = sorted(
@@ -246,7 +246,7 @@ def test_matview_tracks_dv_churned_source(spark, duck, tmp_path):
     )
     assert got == want
 
-def test_dv_identity_is_relpath_on_partitioned_layout(spark, duck, tmp_path):
+def test_dv_identity_is_relpath_on_partitioned_layout(spark, tmp_path):
     """Hive-partitioned writes reuse the same part-file BASENAME across
     partition directories (one task writes the same part-NNNNN-<uuid>
     name into every partition it touches) — DV row identity must be the
@@ -272,7 +272,7 @@ def test_dv_identity_is_relpath_on_partitioned_layout(spark, duck, tmp_path):
     assert parquets[0] == parquets[1], "test premise: basenames collide"
 
     res = delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(5,)], "k long")
+        spark, path, "k", spark.createDataFrame([(5,)], "k long")
     )
     assert res["rows_deleted"] == 1
 
@@ -290,7 +290,7 @@ def test_dv_identity_is_relpath_on_partitioned_layout(spark, duck, tmp_path):
     assert rows == [(5, "delete")]
 
 
-def test_deep_clone_carries_deletion_vectors(spark, duck, tmp_path):
+def test_deep_clone_carries_deletion_vectors(spark, tmp_path):
     """clone_snapshot(deep=True) must copy the _dv/ files and pin the
     vector list in the clone's manifest — otherwise DV-deleted rows
     silently resurrect in the clone."""
@@ -303,7 +303,7 @@ def test_deep_clone_carries_deletion_vectors(spark, duck, tmp_path):
     dst = str(tmp_path / "dst")
     _table(spark, src, n=100)
     delete_rows_dv(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(3,), (7,), (11,)], "k long"),
     )
     src_rows = sorted(map(tuple, read_version(spark, src).collect()))

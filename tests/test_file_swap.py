@@ -65,7 +65,7 @@ def _check_swap_invariants(spark, path: str, v1_rows: set, model: dict):
 
 
 def test_every_copy_on_write_writer_keeps_the_swap_invariants(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = str(tmp_path / "t")
     spark.range(0, 200).select(
@@ -89,13 +89,13 @@ def test_every_copy_on_write_writer_keeps_the_swap_invariants(
     check()
 
     res = merge_upsert(
-        spark, duck, path, "k", upserts([(4, -1), (151, -2), (500, -3)])
+        spark, path, "k", upserts([(4, -1), (151, -2), (500, -3)])
     )
     assert res["rows_updated"] == 2 and res["rows_inserted"] == 1
     check()
 
     res = delete_rows_targeted(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(6,), (7,), (999,)], "k long"),
         commit=True,
     )

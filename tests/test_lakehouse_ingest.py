@@ -132,7 +132,7 @@ def test_batch_replay_is_a_noop(spark, tmp_path):
     assert fn_a2.results[-1]["replayed"] is True
 
 
-def test_ingest_coexists_with_concurrent_merge(spark, duck, tmp_path):
+def test_ingest_coexists_with_concurrent_merge(spark, tmp_path):
     """An ingest batch racing a targeted merge: both commit (the
     append's inserts_only intent commutes), nothing lost."""
     from data_pipeline_project_spark.sinks import manifest as M
@@ -165,7 +165,7 @@ def test_ingest_coexists_with_concurrent_merge(spark, duck, tmp_path):
 
     def run_merge():
         merge_upsert(
-            spark, duck, table, "k",
+            spark, table, "k",
             spark.createDataFrame([(5, -1)], SCHEMA),
         )
 
@@ -222,7 +222,7 @@ def test_maintenance_cycle_restores_sketch_coverage(spark, tmp_path):
     is left, so the head is fully sketched right after it."""
     table = str(tmp_path / "table")
     fn = ManifestTableSink(
-        spark, table, "sinkM", maintenance_every=3, duck=None
+        spark, table, "sinkM", maintenance_every=3
     )
     cov = []
     for i in range(6):
@@ -237,3 +237,23 @@ def test_maintenance_cycle_restores_sketch_coverage(spark, tmp_path):
     assert len(ran) == 2
     assert all({"compact", "analyze"} <= set(x) for x in ran), ran
     assert read_version(spark, table).count() == 600
+
+
+def test_maintenance_on_a_stats_less_timestamp_key(spark, tmp_path):
+    """Spark writes timestamps as INT96 by default, which carries no
+    footer stats, so the log records no range for such a key. The
+    sink's health audit then reads the footers itself, finds no range
+    and goes on: the stream keeps committing with maintenance on."""
+    table = str(tmp_path / "table")
+    fn = ManifestTableSink(spark, table, "s1", key_col="ts", maintenance_every=1)
+    for i in range(3):
+        fn(
+            spark.range(i * 10, (i + 1) * 10)
+            .select(F.col("id").alias("k"), F.timestamp_seconds("id").alias("ts"))
+            .coalesce(1),
+            i,
+        )
+    head = read_manifest(os.path.join(table, "_manifests", "latest.json"))
+    assert not any("ts" in (f.get("stats") or {}) for f in head["files"])
+    assert [r["batch_id"] for r in fn.results if "maintenance" in r] == [0, 1, 2]
+    assert read_version(spark, table).count() == 30

@@ -26,7 +26,7 @@ def _events(spark):
     )
 
 
-def test_clustered_layout_prunes_range_scans(spark, duck, tmp_path):
+def test_clustered_layout_prunes_range_scans(spark, tmp_path):
     messy, tidy = str(tmp_path / "messy"), str(tmp_path / "tidy")
     ev = _events(spark)
     ev.repartition(N_FILES).write.parquet(messy)  # round-robin layout
@@ -34,10 +34,10 @@ def test_clustered_layout_prunes_range_scans(spark, duck, tmp_path):
 
     probe_lo, probe_hi = 1000, 2999  # a 10% slice of the key space
     messy_frac = overlap_fraction(
-        file_zone_maps(duck, messy, "event_ts"), probe_lo, probe_hi
+        file_zone_maps(messy, "event_ts"), probe_lo, probe_hi
     )
     tidy_frac = overlap_fraction(
-        file_zone_maps(duck, tidy, "event_ts"), probe_lo, probe_hi
+        file_zone_maps(tidy, "event_ts"), probe_lo, probe_hi
     )
     assert messy_frac == 1.0  # every file overlaps: zero pruning
     assert tidy_frac <= 2 / N_FILES  # only the file(s) holding the slice
@@ -52,7 +52,7 @@ def test_clustered_layout_prunes_range_scans(spark, duck, tmp_path):
 def test_files_are_balanced_and_internally_sorted(spark, duck, tmp_path):
     tidy = str(tmp_path / "tidy2")
     write_range_clustered(_events(spark), tidy, "event_ts", N_FILES)
-    zm = file_zone_maps(duck, tidy, "event_ts")
+    zm = file_zone_maps(tidy, "event_ts")
     assert len(zm) == N_FILES
     # Disjoint file ranges (sorted by min, each max < next min).
     spans = sorted((int(lo), int(hi)) for _, lo, hi in zm)
@@ -69,7 +69,7 @@ def test_files_are_balanced_and_internally_sorted(spark, duck, tmp_path):
     assert max(counts) < 2 * N / N_FILES
 
 
-def test_hive_partitioned_clustering(spark, duck, tmp_path):
+def test_hive_partitioned_clustering(spark, tmp_path):
     path = str(tmp_path / "parts")
     ev = _events(spark).withColumn(
         "day", (F.col("event_ts") / (N // 2)).cast("int")
@@ -79,14 +79,14 @@ def test_hive_partitioned_clustering(spark, duck, tmp_path):
     # Zone maps stay tight inside each Hive partition.
     zm = [
         (f, int(lo), int(hi))
-        for f, lo, hi in file_zone_maps(duck, path, "event_ts")
+        for f, lo, hi in file_zone_maps(path, "event_ts")
         if "day=0" in f
     ]
     spans = sorted((lo, hi) for _, lo, hi in zm)
     assert all(spans[i][1] < spans[i + 1][0] for i in range(len(spans) - 1))
 
 
-def test_zorder_prunes_on_both_columns(spark, duck, tmp_path):
+def test_zorder_prunes_on_both_columns(spark, tmp_path):
     """Single-key clustering leaves the second column unprunable
     (every file overlaps any y-probe); z-order gives BOTH columns
     selective zone maps."""
@@ -106,7 +106,7 @@ def test_zorder_prunes_on_both_columns(spark, duck, tmp_path):
     lo, hi = 20, 34
 
     def frac(path, col):
-        return overlap_fraction(file_zone_maps(duck, path, col), lo, hi)
+        return overlap_fraction(file_zone_maps(path, col), lo, hi)
 
     assert frac(xonly, "x") <= 3 / 16  # primary key: tight
     assert frac(xonly, "y") == 1.0     # second column: useless
@@ -131,7 +131,7 @@ def test_zorder_key_interleaves(spark):
     assert got[(3, 3)] == 0b1111
 
 
-def test_read_pruned_scans_only_overlapping_files(spark, duck, tmp_path):
+def test_read_pruned_scans_only_overlapping_files(spark, tmp_path):
     """read_pruned on a range-clustered layout: answers identical to a
     full-scan filter while actually OPENING only the slice's files
     (df.inputFiles() is the proof); missing-stats files never pruned."""
@@ -146,7 +146,7 @@ def test_read_pruned_scans_only_overlapping_files(spark, duck, tmp_path):
     write_range_clustered(ev, tidy, "event_ts", N_FILES)
 
     lo, hi = 1000, 2999
-    pruned = read_pruned(spark, duck, tidy, "event_ts", lo, hi)
+    pruned = read_pruned(spark, tidy, "event_ts", lo, hi)
     expect = spark.read.parquet(tidy).where(
         F.col("event_ts").between(lo, hi)
     )
@@ -158,7 +158,7 @@ def test_read_pruned_scans_only_overlapping_files(spark, duck, tmp_path):
 
     # degenerate range below the key space: no files, empty result,
     # schema preserved
-    empty = read_pruned(spark, duck, tidy, "event_ts", -100, -1)
+    empty = read_pruned(spark, tidy, "event_ts", -100, -1)
     assert empty.count() == 0 and empty.columns == expect.columns
 
     # missing stats -> must read (never guess)
@@ -273,7 +273,7 @@ def test_partition_retention_drop(spark, tmp_path):
         drop_partitions_before(flat, "2025-06-04")
 
 
-def test_zorder_on_string_and_timestamp_columns(spark, duck, tmp_path):
+def test_zorder_on_string_and_timestamp_columns(spark, tmp_path):
     """r10: non-numeric z-order dimensions map through the manifest
     layer's order-preserving rank. A (country string, ts timestamp)
     z-order gives BOTH columns selective zone maps; exact Morton
@@ -332,8 +332,8 @@ def test_zorder_on_string_and_timestamp_columns(spark, duck, tmp_path):
     )
     zord = str(tmp_path / "zord")
     write_zordered(pts, zord, ["c", "d"], 16)
-    zc = file_zone_maps(duck, zord, "c", "VARCHAR")
-    zd = file_zone_maps(duck, zord, "d", "DATE")
+    zc = file_zone_maps(zord, "c")
+    zd = file_zone_maps(zord, "d")
     hit_c = sum(1 for _, mn, mx in zc if mn <= "u0030" and "u0020" <= mx)
     d_lo = datetime.date(2024, 1, 21)
     d_hi = datetime.date(2024, 2, 4)

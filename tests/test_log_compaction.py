@@ -52,7 +52,7 @@ def _raw(path, v):
         return json.load(fh)
 
 
-def _build_history(spark, duck, path):
+def _build_history(spark, path):
     """A realistic mixed history: bootstrap, appends, targeted merge,
     DV delete, rename — 7 versions of genuine churn."""
     base = spark.range(0, 2_000).select(
@@ -68,13 +68,13 @@ def _build_history(spark, duck, path):
         ),
     )  # v2
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.range(100, 160).select(
             F.col("id").alias("user_id"), F.lit(-2).alias("v")
         ),
     )  # v3
     delete_rows_dv(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.createDataFrame([(5,), (6,), (7,)], "user_id long"),
     )  # v4
     append_snapshot(
@@ -86,7 +86,7 @@ def _build_history(spark, duck, path):
     )  # v5
     rename_column(spark, path, "v", "val")  # v6
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.range(0, 40).select(
             F.col("id").alias("user_id"), F.lit(-4).alias("val")
         ),
@@ -98,9 +98,9 @@ def _snapshot_rows(spark, path, v):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_compact_log_preserves_every_snapshot(spark, duck, tmp_path):
+def test_compact_log_preserves_every_snapshot(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
     versions = snapshot_versions(path)
     assert len(versions) == 7
 
@@ -144,9 +144,9 @@ def test_compact_log_preserves_every_snapshot(spark, duck, tmp_path):
         assert m["total_rows"] == sum(f["rows"] for f in m["files"])
 
 
-def test_compact_log_idempotent_then_writers_continue(spark, duck, tmp_path):
+def test_compact_log_idempotent_then_writers_continue(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
     compact_log(path, keep_full_every=3, keep_recent=2)
     sizes = {
         f: os.path.getsize(os.path.join(_mdir(path), f))
@@ -237,7 +237,7 @@ def test_compact_log_idempotent_then_writers_continue(spark, duck, tmp_path):
         )
 
 
-def test_compact_log_bulk_rewrite_is_natural_keyframe(spark, duck, tmp_path):
+def test_compact_log_bulk_rewrite_is_natural_keyframe(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.range(0, 1_000).select(
         F.col("id").alias("user_id"), (F.col("id") % 5).alias("v")
@@ -271,9 +271,9 @@ def test_compact_log_bulk_rewrite_is_natural_keyframe(spark, duck, tmp_path):
         assert verify_snapshot(os.path.join(_mdir(path), f"v{v}.json")) == []
 
 
-def test_vacuum_materializes_stranded_chains(spark, duck, tmp_path):
+def test_vacuum_materializes_stranded_chains(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
     compact_log(path, keep_full_every=10, keep_recent=1)  # long chain
     rows_v5 = _snapshot_rows(spark, path, 5)
     rows_v7 = _snapshot_rows(spark, path, 7)
@@ -305,9 +305,9 @@ def test_vacuum_materializes_stranded_chains(spark, duck, tmp_path):
         read_version(spark, path, 2)
 
 
-def test_clone_from_compacted_version(spark, duck, tmp_path):
+def test_clone_from_compacted_version(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
     compact_log(path, keep_full_every=4, keep_recent=2)
     assert "files_delta" in _raw(path, 4)
     rows_v4 = _snapshot_rows(spark, path, 4)
@@ -326,7 +326,7 @@ def test_clone_from_compacted_version(spark, duck, tmp_path):
     ) == rows_v4
 
 
-def test_maintenance_plan_and_run_execute_compact_log(spark, duck, tmp_path):
+def test_maintenance_plan_and_run_execute_compact_log(spark, tmp_path):
     from data_pipeline_project_spark.sinks.layout import (
         maintenance_plan,
         run_maintenance,
@@ -347,7 +347,7 @@ def test_maintenance_plan_and_run_execute_compact_log(spark, duck, tmp_path):
                 F.col("id").alias("user_id"), F.lit(-1).alias("v")
             ),
         )
-    health = table_health(duck, path)
+    health = table_health(path)
     assert health["log_bytes"] > 8 * health["latest_manifest_bytes"]
     # suppress the (also-true) small-file compact advice so the run
     # isolates the log action and the head manifest's size is stable
@@ -355,7 +355,7 @@ def test_maintenance_plan_and_run_execute_compact_log(spark, duck, tmp_path):
     plan = maintenance_plan(health, th)
     assert [a["action"] for a in plan] == ["compact_log"]
 
-    res = run_maintenance(spark, duck, path, thresholds=th)
+    res = run_maintenance(spark, path, thresholds=th)
     done = {e["action"]: e for e in res["executed"]}
     assert done["compact_log"]["compacted"] > 0
     assert (
@@ -363,7 +363,7 @@ def test_maintenance_plan_and_run_execute_compact_log(spark, duck, tmp_path):
         < done["compact_log"]["log_bytes_before"]
     )
     # healthy afterwards: the advice clears
-    health2 = table_health(duck, path)
+    health2 = table_health(path)
     assert not any(
         a["action"] == "compact_log" for a in maintenance_plan(health2, th)
     )
@@ -373,12 +373,12 @@ def test_maintenance_plan_and_run_execute_compact_log(spark, duck, tmp_path):
         assert read_version(spark, path, v).count() > 0
 
 
-def test_vacuum_time_based_retention(spark, duck, tmp_path):
+def test_vacuum_time_based_retention(spark, tmp_path):
     """older_than: wall-clock retention (Delta's RETAIN) — versions
     committed at/after the cutoff survive beyond the structural floor;
     the floor (keep_versions) always holds."""
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)  # 7 versions
+    _build_history(spark, path)  # 7 versions
     mdir = _mdir(path)
     ca = {
         v: read_manifest(
@@ -399,14 +399,14 @@ def test_vacuum_time_based_retention(spark, duck, tmp_path):
     assert snapshot_versions(path) == [6, 7]
 
 
-def test_cdc_feed_across_compacted_log(spark, duck, tmp_path):
+def test_cdc_feed_across_compacted_log(spark, tmp_path):
     """snapshot_changes spanning delta-encoded versions equals the
     pre-compaction feed row for row (the resolver is transparent to
     the change-feed reader)."""
     from data_pipeline_project_spark.sinks.manifest import snapshot_changes
 
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
 
     def feed(v_from, v_to):
         return sorted(
@@ -422,14 +422,14 @@ def test_cdc_feed_across_compacted_log(spark, duck, tmp_path):
         assert feed(*p) == before[p], p
 
 
-def test_cdc_feed_by_timestamp(spark, duck, tmp_path):
+def test_cdc_feed_by_timestamp(spark, tmp_path):
     """snapshot_changes with wall-clock endpoints resolves through
     version_as_of and equals the version-addressed feed; selector
     misuse is loud."""
     from data_pipeline_project_spark.sinks.manifest import snapshot_changes
 
     path = str(tmp_path / "t")
-    _build_history(spark, duck, path)
+    _build_history(spark, path)
     mdir = _mdir(path)
     ca = {
         v: read_manifest(

@@ -83,7 +83,7 @@ class _CountingStore(LocalFSLogStore):
         return super().claim(mdir, version)
 
 
-def test_all_commit_paths_route_through_the_store(spark, duck, tmp_path):
+def test_all_commit_paths_route_through_the_store(spark, tmp_path):
     """Bootstrap (write_versioned_manifest), append, and merge
     (commit_optimistic) must each claim through the installed store —
     no commit path may keep a private O_EXCL."""
@@ -99,7 +99,7 @@ def test_all_commit_paths_route_through_the_store(spark, duck, tmp_path):
     assert [v for _, v in store.calls] == [1, 2]
 
     merge_upsert(
-        spark, duck, path, "k", _updates(spark, [(5, -1)])
+        spark, path, "k", _updates(spark, [(5, -1)])
     )  # v3 via commit_optimistic
     assert [v for _, v in store.calls] == [1, 2, 3]
     assert snapshot_versions(path) == [1, 2, 3]
@@ -139,7 +139,7 @@ def test_forced_duplicate_claims_exactly_one_winner(tmp_path):
 
 @pytest.mark.parametrize("store_kind", ["local", "external"])
 def test_disjoint_merges_union_under_both_stores(
-    spark, duck, tmp_path, store_kind
+    spark, tmp_path, store_kind
 ):
     """The r10 rebase scenario is store-agnostic: writer A commits
     inside B's claim window; B loses the CAS, rebases, and the head
@@ -153,7 +153,7 @@ def test_disjoint_merges_union_under_both_stores(
     b_updates = _updates(spark, [(390, -4), (3000, -6)])
 
     def run_a():
-        merge_upsert(spark, duck, path, "k", a_updates)
+        merge_upsert(spark, path, "k", a_updates)
 
     fired = {"done": False}
 
@@ -164,7 +164,7 @@ def test_disjoint_merges_union_under_both_stores(
         run_a()
 
     M._test_claim_interposer = interpose
-    merge_upsert(spark, duck, path, "k", b_updates)
+    merge_upsert(spark, path, "k", b_updates)
     M._test_claim_interposer = None
 
     head = read_version(spark, path)
@@ -174,7 +174,7 @@ def test_disjoint_merges_union_under_both_stores(
     assert len(snapshot_versions(path)) == 3
 
 
-def test_phantom_winner_exhausts_retries_loudly(spark, duck, tmp_path):
+def test_phantom_winner_exhausts_retries_loudly(spark, tmp_path):
     """A stolen slot whose 'winner' never publishes a body: the
     optimistic loop keeps recomputing the same next version, keeps
     losing, and after max_retries surfaces ConcurrentSnapshotError —
@@ -195,7 +195,7 @@ def test_phantom_winner_exhausts_retries_loudly(spark, duck, tmp_path):
     assert snapshot_versions(path) == [1]
 
 
-def test_deferred_placeholder_never_double_commits(spark, duck, tmp_path):
+def test_deferred_placeholder_never_double_commits(spark, tmp_path):
     """Object-store visibility lag: the winner's slot file is not yet
     listable when a racer claims. The racer must LOSE at the registry
     (not win a second v2) — after the winner flushes, history is
@@ -215,7 +215,7 @@ def test_deferred_placeholder_never_double_commits(spark, duck, tmp_path):
     assert os.path.exists(os.path.join(mdir, "v2.json"))
 
 
-def test_claim_fault_propagates(spark, duck, tmp_path):
+def test_claim_fault_propagates(spark, tmp_path):
     """A claim-service outage is an ERROR, not a silent loss: the
     commit raises ClaimUnavailableError and the log is untouched."""
     store = ExternalCASLogStore()
@@ -237,7 +237,7 @@ def test_claim_fault_propagates(spark, duck, tmp_path):
 
 
 def test_swept_claims_release_under_external_store(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """The r11 soak finding: recovery's torn-claim sweep deletes slot
     files, and an external-CAS registry that never forgets the claim
@@ -261,7 +261,7 @@ def test_swept_claims_release_under_external_store(
             spark.createDataFrame([(9000, 1)], "k long, v long"),
         )
         merge_upsert(
-            spark, duck, agg, "k", _updates(spark, [(5, -1)])
+            spark, agg, "k", _updates(spark, [(5, -1)])
         )
         # a concurrent writer presumed-aborts the in-doubt pair
         M._clear_active_txn()
@@ -277,7 +277,7 @@ def test_swept_claims_release_under_external_store(
             t.commit()
         # the rollback swept the staged slots; under the external
         # store this re-commit previously lost the race forever
-        merge_upsert(spark, duck, agg, "k", _updates(spark, [(5, -1)]))
+        merge_upsert(spark, agg, "k", _updates(spark, [(5, -1)]))
         append_snapshot(
             spark, raw,
             spark.createDataFrame([(9000, 1)], "k long, v long"),

@@ -52,7 +52,7 @@ def test_snapshot_fails_loudly_on_deleted_file_and_audits(spark, tmp_path):
         read_snapshot(spark, manifest)
 
 
-def test_targeted_delete_rewrites_only_touched_files(spark, duck, tmp_path):
+def test_targeted_delete_rewrites_only_touched_files(spark, tmp_path):
     """GDPR-shape delete on a range-clustered layout: rows gone, every
     file whose zone map excludes the keys stays BYTE-IDENTICAL, and a
     rerun of the same delete is a no-op (idempotent)."""
@@ -80,7 +80,7 @@ def test_targeted_delete_rewrites_only_touched_files(spark, duck, tmp_path):
     keys = spark.createDataFrame(
         [(5,), (17,), (42,), (9_500,)], ["user_id"]
     )
-    stats = delete_rows_targeted(spark, duck, path, "user_id", keys)
+    stats = delete_rows_targeted(spark, path, "user_id", keys)
     assert stats["rows_deleted"] == 4
     assert 1 <= stats["files_rewritten"] <= 2
 
@@ -96,7 +96,7 @@ def test_targeted_delete_rewrites_only_touched_files(spark, duck, tmp_path):
     )
 
     # idempotent rerun: nothing to delete, nothing rewritten
-    stats2 = delete_rows_targeted(spark, duck, path, "user_id", keys)
+    stats2 = delete_rows_targeted(spark, path, "user_id", keys)
     assert stats2["rows_deleted"] == 0 and stats2["files_rewritten"] == 0
     assert snap() == after
 
@@ -143,7 +143,7 @@ def test_snapshot_keeps_partition_columns(spark, tmp_path):
     assert snap.select("shard").distinct().count() == 4
 
 
-def test_merge_upsert_updates_and_inserts(spark, duck, tmp_path):
+def test_merge_upsert_updates_and_inserts(spark, tmp_path):
     """Copy-on-write MERGE: matched keys get their rows REPLACED, new
     keys are appended, files outside the matched key ranges stay
     byte-identical, and the post-merge state equals a full-rewrite
@@ -172,7 +172,7 @@ def test_merge_upsert_updates_and_inserts(spark, duck, tmp_path):
     updates = spark.createDataFrame(
         [(5, -1), (17, -2), (20_000, -3)], ["user_id", "v"]
     )
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
     assert stats["rows_updated"] == 2
     assert stats["rows_inserted"] == 1
     assert 1 <= stats["files_rewritten"] <= 2
@@ -189,7 +189,7 @@ def test_merge_upsert_updates_and_inserts(spark, duck, tmp_path):
 
     # MERGE is idempotent for the same update set: replaced rows are
     # replaced again, final state unchanged.
-    stats2 = merge_upsert(spark, duck, path, "user_id", updates)
+    stats2 = merge_upsert(spark, path, "user_id", updates)
     assert stats2["rows_updated"] == 3 and stats2["rows_inserted"] == 0
     got2 = spark.read.parquet(path)
     assert got2.count() == 10_001
@@ -198,7 +198,7 @@ def test_merge_upsert_updates_and_inserts(spark, duck, tmp_path):
     }
 
 
-def test_merge_upsert_rejects_duplicate_source_keys_and_schema_drift(spark, duck, tmp_path):
+def test_merge_upsert_rejects_duplicate_source_keys_and_schema_drift(spark, tmp_path):
     import pytest
 
     from data_pipeline_project_spark.sinks.manifest import merge_upsert
@@ -210,14 +210,14 @@ def test_merge_upsert_rejects_duplicate_source_keys_and_schema_drift(spark, duck
 
     dup = spark.createDataFrame([(1, 10), (1, 11)], ["user_id", "v"])
     with pytest.raises(ValueError, match="cardinality"):
-        merge_upsert(spark, duck, path, "user_id", dup)
+        merge_upsert(spark, path, "user_id", dup)
 
     drift = spark.createDataFrame([(1, 10, "x")], ["user_id", "v", "extra"])
     with pytest.raises(ValueError, match="schema mismatch"):
-        merge_upsert(spark, duck, path, "user_id", drift)
+        merge_upsert(spark, path, "user_id", drift)
 
 
-def test_merge_upsert_time_travel_until_vacuum(spark, duck, tmp_path):
+def test_merge_upsert_time_travel_until_vacuum(spark, tmp_path):
     """Replaced files are TOMBSTONED (moved to the hidden _removed/
     area), so the pre-merge snapshot stays readable with its OLD values
     — time travel across a merge — while directory reads see only the
@@ -242,7 +242,7 @@ def test_merge_upsert_time_travel_until_vacuum(spark, duck, tmp_path):
     v1 = write_versioned_manifest(path)["version"]
 
     updates = spark.createDataFrame([(5, -1)], ["user_id", "v"])
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
     assert stats["files_rewritten"] == 1
 
     # post-merge latest sees the update; time travel to v1 sees the old
@@ -260,7 +260,7 @@ def test_merge_upsert_time_travel_until_vacuum(spark, duck, tmp_path):
     assert read_version(spark, path).where("user_id = 5").first().v == -1
 
 
-def test_snapshot_diff_counts_churn_only(spark, duck, tmp_path):
+def test_snapshot_diff_counts_churn_only(spark, tmp_path):
     """Version diff after a merge: the row delta equals the merge's
     updates+inserts, and shared (untouched) files are excluded from the
     data read entirely."""
@@ -281,7 +281,7 @@ def test_snapshot_diff_counts_churn_only(spark, duck, tmp_path):
     updates = spark.createDataFrame(
         [(5, -1), (17, -2), (20_000, -3)], ["user_id", "v"]
     )
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
     d = snapshot_diff(spark, path, v1, stats["version"])
 
     # added: 3 update rows + survivors rewritten into new files;
@@ -346,7 +346,7 @@ def test_read_with_schema_evolution_add_and_rename(spark, tmp_path):
     assert set(got.columns) == {"user_id", "temperature", "humidity"}
 
 
-def test_snapshot_changes_cdc_feed(spark, duck, tmp_path):
+def test_snapshot_changes_cdc_feed(spark, tmp_path):
     """The row-level change feed across a merge: updates appear as
     delete(old)+insert(new), inserts as insert — Delta CDF convention."""
     from data_pipeline_project_spark.sinks.layout import write_range_clustered
@@ -365,7 +365,7 @@ def test_snapshot_changes_cdc_feed(spark, duck, tmp_path):
     updates = spark.createDataFrame(
         [(5, -1), (17, -2), (20_000, -3)], ["user_id", "v"]
     )
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
 
     feed = snapshot_changes(spark, path, v1, stats["version"]).collect()
     by_type = {}
@@ -408,7 +408,7 @@ def test_compact_snapshot_merges_small_files_with_time_travel(spark, tmp_path):
     assert stats2["files_compacted"] == 0
 
 
-def test_compact_snapshot_reclusters(spark, duck, tmp_path):
+def test_compact_snapshot_reclusters(spark, tmp_path):
     """Compaction with cluster_col: the merged file comes out SORTED,
     so its row-group zone maps are tight again after fragmented
     unordered appends."""
@@ -426,7 +426,7 @@ def test_compact_snapshot_reclusters(spark, duck, tmp_path):
     assert stats["files_compacted"] == 4 and stats["rows_compacted"] == 4000
     # single compacted file, sorted: its footer min/max is exact and a
     # narrow range read touches one row group band
-    zm = file_zone_maps(duck, path, "k")
+    zm = file_zone_maps(path, "k")
     assert len(zm) == 1
     (_, lo, hi) = zm[0]
     assert (lo, hi) == (0, 999)
@@ -435,7 +435,7 @@ def test_compact_snapshot_reclusters(spark, duck, tmp_path):
     assert len(ks) == 4000
 
 
-def test_lakehouse_edge_guards(spark, duck, tmp_path):
+def test_lakehouse_edge_guards(spark, tmp_path):
     """Edge cases that must fail loudly or no-op cleanly: empty MERGE
     change set, vacuum(0), per-partition compaction no-op on healthy
     directories, and a cluster_col naming a partition column (constant
@@ -457,7 +457,7 @@ def test_lakehouse_edge_guards(spark, duck, tmp_path):
 
     # empty change set: committed no-op at the current version
     empty = spark.createDataFrame([], "user_id long, v long")
-    stats = merge_upsert(spark, duck, path, "user_id", empty)
+    stats = merge_upsert(spark, path, "user_id", empty)
     assert stats == {
         "version": v1, "files_rewritten": 0,
         "rows_updated": 0, "rows_inserted": 0,
@@ -483,7 +483,7 @@ def test_lakehouse_edge_guards(spark, duck, tmp_path):
         )
 
 
-def test_zone_map_pruning_scales_to_cdc_size_key_batches(spark, duck, tmp_path):
+def test_zone_map_pruning_scales_to_cdc_size_key_batches(spark, tmp_path):
     """The candidate-selection step of merge_upsert/delete_rows_targeted
     must be O(files × log keys), not O(files × keys): a streaming CDC
     batch is routinely 10⁵–10⁶ keys and the table 10⁵ files, so the old
@@ -555,7 +555,7 @@ def test_zone_map_pruning_scales_to_cdc_size_key_batches(spark, duck, tmp_path):
         F.lit(-1).alias("v"),                        # ~2/3 update, ~1/3 insert
     )
     t0 = time.monotonic()
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
     wall = time.monotonic() - t0
     n_updated = len([k for k in range(0, 300_000, 3) if k < 200_000])
     assert stats["rows_updated"] == n_updated
@@ -586,7 +586,7 @@ def _force_spark_prune(monkeypatch) -> list:
     return calls
 
 
-def test_spark_side_zone_map_pruning(spark, duck, tmp_path, monkeypatch):
+def test_spark_side_zone_map_pruning(spark, tmp_path, monkeypatch):
     """The billion-key escape hatch: above SPARK_PRUNE_THRESHOLD keys,
     candidate selection runs a bucketed range join — the keys never
     reach the driver.
@@ -633,7 +633,7 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path, monkeypatch):
     updates = spark.range(0, 3_000).select(
         (F2.col("id") + 19_000).alias("user_id"), F2.lit(-5).alias("v")
     )
-    stats = merge_upsert(spark, duck, path, "user_id", updates)
+    stats = merge_upsert(spark, path, "user_id", updates)
     assert len(calls) == 1
     assert stats["rows_updated"] == 1_000 and stats["rows_inserted"] == 2_000
     live = spark.read.parquet(path)
@@ -641,7 +641,7 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path, monkeypatch):
     assert live.where((F2.col("user_id") >= 19_000) & (F2.col("v") != -5)).count() == 0
 
     del_keys = spark.createDataFrame([(5,), (21_500,)], ["user_id"])
-    dstats = delete_rows_targeted(spark, duck, path, "user_id", del_keys)
+    dstats = delete_rows_targeted(spark, path, "user_id", del_keys)
     assert len(calls) == 2
     assert dstats["rows_deleted"] == 2
     # fresh read: delete is copy-on-write (survivors under a NEW name,
@@ -672,7 +672,7 @@ def test_spark_side_zone_map_pruning(spark, duck, tmp_path, monkeypatch):
 
 
 def test_spark_side_zone_map_pruning_string_and_date_keys(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """r9: the spark-side prune extends beyond integer stats via an
     order-preserving rank (7-byte big-endian UTF-8 prefix for strings —
@@ -767,7 +767,7 @@ def test_spark_side_zone_map_pruning_string_and_date_keys(
         + [(f"zuser-{i}", -6) for i in range(10)],
         "uid string, v bigint",
     )
-    stats = merge_upsert(spark, duck, path, "uid", updates, duck_type="VARCHAR")
+    stats = merge_upsert(spark, path, "uid", updates)
     assert len(calls) == 1
     assert stats["rows_updated"] == 100 and stats["rows_inserted"] == 10
     live = spark.read.parquet(path)
@@ -778,7 +778,7 @@ def test_spark_side_zone_map_pruning_string_and_date_keys(
 
 
 def test_spark_side_zone_map_pruning_timestamp_keys(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """r10: timestamp keys rank as epoch MICROS (unix_micros Spark-side,
     exact integer timedelta division driver-side), retiring the last
@@ -849,7 +849,7 @@ def test_spark_side_zone_map_pruning_timestamp_keys(
         F2.lit(-5).cast("long").alias("v"),
     )
     stats = merge_upsert(
-        spark, duck, path, "event_ts", upd, duck_type="TIMESTAMP"
+        spark, path, "event_ts", upd
     )
     assert len(calls) == 1
     assert stats["rows_updated"] == 100 and stats["rows_inserted"] == 100
@@ -858,12 +858,11 @@ def test_spark_side_zone_map_pruning_timestamp_keys(
     assert live.where("v = -5").count() == 200
 
     dstats = delete_rows_dv(
-        spark, duck, path, "event_ts",
+        spark, path, "event_ts",
         spark.createDataFrame(
             [(datetime.datetime.utcfromtimestamp(1_700_000_000),)],
             "event_ts timestamp",
         ),
-        duck_type="TIMESTAMP",
     )
     assert len(calls) == 2
     assert dstats["rows_deleted"] == 1
@@ -871,7 +870,7 @@ def test_spark_side_zone_map_pruning_timestamp_keys(
 
 
 def test_spark_side_zone_map_pruning_float_keys(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """r10: float keys rank via the IEEE-754 total-order bit trick
     (doubleToRawLongBits JVM-side, struct.unpack driver-side; negative
@@ -963,7 +962,7 @@ def test_spark_side_zone_map_pruning_float_keys(
         ((F2.col("id") - 2_500) * 0.25).alias("score"),
         F2.lit(-5).cast("long").alias("v"),
     )
-    stats = merge_upsert(spark, duck, path, "score", upd, duck_type="DOUBLE")
+    stats = merge_upsert(spark, path, "score", upd)
     assert len(calls) == 1
     assert stats["rows_updated"] == 300 and stats["rows_inserted"] == 0
     live = spark.read.parquet(path)
@@ -979,7 +978,7 @@ def test_spark_side_zone_map_pruning_float_keys(
         _zone_map_candidates(bmaps, bkeys) == ["bt", "bn"]
 
 
-def test_merge_bulk_matches_targeted_semantics(spark, duck, tmp_path):
+def test_merge_bulk_matches_targeted_semantics(spark, tmp_path):
     """merge_bulk (table-wide shuffle anti-join + re-clustered rewrite —
     the documented switch-over beyond the broadcast key bound) must be
     semantically indistinguishable from the targeted zone-map path:
@@ -1015,7 +1014,7 @@ def test_merge_bulk_matches_targeted_semantics(spark, duck, tmp_path):
         write_range_clustered(base, p, "user_id", 5)
         write_versioned_manifest(p)
 
-    s_t = merge_upsert(spark, duck, path_t, "user_id", updates)
+    s_t = merge_upsert(spark, path_t, "user_id", updates)
     s_b = merge_bulk(spark, path_b, "user_id", updates, n_files=5)
 
     assert s_b["rows_updated"] == s_t["rows_updated"] == n_upd
@@ -1037,13 +1036,13 @@ def test_merge_bulk_matches_targeted_semantics(spark, duck, tmp_path):
     ]
     assert files and all(f.startswith("bulk-v2-") for f in files)
     zm = sorted(
-        (mn, mx) for _, mn, mx in file_zone_maps(duck, path_b, "user_id", "BIGINT")
+        (mn, mx) for _, mn, mx in file_zone_maps(path_b, "user_id")
     )
     for (_, mx_prev), (mn_next, _) in zip(zm, zm[1:]):
         assert mx_prev < mn_next, f"overlapping zone maps after bulk merge: {zm}"
 
 
-def test_merge_bulk_validation_and_noop(spark, duck, tmp_path):
+def test_merge_bulk_validation_and_noop(spark, tmp_path):
     """merge_bulk shares merge_upsert's contracts: duplicate source keys
     are an ANSI cardinality violation, schema drift is refused, an empty
     change set is a committed no-op, and narrower update types are cast
@@ -1090,7 +1089,7 @@ def test_merge_bulk_validation_and_noop(spark, duck, tmp_path):
     assert got.where(F.col("user_id") == 5).collect()[0].v == -1
 
 
-def test_merge_upsert_auto_switches_to_bulk(spark, duck, tmp_path):
+def test_merge_upsert_auto_switches_to_bulk(spark, tmp_path):
     """rewrite="auto": a change batch whose keys hit >= 80% of the
     table's files must flip merge_upsert onto the bulk plan (visible in
     the version-stamped file names); a targeted batch must NOT flip."""
@@ -1114,7 +1113,7 @@ def test_merge_upsert_auto_switches_to_bulk(spark, duck, tmp_path):
     wide = spark.createDataFrame(
         [(125, -1), (375, -2), (625, -3), (875, -4)], ["user_id", "v"]
     )
-    res = merge_upsert(spark, duck, path, "user_id", wide, rewrite="auto")
+    res = merge_upsert(spark, path, "user_id", wide, rewrite="auto")
     assert res["rows_updated"] == 4 and res["files_rewritten"] == 4
     assert bulk_files(path), "auto should have taken the bulk plan"
 
@@ -1123,12 +1122,12 @@ def test_merge_upsert_auto_switches_to_bulk(spark, duck, tmp_path):
     write_range_clustered(base, path2, "user_id", 4)
     write_versioned_manifest(path2)
     narrow = spark.createDataFrame([(10, -1), (20, -2)], ["user_id", "v"])
-    res2 = merge_upsert(spark, duck, path2, "user_id", narrow, rewrite="auto")
+    res2 = merge_upsert(spark, path2, "user_id", narrow, rewrite="auto")
     assert res2["rows_updated"] == 2 and res2["files_rewritten"] == 1
     assert not bulk_files(path2), "narrow batch must stay on the targeted plan"
 
 
-def test_delete_bulk_matches_targeted_semantics(spark, duck, tmp_path):
+def test_delete_bulk_matches_targeted_semantics(spark, tmp_path):
     """delete_bulk (table-wide shuffle anti-join rewrite — the
     retention/GDPR-purge sibling of merge_bulk) must match the targeted
     zone-map delete: same survivors, same counts, time travel intact,
@@ -1157,7 +1156,7 @@ def test_delete_bulk_matches_targeted_semantics(spark, duck, tmp_path):
         write_range_clustered(base, p, "user_id", 4)
         write_versioned_manifest(p)
 
-    s_t = delete_rows_targeted(spark, duck, path_t, "user_id", keys)
+    s_t = delete_rows_targeted(spark, path_t, "user_id", keys)
     s_b = delete_bulk(spark, path_b, "user_id", keys.unionByName(absent), n_files=4)
 
     assert s_b["rows_deleted"] == s_t["rows_deleted"] == 2_000
@@ -1176,13 +1175,13 @@ def test_delete_bulk_matches_targeted_semantics(spark, duck, tmp_path):
     ]
     assert files and all(f.startswith("bulk-v2-") for f in files)
     zm = sorted(
-        (mn, mx) for _, mn, mx in file_zone_maps(duck, path_b, "user_id", "BIGINT")
+        (mn, mx) for _, mn, mx in file_zone_maps(path_b, "user_id")
     )
     for (_, mx_prev), (mn_next, _) in zip(zm, zm[1:]):
         assert mx_prev < mn_next, zm
 
 
-def test_clone_snapshot_shallow_and_deep(spark, duck, tmp_path):
+def test_clone_snapshot_shallow_and_deep(spark, tmp_path):
     """Shallow clone: zero-copy, manifest-only, pinned to the source
     version (immune to source appends), broken loudly by source vacuum.
     Deep clone: independent bytes, mutable from version 1."""
@@ -1213,7 +1212,7 @@ def test_clone_snapshot_shallow_and_deep(spark, duck, tmp_path):
     assert d["deep"] is True and d["n_files"] == 4
 
     updates = spark.createDataFrame([(5, -1), (2_000, -2)], ["user_id", "v"])
-    merge_upsert(spark, duck, src, "user_id", updates)
+    merge_upsert(spark, src, "user_id", updates)
     assert spark.read.parquet(src).count() == 1_001
 
     # both clones still replay the PRE-merge snapshot
@@ -1226,7 +1225,7 @@ def test_clone_snapshot_shallow_and_deep(spark, duck, tmp_path):
     assert not [f for f in os.listdir(shallow) if f.endswith(".parquet")]
 
     # the deep clone is an independent, mutable table
-    res = merge_upsert(spark, duck, deep, "user_id", updates)
+    res = merge_upsert(spark, deep, "user_id", updates)
     assert res["version"] == 2 and res["rows_inserted"] == 1
     assert read_version(spark, deep, 1).count() == 1_000  # its own history
 
@@ -1241,7 +1240,7 @@ def test_clone_snapshot_shallow_and_deep(spark, duck, tmp_path):
     assert read_version(spark, deep, 2).count() == 1_001
 
 
-def test_table_health_metrics(spark, duck, tmp_path):
+def test_table_health_metrics(spark, tmp_path):
     """table_health: metadata-only compaction/retention/clustering
     signals. Clustered table -> overlap 0.0; random re-write -> overlap
     rises; merge leaves tombstones; small-file count tracks layout."""
@@ -1261,7 +1260,7 @@ def test_table_health_metrics(spark, duck, tmp_path):
     write_range_clustered(base, path, "user_id", 8)
     write_versioned_manifest(path)
 
-    h = table_health(duck, path, "user_id")
+    h = table_health(path, "user_id")
     assert h["n_files"] == 8 and h["total_rows"] == 10_000
     assert h["clustering_overlap"] == 0.0
     assert h["small_files"] == 8  # tiny test files are all < 32MB
@@ -1272,8 +1271,8 @@ def test_table_health_metrics(spark, duck, tmp_path):
     updates = spark.createDataFrame(
         [(int(k), -1) for k in range(0, 10_000, 100)], ["user_id", "v"]
     )
-    merge_upsert(spark, duck, path, "user_id", updates)
-    h2 = table_health(duck, path, "user_id")
+    merge_upsert(spark, path, "user_id", updates)
+    h2 = table_health(path, "user_id")
     assert h2["tombstone_files"] >= 1 and h2["tombstone_bytes"] > 0
     assert h2["n_versions"] == 2
     # the appended update file spans the whole key range -> overlap rose
@@ -1281,7 +1280,7 @@ def test_table_health_metrics(spark, duck, tmp_path):
     assert h2["total_rows"] == 10_000
 
 
-def test_maintenance_plan_rules(spark, duck, tmp_path):
+def test_maintenance_plan_rules(spark, tmp_path):
     """maintenance_plan turns health metrics into the compact /
     recluster / vacuum decisions, and stays empty on a healthy table."""
     from data_pipeline_project_spark.sinks.layout import (
@@ -1303,7 +1302,7 @@ def test_maintenance_plan_rules(spark, duck, tmp_path):
 
     # tiny test files are all "small": with a permissive threshold the
     # table is healthy; with the default it wants compaction
-    h = table_health(duck, path, "user_id")
+    h = table_health(path, "user_id")
     # bootstrap-era files carry no NDV sketches, so the DEFAULT plan
     # leads with the analyze advice; the legacy rule assertions below
     # suppress it with ndv_coverage_min to isolate each rule
@@ -1319,8 +1318,8 @@ def test_maintenance_plan_rules(spark, duck, tmp_path):
     updates = spark.createDataFrame(
         [(int(k), -1) for k in range(0, 5_000, 50)], ["user_id", "v"]
     )
-    merge_upsert(spark, duck, path, "user_id", updates)
-    h2 = table_health(duck, path, "user_id")
+    merge_upsert(spark, path, "user_id", updates)
+    h2 = table_health(path, "user_id")
     plan = maintenance_plan(
         h2, {"small_file_fraction": 1.1, "clustering_overlap": 0.0,
              "retention_fraction": 0.0, **quiet}
@@ -1336,7 +1335,7 @@ def test_maintenance_plan_rules(spark, duck, tmp_path):
     assert [a["action"] for a in plan2] == ["vacuum"]
 
 
-def test_table_health_flags_dv_pressure(spark, duck, tmp_path):
+def test_table_health_flags_dv_pressure(spark, tmp_path):
     """Deletion-vector dead rows show up in table_health, and the
     maintenance planner recommends materializing once the dead
     fraction crosses the threshold — rewrite_table clears the flag."""
@@ -1360,25 +1359,25 @@ def test_table_health_flags_dv_pressure(spark, duck, tmp_path):
     write_range_clustered(df, path, "k", 2)
     write_versioned_manifest(path)
 
-    h0 = table_health(duck, path, "k")
+    h0 = table_health(path, "k")
     assert h0["dv_files"] == 0 and h0["dv_dead_rows"] == 0
 
     delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(int(k),) for k in range(0, 100)], "k long"),
     )
-    h1 = table_health(duck, path, "k")
+    h1 = table_health(path, "k")
     assert h1["dv_files"] == 1 and h1["dv_dead_rows"] == 100
     actions = {a["action"] for a in maintenance_plan(h1)}
     assert "materialize_dv" in actions  # 10% dead > 5% default threshold
 
     rewrite_table(spark, path, "k")
-    h2 = table_health(duck, path, "k")
+    h2 = table_health(path, "k")
     assert h2["dv_dead_rows"] == 0
     assert "materialize_dv" not in {a["action"] for a in maintenance_plan(h2)}
 
 
-def test_maintenance_plan_names_fragmented_partitions(spark, duck, tmp_path):
+def test_maintenance_plan_names_fragmented_partitions(spark, tmp_path):
     """On a hive layout, table_health carries a per-partition
     breakdown and the compact advice names exactly the directories the
     per-partition compactor would touch."""
@@ -1408,7 +1407,7 @@ def test_maintenance_plan_names_fragmented_partitions(spark, duck, tmp_path):
             ).coalesce(1),
         )
 
-    h = table_health(duck, path, "k")
+    h = table_health(path, "k")
     parts = h["partitions"]
     assert set(parts) == {f"shard={s}" for s in range(4)}
     assert parts["shard=1"]["n_files"] == 3  # 1 base + 2 appends
@@ -1419,7 +1418,7 @@ def test_maintenance_plan_names_fragmented_partitions(spark, duck, tmp_path):
     assert compact["partitions"] == ["shard=1", "shard=3"]
 
 
-def test_table_history_describes_every_commit(spark, duck, tmp_path):
+def test_table_history_describes_every_commit(spark, tmp_path):
     """DESCRIBE HISTORY: one entry per version, newest first, naming
     the op from the txn intent (bootstrap for listing-based first
     commits), churn summary, key ranges, and app metadata."""
@@ -1441,7 +1440,7 @@ def test_table_history_describes_every_commit(spark, duck, tmp_path):
     write_range_clustered(df, path, "k", 3)
     write_versioned_manifest(path)                                   # v1
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -1)], "k long, v long"),
         commit_extra={"job": "nightly"},
     )                                                                # v2
@@ -1451,7 +1450,7 @@ def test_table_history_describes_every_commit(spark, duck, tmp_path):
         key_col="k",
     )                                                                # v3
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(7,)], "k long")
+        spark, path, "k", spark.createDataFrame([(7,)], "k long")
     )                                                                # v4
     compact_snapshot(spark, path, small_bytes=1 << 10)               # v5 (maybe)
     rename_column(spark, path, "v", "val")                           # v6
@@ -1474,7 +1473,7 @@ def test_table_history_describes_every_commit(spark, duck, tmp_path):
     assert len(table_history(path, limit=2)) == 2
 
 
-def test_rewrite_table_zorder_on_string_timestamp(spark, duck, tmp_path):
+def test_rewrite_table_zorder_on_string_timestamp(spark, tmp_path):
     """r10: OPTIMIZE ZORDER over (string, timestamp) — the rank-mapped
     z-key rewrites cleanly, rows survive exactly, and both dimensions'
     zone maps become selective."""
@@ -1502,12 +1501,12 @@ def test_rewrite_table_zorder_on_string_timestamp(spark, duck, tmp_path):
     assert res["rows"] == side * side
     assert read_version(spark, path).count() == side * side
 
-    zc = file_zone_maps(duck, path, "cc", "VARCHAR")
+    zc = file_zone_maps(path, "cc")
     hit_c = sum(1 for _, mn, mx in zc if mn <= "c0015" and "c0005" <= mx)
     assert hit_c <= 10, hit_c  # selective, not 16/16
 
 
-def test_time_travel_by_timestamp_and_vacuum_dry_run(spark, duck, tmp_path):
+def test_time_travel_by_timestamp_and_vacuum_dry_run(spark, tmp_path):
     """r10: every commit records committed_at (epoch millis);
     read_version(as_of=...) resolves the newest snapshot at or before
     the instant (datetime, ISO string, or epoch seconds), and
@@ -1538,7 +1537,7 @@ def test_time_travel_by_timestamp_and_vacuum_dry_run(spark, duck, tmp_path):
     t_after_v1 = time.time()
     time.sleep(1.1)
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -1), (900, -2)], "k long, v long"),
     )                                                  # v2
     t_after_v2 = time.time()
@@ -1578,7 +1577,7 @@ def test_time_travel_by_timestamp_and_vacuum_dry_run(spark, duck, tmp_path):
     assert snapshot_versions(path) == [2]
 
 
-def test_clone_as_of_timestamp(spark, duck, tmp_path):
+def test_clone_as_of_timestamp(spark, tmp_path):
     """CLONE by wall-clock instant: 'the table as it was before the
     bad backfill' without knowing the version number."""
     import time
@@ -1600,7 +1599,7 @@ def test_clone_as_of_timestamp(spark, duck, tmp_path):
     t_good = time.time()
     time.sleep(1.1)
     merge_upsert(                                      # v2: the bad backfill
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5000, -1)], "k long, v long"),
     )
 
@@ -1615,7 +1614,7 @@ def test_clone_as_of_timestamp(spark, duck, tmp_path):
         clone_snapshot(path, str(tmp_path / "x"), version=1, as_of=t_good)
 
 
-def test_run_maintenance_executes_the_plan(spark, duck, tmp_path):
+def test_run_maintenance_executes_the_plan(spark, tmp_path):
     """r10: run_maintenance = audit -> decide -> act. On a fragmented,
     DV-laden table: the whole-table rewrite covers compaction (no
     double rewrite), deletion vectors materialize away, vacuum
@@ -1639,7 +1638,7 @@ def test_run_maintenance_executes_the_plan(spark, duck, tmp_path):
     write_versioned_manifest(path)
     # DV-delete >5% of rows so materialize_dv fires
     delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(int(k),) for k in range(150)], "k long"),
     )
     assert table_dv(path)
@@ -1647,7 +1646,7 @@ def test_run_maintenance_executes_the_plan(spark, duck, tmp_path):
     thresholds = {"retention_fraction": 10.0, "max_versions": 64}
 
     dry = run_maintenance(
-        spark, duck, path, key_col="k", thresholds=thresholds,
+        spark, path, key_col="k", thresholds=thresholds,
         dry_run=True,
     )
     acts = [a["action"] for a in dry["plan"]]
@@ -1655,7 +1654,7 @@ def test_run_maintenance_executes_the_plan(spark, duck, tmp_path):
     assert dry["executed"] == [] and table_dv(path)  # nothing touched
 
     res = run_maintenance(
-        spark, duck, path, key_col="k", thresholds=thresholds,
+        spark, path, key_col="k", thresholds=thresholds,
     )
     by_action = {e["action"]: e for e in res["executed"]}
     assert by_action["compact"]["skipped"]          # covered by rewrite
@@ -1669,13 +1668,13 @@ def test_run_maintenance_executes_the_plan(spark, duck, tmp_path):
 
     # second pass: healthy table (clustered, no DVs, no fragmentation)
     res2 = run_maintenance(
-        spark, duck, path, key_col="k", thresholds=thresholds,
+        spark, path, key_col="k", thresholds=thresholds,
     )
     assert [a["action"] for a in res2["plan"]] == []
 
     # retention pressure: tombstones from the rewrite + version pile
     res3 = run_maintenance(
-        spark, duck, path, key_col="k",
+        spark, path, key_col="k",
         thresholds={"retention_fraction": 0.0}, keep_versions=1,
     )
     vac = [e for e in res3["executed"] if e["action"] == "vacuum"]

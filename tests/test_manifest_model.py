@@ -60,7 +60,7 @@ def _model_state(model):
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
+def test_random_op_sequences_match_reference_model(spark, tmp_path, seed):
     rng = random.Random(seed)
     path = str(tmp_path / "table")
 
@@ -177,13 +177,13 @@ def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
                     )
                     if chained:
                         merge_upsert(
-                            spark, duck, path, "k",
+                            spark, path, "k",
                             spark.createDataFrame(
                                 chain_rows, "k long, v long, s string"
                             ),
                         )
                     merge_upsert(
-                        spark, duck, agg_path, "k",
+                        spark, agg_path, "k",
                         spark.createDataFrame(agg_rows, "k long, total long"),
                     )
                     if do_abort:
@@ -238,7 +238,7 @@ def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
                 # model + time-travel + CDF invariants as targeted merge
                 res = merge_bulk(spark, path, "k", updates)
             else:
-                res = merge_upsert(spark, duck, path, "k", updates)
+                res = merge_upsert(spark, path, "k", updates)
             assert res["rows_updated"] == len(upd_keys), (step, res)
             assert res["rows_inserted"] == len(ins_keys), (step, res)
             for k, v, s in rows:
@@ -254,7 +254,7 @@ def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
                 [(int(k),) for k in present + [10_000 + rng.randrange(1000)]],
                 "k long",
             )
-            res = delete_rows_dv(spark, duck, path, "k", keys)
+            res = delete_rows_dv(spark, path, "k", keys)
             assert res["rows_deleted"] == len(present), (step, res)
             for k in present:
                 del model[k]
@@ -272,7 +272,7 @@ def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
                     del model[k]
                 history[res["version"]] = _model_state(model)
             else:
-                res = delete_rows_targeted(spark, duck, path, "k", keys)
+                res = delete_rows_targeted(spark, path, "k", keys)
                 assert res["rows_deleted"] == len(present), (step, res)
                 for k in present:
                     del model[k]
@@ -391,14 +391,14 @@ def test_random_op_sequences_match_reference_model(spark, duck, tmp_path, seed):
     )
 
 
-def test_time_travel_fails_after_vacuum(spark, duck, tmp_path):
+def test_time_travel_fails_after_vacuum(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.createDataFrame(_mk_rows(range(50), 0), "k long, v long, s string") \
         .repartitionByRange(3, "k").write.parquet(path)
     write_versioned_manifest(path)
     v0 = snapshot_versions(path)[-1]
     updates = spark.createDataFrame(_mk_rows(range(10), 9), "k long, v long, s string")
-    merge_upsert(spark, duck, path, "k", updates)
+    merge_upsert(spark, path, "k", updates)
     vacuum(path, keep_versions=1)
     with pytest.raises(Exception):
         read_version(spark, path, v0).collect()

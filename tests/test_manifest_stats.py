@@ -5,11 +5,12 @@ Every commit already reads each added file's footer for the row
 count; _entry_stats records per-column [min, max] from that same read
 (zero extra I/O). Consumers:
 
-- _snapshot_zone_maps takes its zone maps straight from the log when
-  every pinned entry carries stats for the key column — targeted
+- _snapshot_zone_maps takes its zone maps straight from the log for
+  every pinned entry that carries stats for the key column — targeted
   MERGE/DELETE planning stops scaling with the table's file count
-  (proved here by running merges with duck=None: the footer-probe
-  engine is never touched);
+  (proved here by counting manifest._read_footer calls: zero on a
+  covered table, one per stats-less entry otherwise). The footer
+  path itself is pinned against DuckDB's parquet_metadata;
 - read_version_pruned / prune_snapshot_files skip files whose logged
   range cannot intersect the predicate — equal to the unpruned
   read + where() by construction.
@@ -24,7 +25,11 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from data_pipeline_project_spark.sinks.layout import write_range_clustered
+from data_pipeline_project_spark.sinks import manifest as M
+from data_pipeline_project_spark.sinks.layout import (
+    file_zone_maps,
+    write_range_clustered,
+)
 from data_pipeline_project_spark.sinks.manifest import (
     _snapshot_zone_maps,
     append_snapshot,
@@ -46,6 +51,22 @@ def _latest(path):
     return read_manifest(os.path.join(path, "_manifests", "latest.json"))
 
 
+@pytest.fixture
+def footer_reads(monkeypatch):
+    """Every manifest._read_footer call's path, in order: the zone-map
+    fallback's only I/O, so an empty list proves a plan read no
+    footers."""
+    calls = []
+    real = M._read_footer
+
+    def _counting(f):
+        calls.append(f)
+        return real(f)
+
+    monkeypatch.setattr(M, "_read_footer", _counting)
+    return calls
+
+
 def test_commits_record_column_stats(spark, duck, tmp_path):
     path = str(tmp_path / "t")
     base = spark.range(0, 2_000).select(
@@ -62,7 +83,7 @@ def test_commits_record_column_stats(spark, duck, tmp_path):
         ),
     )
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.range(100, 120).select(
             F.col("id").alias("k"), F.lit(-2).alias("v"),
             F.lit("m").alias("s"),
@@ -89,7 +110,9 @@ def test_commits_record_column_stats(spark, duck, tmp_path):
     assert any(s[0] <= "m" <= s[1] or s[0] == "m" for s in all_s)
 
 
-def test_zone_maps_come_from_the_log_without_footer_io(spark, duck, tmp_path):
+def test_zone_maps_come_from_the_log_without_footer_io(
+    spark, tmp_path, footer_reads
+):
     path = str(tmp_path / "t")
     base = spark.range(0, 3_000).select(
         F.col("id").alias("k"), (F.col("id") % 13).alias("v")
@@ -97,41 +120,44 @@ def test_zone_maps_come_from_the_log_without_footer_io(spark, duck, tmp_path):
     write_range_clustered(base, path, "k", 6)
     write_versioned_manifest(path)
 
-    # fast path == duck path, value for value
+    # log path == footer path, value for value
     head = _latest(path)
-    fast, rel_fast, _bl = _snapshot_zone_maps(None, head, "k", "BIGINT")
+    fast, rel_fast, _bl = _snapshot_zone_maps(head, "k")
+    assert footer_reads == []
     stripped = dict(head)
     stripped["files"] = [
         {k: v for k, v in f.items() if k != "stats"} for f in head["files"]
     ]
-    slow, rel_slow, _bl2 = _snapshot_zone_maps(duck, stripped, "k", "BIGINT")
+    slow, rel_slow, _bl2 = _snapshot_zone_maps(stripped, "k")
+    assert len(footer_reads) == 6  # the patch is on the path it guards
     assert fast == slow and rel_fast == rel_slow
     assert len(fast) == 6 and all(mn is not None for _, mn, _ in fast)
 
-    # the whole targeted-writer stack plans WITHOUT the footer engine:
-    # duck=None would explode on any fallback probe
+    # the whole targeted-writer stack plans WITHOUT reading a footer
+    footer_reads.clear()
     res = merge_upsert(
-        spark, None, path, "k",
+        spark, path, "k",
         spark.range(2_900, 3_100).select(
             F.col("id").alias("k"), F.lit(-5).alias("v")
         ),
     )
     assert res["rows_updated"] == 100 and res["rows_inserted"] == 100
     res = delete_rows_targeted(
-        spark, None, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(7,), (2_950,)], "k long"), commit=True,
     )
     assert res["rows_deleted"] == 2
     res = delete_rows_dv(
-        spark, None, path, "k", spark.createDataFrame([(8,)], "k long")
+        spark, path, "k", spark.createDataFrame([(8,)], "k long")
     )
     assert res["rows_deleted"] == 1
     live = read_version(spark, path)
     assert live.count() == 3_100 - 3
     assert live.where("k in (7, 8, 2950)").count() == 0
+    assert footer_reads == []
 
-    # one stats-less entry (an old commit) => conservative fallback to
-    # the footer probe for all files, same answers
+    # one stats-less entry (an old commit) => that one file's footer
+    # is read, the other entries still answer from the log
     import json
 
     mdir = os.path.join(path, "_manifests")
@@ -141,21 +167,103 @@ def test_zone_maps_come_from_the_log_without_footer_io(spark, duck, tmp_path):
         with open(os.path.join(mdir, name), "w") as fh:
             json.dump(head, fh, indent=1, sort_keys=True)
     res = merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(9, -9)], "k long, v long"),
     )
     assert res["rows_updated"] == 1
-    with pytest.raises(AttributeError):
-        # duck=None now genuinely needed — proves the fallback engaged
-        merge_upsert(
-            spark, None, path, "k",
-            spark.createDataFrame([(10, -9)], "k long, v long"),
+    assert footer_reads == [
+        os.path.join(head["root"], head["files"][0]["path"])
+    ]
+
+
+# (DuckDB type the footer stats cast to, key expression over an id)
+_FOOTER_CASES = {
+    "bigint": ("BIGINT", lambda c: c),
+    "double": ("DOUBLE", lambda c: (c - 200) * 0.25),
+    "varchar": ("VARCHAR", lambda c: F.format_string("k-%06d", c)),
+    "date": ("DATE", lambda c: F.date_add(F.lit("2024-01-01"), c.cast("int"))),
+    "timestamp": (
+        "TIMESTAMP",
+        lambda c: F.timestamp_micros(F.lit(1_700_000_000_000_000) + c * 1_000_001),
+    ),
+    "nullable_bigint": ("BIGINT", lambda c: F.when(c % 3 != 0, c)),
+}
+
+
+@pytest.mark.parametrize("ts_output", ["INT96", "TIMESTAMP_MICROS"])
+@pytest.mark.parametrize("case", sorted(_FOOTER_CASES))
+def test_footer_zone_maps_match_duckdb_parquet_metadata(
+    spark, duck, tmp_path, case, ts_output
+):
+    """The pyarrow footer path (file_zone_maps) and the log path
+    (_snapshot_zone_maps) give, file for file, what DuckDB's
+    parquet_metadata gives for a Spark-written table. Each table also
+    holds a zero-row file (no row groups: left out), a file written
+    before the key column existed (left out: no row can match), an
+    all-NULL-key file (no range: never pruned), and copies of a data
+    file under _removed/ and _manifests/ that the listing must leave
+    out. INT96 timestamps carry no stats, so every such file maps to
+    no range."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    duck_type, keyexpr = _FOOTER_CASES[case]
+    path = str(tmp_path / "t")
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", ts_output)
+    try:
+        base = spark.range(0, 400).select(
+            keyexpr(F.col("id")).alias("key"), F.col("id").alias("v")
         )
+        write_range_clustered(base, path, "key", 3)
+        base.limit(0).write.mode("append").parquet(path)
+        base.limit(20).select(
+            F.lit(None).cast(base.schema["key"].dataType).alias("key"), "v"
+        ).coalesce(1).write.mode("append").parquet(path)
+        base.select("v").limit(5).coalesce(1).write.mode("append").parquet(path)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    write_versioned_manifest(path)
+    live_files = M._data_files(path)
+    assert len(live_files) == 6
+    assert sorted(pq.read_metadata(f).num_rows for f in live_files)[0] == 0
+    biggest = max(live_files, key=lambda f: pq.read_metadata(f).num_rows)
+    for hidden in ("_removed", "_manifests"):
+        os.makedirs(os.path.join(path, hidden), exist_ok=True)
+        shutil.copy(biggest, os.path.join(path, hidden, "copy.parquet"))
+
+    rows = duck.execute(
+        f"""
+        SELECT file_name,
+               min(try_cast(stats_min_value AS {duck_type})),
+               max(try_cast(stats_max_value AS {duck_type}))
+        FROM parquet_metadata(?)
+        WHERE path_in_schema = 'key'
+        GROUP BY file_name
+        """,
+        [f"{path}/**/*.parquet"],
+    ).fetchall()
+    want = sorted(
+        r for r in rows
+        if not any(
+            seg.startswith(("_", "."))
+            for seg in os.path.relpath(r[0], path).split(os.sep)
+        )
+    )
+    assert len(rows) == len(want) + 2  # DuckDB's glob sees both copies
+    assert len(want) == 4  # three clustered files and the all-NULL one
+    stats_less = case == "timestamp" and ts_output == "INT96"
+    assert any(mn is not None for _, mn, _ in want) != stats_less
+
+    assert file_zone_maps(path, "key") == want
+    zm, _rels, _bl = _snapshot_zone_maps(_latest(path), "key")
+    assert zm == want
 
 
-def test_typed_keys_through_the_stats_path(spark, tmp_path):
+def test_typed_keys_through_the_stats_path(spark, tmp_path, footer_reads):
     """date / timestamp / float / string keyed merges plan from logged
-    stats alone (duck=None end-to-end)."""
+    stats alone (no footer read end-to-end)."""
     cases = [
         (
             "d date",
@@ -181,6 +289,7 @@ def test_typed_keys_through_the_stats_path(spark, tmp_path):
         _run_typed_cases(spark, tmp_path, cases)
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", prev_tt)
+    assert footer_reads == []
 
 
 def _run_typed_cases(spark, tmp_path, cases):
@@ -195,12 +304,12 @@ def _run_typed_cases(spark, tmp_path, cases):
         upd = spark.range(900, 950).select(
             keyexpr(F.col("id")).alias(name), F.lit(-5).cast("long").alias("v")
         )
-        res = merge_upsert(spark, None, path, name, upd)
+        res = merge_upsert(spark, path, name, upd)
         assert res["rows_updated"] == 50 and res["rows_inserted"] == 0, decl
         assert read_version(spark, path).where("v = -5").count() == 50, decl
 
 
-def test_pruned_read_equals_filtered_read(spark, duck, tmp_path):
+def test_pruned_read_equals_filtered_read(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.range(0, 10_000).select(
         F.col("id").alias("k"), (F.col("id") % 101).alias("v")
@@ -208,7 +317,7 @@ def test_pruned_read_equals_filtered_read(spark, duck, tmp_path):
     write_range_clustered(base, path, "k", 10)
     write_versioned_manifest(path)
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(4_200,)], "k long")
+        spark, path, "k", spark.createDataFrame([(4_200,)], "k long")
     )
 
     m = _latest(path)
@@ -236,7 +345,7 @@ def test_pruned_read_equals_filtered_read(spark, duck, tmp_path):
     assert skipped == 9
 
 
-def test_stats_survive_restore_and_time_travel(spark, duck, tmp_path):
+def test_stats_survive_restore_and_time_travel(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.range(0, 1_000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
@@ -244,7 +353,7 @@ def test_stats_survive_restore_and_time_travel(spark, duck, tmp_path):
     write_range_clustered(base, path, "k", 4)
     write_versioned_manifest(path)
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -1)], "k long, v long"),
     )
     restore_table(path, version=1)
@@ -252,13 +361,13 @@ def test_stats_survive_restore_and_time_travel(spark, duck, tmp_path):
     assert all("stats" in f and "k" in f["stats"] for f in m["files"])
     # and the restored head still plans merges from the log alone
     res = merge_upsert(
-        spark, None, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(6, -2)], "k long, v long"),
     )
     assert res["rows_updated"] == 1
 
 
-def test_metadata_only_answers(spark, duck, tmp_path):
+def test_metadata_only_answers(spark, tmp_path):
     """snapshot_rowcount and table_column_minmax answer from the log
     with zero data-file reads; DV dead rows are subtracted; partial
     stats coverage refuses rather than lies."""
@@ -278,7 +387,7 @@ def test_metadata_only_answers(spark, duck, tmp_path):
     assert table_column_minmax(path, "v") == (0, 100)
 
     delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(i,) for i in range(17)], "k long"),
     )
     assert snapshot_rowcount(path) == 5_000 - 17
@@ -286,7 +395,7 @@ def test_metadata_only_answers(spark, duck, tmp_path):
     assert snapshot_rowcount(path, version=1) == 5_000  # time travel
 
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(9_999, -1)], "k long, v long"),
     )
     assert snapshot_rowcount(path) == 5_000 - 17 + 1
@@ -303,7 +412,7 @@ def test_metadata_only_answers(spark, duck, tmp_path):
     assert table_column_minmax(path, "k") is None
 
 
-def test_multi_predicate_and_partition_pruning(spark, duck, tmp_path):
+def test_multi_predicate_and_partition_pruning(spark, tmp_path):
     """Conjunctive pruning across several columns, plus hive partition
     columns pruning from their directory values (they never appear in
     parquet footers)."""
@@ -351,9 +460,11 @@ def test_multi_predicate_and_partition_pruning(spark, duck, tmp_path):
     assert skipped3 == 0 and pruned3["n_files"] == m["n_files"]
 
 
-def test_table_health_clustering_from_log(spark, duck, tmp_path):
-    """clustering_overlap computes from log stats — duck=None proves
-    zero footer probing on a fully-covered table."""
+def test_table_health_clustering_from_log(spark, tmp_path, footer_reads):
+    """clustering_overlap computes from log stats — zero footer reads
+    on a fully-covered table."""
+    import json
+
     from data_pipeline_project_spark.sinks.layout import table_health
 
     path = str(tmp_path / "t")
@@ -362,14 +473,22 @@ def test_table_health_clustering_from_log(spark, duck, tmp_path):
     )
     write_range_clustered(base, path, "k", 6)
     write_versioned_manifest(path)
-    h = table_health(None, path, key_col="k")
+    h = table_health(path, key_col="k")
     assert h["clustering_overlap"] == 0.0  # range-clustered: disjoint
-    # and the fast path agrees with the footer probe
-    h2 = table_health(duck, path, key_col="k")
+    assert footer_reads == []
+    # and the log path agrees with the footers of a stats-less head
+    latest = os.path.join(path, "_manifests", "latest.json")
+    head = read_manifest(latest)
+    for f in head["files"]:
+        f.pop("stats", None)
+    with open(latest, "w") as fh:
+        json.dump(head, fh)
+    h2 = table_health(path, key_col="k")
+    assert len(footer_reads) == 6
     assert h2["clustering_overlap"] == h["clustering_overlap"]
 
 
-def test_null_counts_and_null_pruning(spark, duck, tmp_path):
+def test_null_counts_and_null_pruning(spark, tmp_path):
     """Null counts ride the stats (4th element); all-null files record
     [None, None, 'null', n] — the case min/max skipping is blind to —
     and IS NULL / IS NOT NULL predicates prune from them."""
@@ -435,7 +554,7 @@ def test_null_counts_and_null_pruning(spark, duck, tmp_path):
     assert lo == 0 and hi == 198
 
 
-def test_table_detail_and_join_advice(spark, duck, tmp_path):
+def test_table_detail_and_join_advice(spark, tmp_path):
     from data_pipeline_project_spark.sinks.layout import (
         join_plan_advice,
         table_detail,
@@ -483,7 +602,7 @@ def test_table_detail_and_join_advice(spark, duck, tmp_path):
     assert adv3["strategy"] == "shuffle" and adv3["overlap"] == (0, 499)
 
 
-def test_log_expectation_report_three_valued(spark, duck, tmp_path):
+def test_log_expectation_report_three_valued(spark, tmp_path):
     """The free metadata gate: the log PROVES, DISPROVES, or abstains;
     DV tables demote would-be fails to unknown (stats are physical);
     definite verdicts agree with the one-pass scan suite."""
@@ -544,7 +663,7 @@ def test_log_expectation_report_three_valued(spark, duck, tmp_path):
     # ids is hard to enumerate; delete ONE row and re-audit: fails
     # must demote to unknown, passes stay passes
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(550,)], "k long")
+        spark, path, "k", spark.createDataFrame([(550,)], "k long")
     )
     rep2 = {
         tuple(r["rule"]): r["verdict"]

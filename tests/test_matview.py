@@ -83,25 +83,25 @@ def _assert_view_equals_source(spark, src, view, keys=("g",)):
     assert got == want
 
 
-def test_create_and_read_matches_direct_aggregate(spark, duck, tmp_path):
+def test_create_and_read_matches_direct_aggregate(spark, tmp_path):
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src)
-    res = create_agg_view(spark, duck, src, view, ["g"], "v")
+    res = create_agg_view(spark, src, view, ["g"], "v")
     assert res["n_groups"] == 10 and res["applied_src_version"] == 1
     _assert_view_equals_source(spark, src, view)
     st = view_status(view)
     assert st["stale"] is False and st["applied_src_version"] == 1
 
 
-def test_refresh_recompute_tracks_churn_and_is_idempotent(spark, duck, tmp_path):
+def test_refresh_recompute_tracks_churn_and_is_idempotent(spark, tmp_path):
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     # v2: update 3 rows (one moves between groups: g is part of the
     # row), insert 2 rows into a brand-new group
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(5, 3, 999), (17, 7, -50), (28, 5, None), (9000, 12, 1), (9001, 12, 7)],
             "k long, g long, v long",
@@ -111,22 +111,22 @@ def test_refresh_recompute_tracks_churn_and_is_idempotent(spark, duck, tmp_path)
     # holding another group's minimum
     g9 = [(int(r.k),) for r in spark.read.parquet(src).where("g = 9").collect()]
     delete_rows_targeted(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(g9 + [(17,)], "k long"),
     )
     write_versioned_manifest(src)
 
-    res = refresh_agg_view(spark, duck, view, mode="recompute")
+    res = refresh_agg_view(spark, view, mode="recompute")
     assert res["applied_src_version"] == 3
     assert res["groups_dropped"] == 1  # group 9
     _assert_view_equals_source(spark, src, view)
 
     # already current: no new data commit, watermark unchanged
-    res2 = refresh_agg_view(spark, duck, view, mode="recompute")
+    res2 = refresh_agg_view(spark, view, mode="recompute")
     assert res2["groups_changed"] == 0 and res2["applied_src_version"] == 3
 
 
-def test_delta_mode_equals_recompute_mode(spark, duck, tmp_path):
+def test_delta_mode_equals_recompute_mode(spark, tmp_path):
     """Same source, two views, one refreshed per mode — identical
     rendered output, both equal to the direct oracle. The churn is
     built to hit every delta branch: pure-insert groups, min/max-stale
@@ -135,11 +135,11 @@ def test_delta_mode_equals_recompute_mode(spark, duck, tmp_path):
     src = str(tmp_path / "src")
     v_rec, v_del = str(tmp_path / "rec"), str(tmp_path / "del")
     _source(spark, src)
-    create_agg_view(spark, duck, src, v_rec, ["g"], "v")
-    create_agg_view(spark, duck, src, v_del, ["g"], "v")
+    create_agg_view(spark, src, v_rec, ["g"], "v")
+    create_agg_view(spark, src, v_del, ["g"], "v")
 
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(3, 3, -1000), (40, 0, 2000), (7777, 33, 5)],
             "k long, g long, v long",
@@ -153,13 +153,13 @@ def test_delta_mode_equals_recompute_mode(spark, duck, tmp_path):
         (int(r.k),) for r in live.where("g = 2 AND v IS NOT NULL").collect()
     ]
     delete_rows_targeted(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(g8 + g2_nonnull + [(3,)], "k long"),
     )
     write_versioned_manifest(src)
 
-    r1 = refresh_agg_view(spark, duck, v_rec, mode="recompute")
-    r2 = refresh_agg_view(spark, duck, v_del, mode="delta", verify_unique=True)
+    r1 = refresh_agg_view(spark, v_rec, mode="recompute")
+    r2 = refresh_agg_view(spark, v_del, mode="delta", verify_unique=True)
     assert r1["applied_src_version"] == r2["applied_src_version"] == 3
     assert _rows(read_agg_view(spark, v_rec)) == _rows(read_agg_view(spark, v_del))
     _assert_view_equals_source(spark, src, v_rec)
@@ -169,7 +169,7 @@ def test_delta_mode_equals_recompute_mode(spark, duck, tmp_path):
     assert read_agg_view(spark, v_del).where("g = 8").count() == 0
 
 
-def test_randomized_churn_converges_every_step(spark, duck, tmp_path):
+def test_randomized_churn_converges_every_step(spark, tmp_path):
     """Model-checker shape: random MERGE/DELETE/no-op commits on the
     source, a refresh after each (modes alternating), the direct
     GROUP BY oracle checked every step — plus one time-travel check
@@ -180,7 +180,7 @@ def test_randomized_churn_converges_every_step(spark, duck, tmp_path):
     rng = random.Random(87)
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src, n=300)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     stamped = []  # (view_version, src_version) after each refresh
     for step in range(6):
@@ -196,7 +196,7 @@ def test_randomized_churn_converges_every_step(spark, duck, tmp_path):
             ]
             dedup = {r[0]: r for r in rows}
             merge_upsert(
-                spark, duck, src, "k",
+                spark, src, "k",
                 spark.createDataFrame(list(dedup.values()), "k long, g long, v long"),
             )
         elif op in ("delete", "delete_dv"):
@@ -207,15 +207,15 @@ def test_randomized_churn_converges_every_step(spark, duck, tmp_path):
             if op == "delete_dv":
                 # merge-on-read delete: the view must track it through
                 # the feed exactly like a rewrite delete
-                delete_rows_dv(spark, duck, src, "k", kdf)
+                delete_rows_dv(spark, src, "k", kdf)
             else:
-                delete_rows_targeted(spark, duck, src, "k", kdf)
+                delete_rows_targeted(spark, src, "k", kdf)
                 write_versioned_manifest(src)
         else:
             write_versioned_manifest(src)  # content-free commit
 
         mode = "delta" if step % 2 else "recompute"
-        res = refresh_agg_view(spark, duck, view, mode=mode)
+        res = refresh_agg_view(spark, view, mode=mode)
         assert res["applied_src_version"] == snapshot_versions(src)[-1]
         _assert_view_equals_source(spark, src, view)
         stamped.append((res["view_version"], res["applied_src_version"]))
@@ -228,7 +228,7 @@ def test_randomized_churn_converges_every_step(spark, duck, tmp_path):
     assert got == want
 
 
-def test_crash_mid_refresh_recovers_and_converges(spark, duck, tmp_path):
+def test_crash_mid_refresh_recovers_and_converges(spark, tmp_path):
     """Kill the refresh between the view's data movement and its
     manifest commit (the widest crash window): the watermark must not
     move, recover_to_last_manifest must restore the view, and the rerun
@@ -237,9 +237,9 @@ def test_crash_mid_refresh_recovers_and_converges(spark, duck, tmp_path):
 
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(1, 1, 500), (8888, 20, 9)], "k long, g long, v long"),
     )
 
@@ -255,7 +255,7 @@ def test_crash_mid_refresh_recovers_and_converges(spark, duck, tmp_path):
     manifest_mod.commit_optimistic = boom
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            refresh_agg_view(spark, duck, view, mode="delta")
+            refresh_agg_view(spark, view, mode="delta")
     finally:
         manifest_mod.write_versioned_manifest = real_wvm
         manifest_mod.commit_optimistic = real_opt
@@ -263,22 +263,22 @@ def test_crash_mid_refresh_recovers_and_converges(spark, duck, tmp_path):
     assert applied_src_version(view) == 1          # watermark unmoved
     rec = recover_to_last_manifest(view)
     assert rec["quarantined"] >= 1                  # uncommitted merge output
-    res = refresh_agg_view(spark, duck, view, mode="delta")
+    res = refresh_agg_view(spark, view, mode="delta")
     assert res["applied_src_version"] == 2
     _assert_view_equals_source(spark, src, view)
 
 
-def test_streaming_maintenance_and_checkpoint_resume(spark, duck, tmp_path):
+def test_streaming_maintenance_and_checkpoint_resume(spark, tmp_path):
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     ckpt = str(tmp_path / "ckpt")
     _source(spark, src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(2, 2, 77), (7000, 15, 3)], "k long, g long, v long"),
     )
-    q = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q = maintain_agg_view_stream(spark, view, ckpt)
     q.awaitTermination(120)
     assert q.refresh_results and q.refresh_results[-1]["applied_src_version"] == 2
     _assert_view_equals_source(spark, src, view)
@@ -286,16 +286,16 @@ def test_streaming_maintenance_and_checkpoint_resume(spark, duck, tmp_path):
     # new source commit, stream restarted on the same checkpoint:
     # consumes only the new commit, view converges again
     delete_rows_targeted(
-        spark, duck, src, "k", spark.createDataFrame([(2,), (30,)], "k long")
+        spark, src, "k", spark.createDataFrame([(2,), (30,)], "k long")
     )
     write_versioned_manifest(src)
-    q2 = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q2 = maintain_agg_view_stream(spark, view, ckpt)
     q2.awaitTermination(120)
     assert applied_src_version(view) == 3
     _assert_view_equals_source(spark, src, view)
 
 
-def test_composite_keys_and_null_key_contract(spark, duck, tmp_path):
+def test_composite_keys_and_null_key_contract(spark, tmp_path):
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     df = spark.range(0, 200).select(
         F.col("id").alias("k"),
@@ -305,14 +305,14 @@ def test_composite_keys_and_null_key_contract(spark, duck, tmp_path):
     )
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
-    create_agg_view(spark, duck, src, view, ["g1", "g2"], "v")
+    create_agg_view(spark, src, view, ["g1", "g2"], "v")
     _assert_view_equals_source(spark, src, view, keys=("g1", "g2"))
 
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(0, 3, "x", 9)], "k long, g1 long, g2 string, v long"),
     )
-    refresh_agg_view(spark, duck, view, mode="delta")
+    refresh_agg_view(spark, view, mode="delta")
     _assert_view_equals_source(spark, src, view, keys=("g1", "g2"))
 
     # null group key: refused loudly at create
@@ -320,27 +320,27 @@ def test_composite_keys_and_null_key_contract(spark, duck, tmp_path):
     spark.createDataFrame([(1, None, 5)], "k long, g long, v long").write.parquet(bad)
     write_versioned_manifest(bad)
     with pytest.raises(ValueError, match="non-null"):
-        create_agg_view(spark, duck, bad, str(tmp_path / "badview"), ["g"], "v")
+        create_agg_view(spark, bad, str(tmp_path / "badview"), ["g"], "v")
 
 
 def test_noop_source_commit_stamps_watermark_without_data_commit(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
     before = _rows(read_agg_view(spark, view))
 
     write_versioned_manifest(src)  # source v2: no data change
     assert view_status(view)["stale"] is True
-    res = refresh_agg_view(spark, duck, view)
+    res = refresh_agg_view(spark, view)
     assert res["applied_src_version"] == 2 and res["groups_changed"] == 0
     assert view_status(view)["stale"] is False
     assert _rows(read_agg_view(spark, view)) == before
 
 
 def test_auto_mode_picks_full_for_bulk_churn_and_delta_for_targeted(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """auto resolves from the metadata footprint probe: a bulk-rewrite
     commit (whole table churned) refreshes feed-free as ``full``; a
@@ -354,31 +354,31 @@ def test_auto_mode_picks_full_for_bulk_churn_and_delta_for_targeted(
     )
     write_range_clustered(df, src, "k", 8)
     write_versioned_manifest(src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     # churn 90% of all keys: merge auto-flips to the bulk plan, every
     # file is rewritten, the feed step's footprint is the whole table
     bulk = [(k, (k * 3) % 10, k % 17) for k in range(0, 1800)]
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(bulk, "k long, g long, v long"),
     )
-    res = refresh_agg_view(spark, duck, view, mode="auto")
+    res = refresh_agg_view(spark, view, mode="auto")
     assert res["mode"] == "full" and res["applied_src_version"] == 2
     _assert_view_equals_source(spark, src, view)
 
     # one-row churn: targeted merge, O(churn) feed, auto goes delta
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(5, 5, 999)], "k long, g long, v long"),
     )
-    res2 = refresh_agg_view(spark, duck, view, mode="auto")
+    res2 = refresh_agg_view(spark, view, mode="auto")
     assert res2["mode"] == "delta" and res2["applied_src_version"] == 3
     _assert_view_equals_source(spark, src, view)
 
 
 def test_view_fails_loudly_when_source_renames_its_columns(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """The spec pins logical column names at create time; if the source
     renames the value or key column away, refresh must raise (recreate
@@ -387,18 +387,18 @@ def test_view_fails_loudly_when_source_renames_its_columns(
 
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
     rename_column(spark, src, "v", "reading")
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(1, 1, 5)], "k long, g long, reading long"),
     )
     with pytest.raises(Exception):
-        refresh_agg_view(spark, duck, view)
+        refresh_agg_view(spark, view)
 
 
 def test_filtered_view_tracks_rows_moving_across_the_predicate(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """A filtered view (WHERE v >= 0 GROUP BY g) under churn that moves
     rows INTO and OUT OF the predicate: updates arrive in the feed as
@@ -414,8 +414,8 @@ def test_filtered_view_tracks_rows_moving_across_the_predicate(
     )
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
-    create_agg_view(spark, duck, src, v_rec, ["g"], "v", filter_sql="v >= 0")
-    create_agg_view(spark, duck, src, v_del, ["g"], "v", filter_sql="v >= 0")
+    create_agg_view(spark, src, v_rec, ["g"], "v", filter_sql="v >= 0")
+    create_agg_view(spark, src, v_del, ["g"], "v", filter_sql="v >= 0")
 
     def check():
         want = _rows(
@@ -428,28 +428,28 @@ def test_filtered_view_tracks_rows_moving_across_the_predicate(
     # churn: k=10 moves OUT of the filter (v 0 -> -5), k=3 moves IN
     # (v -7 -> 7), k=5000 inserts inside, k=5001 inserts outside
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(10, 4, -5), (3, 3, 7), (5000, 2, 50), (5001, 2, -50)],
             "k long, g long, v long",
         ),
     )
-    refresh_agg_view(spark, duck, v_rec, mode="recompute")
-    refresh_agg_view(spark, duck, v_del, mode="delta")
+    refresh_agg_view(spark, v_rec, mode="recompute")
+    refresh_agg_view(spark, v_del, mode="delta")
     check()
 
     # delete a mix of in-filter and out-of-filter rows
     delete_rows_targeted(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(3,), (2,), (5001,)], "k long"),
     )
     write_versioned_manifest(src)
-    refresh_agg_view(spark, duck, v_rec, mode="recompute")
-    refresh_agg_view(spark, duck, v_del, mode="delta")
+    refresh_agg_view(spark, v_rec, mode="recompute")
+    refresh_agg_view(spark, v_del, mode="delta")
     check()
 
 
-def test_multi_value_column_view(spark, duck, tmp_path):
+def test_multi_value_column_view(spark, tmp_path):
     """One state table maintains count/sum/min/max/avg for SEVERAL
     value columns (suffixed rendering); both refresh strategies track
     churn that moves each column's extremes independently."""
@@ -464,7 +464,7 @@ def test_multi_value_column_view(spark, duck, tmp_path):
     )
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
-    create_agg_view(spark, duck, src, view, ["g"], ["a", "b"])
+    create_agg_view(spark, src, view, ["g"], ["a", "b"])
 
     def oracle():
         rows = []
@@ -490,31 +490,31 @@ def test_multi_value_column_view(spark, duck, tmp_path):
     # churn: delete column a's global max holder AND column b's min
     # holder; update rows; insert a new group
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(5, 5, 100, None), (900, 9, -1, -1)], "k long, g long, a long, b long",
         ),
     )
     amax = spark.read.parquet(src).orderBy(F.desc("a")).first().k
     delete_rows_targeted(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(int(amax),)], "k long"),
     )
     write_versioned_manifest(src)
 
-    refresh_agg_view(spark, duck, view, mode="delta")
+    refresh_agg_view(spark, view, mode="delta")
     assert _rows(read_agg_view(spark, view)) == oracle()
 
-    refresh_agg_view(spark, duck, view, mode="full")  # no-op (current)
+    refresh_agg_view(spark, view, mode="full")  # no-op (current)
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(6, 0, 7, 7)], "k long, g long, a long, b long"),
     )
-    refresh_agg_view(spark, duck, view, mode="recompute")
+    refresh_agg_view(spark, view, mode="recompute")
     assert _rows(read_agg_view(spark, view)) == oracle()
 
 
-def test_verify_unique_checks_view_against_source(spark, duck, tmp_path):
+def test_verify_unique_checks_view_against_source(spark, tmp_path):
     """The collision failure mode is a REPLACEMENT: a new group whose
     xxhash64 collides with an untouched old group overwrites that
     group's state row via the _gk merge — the view still holds one row
@@ -523,14 +523,14 @@ def test_verify_unique_checks_view_against_source(spark, duck, tmp_path):
     SOURCE snapshot instead."""
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     _source(spark, src, n=100)
-    create_agg_view(spark, duck, src, view, ["g"], "v")
+    create_agg_view(spark, src, view, ["g"], "v")
 
     # honest churn passes the sweep
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(0, 0, -5)], "k long, g long, v long"),
     )
-    res = refresh_agg_view(spark, duck, view, verify_unique=True)
+    res = refresh_agg_view(spark, view, verify_unique=True)
     assert res["applied_src_version"] == 2
     _assert_view_equals_source(spark, src, view)
 
@@ -544,14 +544,14 @@ def test_verify_unique_checks_view_against_source(spark, duck, tmp_path):
     corrupted = spark.createDataFrame(
         g1.withColumn("g", F.lit(999).cast("long")).collect(), g1.schema
     )
-    merge_upsert(spark, duck, view, "_gk", corrupted)
+    merge_upsert(spark, view, "_gk", corrupted)
     # touch the source so refresh actually runs its sweep
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(1, 0, -6)], "k long, g long, v long"),
     )
     with pytest.raises(ValueError, match="collision"):
-        refresh_agg_view(spark, duck, view, verify_unique=True)
+        refresh_agg_view(spark, view, verify_unique=True)
 
 
 def _distinct_oracle(spark, src, keys=("g",), col="k"):
@@ -563,7 +563,7 @@ def _distinct_oracle(spark, src, keys=("g",), col="k"):
     )
 
 
-def test_distinct_view_exact_folds_and_retracts(spark, duck, tmp_path):
+def test_distinct_view_exact_folds_and_retracts(spark, tmp_path):
     """Exact mode: per-(group, value) multiplicity state — inserts and
     deletes fold/retract exactly; the rendered view equals a direct
     COUNT(DISTINCT) over every committed snapshot it reflects."""
@@ -588,7 +588,7 @@ def test_distinct_view_exact_folds_and_retracts(spark, duck, tmp_path):
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
 
-    res = create_distinct_view(spark, duck, src, view, ["g"], "val")
+    res = create_distinct_view(spark, src, view, ["g"], "val")
     assert res["mode"] == "exact" and res["n_groups"] == 5
 
     def oracle():
@@ -604,29 +604,29 @@ def test_distinct_view_exact_folds_and_retracts(spark, duck, tmp_path):
     # churn: an update that REMOVES the last copy of one (g, val) pair,
     # inserts that add a brand-new value, and a DV delete
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(0, 0, 999), (5000, 0, 999), (5001, 1, 1000)],
             "k long, g long, val long",
         ),
     )
-    refresh_distinct_view(spark, duck, view)
+    refresh_distinct_view(spark, view)
     assert _rows(read_distinct_view(spark, view)) == oracle()
 
     delete_rows_dv(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(5000,), (5001,), (34,)], "k long"),
     )
-    refresh_distinct_view(spark, duck, view)
+    refresh_distinct_view(spark, view)
     assert _rows(read_distinct_view(spark, view)) == oracle()
 
     # no-op refresh stamps the watermark only
-    r = refresh_distinct_view(spark, duck, view)
+    r = refresh_distinct_view(spark, view)
     assert r["state_rows_changed"] == 0
 
 
 def test_distinct_view_sketch_folds_inserts_recomputes_deletes(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """Sketch mode: insert-only windows FOLD via hll_union and stay
     bit-identical to a from-scratch sketch of the snapshot; a window
@@ -650,7 +650,7 @@ def test_distinct_view_sketch_folds_inserts_recomputes_deletes(
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
     res = create_distinct_view(
-        spark, duck, src, view, ["g"], "val", mode="sketch"
+        spark, src, view, ["g"], "val", mode="sketch"
     )
     assert res["mode"] == "sketch"
 
@@ -670,13 +670,13 @@ def test_distinct_view_sketch_folds_inserts_recomputes_deletes(
 
     # insert-only window folds (no recompute) and matches from-scratch
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(9000 + i, i % 4, 100 + i) for i in range(20)],
             "k long, g long, val long",
         ),
     )  # all-new keys: pure inserts
-    refresh_distinct_view(spark, duck, view)
+    refresh_distinct_view(spark, view)
     assert _rows(read_distinct_view(spark, view)) == sketch_oracle()
     # sketch estimates are exact at these cardinalities
     got = {r.g: r.n_distinct for r in read_distinct_view(spark, view).collect()}
@@ -692,18 +692,18 @@ def test_distinct_view_sketch_folds_inserts_recomputes_deletes(
     # deletes force the recompute path; kill an entire group -> tombstone
     g3 = [(int(r.k),) for r in read_version(spark, src).where("g = 3").collect()]
     delete_rows_targeted(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(g3 + [(0,)], "k long"),
     )
     write_versioned_manifest(src)
-    refresh_distinct_view(spark, duck, view)
+    refresh_distinct_view(spark, view)
     view_rows = _rows(read_distinct_view(spark, view))
     assert view_rows == sketch_oracle()
     assert {r[0] for r in view_rows} == {0, 1, 2}  # g=3 vanished
 
 
 def test_distinct_view_auto_threshold_and_null_key_contract(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     from data_pipeline_project_spark.sinks.matview import (
         create_distinct_view,
@@ -719,11 +719,11 @@ def test_distinct_view_auto_threshold_and_null_key_contract(
     write_versioned_manifest(src)
 
     r1 = create_distinct_view(
-        spark, duck, src, str(tmp_path / "v1"), ["g"], "val"
+        spark, src, str(tmp_path / "v1"), ["g"], "val"
     )
     assert r1["mode"] == "exact"  # 35 pairs << default threshold
     r2 = create_distinct_view(
-        spark, duck, src, str(tmp_path / "v2"), ["g"], "val", threshold=10
+        spark, src, str(tmp_path / "v2"), ["g"], "val", threshold=10
     )
     assert r2["mode"] == "sketch"  # 35 pairs > 10
 
@@ -737,11 +737,11 @@ def test_distinct_view_auto_threshold_and_null_key_contract(
     write_versioned_manifest(nsrc)
     with pytest.raises(ValueError, match="non-null"):
         create_distinct_view(
-            spark, duck, nsrc, str(tmp_path / "v3"), ["g"], "val"
+            spark, nsrc, str(tmp_path / "v3"), ["g"], "val"
         )
 
 
-def test_streaming_maintenance_of_distinct_view(spark, duck, tmp_path):
+def test_streaming_maintenance_of_distinct_view(spark, tmp_path):
     """r10: maintain_agg_view_stream dispatches on the spec kind — a
     distinct-count view gets the same tablechanges-triggered loop as
     aggregate views. Insert-only windows FOLD; a delete-bearing window
@@ -764,7 +764,7 @@ def test_streaming_maintenance_of_distinct_view(spark, duck, tmp_path):
     )
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
-    res = create_distinct_view(spark, duck, src, view, ["g"], "val")
+    res = create_distinct_view(spark, src, view, ["g"], "val")
     assert res["mode"] == "exact"
 
     def oracle():
@@ -777,12 +777,12 @@ def test_streaming_maintenance_of_distinct_view(spark, duck, tmp_path):
 
     # v2: insert-only commit -> the stream folds it
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(5000, 0, 999), (5001, 1, 1000)], "k long, g long, val long"
         ),
     )
-    q = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q = maintain_agg_view_stream(spark, view, ckpt)
     q.awaitTermination(120)
     assert q.refresh_results
     assert q.refresh_results[-1]["applied_src_version"] == 2
@@ -792,22 +792,22 @@ def test_streaming_maintenance_of_distinct_view(spark, duck, tmp_path):
     # v3: a delete-bearing commit; restart on the SAME checkpoint —
     # only the new commit is consumed and the view converges again
     delete_rows_dv(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(5000,), (34,)], "k long"),
     )
-    q2 = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q2 = maintain_agg_view_stream(spark, view, ckpt)
     q2.awaitTermination(120)
     assert applied_src_version(view) == 3
     assert _rows(read_distinct_view(spark, view)) == oracle()
 
     # replayed trigger with no new source commit: watermark no-op
-    q3 = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q3 = maintain_agg_view_stream(spark, view, ckpt)
     q3.awaitTermination(120)
     assert applied_src_version(view) == 3
     assert _rows(read_distinct_view(spark, view)) == oracle()
 
 
-def test_recompute_view_percentiles_under_churn(spark, duck, tmp_path):
+def test_recompute_view_percentiles_under_churn(spark, tmp_path):
     """r10 recompute-only tier: exact per-group percentiles + top-k
     maintained under inserts, updates, DV deletes, and a group that
     vanishes entirely — after every refresh the rendered view equals
@@ -835,7 +835,7 @@ def test_recompute_view_percentiles_under_churn(spark, duck, tmp_path):
         "p50_v": "percentile(v, 0.5)",
         "top3_v": "slice(sort_array(collect_list(v), false), 1, 3)",
     }
-    res = create_recompute_view(spark, duck, src, view, ["g"], exprs)
+    res = create_recompute_view(spark, src, view, ["g"], exprs)
     assert res["n_groups"] == 5
 
     def oracle():
@@ -858,22 +858,22 @@ def test_recompute_view_percentiles_under_churn(spark, duck, tmp_path):
 
     # churn: updates that shift one group's median + inserts
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame(
             [(0, 0, 999), (5, 0, 998), (7000, 1, 997)],
             "k long, g long, v long",
         ),
     )
-    r = refresh_recompute_view(spark, duck, view)
+    r = refresh_recompute_view(spark, view)
     assert r["applied_src_version"] == 2
     assert rendered() == oracle()
 
     # DV delete that empties group 4 entirely -> tombstoned state row
     g4_keys = [(int(k),) for k in range(400) if k % 5 == 4]
     delete_rows_dv(
-        spark, duck, src, "k", spark.createDataFrame(g4_keys, "k long")
+        spark, src, "k", spark.createDataFrame(g4_keys, "k long")
     )
-    refresh_recompute_view(spark, duck, view)
+    refresh_recompute_view(spark, view)
     assert rendered() == oracle()
     assert {r.g for r in read_recompute_view(spark, view).collect()} == {
         0, 1, 2, 3
@@ -881,14 +881,14 @@ def test_recompute_view_percentiles_under_churn(spark, duck, tmp_path):
 
     # delta refusal pinned: the honest contract of the tier
     with pytest.raises(ValueError, match="no incremental fold"):
-        refresh_recompute_view(spark, duck, view, mode="delta")
+        refresh_recompute_view(spark, view, mode="delta")
 
     # no-op refresh stamps the watermark only
-    r2 = refresh_recompute_view(spark, duck, view)
+    r2 = refresh_recompute_view(spark, view)
     assert r2["state_rows_changed"] == 0
 
 
-def test_streaming_maintenance_of_recompute_view(spark, duck, tmp_path):
+def test_streaming_maintenance_of_recompute_view(spark, tmp_path):
     """The stream loop dispatches kind='recompute' too: a committed
     source change triggers a bounded touched-group rescan."""
     from data_pipeline_project_spark.sinks.matview import (
@@ -908,13 +908,13 @@ def test_streaming_maintenance_of_recompute_view(spark, duck, tmp_path):
     write_range_clustered(df, src, "k", 3)
     write_versioned_manifest(src)
     create_recompute_view(
-        spark, duck, src, view, ["g"], {"p90_v": "percentile(v, 0.9)"}
+        spark, src, view, ["g"], {"p90_v": "percentile(v, 0.9)"}
     )
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(0, 0, 500)], "k long, g long, v long"),
     )
-    q = maintain_agg_view_stream(spark, duck, view, ckpt)
+    q = maintain_agg_view_stream(spark, view, ckpt)
     q.awaitTermination(120)
     assert applied_src_version(view) == 2
     want = sorted(

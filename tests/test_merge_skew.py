@@ -123,7 +123,7 @@ def test_delete_bulk_salted_final_state_equals_unsalted(
 
 
 def test_insert_only_merge_skips_candidate_machinery(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """A batch whose key range provably exceeds the table's logged
     global range (the streaming-CDC append wave) must commit WITHOUT
@@ -137,7 +137,7 @@ def test_insert_only_merge_skips_candidate_machinery(
     monkeypatch.setattr(M, "_snapshot_zone_maps", _boom)
     monkeypatch.setattr(M, "_select_candidates", _boom)
     res = merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.range(0, 300).select(
             (F.col("id") + 50_000).alias("k"), F.lit(-1).alias("v")
         ),
@@ -150,20 +150,20 @@ def test_insert_only_merge_skips_candidate_machinery(
     monkeypatch.setattr(M, "_select_candidates", _boom)
     with pytest.raises(AssertionError, match="candidate machinery"):
         merge_upsert(
-            spark, duck, path, "k",
+            spark, path, "k",
             spark.createDataFrame([(5, -9)], "k long, v long"),
         )
     monkeypatch.undo()
     # and the real overlapping merge is still correct
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -9)], "k long, v long"),
     )
     assert read_version(spark, path).where("k = 5").collect()[0].v == -9
 
 
 def test_insert_only_fast_path_needs_full_stats_coverage(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """A bootstrap-era table (no per-file stats for the key) cannot
     prove disjointness — the fast path must NOT fire."""
@@ -196,7 +196,7 @@ def test_insert_only_fast_path_needs_full_stats_coverage(
         lambda *a, **k: calls.append(1) or orig(*a, **k),
     )
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.range(0, 10).select(
             (F.col("id") + 90_000).alias("k"), F.lit(-1).alias("v")
         ),

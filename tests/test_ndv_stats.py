@@ -46,7 +46,7 @@ def _latest(path):
     return read_manifest(os.path.join(path, "_manifests", "latest.json"))
 
 
-def test_sketches_recorded_and_merge_within_hll_error(spark, duck, tmp_path):
+def test_sketches_recorded_and_merge_within_hll_error(spark, tmp_path):
     """Exact distinct counts vs the log's merged estimate across a
     bootstrap + append + merge history: every estimate within the
     m=128 HLL envelope (~3 standard errors = 28%), small cardinalities
@@ -73,7 +73,7 @@ def test_sketches_recorded_and_merge_within_hll_error(spark, duck, tmp_path):
         ),
     )
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.range(10, 30).select(
             F.col("id").alias("k"), F.lit(-1).alias("v"),
             F.lit("cat-m").alias("s"),
@@ -95,7 +95,7 @@ def test_sketches_recorded_and_merge_within_hll_error(spark, duck, tmp_path):
             )
 
 
-def test_heavy_hitter_summary_captures_skew(spark, duck, tmp_path):
+def test_heavy_hitter_summary_captures_skew(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.range(0, 50_000).select(
         F.when(F.rand(7) < 0.4, F.lit(42))
@@ -115,7 +115,7 @@ def test_heavy_hitter_summary_captures_skew(spark, duck, tmp_path):
     assert top_n == exact
 
 
-def test_advice_ndv_flip_broadcast_to_shuffle(spark, duck, tmp_path):
+def test_advice_ndv_flip_broadcast_to_shuffle(spark, tmp_path):
     """The r11 'done' fixture: a side small enough ON DISK to
     broadcast whose columns are massively redundant — dictionary/RLE
     hides a build table that will not fit. Bytes+ranges alone say
@@ -170,7 +170,7 @@ def test_advice_ndv_flip_broadcast_to_shuffle(spark, duck, tmp_path):
 
 
 def test_advice_flags_skew_and_estimates_cardinality(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     fact = str(tmp_path / "fact")
     dim = str(tmp_path / "dim")
@@ -198,7 +198,7 @@ def test_advice_flags_skew_and_estimates_cardinality(
     assert adv["est_join_rows"] == pytest.approx(60_000, rel=0.3)
 
 
-def test_advice_is_metadata_only(spark, duck, tmp_path, monkeypatch):
+def test_advice_is_metadata_only(spark, tmp_path, monkeypatch):
     """ZERO data I/O at plan time: with every data-reading entry
     point poisoned (DuckDB scans, pyarrow footer/data reads), the
     advice still answers entirely from the log."""
@@ -236,7 +236,7 @@ def test_advice_is_metadata_only(spark, duck, tmp_path, monkeypatch):
 
 
 def test_commit_and_analyze_never_read_data_on_the_driver(
-    spark, duck, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """The r12 'done' gate for the r11 weak mark: with every
     DRIVER-side data-reading entry point poisoned (DuckDB scans,
@@ -277,7 +277,7 @@ def test_commit_and_analyze_never_read_data_on_the_driver(
     assert abs(got["ndv"] - 7_000) / 7_000 <= 0.28
 
 
-def test_collect_ndv_gate_and_bootstrap_is_metadata_only(spark, duck, tmp_path):
+def test_collect_ndv_gate_and_bootstrap_is_metadata_only(spark, tmp_path):
     """Bootstrap NEVER sketches (the listing path stays metadata-only
     — sketching there would data-scan the whole table); appends sketch
     their added file unless collect_ndv=False; analyze_table

@@ -72,7 +72,7 @@ def _high_ndv_table(spark, tmp_path, native_blooms: bool) -> str:
     return path
 
 
-def test_native_blooms_cut_point_delete_to_one_file(spark, duck, tmp_path):
+def test_native_blooms_cut_point_delete_to_one_file(spark, tmp_path):
     path = _high_ndv_table(spark, tmp_path, native_blooms=True)
     # manifest has NO blooms for these files (bootstrap + saturation)
     import json
@@ -81,11 +81,11 @@ def test_native_blooms_cut_point_delete_to_one_file(spark, duck, tmp_path):
     assert not any(f.get("bloom") for f in m["files"])
 
     target = 8 * 1_000 + 3  # lives only in file 3
-    cands = _candidates(spark, duck, path, target)
+    cands = _candidates(spark, path, target)
     assert len(cands) == 1, cands  # ranges admit 8; native blooms cut to 1
     before = read_version(spark, path).count()
     res = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(target,)], "sk long"), commit=True,
     )
     assert res["rows_deleted"] == 1
@@ -97,15 +97,15 @@ def test_native_blooms_cut_point_delete_to_one_file(spark, duck, tmp_path):
 
 
 def test_fail_open_without_native_blooms_still_correct(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = _high_ndv_table(spark, tmp_path, native_blooms=False)
     target = 8 * 1_000 + 3
-    cands = _candidates(spark, duck, path, target)
+    cands = _candidates(spark, path, target)
     assert len(cands) == N_FILES, cands  # ranges alone: every file probed
     before = read_version(spark, path).count()
     res = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(target,)], "sk long"), commit=True,
     )
     assert res["rows_deleted"] == 1
@@ -113,7 +113,7 @@ def test_fail_open_without_native_blooms_still_correct(
     assert read_version(spark, path).count() == before - 1
 
 
-def _candidates(spark, duck, path, target):
+def _candidates(spark, path, target):
     """The probe set a point op would read — the r12 observable."""
     import os as _os
 
@@ -121,7 +121,7 @@ def _candidates(spark, duck, path, target):
         _os.path.join(path, "_manifests", "latest.json")
     )
     zone_maps, _rels, blooms = _snapshot_zone_maps(
-        duck, head, "sk", "BIGINT"
+        head, "sk"
     )
     return _select_candidates(
         spark, zone_maps,
@@ -130,13 +130,13 @@ def _candidates(spark, duck, path, target):
     )
 
 
-def test_native_blooms_prune_merge_candidates(spark, duck, tmp_path):
+def test_native_blooms_prune_merge_candidates(spark, tmp_path):
     path = _high_ndv_table(spark, tmp_path, native_blooms=True)
     target = 8 * 2_000 + 5  # file 5
-    cands = _candidates(spark, duck, path, target)
+    cands = _candidates(spark, path, target)
     assert len(cands) == 1, cands
     res = merge_upsert(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(target, -1)], "sk long, src long"),
     )
     assert res["files_rewritten"] == 1, res
@@ -210,7 +210,7 @@ def _bloomed_files(path):
     return sorted(out)
 
 
-def test_merge_rewrite_keeps_native_blooms(spark, duck, tmp_path):
+def test_merge_rewrite_keeps_native_blooms(spark, tmp_path):
     """The r12 gap: every rewrite shed native blooms, so coverage
     decayed on exactly the churning high-NDV tables that need it. A
     keyed merge's rewritten files must carry blooms again (sized from
@@ -227,7 +227,7 @@ def test_merge_rewrite_keeps_native_blooms(spark, duck, tmp_path):
         [(8 * 1_000 + i, -1) for i in range(0, N_FILES, 2)],
         "sk long, src long",
     )
-    res = merge_upsert(spark, duck, path, "sk", updates)
+    res = merge_upsert(spark, path, "sk", updates)
     assert res["files_rewritten"] == N_FILES // 2, res
     # every live file still carries a native bloom (rewritten + untouched
     # + the appended update file is tiny and optional)
@@ -243,17 +243,17 @@ def test_merge_rewrite_keeps_native_blooms(spark, duck, tmp_path):
     # the capability held: a point lookup in a REWRITTEN file's range
     # still probes exactly one file
     target = 8 * 3_000 + 2  # lives in (rewritten) file 2
-    cands = _candidates(spark, duck, path, target)
+    cands = _candidates(spark, path, target)
     assert len(cands) == 1, cands
 
 
-def test_targeted_delete_rewrite_keeps_native_blooms(spark, duck, tmp_path):
+def test_targeted_delete_rewrite_keeps_native_blooms(spark, tmp_path):
     from data_pipeline_project_spark.sinks.manifest import analyze_table
 
     path = _high_ndv_table(spark, tmp_path, native_blooms=True)
     analyze_table(path, spark=spark)
     res = delete_rows_targeted(
-        spark, duck, path, "sk",
+        spark, path, "sk",
         spark.createDataFrame([(8 * 500 + 3,)], "sk long"), commit=True,
     )
     assert res["files_rewritten"] == 1
@@ -268,7 +268,7 @@ def test_targeted_delete_rewrite_keeps_native_blooms(spark, duck, tmp_path):
 
 
 def test_bulk_rewrite_carries_native_blooms_when_saturated(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """rewrite_table re-clusters the whole table; with per-output NDV
     above the manifest cap the outputs must carry native blooms, and
@@ -297,7 +297,7 @@ def test_bulk_rewrite_carries_native_blooms_when_saturated(
     assert any((f.get("bloom") or {}).get("sk") for f in m["files"])
 
 
-def test_compaction_carries_native_blooms(spark, duck, tmp_path):
+def test_compaction_carries_native_blooms(spark, tmp_path):
     """Several sub-cap files compacting into one SATURATED file is the
     exact moment the manifest bloom disappears — the compacted output
     must pick up a native bloom when clustering is requested."""

@@ -65,7 +65,7 @@ def _mixed_table(spark, tmp_path):
     return path
 
 
-def test_spec_history_and_metadata_only_change(spark, duck, tmp_path):
+def test_spec_history_and_metadata_only_change(spark, tmp_path):
     path = str(tmp_path / "t")
     write_time_partitioned(_events(spark, 0, 288), path, "ts", "day")
     write_versioned_manifest(path)
@@ -83,7 +83,7 @@ def test_spec_history_and_metadata_only_change(spark, duck, tmp_path):
     assert {f["path"] for f in _latest(path)["files"]} == files_v1
 
 
-def test_new_writes_land_hourly_old_dirs_stay(spark, duck, tmp_path):
+def test_new_writes_land_hourly_old_dirs_stay(spark, tmp_path):
     path = _mixed_table(spark, tmp_path)
     dirs = {
         os.path.dirname(f["path"]) for f in _latest(path)["files"]
@@ -96,7 +96,7 @@ def test_new_writes_land_hourly_old_dirs_stay(spark, duck, tmp_path):
     assert read_version(spark, path).count() == 576
 
 
-def test_mixed_era_time_range_prunes_and_matches(spark, duck, tmp_path):
+def test_mixed_era_time_range_prunes_and_matches(spark, tmp_path):
     path = _mixed_table(spark, tmp_path)
     lo = datetime.datetime(2024, 3, 2, 12, 0)
     hi = datetime.datetime(2024, 3, 4, 3, 59)
@@ -124,10 +124,10 @@ def test_mixed_era_time_range_prunes_and_matches(spark, duck, tmp_path):
 
 
 def test_maintenance_advises_migration_and_respec_migrates(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     path = _mixed_table(spark, tmp_path)
-    health = table_health(duck, path)
+    health = table_health(path)
     assert health["partition_eras"]["day"] > 0
     assert health["partition_eras"]["hour"] > 0
     assert health["old_era_files"] == health["partition_eras"]["day"]
@@ -161,7 +161,7 @@ def test_maintenance_advises_migration_and_respec_migrates(
     assert bad.count() == 0
 
     # the backlog shrank by exactly the migrated partition's files
-    health2 = table_health(duck, path)
+    health2 = table_health(path)
     assert health2["old_era_files"] < health["old_era_files"]
 
     # time-range reads keep matching across the three-era layout
@@ -174,7 +174,7 @@ def test_maintenance_advises_migration_and_respec_migrates(
     assert got.count() == want.count() > 0
 
 
-def test_append_requires_spec(spark, duck, tmp_path):
+def test_append_requires_spec(spark, tmp_path):
     path = str(tmp_path / "t")
     write_time_partitioned(_events(spark, 0, 144), path, "ts", "day")
     write_versioned_manifest(path)

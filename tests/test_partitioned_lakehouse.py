@@ -60,7 +60,7 @@ def _ptable(spark, path, n=400, shards=4):
     write_versioned_manifest(path)
 
 
-def test_partitioned_merge_updates_inserts_and_moves_rows(spark, duck, tmp_path):
+def test_partitioned_merge_updates_inserts_and_moves_rows(spark, tmp_path):
     path = str(tmp_path / "t")
     _ptable(spark, path)
 
@@ -73,7 +73,7 @@ def test_partitioned_merge_updates_inserts_and_moves_rows(spark, duck, tmp_path)
         ],
         "k long, v long, shard int",
     )
-    res = merge_upsert(spark, duck, path, "k", updates)
+    res = merge_upsert(spark, path, "k", updates)
     assert res["rows_updated"] == 3 and res["rows_inserted"] == 1
 
     live = read_version(spark, path)
@@ -96,7 +96,7 @@ def test_partitioned_merge_updates_inserts_and_moves_rows(spark, duck, tmp_path)
     assert root_parquets == []
 
 
-def test_partition_column_merge_key_refused(spark, duck, tmp_path):
+def test_partition_column_merge_key_refused(spark, tmp_path):
     """Targeted merge on the partition column stays refused (its values
     live in directory names, not parquet footers — zone maps can't
     prune on it); bulk rewrites are partition-aware as of r10 (below)."""
@@ -105,12 +105,12 @@ def test_partition_column_merge_key_refused(spark, duck, tmp_path):
 
     with pytest.raises(ValueError, match="PARTITION column"):
         merge_upsert(
-            spark, duck, path, "shard",
+            spark, path, "shard",
             spark.createDataFrame([(1, 0, 0)], "k long, v long, shard int"),
         )
 
 
-def test_partitioned_bulk_merge_and_delete(spark, duck, tmp_path):
+def test_partitioned_bulk_merge_and_delete(spark, tmp_path):
     """merge_bulk / delete_bulk on a hive layout: every output file
     lands INSIDE a partition directory, partition-changing updates
     migrate, results match the targeted twin, partition pruning still
@@ -128,7 +128,7 @@ def test_partitioned_bulk_merge_and_delete(spark, duck, tmp_path):
     )
     res = merge_bulk(spark, path, "k", upd)
     assert res["rows_updated"] == 2 and res["rows_inserted"] == 1
-    merge_upsert(spark, duck, twin, "k", upd)
+    merge_upsert(spark, twin, "k", upd)
 
     live = read_version(spark, path)
     want = sorted(
@@ -163,7 +163,7 @@ def test_partitioned_bulk_merge_and_delete(spark, duck, tmp_path):
     } == {2}
 
 
-def test_partitioned_rewrite_table_and_zorder(spark, duck, tmp_path):
+def test_partitioned_rewrite_table_and_zorder(spark, tmp_path):
     """rewrite_table on a hive layout materializes pending schema
     changes and deletion vectors into per-partition, key-clustered
     files; the z-order variant interleaves two data columns. Untouched
@@ -181,7 +181,7 @@ def test_partitioned_rewrite_table_and_zorder(spark, duck, tmp_path):
     _ptable(spark, path)
     rename_column(spark, path, "v", "val")
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(7,)], "k long")
+        spark, path, "k", spark.createDataFrame([(7,)], "k long")
     )
     assert table_dv(path)
 
@@ -212,7 +212,7 @@ def test_partitioned_rewrite_table_and_zorder(spark, duck, tmp_path):
     assert all("/" in f["path"] or os.sep in f["path"] for f in m["files"])
 
 
-def test_partitioned_compact_snapshot(spark, duck, tmp_path):
+def test_partitioned_compact_snapshot(spark, tmp_path):
     """Per-partition compaction: only directories with ≥2 small files
     are touched (one merged file INSIDE each), healthy partitions stay
     byte-identical, rows are preserved exactly, the commit is one
@@ -283,7 +283,7 @@ def test_partitioned_compact_snapshot(spark, duck, tmp_path):
     assert m["txn"]["op"] == "compact" and m["txn"]["row_preserving"]
 
 
-def test_partitioned_change_feeds_carry_partition_columns(spark, duck, tmp_path):
+def test_partitioned_change_feeds_carry_partition_columns(spark, tmp_path):
     from data_pipeline_project_spark.sources.table_changes import (
         TableChangesDataSource,
     )
@@ -293,13 +293,13 @@ def test_partitioned_change_feeds_carry_partition_columns(spark, duck, tmp_path)
     _ptable(spark, path, n=100)
 
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame(
             [(5, -1, 1), (500, -2, 0)], "k long, v long, shard int"
         ),
     )  # v2: one update (delete+insert), one insert
     delete_rows_dv(
-        spark, duck, path, "k", spark.createDataFrame([(6,)], "k long")
+        spark, path, "k", spark.createDataFrame([(6,)], "k long")
     )  # v3: one DV delete
 
     ch2 = snapshot_changes(spark, path, 1, 2)
@@ -329,11 +329,11 @@ def test_partitioned_change_feeds_carry_partition_columns(spark, duck, tmp_path)
     assert {r.shard for r in f1.select("shard").distinct().collect()} == {0, 1, 2, 3}
 
 
-def test_partition_pruning_reaches_the_scan(spark, duck, tmp_path):
+def test_partition_pruning_reaches_the_scan(spark, tmp_path):
     path = str(tmp_path / "t")
     _ptable(spark, path)
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -1, 1)], "k long, v long, shard int"),
     )
 
@@ -346,7 +346,7 @@ def test_partition_pruning_reaches_the_scan(spark, duck, tmp_path):
     assert probe.count() == 100 + 0  # 400/4 rows, k=5's update stayed in shard 1
 
 
-def test_partitioned_op_sequences_match_reference_model(spark, duck, tmp_path):
+def test_partitioned_op_sequences_match_reference_model(spark, tmp_path):
     """Randomized merge/targeted-delete/DV-delete sequences on a
     partitioned table vs a dict model; live state checked after every
     op, every version replayed at the end (time travel)."""
@@ -383,7 +383,7 @@ def test_partitioned_op_sequences_match_reference_model(spark, duck, tmp_path):
                 if op == "merge_bulk":
                     merge_bulk(spark, path, "k", upd)
                 else:
-                    merge_upsert(spark, duck, path, "k", upd)
+                    merge_upsert(spark, path, "k", upd)
                 for k, v, s in rows:
                     model[k] = (v, s)
             elif op == "compact":
@@ -416,7 +416,7 @@ def test_partitioned_op_sequences_match_reference_model(spark, duck, tmp_path):
                         model[k] = (v, s)
             elif op == "delete":
                 delete_rows_targeted(
-                    spark, duck, path, "k",
+                    spark, path, "k",
                     spark.createDataFrame([(k,) for k in keys], "k long"),
                 )
                 write_versioned_manifest(path)
@@ -424,7 +424,7 @@ def test_partitioned_op_sequences_match_reference_model(spark, duck, tmp_path):
                     model.pop(k, None)
             else:
                 delete_rows_dv(
-                    spark, duck, path, "k",
+                    spark, path, "k",
                     spark.createDataFrame([(k,) for k in keys], "k long"),
                 )
                 for k in keys:
@@ -445,7 +445,7 @@ def test_partitioned_op_sequences_match_reference_model(spark, duck, tmp_path):
             assert got == want, f"seed {seed}: version {v} diverged"
 
 
-def test_rewrite_partition_optimizes_one_directory(spark, duck, tmp_path):
+def test_rewrite_partition_optimizes_one_directory(spark, tmp_path):
     """OPTIMIZE WHERE: re-cluster ONE partition — fragmented partition
     re-clustered (disjoint zone maps), sibling partitions
     byte-identical, DV deletes in the partition materialized away,
@@ -469,7 +469,7 @@ def test_rewrite_partition_optimizes_one_directory(spark, duck, tmp_path):
     df.repartition(8).write.partitionBy("shard").parquet(path)
     M.write_versioned_manifest(path)
     M.delete_rows_dv(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(2,), (4,)], "k long"),
     )
     rows_before = sorted(
@@ -497,7 +497,7 @@ def test_rewrite_partition_optimizes_one_directory(spark, duck, tmp_path):
     zm = [
         (mn, mx)
         for f, mn, mx in file_zone_maps(
-            duck, os.path.join(path, "shard=0"), "k", "BIGINT"
+            os.path.join(path, "shard=0"), "k"
         )
         if "opt-" in f
     ]
@@ -555,7 +555,7 @@ def test_rewrite_partition_optimizes_one_directory(spark, duck, tmp_path):
         M.rewrite_partition(spark, path, "k", {"shard": 7})
 
 
-def test_rewrite_partition_zorder(spark, duck, tmp_path):
+def test_rewrite_partition_zorder(spark, tmp_path):
     """Z-ORDER one partition over (k, v): both dimensions' zone maps
     tighten inside the partition, everything else untouched."""
     from pyspark.sql import functions as F2

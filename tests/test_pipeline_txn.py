@@ -72,10 +72,10 @@ def _batch(spark, i, n=50):
 
 
 def test_batches_publish_pair_atomically_and_replay_skips(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     raw, agg = _pair(spark, tmp_path)
-    fn = txn_pipeline_batch_fn(spark, duck, raw, agg, "sensor_id", "s1")
+    fn = txn_pipeline_batch_fn(spark, raw, agg, "sensor_id", "s1")
     for i in range(3):
         fn(_batch(spark, i), i)
     assert snapshot_rowcount(raw) == 1 + 3 * 50
@@ -92,7 +92,7 @@ def test_batches_publish_pair_atomically_and_replay_skips(
     assert snapshot_rowcount(raw) == 1 + 3 * 50
 
     # restart (fresh closure) recovers the mark through the txn stamps
-    fn2 = txn_pipeline_batch_fn(spark, duck, raw, agg, "sensor_id", "s1")
+    fn2 = txn_pipeline_batch_fn(spark, raw, agg, "sensor_id", "s1")
     fn2(_batch(spark, 2), 2)
     assert fn2.results[-1]["replayed"] is True
 
@@ -101,7 +101,7 @@ def test_batches_publish_pair_atomically_and_replay_skips(
     "crash_after", ["raw_prepare", "agg_prepare", "publish"]
 )
 def test_crash_windows_converge_exactly_once(
-    spark, duck, tmp_path, crash_after
+    spark, tmp_path, crash_after
 ):
     """Kill the coordinator at each protocol point, run recovery, then
     REPLAY the batch (what the stream's checkpoint does). The pair
@@ -122,7 +122,7 @@ def test_crash_windows_converge_exactly_once(
         append_snapshot(spark, raw, batch, commit_extra=stamp)
         if crash_after != "raw_prepare":
             merge_upsert(
-                spark, duck, agg, "sensor_id",
+                spark, agg, "sensor_id",
                 sensor_batch_aggregates(batch, "sensor_id"),
             )
         if crash_after == "publish":
@@ -138,7 +138,7 @@ def test_crash_windows_converge_exactly_once(
     M.recover_to_last_manifest(agg)
 
     # the restarted sink replays batch 0
-    fn = txn_pipeline_batch_fn(spark, duck, raw, agg, "sensor_id", "s1")
+    fn = txn_pipeline_batch_fn(spark, raw, agg, "sensor_id", "s1")
     fn(batch, 0)
     published = crash_after == "publish"
     assert fn.results[-1]["replayed"] is published
@@ -149,7 +149,7 @@ def test_crash_windows_converge_exactly_once(
     assert aggs[1] == 10
 
 
-def test_streaming_query_end_to_end(spark, duck, tmp_path):
+def test_streaming_query_end_to_end(spark, tmp_path):
     raw, agg = _pair(spark, tmp_path)
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -166,7 +166,7 @@ def test_streaming_query_end_to_end(spark, duck, tmp_path):
         .json(src)
     )
     q = start_txn_pipeline_stream(
-        spark, duck, source, raw, agg, "sensor_id",
+        spark, source, raw, agg, "sensor_id",
         str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)

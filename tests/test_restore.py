@@ -31,20 +31,20 @@ def _rows(spark, path, v=None):
     return sorted(tuple(r) for r in read_version(spark, path, v).collect())
 
 
-def _build(spark, duck, path):
+def _build(spark, path):
     base = spark.range(0, 1_000).select(
         F.col("id").alias("user_id"), (F.col("id") % 7).alias("v")
     )
     write_range_clustered(base, path, "user_id", 3)
     write_versioned_manifest(path)  # v1
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.range(100, 140).select(
             F.col("id").alias("user_id"), F.lit(-2).alias("v")
         ),
     )  # v2
     delete_rows_dv(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.createDataFrame([(3,), (4,)], "user_id long"),
     )  # v3: DV delete
     append_snapshot(
@@ -56,9 +56,9 @@ def _build(spark, duck, path):
     )  # v4
 
 
-def test_restore_rolls_back_as_new_commit(spark, duck, tmp_path):
+def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build(spark, duck, path)
+    _build(spark, path)
     want = {v: _rows(spark, path, v) for v in (1, 2, 3, 4)}
 
     res = restore_table(path, version=2)
@@ -82,7 +82,7 @@ def test_restore_rolls_back_as_new_commit(spark, duck, tmp_path):
 
     # writers continue on the restored head
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.range(0, 10).select(
             F.col("id").alias("user_id"), F.lit(-8).alias("v")
         ),
@@ -90,13 +90,13 @@ def test_restore_rolls_back_as_new_commit(spark, duck, tmp_path):
     assert read_version(spark, path).where("v = -8").count() == 10
 
 
-def test_restore_is_metadata_only(spark, duck, tmp_path, monkeypatch):
+def test_restore_is_metadata_only(spark, tmp_path, monkeypatch):
     """The commit takes file entries verbatim from the target manifest:
     zero parquet footer reads, no matter the table size."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "t")
-    _build(spark, duck, path)
+    _build(spark, path)
 
     calls = []
     real = pq.read_metadata
@@ -112,9 +112,9 @@ def test_restore_is_metadata_only(spark, duck, tmp_path, monkeypatch):
     assert _rows(spark, path) is not None
 
 
-def test_restore_across_schema_change_clears_the_pin(spark, duck, tmp_path):
+def test_restore_across_schema_change_clears_the_pin(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build(spark, duck, path)
+    _build(spark, path)
     rename_column(spark, path, "v", "val")  # v5: schema pin + rename map
     assert "val" in read_version(spark, path).columns
 
@@ -135,9 +135,9 @@ def test_restore_across_schema_change_clears_the_pin(spark, duck, tmp_path):
     assert "val" in read_version(spark, path).columns
 
 
-def test_restore_guards(spark, duck, tmp_path):
+def test_restore_guards(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build(spark, duck, path)
+    _build(spark, path)
 
     # no-op restore to the current head
     res = restore_table(path, version=4)
@@ -157,7 +157,7 @@ def test_restore_guards(spark, duck, tmp_path):
 
 
 def test_restore_realigns_directory_and_writers_continue(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """The hard case: restore to a version whose files a later merge
     TOMBSTONED. The commit re-pins them, and the directory realigns —
@@ -184,7 +184,7 @@ def test_restore_realigns_directory_and_writers_continue(
     rows_v1 = _rows(spark, path, 1)
     # touch EVERY file's key range so the merge tombstones all of v1
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.createDataFrame(
             [(int(k), -2) for k in range(0, 600, 100)], "user_id long, v long"
         ),
@@ -213,12 +213,12 @@ def test_restore_realigns_directory_and_writers_continue(
 
     # writers on the restored head: merge, DV delete, crash recovery
     merge_upsert(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.createDataFrame([(5, -9), (700, -9)], "user_id long, v long"),
     )
     assert read_version(spark, path).where("v = -9").count() == 2
     delete_rows_dv(
-        spark, duck, path, "user_id",
+        spark, path, "user_id",
         spark.createDataFrame([(10,)], "user_id long"),
     )
     assert read_version(spark, path).where("user_id = 10").count() == 0
@@ -228,9 +228,9 @@ def test_restore_realigns_directory_and_writers_continue(
     assert _os.path.isdir(_os.path.join(path, REMOVED_DIR))
 
 
-def test_restore_by_timestamp(spark, duck, tmp_path):
+def test_restore_by_timestamp(spark, tmp_path):
     path = str(tmp_path / "t")
-    _build(spark, duck, path)
+    _build(spark, path)
     from data_pipeline_project_spark.sinks.manifest import read_manifest
 
     m2 = read_manifest(
@@ -242,7 +242,7 @@ def test_restore_by_timestamp(spark, duck, tmp_path):
     assert _rows(spark, path) == rows_v2
 
 
-def test_restore_on_partitioned_table(spark, duck, tmp_path):
+def test_restore_on_partitioned_table(spark, tmp_path):
     """Restore on a hive-partitioned layout: the realignment moves
     tombstone-resident files back into their PARTITION directories
     (relpaths carry shard=N/), partition-changing merges roll back,
@@ -262,7 +262,7 @@ def test_restore_on_partitioned_table(spark, duck, tmp_path):
     # v2: a merge that updates in place AND moves a row across
     # partitions (7 % 4 == 3 -> shard 0)
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame(
             [(5, -1, 1), (7, -3, 0), (9_999, -4, 3)],
             "k long, v long, shard int",
@@ -291,7 +291,7 @@ def test_restore_on_partitioned_table(spark, duck, tmp_path):
 
     # and a fresh partitioned merge works on the restored head
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(11, -7, 3)], "k long, v long, shard int"),
     )
     assert read_version(spark, path).where("v = -7").count() == 1

@@ -44,10 +44,10 @@ def table(spark, tmp_path):
     return path
 
 
-def _evolve(spark, duck, path):
+def _evolve(spark, path):
     """v2: update 2 rows + insert 1, all carrying a new column w."""
     return merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame(
             [(5, -1, "a"), (6, -2, "b"), (900, -3, "c")],
             "k long, v long, w string",
@@ -57,14 +57,14 @@ def _evolve(spark, duck, path):
 
 
 def test_add_column_is_metadata_only_and_time_travel_keeps_old_schema(
-    spark, duck, table
+    spark, table
 ):
     import pyarrow.parquet as pq
 
     pre_files = {
         f for f in os.listdir(table) if f.endswith(".parquet")
     }
-    res = _evolve(spark, duck, table)
+    res = _evolve(spark, table)
     assert res["rows_updated"] == 2 and res["rows_inserted"] == 1
 
     live = read_version(spark, table)
@@ -92,37 +92,37 @@ def test_add_column_is_metadata_only_and_time_travel_keeps_old_schema(
     # pinned logical schema, inherited by later commits
     assert [f.name for f in table_schema(spark, table).fields] == ["k", "v", "w"]
     merge_upsert(
-        spark, duck, table, "k",
+        spark, table, "k",
         spark.createDataFrame([(10, 99, None)], "k long, v long, w string"),
     )
     latest = read_manifest(os.path.join(table, "_manifests", "latest.json"))
     assert latest.get("schema_json") is not None
 
 
-def test_evolution_contract_errors(spark, duck, table):
+def test_evolution_contract_errors(spark, table):
     with_extra = spark.createDataFrame(
         [(1, 0, "x")], "k long, v long, w string"
     )
     with pytest.raises(ValueError, match="schema mismatch"):
-        merge_upsert(spark, duck, table, "k", with_extra)  # no flag
+        merge_upsert(spark, table, "k", with_extra)  # no flag
     with pytest.raises(ValueError, match="missing existing"):
         merge_upsert(
-            spark, duck, table, "k",
+            spark, table, "k",
             spark.createDataFrame([(1, "x")], "k long, w string"),
             schema_evolution=True,
         )
     with pytest.raises(ValueError, match="targeted path"):
         merge_upsert(
-            spark, duck, table, "k", with_extra,
+            spark, table, "k", with_extra,
             schema_evolution=True, rewrite="bulk",
         )
 
 
-def test_change_feeds_span_the_evolution(spark, duck, table):
+def test_change_feeds_span_the_evolution(spark, table):
     spark.dataSource.register(TableChangesDataSource)
-    _evolve(spark, duck, table)  # v2 evolves
+    _evolve(spark, table)  # v2 evolves
     delete_rows_targeted(
-        spark, duck, table, "k", spark.createDataFrame([(5,), (7,)], "k long")
+        spark, table, "k", spark.createDataFrame([(5,), (7,)], "k long")
     )
     write_versioned_manifest(table)  # v3
 
@@ -148,9 +148,9 @@ def test_change_feeds_span_the_evolution(spark, duck, table):
 
 
 def test_compaction_and_bulk_rewrites_unify_the_evolved_schema(
-    spark, duck, table
+    spark, table
 ):
-    _evolve(spark, duck, table)
+    _evolve(spark, table)
     before = {
         (r.k, r.v, r.w) for r in read_version(spark, table).collect()
     }
@@ -175,7 +175,7 @@ def test_compaction_and_bulk_rewrites_unify_the_evolved_schema(
     delete_bulk(spark, table, "k", spark.createDataFrame([(0,)], "k long"))
     assert read_version(spark, table).where("k = 0").count() == 0
 
-def test_type_widening_evolution(spark, duck, tmp_path):
+def test_type_widening_evolution(spark, tmp_path):
     """int -> bigint and float -> double widen through an evolving
     merge: the pinned logical type widens, old files keep their narrow
     physical type, and the vectorized reader upcasts on read."""
@@ -189,7 +189,7 @@ def test_type_widening_evolution(spark, duck, tmp_path):
     write_versioned_manifest(path)
 
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(3, 10_000_000_000, 2.5)], "k int, v long, x double"),
         schema_evolution=True,
     )
@@ -204,13 +204,13 @@ def test_type_widening_evolution(spark, duck, tmp_path):
     # the widened pin is the table's schema for later strict merges
     assert table_schema(spark, path)["v"].dataType.simpleString() == "bigint"
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(4, 7, 1.0)], "k int, v long, x double"),
     )
     assert read_version(spark, path).where("k = 4").collect()[0].v == 7
 
 
-def test_replication_carries_evolution_across_restart(spark, duck, tmp_path):
+def test_replication_carries_evolution_across_restart(spark, tmp_path):
     """Replica follows the source's schema evolution: a restarted
     replication stream reads the feed under the evolved schema and the
     replica table evolves through the same merge path."""
@@ -227,17 +227,17 @@ def test_replication_carries_evolution_across_restart(spark, duck, tmp_path):
     write_range_clustered(base, src, "k", 2)
     write_versioned_manifest(src)
 
-    q = replicate_table_stream(spark, duck, src, rep, "k", ckpt)
+    q = replicate_table_stream(spark, src, rep, "k", ckpt)
     q.awaitTermination(120)
     assert spark.read.parquet(rep).columns == ["k", "v"]
 
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(1, -1, "tag"), (99, -2, "new")],
                               "k long, v long, w string"),
         schema_evolution=True,
     )
-    q2 = replicate_table_stream(spark, duck, src, rep, "k", ckpt)
+    q2 = replicate_table_stream(spark, src, rep, "k", ckpt)
     q2.awaitTermination(120)
 
     live = read_version(spark, rep)
@@ -252,7 +252,7 @@ def test_replication_carries_evolution_across_restart(spark, duck, tmp_path):
 
 
 def test_drop_column_is_metadata_only_with_resurrection_guard(
-    spark, duck, table
+    spark, table
 ):
     from data_pipeline_project_spark.sinks.manifest import (
         drop_column,
@@ -260,7 +260,7 @@ def test_drop_column_is_metadata_only_with_resurrection_guard(
         table_dropped_cols,
     )
 
-    _evolve(spark, duck, table)             # v2: adds w
+    _evolve(spark, table)             # v2: adds w
     drop_column(spark, table, "w")          # v3: metadata-only drop
 
     live = read_version(spark, table)
@@ -271,14 +271,14 @@ def test_drop_column_is_metadata_only_with_resurrection_guard(
     # re-adding the dropped name is refused until a physical rewrite
     with pytest.raises(ValueError, match="resurrect"):
         merge_upsert(
-            spark, duck, table, "k",
+            spark, table, "k",
             spark.createDataFrame([(1, 0, "zombie")], "k long, v long, w string"),
             schema_evolution=True,
         )
 
     # merges under the narrowed schema work
     merge_upsert(
-        spark, duck, table, "k",
+        spark, table, "k",
         spark.createDataFrame([(2, 42)], "k long, v long"),
     )
     assert read_version(spark, table).where("k = 2").collect()[0].v == 42
@@ -287,7 +287,7 @@ def test_drop_column_is_metadata_only_with_resurrection_guard(
     rewrite_table(spark, table, "k")
     assert table_dropped_cols(table) == []
     merge_upsert(
-        spark, duck, table, "k",
+        spark, table, "k",
         spark.createDataFrame([(1, 0, "fresh")], "k long, v long, w string"),
         schema_evolution=True,
     )
@@ -296,14 +296,14 @@ def test_drop_column_is_metadata_only_with_resurrection_guard(
     assert got == {1: "fresh", 5: None}  # k=5's old 'a' stayed dead
 
 
-def test_rename_column_reads_and_key_guard(spark, duck, table):
+def test_rename_column_reads_and_key_guard(spark, table):
     from data_pipeline_project_spark.sinks.manifest import (
         rename_column,
         rewrite_table,
         table_renames,
     )
 
-    _evolve(spark, duck, table)                      # v2: +w
+    _evolve(spark, table)                      # v2: +w
     rename_column(spark, table, "v", "val")          # v3: non-key rename
 
     live = read_version(spark, table)
@@ -313,7 +313,7 @@ def test_rename_column_reads_and_key_guard(spark, duck, table):
 
     # merge under the logical name works (non-key rename pending)
     merge_upsert(
-        spark, duck, table, "k",
+        spark, table, "k",
         spark.createDataFrame([(7, 1000, None)], "k long, val long, w string"),
     )
     assert read_version(spark, table).where("k = 7").collect()[0].val == 1000
@@ -327,7 +327,7 @@ def test_rename_column_reads_and_key_guard(spark, duck, table):
     rename_column(spark, table, "k", "id")
     with pytest.raises(ValueError, match="pending rename"):
         merge_upsert(
-            spark, duck, table, "id",
+            spark, table, "id",
             spark.createDataFrame([(1, 0, None)], "id long, val long, w string"),
         )
     rewrite_table(spark, table, "id")
@@ -335,7 +335,7 @@ def test_rename_column_reads_and_key_guard(spark, duck, table):
     # is that every LIVE file now physically carries the logical names
     assert table_renames(table) == {"k": "id", "v": "val"}
     merge_upsert(
-        spark, duck, table, "id",
+        spark, table, "id",
         spark.createDataFrame([(1, -7, "x")], "id long, val long, w string"),
     )
     final = read_version(spark, table)
@@ -344,15 +344,15 @@ def test_rename_column_reads_and_key_guard(spark, duck, table):
     assert final.count() == 301
 
 
-def test_rename_chain_and_tablechanges_feed(spark, duck, table):
+def test_rename_chain_and_tablechanges_feed(spark, table):
     from data_pipeline_project_spark.sinks.manifest import rename_column
 
     spark.dataSource.register(TableChangesDataSource)
-    _evolve(spark, duck, table)                      # v2: +w
+    _evolve(spark, table)                      # v2: +w
     rename_column(spark, table, "v", "val")          # v3
     rename_column(spark, table, "val", "metric")     # v4: chain v->val->metric
     merge_upsert(
-        spark, duck, table, "k",
+        spark, table, "k",
         spark.createDataFrame([(5, 123, "zz")], "k long, metric long, w string"),
     )                                                # v5
 
@@ -369,13 +369,13 @@ def test_rename_chain_and_tablechanges_feed(spark, duck, table):
     assert (5, -1, "a", "delete") in v5 and (5, 123, "zz", "insert") in v5
 
 
-def test_deep_clone_carries_evolution_metadata(spark, duck, table, tmp_path):
+def test_deep_clone_carries_evolution_metadata(spark, table, tmp_path):
     from data_pipeline_project_spark.sinks.manifest import (
         clone_snapshot,
         rename_column,
     )
 
-    _evolve(spark, duck, table)
+    _evolve(spark, table)
     rename_column(spark, table, "v", "val")
     dst = str(tmp_path / "clone")
     clone_snapshot(table, dst, deep=True)
@@ -385,7 +385,7 @@ def test_deep_clone_carries_evolution_metadata(spark, duck, table, tmp_path):
     assert cloned.where("k = 5").collect()[0].val == -1
 
 
-def test_rewrite_table_zorder_multi_dimensional(spark, duck, tmp_path):
+def test_rewrite_table_zorder_multi_dimensional(spark, tmp_path):
     """rewrite_table with a column LIST interleaves a z-order key:
     after the rewrite, zone maps prune on BOTH dimensions (each file
     covers a fraction of each column's range), content is unchanged,
@@ -420,7 +420,7 @@ def test_rewrite_table_zorder_multi_dimensional(spark, duck, tmp_path):
     def avg_span(col, full):
         zm = [
             (mn, mx)
-            for _, mn, mx in file_zone_maps(duck, path, col)
+            for _, mn, mx in file_zone_maps(path, col)
             if mn is not None
         ]
         return sum(mx - mn for mn, mx in zm) / len(zm) / full
@@ -429,7 +429,7 @@ def test_rewrite_table_zorder_multi_dimensional(spark, duck, tmp_path):
     assert avg_span("y", 200) < 0.6
 
 
-def test_replication_follows_type_widening(spark, duck, tmp_path):
+def test_replication_follows_type_widening(spark, tmp_path):
     """A source that WIDENED a type (int -> bigint) ships no new column
     names, so a name-superset check alone would run the replica merge
     non-evolving and cast feed values down to the replica's narrow type
@@ -449,8 +449,7 @@ def test_replication_follows_type_widening(spark, duck, tmp_path):
     write_range_clustered(base, src, "k", 2)
     write_versioned_manifest(src)
 
-    q = replicate_table_stream(spark, duck, src, rep, "k", ckpt,
-                               duck_type="INTEGER")
+    q = replicate_table_stream(spark, src, rep, "k", ckpt)
     q.awaitTermination(120)
     assert {
         f.name: f.dataType.simpleString()
@@ -460,12 +459,11 @@ def test_replication_follows_type_widening(spark, duck, tmp_path):
     # source widens v to bigint with a value no int can hold
     big = 10_000_000_000
     merge_upsert(
-        spark, duck, src, "k",
+        spark, src, "k",
         spark.createDataFrame([(3, big)], "k int, v long"),
         schema_evolution=True,
     )
-    q2 = replicate_table_stream(spark, duck, src, rep, "k", ckpt,
-                                duck_type="INTEGER")
+    q2 = replicate_table_stream(spark, src, rep, "k", ckpt)
     q2.awaitTermination(120)
 
     live = read_version(spark, rep)

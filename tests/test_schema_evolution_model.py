@@ -49,7 +49,7 @@ def _render(cols, rows):
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
 def test_random_evolution_sequences_match_reference_model(
-    spark, duck, tmp_path, seed
+    spark, tmp_path, seed
 ):
     rng = random.Random(seed)
     path = str(tmp_path / "t")
@@ -100,7 +100,7 @@ def test_random_evolution_sequences_match_reference_model(
             for v in batch_vals
         ]
         res = merge_upsert(
-            spark, duck, path, key_name,
+            spark, path, key_name,
             spark.createDataFrame(data, schema),
             schema_evolution=evolve,
         )
@@ -130,7 +130,7 @@ def test_random_evolution_sequences_match_reference_model(
         elif op == "delete":
             present = rng.sample(sorted(rows), min(rng.randrange(1, 15), len(rows)))
             delete_rows_targeted(
-                spark, duck, path, key_name,
+                spark, path, key_name,
                 spark.createDataFrame([(int(k),) for k in present], f"{key_name} long"),
             )
             for k in present:
@@ -191,7 +191,7 @@ def test_random_evolution_sequences_match_reference_model(
             # the guard must fire before materialization...
             with pytest.raises(ValueError, match="pending rename"):
                 merge_upsert(
-                    spark, duck, path, key_name,
+                    spark, path, key_name,
                     spark.createDataFrame(
                         [tuple(rows[next(iter(rows))].get(cid) for cid, _ in cols)],
                         ddl(),

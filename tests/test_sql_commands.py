@@ -53,9 +53,9 @@ def twins(spark, tmp_path):
     return a, b
 
 
-def test_merge_into_equals_merge_upsert(spark, duck, twins):
+def test_merge_into_equals_merge_upsert(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     spark.createDataFrame(
         [(5, -1), (9000, -2)], "k long, v long"
     ).createOrReplaceTempView("updates")
@@ -65,19 +65,19 @@ def test_merge_into_equals_merge_upsert(spark, duck, twins):
         "WHEN NOT MATCHED THEN INSERT *"
     )
     merge_upsert(
-        spark, duck, b, "k",
+        spark, b, "k",
         spark.createDataFrame([(5, -1), (9000, -2)], "k long, v long"),
     )
     assert _rows(spark, a) == _rows(spark, b)
     assert res["rows_updated"] == 1 if "rows_updated" in res else True
 
 
-def test_delete_in_list_equals_targeted_delete(spark, duck, twins):
+def test_delete_in_list_equals_targeted_delete(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     lh.sql("DELETE FROM t WHERE k IN (3, 5, 250)")
     delete_rows_targeted(
-        spark, duck, b, "k",
+        spark, b, "k",
         spark.createDataFrame([(3,), (5,), (250,)], "k long"),
         commit=True,
     )
@@ -85,13 +85,13 @@ def test_delete_in_list_equals_targeted_delete(spark, duck, twins):
     # and the point form
     lh.sql("DELETE FROM t WHERE k = 7")
     delete_rows_targeted(
-        spark, duck, b, "k",
+        spark, b, "k",
         spark.createDataFrame([(7,)], "k long"), commit=True,
     )
     assert _rows(spark, a) == _rows(spark, b)
 
 
-def test_optimize_equals_compact_snapshot(spark, duck, twins):
+def test_optimize_equals_compact_snapshot(spark, twins):
     a, b = twins
     for p in (a, b):  # fragment both with small appends
         for i in range(3):
@@ -101,14 +101,14 @@ def test_optimize_equals_compact_snapshot(spark, duck, twins):
                     [(10_000 + i, 0)], "k long, v long"
                 ).coalesce(1),
             )
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     ra = lh.sql("OPTIMIZE t")
     rb = compact_snapshot(spark, b)
     assert _rows(spark, a) == _rows(spark, b)
     assert ra["files_compacted"] == rb["files_compacted"] > 0
 
 
-def test_vacuum_retain_equals_vacuum(spark, duck, twins):
+def test_vacuum_retain_equals_vacuum(spark, twins):
     a, b = twins
     for p in (a, b):
         append_snapshot(
@@ -121,7 +121,7 @@ def test_vacuum_retain_equals_vacuum(spark, duck, twins):
             spark.createDataFrame([(10_001, 0)], "k long, v long")
             .coalesce(1),
         )
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     lh.sql("VACUUM t RETAIN 1 VERSIONS")
     vacuum(b, keep_versions=1)
     assert snapshot_versions(a) == snapshot_versions(b) or len(
@@ -130,9 +130,9 @@ def test_vacuum_retain_equals_vacuum(spark, duck, twins):
     assert _rows(spark, a) == _rows(spark, b)
 
 
-def test_analyze_table_equals_python_analyze(spark, duck, twins):
+def test_analyze_table_equals_python_analyze(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     ra = lh.sql("ANALYZE TABLE t COMPUTE STATISTICS")
     rb = analyze_table(b)
     assert ra["files_analyzed"] == rb["files_analyzed"] == 2
@@ -142,14 +142,14 @@ def test_analyze_table_equals_python_analyze(spark, duck, twins):
     )
 
 
-def test_describe_history_and_detail(spark, duck, twins):
+def test_describe_history_and_detail(spark, twins):
     a, _ = twins
     append_snapshot(
         spark, a,
         spark.createDataFrame([(10_000, 0)], "k long, v long")
         .coalesce(1),
     )
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     hist_df = lh.sql("DESCRIBE HISTORY t LIMIT 5")
     hist_py = table_history(a, limit=5)
     got = [(r.version, r.operation) for r in hist_df.collect()]
@@ -159,7 +159,7 @@ def test_describe_history_and_detail(spark, duck, twins):
     assert detail.n_files >= 1 and detail.live_rows == 401
 
 
-def test_restore_version_as_of(spark, duck, twins):
+def test_restore_version_as_of(spark, twins):
     a, b = twins
     for p in (a, b):
         append_snapshot(
@@ -168,16 +168,16 @@ def test_restore_version_as_of(spark, duck, twins):
             .coalesce(1),
         )
     target = snapshot_versions(a)[0]
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     lh.sql(f"RESTORE TABLE t TO VERSION AS OF {target}")
     restore_table(b, version=target)
     assert _rows(spark, a) == _rows(spark, b)
     assert read_version(spark, a).count() == 400
 
 
-def test_select_passthrough_reads_snapshots(spark, duck, twins):
+def test_select_passthrough_reads_snapshots(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a, "u": b}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a, "u": b})
     got = lh.sql(
         "SELECT t.v AS v, count(*) AS n FROM t JOIN u ON t.k = u.k "
         "GROUP BY t.v ORDER BY v"
@@ -191,7 +191,7 @@ def test_select_passthrough_reads_snapshots(spark, duck, twins):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_sql_transaction_raw_agg_atomic_pair(spark, duck, tmp_path):
+def test_sql_transaction_raw_agg_atomic_pair(spark, tmp_path):
     """The reference's pipeline commit (raw INSERT + agg UPSERT in one
     MySQL transaction, pipeline.py:246-259) as two SQL statements in
     one atomic lakehouse transaction."""
@@ -201,7 +201,7 @@ def test_sql_transaction_raw_agg_atomic_pair(spark, duck, tmp_path):
         [(0, 10), (1, 20)], "k long, total long"
     ).coalesce(1).write.parquet(agg)
     write_versioned_manifest(agg)
-    lh = LakehouseSQL(spark, {"raw": raw, "agg": agg}, duck=duck)
+    lh = LakehouseSQL(spark, {"raw": raw, "agg": agg})
 
     spark.createDataFrame(
         [(9000, 1)], "k long, v long"
@@ -233,9 +233,9 @@ def test_sql_transaction_raw_agg_atomic_pair(spark, duck, tmp_path):
     assert 9001 not in {r.k for r in read_version(spark, raw).collect()}
 
 
-def test_grammar_errors_are_loud(spark, duck, twins):
+def test_grammar_errors_are_loud(spark, twins):
     a, _ = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     with pytest.raises(SQLCommandError, match="unknown table"):
         lh.sql("OPTIMIZE nope")
     with pytest.raises(SQLCommandError, match="UPDATE grammar"):
@@ -255,9 +255,9 @@ def test_grammar_errors_are_loud(spark, duck, twins):
 # -- r13: the finished write surface ------------------------------------
 
 
-def test_update_equals_update_where(spark, duck, twins):
+def test_update_equals_update_where(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     res = lh.sql("UPDATE t SET v = v * 10 + 1 WHERE v IN (2, 4) AND k < 100")
     M.update_where(
         spark, b, {"v": "v * 10 + 1"}, "v IN (2, 4) AND k < 100"
@@ -266,7 +266,7 @@ def test_update_equals_update_where(spark, duck, twins):
     assert _rows(spark, a) == _rows(spark, b)
 
 
-def test_update_multi_assignment_sees_pre_update_row(spark, duck, tmp_path):
+def test_update_multi_assignment_sees_pre_update_row(spark, tmp_path):
     """Standard SQL UPDATE: every SET expression evaluates against the
     OLD row — `SET k = v, v = k` swaps, never chains."""
     t = str(tmp_path / "swap")
@@ -274,14 +274,14 @@ def test_update_multi_assignment_sees_pre_update_row(spark, duck, tmp_path):
         [(1, 10), (2, 20)], "k long, v long"
     ).coalesce(1).write.parquet(t)
     write_versioned_manifest(t)
-    lh = LakehouseSQL(spark, {"t": t}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": t})
     lh.sql("UPDATE t SET k = v, v = k WHERE k = 1")
     assert _rows(spark, t) == [(2, 20), (10, 1)]
 
 
-def test_delete_arbitrary_predicate_equals_delete_where(spark, duck, twins):
+def test_delete_arbitrary_predicate_equals_delete_where(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     res = lh.sql("DELETE FROM t WHERE v >= 5 AND k BETWEEN 10 AND 90")
     M.delete_where(spark, b, "v >= 5 AND k BETWEEN 10 AND 90")
     assert res["rows_deleted"] > 0
@@ -294,9 +294,9 @@ def test_delete_arbitrary_predicate_equals_delete_where(spark, duck, twins):
     )
 
 
-def test_insert_values_and_select_equal_append_snapshot(spark, duck, twins):
+def test_insert_values_and_select_equal_append_snapshot(spark, twins):
     a, b = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     lh.sql("INSERT INTO t VALUES (9000, 1), (9001, 2)")
     append_snapshot(
         spark, b,
@@ -313,11 +313,11 @@ def test_insert_values_and_select_equal_append_snapshot(spark, duck, twins):
     assert _rows(spark, a) == _rows(spark, b)
 
 
-def test_select_version_as_of_reads_pre_merge_snapshot(spark, duck, twins):
+def test_select_version_as_of_reads_pre_merge_snapshot(spark, twins):
     """The item-1 'done' bar: a time-travel SELECT reads a PRE-MERGE
     version while the head reflects the merge."""
     a, _ = twins
-    lh = LakehouseSQL(spark, {"t": a}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": a})
     before = lh.sql("SELECT k, v FROM t ORDER BY k").collect()
     v0 = snapshot_versions(a)[-1]
     spark.createDataFrame(
@@ -343,13 +343,13 @@ def test_select_version_as_of_reads_pre_merge_snapshot(spark, duck, twins):
     assert n_old == len(before)
 
 
-def test_create_drop_table_through_sql(spark, duck, tmp_path):
+def test_create_drop_table_through_sql(spark, tmp_path):
     from data_pipeline_project_spark.sinks.catalog import TableCatalog
 
     t = str(tmp_path / "t")
     _table(spark, t)
     lh = LakehouseSQL(
-        spark, TableCatalog(str(tmp_path / "cat")), duck=duck
+        spark, TableCatalog(str(tmp_path / "cat"))
     )
     lh.sql(f"CREATE TABLE t LOCATION '{t}'")
     assert lh.sql("SELECT count(*) AS n FROM t").collect()[0].n == 400
@@ -358,7 +358,7 @@ def test_create_drop_table_through_sql(spark, duck, tmp_path):
     lh.sql(f"CREATE TABLE IF NOT EXISTS t LOCATION '{t}'")  # no-op
     # a SECOND front door over the same catalog root resolves the name
     lh2 = LakehouseSQL(
-        spark, TableCatalog(str(tmp_path / "cat")), duck=duck
+        spark, TableCatalog(str(tmp_path / "cat"))
     )
     assert lh2.sql("SELECT count(*) AS n FROM t").collect()[0].n == 400
     lh2.sql("DROP TABLE t")
@@ -370,12 +370,12 @@ def test_create_drop_table_through_sql(spark, duck, tmp_path):
     lh.sql("DROP TABLE IF EXISTS t")  # no-op, loud form gone
 
 
-def test_sql_transaction_takes_update_and_insert(spark, duck, tmp_path):
+def test_sql_transaction_takes_update_and_insert(spark, tmp_path):
     """r13: the atomic statement list accepts the new write forms."""
     raw, agg = str(tmp_path / "raw"), str(tmp_path / "agg")
     _table(spark, raw)
     _table(spark, agg, n=10)
-    lh = LakehouseSQL(spark, {"raw": raw, "agg": agg}, duck=duck)
+    lh = LakehouseSQL(spark, {"raw": raw, "agg": agg})
     lh.transaction(
         [
             "INSERT INTO raw VALUES (8000, 3)",

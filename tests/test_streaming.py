@@ -680,7 +680,7 @@ def test_stateful_dedup_first_seen_across_batches(spark, tmp_path):
     assert by_text["alpha"] in (1, 4)
 
 
-def test_cdc_apply_stream_merges_and_replays_idempotently(spark, duck, tmp_path):
+def test_cdc_apply_stream_merges_and_replays_idempotently(spark, tmp_path):
     """Streaming CDC apply: change files stream in, each micro-batch
     merges into the versioned table (last-write-wins within a batch),
     and re-running the drained stream (same checkpoint) is a no-op."""
@@ -715,7 +715,7 @@ def test_cdc_apply_stream_merges_and_replays_idempotently(spark, duck, tmp_path)
     )
     ckpt = str(tmp_path / "ckpt")
     q = apply_cdc_stream(
-        spark, duck, changes, target, "user_id", "seq", ckpt
+        spark, changes, target, "user_id", "seq", ckpt
     )
     q.awaitTermination(120)
     assert q.applied_stats and q.applied_stats[0]["rows_updated"] == 1
@@ -728,7 +728,7 @@ def test_cdc_apply_stream_merges_and_replays_idempotently(spark, duck, tmp_path)
 
     # drained replay with the same checkpoint: no new batch, no version
     changes2 = spark.readStream.schema(schema).json(str(drop))
-    q2 = apply_cdc_stream(spark, duck, changes2, target, "user_id", "seq", ckpt)
+    q2 = apply_cdc_stream(spark, changes2, target, "user_id", "seq", ckpt)
     q2.awaitTermination(120)
     assert not q2.applied_stats
     assert snapshot_versions(target)[-1] == v_after
@@ -737,7 +737,7 @@ def test_cdc_apply_stream_merges_and_replays_idempotently(spark, duck, tmp_path)
     with open(drop / "c2.jsonl", "w") as fh:
         fh.write(json.dumps({"user_id": 5, "v": -9, "seq": 4}) + "\n")
     changes3 = spark.readStream.schema(schema).json(str(drop))
-    q3 = apply_cdc_stream(spark, duck, changes3, target, "user_id", "seq", ckpt)
+    q3 = apply_cdc_stream(spark, changes3, target, "user_id", "seq", ckpt)
     q3.awaitTermination(120)
     assert q3.applied_stats and q3.applied_stats[0]["rows_updated"] == 1
     assert spark.read.parquet(target).where("user_id = 5").first().v == -9
@@ -1150,7 +1150,7 @@ def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
             spark.conf.set(provider_key, prev)
 
 
-def test_cdc_apply_with_delete_markers_dv_mode(spark, duck, tmp_path):
+def test_cdc_apply_with_delete_markers_dv_mode(spark, tmp_path):
     """Full CDC feed: delete markers ride the change stream and apply
     as deletion vectors before the batch's upserts merge; a delete and
     a later update to the same key collapse last-write-wins; drained
@@ -1191,8 +1191,7 @@ def test_cdc_apply_with_delete_markers_dv_mode(spark, duck, tmp_path):
     schema = "user_id BIGINT, v BIGINT, seq BIGINT, deleted BOOLEAN"
     ckpt = str(tmp_path / "ckpt")
     q = apply_cdc_stream(
-        spark, duck,
-        spark.readStream.schema(schema).json(str(drop)),
+        spark, spark.readStream.schema(schema).json(str(drop)),
         target, "user_id", "seq", ckpt,
         delete_col="deleted", delete_mode="dv",
     )
@@ -1211,8 +1210,7 @@ def test_cdc_apply_with_delete_markers_dv_mode(spark, duck, tmp_path):
 
     # drained replay: no new batch, no version
     q2 = apply_cdc_stream(
-        spark, duck,
-        spark.readStream.schema(schema).json(str(drop)),
+        spark, spark.readStream.schema(schema).json(str(drop)),
         target, "user_id", "seq", ckpt,
         delete_col="deleted", delete_mode="dv",
     )
@@ -1225,8 +1223,7 @@ def test_cdc_apply_with_delete_markers_dv_mode(spark, duck, tmp_path):
         fh.write(json.dumps(
             {"user_id": 5, "v": None, "seq": 6, "deleted": True}) + "\n")
     q3 = apply_cdc_stream(
-        spark, duck,
-        spark.readStream.schema(schema).json(str(drop)),
+        spark, spark.readStream.schema(schema).json(str(drop)),
         target, "user_id", "seq", ckpt,
         delete_col="deleted", delete_mode="dv",
     )
@@ -1235,7 +1232,7 @@ def test_cdc_apply_with_delete_markers_dv_mode(spark, duck, tmp_path):
     assert read_version(spark, target).count() == 999
 
 
-def test_cdc_apply_null_delete_flags_are_upserts(spark, duck, tmp_path):
+def test_cdc_apply_null_delete_flags_are_upserts(spark, tmp_path):
     """A CDC feed that leaves the delete flag NULL on upsert rows must
     not lose those changes: where(flag) and where(~flag) each drop
     NULL-flag rows, so both branches coalesce the flag to false."""
@@ -1271,8 +1268,7 @@ def test_cdc_apply_null_delete_flags_are_upserts(spark, duck, tmp_path):
 
     schema = "user_id BIGINT, v BIGINT, seq BIGINT, deleted BOOLEAN"
     q = apply_cdc_stream(
-        spark, duck,
-        spark.readStream.schema(schema).json(str(drop)),
+        spark, spark.readStream.schema(schema).json(str(drop)),
         target, "user_id", "seq", str(tmp_path / "ckpt"),
         delete_col="deleted", delete_mode="dv",
     )

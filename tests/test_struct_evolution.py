@@ -53,7 +53,7 @@ def _events(spark, n0, n1, salt=0):
     )
 
 
-def test_struct_leaf_stats_recorded_and_prune(spark, duck, tmp_path):
+def test_struct_leaf_stats_recorded_and_prune(spark, tmp_path):
     path = str(tmp_path / "t")
     _events(spark, 0, 20_000).repartitionByRange(
         4, F.col("props.x")
@@ -80,7 +80,7 @@ def test_struct_leaf_stats_recorded_and_prune(spark, duck, tmp_path):
     )
 
 
-def test_list_and_map_internals_stay_stats_excluded(spark, duck, tmp_path):
+def test_list_and_map_internals_stay_stats_excluded(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(0, 100).select(
         F.col("id").alias("k"),
@@ -93,7 +93,7 @@ def test_list_and_map_internals_stay_stats_excluded(spark, duck, tmp_path):
     assert not any("list" in c or "key_value" in c for c in st)
 
 
-def test_add_struct_field_metadata_only(spark, duck, tmp_path):
+def test_add_struct_field_metadata_only(spark, tmp_path):
     path = str(tmp_path / "t")
     _events(spark, 0, 500).coalesce(1).write.parquet(path)
     write_versioned_manifest(path)
@@ -130,7 +130,7 @@ def test_add_struct_field_metadata_only(spark, duck, tmp_path):
     assert v1.schema["props"].dataType.fieldNames() == ["x", "tag"]
 
 
-def test_rename_struct_field_coalesces_across_eras(spark, duck, tmp_path):
+def test_rename_struct_field_coalesces_across_eras(spark, tmp_path):
     path = str(tmp_path / "t")
     _events(spark, 0, 300).coalesce(1).write.parquet(path)
     write_versioned_manifest(path)
@@ -168,7 +168,7 @@ def test_rename_struct_field_coalesces_across_eras(spark, duck, tmp_path):
     assert read_version(spark, path).count() == 350
 
 
-def test_struct_rename_guards(spark, duck, tmp_path):
+def test_struct_rename_guards(spark, tmp_path):
     path = str(tmp_path / "t")
     _events(spark, 0, 50).coalesce(1).write.parquet(path)
     write_versioned_manifest(path)
@@ -188,7 +188,7 @@ def test_struct_rename_guards(spark, duck, tmp_path):
     assert df.where(F.col("props.z").isNotNull()).count() == 50
 
 
-def test_nested_ops_in_schema_evolution_model(spark, duck, tmp_path):
+def test_nested_ops_in_schema_evolution_model(spark, tmp_path):
     """Random mixed top-level/nested evolution sequences vs a dict
     model: after every step the full-history read matches the model's
     expected column/field shape and the coalesced values survive."""

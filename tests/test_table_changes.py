@@ -28,7 +28,7 @@ from data_pipeline_project_spark.sources.table_changes import (
 
 
 @pytest.fixture()
-def cdf_table(spark, duck, tmp_path):
+def cdf_table(spark, tmp_path):
     """A table with three commits: v1 initial, v2 merge (1 update +
     1 insert), v3 delete (2 rows)."""
     spark.dataSource.register(TableChangesDataSource)
@@ -39,17 +39,17 @@ def cdf_table(spark, duck, tmp_path):
     write_range_clustered(base, path, "k", 3)
     write_versioned_manifest(path)
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(5, -1), (900, -2)], "k long, v long"),
     )
     delete_rows_targeted(
-        spark, duck, path, "k", spark.createDataFrame([(10,), (11,)], "k long")
+        spark, path, "k", spark.createDataFrame([(10,), (11,)], "k long")
     )
     write_versioned_manifest(path)
     return path
 
 
-def test_batch_feed_matches_snapshot_changes(spark, duck, cdf_table):
+def test_batch_feed_matches_snapshot_changes(spark, cdf_table):
     feed = spark.read.format("tablechanges").option("path", cdf_table).load()
     assert feed.schema.simpleString() == (
         "struct<k:bigint,v:bigint,_change_type:string,_commit_version:bigint>"
@@ -84,7 +84,7 @@ def test_batch_feed_matches_snapshot_changes(spark, duck, cdf_table):
 
 
 def test_stream_drains_history_and_resumes_from_checkpoint(
-    spark, duck, cdf_table, tmp_path
+    spark, cdf_table, tmp_path
 ):
     ckpt = str(tmp_path / "ck")
     out = str(tmp_path / "out")
@@ -112,7 +112,7 @@ def test_stream_drains_history_and_resumes_from_checkpoint(
 
     # new commit, restart from the SAME checkpoint: only v4 arrives
     merge_upsert(
-        spark, duck, cdf_table, "k",
+        spark, cdf_table, "k",
         spark.createDataFrame([(7, -9)], "k long, v long"),
     )
     drain()
@@ -130,7 +130,7 @@ def test_stream_drains_history_and_resumes_from_checkpoint(
     assert v4 == {(7, 7 % 7, "delete"), (7, -9, "insert")}
 
 
-def test_unconsumed_version_vacuumed_fails_loudly(spark, duck, cdf_table, tmp_path):
+def test_unconsumed_version_vacuumed_fails_loudly(spark, cdf_table, tmp_path):
     """Vacuum dropping a version the stream has not consumed must make
     the read FAIL, not silently skip history — the time-travel
     contract applied to streams."""
@@ -159,7 +159,7 @@ def test_schema_inference_requires_known_types_or_option(spark, tmp_path):
     assert feed.count() == 3
 
 
-def test_cdf_replication_loop(spark, duck, cdf_table, tmp_path):
+def test_cdf_replication_loop(spark, cdf_table, tmp_path):
     """Close the loop: a second table built ONLY from the first's
     change feed must converge to the source's exact live state —
     per version, deletes applied by key, then inserts merged. This is
@@ -179,16 +179,16 @@ def test_cdf_replication_loop(spark, duck, cdf_table, tmp_path):
             write_versioned_manifest(replica)
             continue
         if dels.count():
-            delete_rows_targeted(spark, duck, replica, "k", dels)
+            delete_rows_targeted(spark, replica, "k", dels)
             write_versioned_manifest(replica)
         if ins.count():
-            merge_upsert(spark, duck, replica, "k", ins)
+            merge_upsert(spark, replica, "k", ins)
     src_rows = sorted((r.k, r.v) for r in spark.read.parquet(cdf_table).collect())
     rep_rows = sorted((r.k, r.v) for r in spark.read.parquet(replica).collect())
     assert rep_rows == src_rows
 
 
-def test_replicate_table_stream_end_to_end(spark, duck, cdf_table, tmp_path):
+def test_replicate_table_stream_end_to_end(spark, cdf_table, tmp_path):
     """Product-level replication: replicate_table_stream drains the
     source history, converges the replica, resumes from its checkpoint
     consuming only new commits, and leaves the replica a first-class
@@ -202,7 +202,7 @@ def test_replicate_table_stream_end_to_end(spark, duck, cdf_table, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     def run():
-        q = replicate_table_stream(spark, duck, cdf_table, replica, "k", ckpt)
+        q = replicate_table_stream(spark, cdf_table, replica, "k", ckpt)
         assert q.awaitTermination(240), "replication did not drain"
         return q
 
@@ -214,11 +214,11 @@ def test_replicate_table_stream_end_to_end(spark, duck, cdf_table, tmp_path):
 
     # two more source commits; restart applies ONLY them
     merge_upsert(
-        spark, duck, cdf_table, "k",
+        spark, cdf_table, "k",
         spark.createDataFrame([(7, -9), (901, -3)], "k long, v long"),
     )
     delete_rows_targeted(
-        spark, duck, cdf_table, "k", spark.createDataFrame([(900,)], "k long")
+        spark, cdf_table, "k", spark.createDataFrame([(900,)], "k long")
     )
     write_versioned_manifest(cdf_table)
 
@@ -234,7 +234,7 @@ def test_replicate_table_stream_end_to_end(spark, duck, cdf_table, tmp_path):
     assert feed.where(F.col("_change_type") == "delete").count() >= 3
 
 
-def test_sharded_step_diff_equals_unsharded(spark, duck, cdf_table):
+def test_sharded_step_diff_equals_unsharded(spark, cdf_table):
     """shards=N splits one commit's diff across tasks via a stable row
     hash — a multiset diff decomposes exactly under any deterministic
     row partitioning, so the sharded feed must be row-identical."""
@@ -252,7 +252,7 @@ def test_sharded_step_diff_equals_unsharded(spark, duck, cdf_table):
     assert one.exceptAll(sharded).count() == 0
 
 
-def test_null_valued_rows_survive_the_feed(spark, duck, tmp_path):
+def test_null_valued_rows_survive_the_feed(spark, tmp_path):
     """Regression: a null in a BIGINT column used to die in the diff
     step — pandas groupby(dropna=False) rewrites None group keys as
     float NaN, which cannot re-enter an int64 arrow column. Nulls must
@@ -265,7 +265,7 @@ def test_null_valued_rows_survive_the_feed(spark, duck, tmp_path):
     write_range_clustered(base, path, "k", 1)
     write_versioned_manifest(path)                       # v1: insert-only path
     merge_upsert(
-        spark, duck, path, "k",
+        spark, path, "k",
         spark.createDataFrame([(2, 20), (4, None)], "k long, v long"),
     )                                                    # v2: groupby-diff path
 

@@ -82,7 +82,7 @@ def test_tag_create_resolve_drop(spark, tmp_path):
         read_version(spark, p, version=v1, tag="release-1")
 
 
-def test_tagged_version_is_vacuum_exempt(spark, duck, tmp_path):
+def test_tagged_version_is_vacuum_exempt(spark, tmp_path):
     """The core guarantee: churn + aggressive vacuum may drop every
     untagged old version, but the tagged snapshot replays
     byte-identically (manifest kept, tombstoned bytes kept)."""
@@ -94,11 +94,11 @@ def test_tagged_version_is_vacuum_exempt(spark, duck, tmp_path):
     # churn: merges rewrite files out from under the tagged version
     for i in range(3):
         merge_upsert(
-            spark, duck, p, "k",
+            spark, p, "k",
             spark.createDataFrame([(i, -i - 1)], "k long, v long"),
         )
     delete_rows_targeted(
-        spark, duck, p, "k",
+        spark, p, "k",
         spark.createDataFrame([(199,)], "k long"), commit=True,
     )
     rep = vacuum(p, keep_versions=1)
@@ -118,7 +118,7 @@ def test_tagged_version_is_vacuum_exempt(spark, duck, tmp_path):
     assert tagged_v not in snapshot_versions(p)
 
 
-def test_tag_survives_log_compaction_and_restore(spark, duck, tmp_path):
+def test_tag_survives_log_compaction_and_restore(spark, tmp_path):
     p = str(tmp_path / "t")
     _table(spark, p)
     tag_snapshot(p, "base")
@@ -136,7 +136,7 @@ def test_tag_survives_log_compaction_and_restore(spark, duck, tmp_path):
     assert _state(spark, p) == base_state
 
 
-def test_tag_vacuum_random_interleavings(spark, duck, tmp_path):
+def test_tag_vacuum_random_interleavings(spark, tmp_path):
     """Randomized tag/churn/vacuum/compact interleavings: every LIVE
     tag must replay the exact state recorded when it was created, at
     every step, under any retention policy — the model-checker shape
@@ -169,7 +169,7 @@ def test_tag_vacuum_random_interleavings(spark, duck, tmp_path):
             next_key += 1
         elif op == "merge":
             merge_upsert(
-                spark, duck, p, "k",
+                spark, p, "k",
                 spark.createDataFrame(
                     [(rng.randrange(100), -step)], "k long, v long"
                 ),
@@ -182,13 +182,13 @@ def test_tag_vacuum_random_interleavings(spark, duck, tmp_path):
             assert _state(spark, p, tag=name) == snap, (step, op, name)
 
 
-def test_sql_tag_surface(spark, duck, tmp_path):
+def test_sql_tag_surface(spark, tmp_path):
     """SELECT ... t TAG AS OF 'name' and RESTORE ... TO TAG AS OF."""
     from data_pipeline_project_spark.sinks.sql_commands import LakehouseSQL
 
     p = str(tmp_path / "t")
     _table(spark, p)
-    lh = LakehouseSQL(spark, {"t": p}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": p})
     tag_snapshot(p, "gold")
     lh.sql("INSERT INTO t VALUES (5000, 1)")
     assert lh.sql("SELECT count(*) AS n FROM t").collect()[0].n == 201
@@ -200,14 +200,14 @@ def test_sql_tag_surface(spark, duck, tmp_path):
     assert lh.sql("SELECT count(*) AS n FROM t").collect()[0].n == 200
 
 
-def test_sql_tag_lifecycle_statements(spark, duck, tmp_path):
+def test_sql_tag_lifecycle_statements(spark, tmp_path):
     """CREATE TAG / DROP TAG / SHOW TAGS / SHOW TABLES — the SQL twins
     of tag_snapshot/drop_tag/list_tags and the catalog listing."""
     from data_pipeline_project_spark.sinks.sql_commands import LakehouseSQL
 
     p = str(tmp_path / "t")
     _table(spark, p)
-    lh = LakehouseSQL(spark, {"t": p}, duck=duck)
+    lh = LakehouseSQL(spark, {"t": p})
     v1 = snapshot_versions(p)[-1]
     assert lh.sql("CREATE TAG gold ON t") == {"name": "gold", "version": v1}
     append_snapshot(

@@ -73,14 +73,14 @@ def _state(spark, path):
     return sorted(map(tuple, read_version(spark, path).collect()))
 
 
-def test_reference_flow_publishes_both_atomically(spark, duck, tmp_path):
+def test_reference_flow_publishes_both_atomically(spark, tmp_path):
     raw, agg = _pair(spark, tmp_path)
     batch = spark.createDataFrame([(1000, 1), (1001, 2)], "k long, v long")
     aggs = spark.createDataFrame([(1, 777)], "k long, total long")
 
     with transaction([raw, agg]) as t:
         append_snapshot(spark, raw, batch)
-        merge_upsert(spark, duck, agg, "k", aggs)
+        merge_upsert(spark, agg, "k", aggs)
         # the coordinator's OWN thread reads its staged writes (r12
         # read-your-own-writes)...
         assert read_version(spark, raw).count() == 302
@@ -113,7 +113,7 @@ def test_reference_flow_publishes_both_atomically(spark, duck, tmp_path):
         assert head_entry["atomic_txn"]["id"] == t.txn_id
 
 
-def test_exception_rolls_back_both(spark, duck, tmp_path):
+def test_exception_rolls_back_both(spark, tmp_path):
     raw, agg = _pair(spark, tmp_path)
     before_raw, before_agg = _state(spark, raw), _state(spark, agg)
 
@@ -124,7 +124,7 @@ def test_exception_rolls_back_both(spark, duck, tmp_path):
                 spark.createDataFrame([(1000, 1)], "k long, v long"),
             )
             merge_upsert(
-                spark, duck, agg, "k",
+                spark, agg, "k",
                 spark.createDataFrame([(0, -1)], "k long, total long"),
             )
             raise RuntimeError("mid-transaction failure")
@@ -145,7 +145,7 @@ def test_exception_rolls_back_both(spark, duck, tmp_path):
     "crash_after", ["first_prepare", "second_prepare", "marker", "one_heal"]
 )
 def test_crash_injection_converges_both_or_neither(
-    spark, duck, tmp_path, crash_after
+    spark, tmp_path, crash_after
 ):
     """Simulate a coordinator dying at each protocol point (by simply
     not running the remaining steps), then drive recovery on both
@@ -162,7 +162,7 @@ def test_crash_injection_converges_both_or_neither(
         )
         if crash_after != "first_prepare":
             merge_upsert(
-                spark, duck, agg, "k",
+                spark, agg, "k",
                 spark.createDataFrame([(0, 999)], "k long, total long"),
             )
         if crash_after in ("marker", "one_heal"):
@@ -197,7 +197,7 @@ def test_crash_injection_converges_both_or_neither(
     "crash_after", ["first_op", "chain_staged", "marker"]
 )
 def test_chained_same_table_crash_converges_all_or_nothing(
-    spark, duck, tmp_path, crash_after
+    spark, tmp_path, crash_after
 ):
     """r12 read-your-own-writes chain (append raw -> merge raw ->
     merge agg) with the coordinator dying at each point: recovery
@@ -213,11 +213,11 @@ def test_chained_same_table_crash_converges_all_or_nothing(
         )
         if crash_after != "first_op":
             merge_upsert(
-                spark, duck, raw, "k",
+                spark, raw, "k",
                 spark.createDataFrame([(1000, -5)], "k long, v long"),
             )
             merge_upsert(
-                spark, duck, agg, "k",
+                spark, agg, "k",
                 spark.createDataFrame([(0, 999)], "k long, total long"),
             )
         if crash_after == "marker":
@@ -245,7 +245,7 @@ def test_chained_same_table_crash_converges_all_or_nothing(
     )
 
 
-def test_concurrent_writer_aborts_in_doubt_txn(spark, duck, tmp_path):
+def test_concurrent_writer_aborts_in_doubt_txn(spark, tmp_path):
     """Writer meets a staged-but-unpublished version: after the grace
     window it decides 'aborted' and commits on the pre-transaction
     head; the coordinator's later publish loses and rolls back."""
@@ -270,7 +270,7 @@ def test_concurrent_writer_aborts_in_doubt_txn(spark, duck, tmp_path):
 
 
 def test_chained_commits_on_one_table_read_their_own_writes(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     """r12: multiple ops per table inside one transaction — the
     coordinator's thread reads its own staged state between them
@@ -291,11 +291,11 @@ def test_chained_commits_on_one_table_read_their_own_writes(
         assert read_version(spark, raw).count() == 302
         # and a chained MERGE bases on the staged appends
         merge_upsert(
-            spark, duck, raw, "k",
+            spark, raw, "k",
             spark.createDataFrame([(1000, -5)], "k long, v long"),
         )
         merge_upsert(
-            spark, duck, agg, "k",
+            spark, agg, "k",
             spark.createDataFrame([(0, 999)], "k long, total long"),
         )
     rows = {r.k: r.v for r in read_version(spark, raw).collect()}
@@ -306,7 +306,7 @@ def test_chained_commits_on_one_table_read_their_own_writes(
 
 
 def test_chained_commits_abort_rolls_back_the_whole_chain(
-    spark, duck, tmp_path
+    spark, tmp_path
 ):
     raw, agg = _pair(spark, tmp_path)
     before = sorted(
@@ -319,7 +319,7 @@ def test_chained_commits_abort_rolls_back_the_whole_chain(
                 spark.createDataFrame([(1000, 1)], "k long, v long"),
             )
             merge_upsert(
-                spark, duck, raw, "k",
+                spark, raw, "k",
                 spark.createDataFrame([(0, -7)], "k long, v long"),
             )
             raise RuntimeError("boom")
@@ -327,7 +327,7 @@ def test_chained_commits_abort_rolls_back_the_whole_chain(
     assert read_version(spark, agg).count() == 2
 
 
-def test_staged_chain_invisible_to_peer_threads(spark, duck, tmp_path):
+def test_staged_chain_invisible_to_peer_threads(spark, tmp_path):
     """RYOW is thread-local: a peer thread reading the table mid-
     transaction sees the pre-transaction head, not the staged chain."""
     import threading
@@ -356,7 +356,7 @@ def test_staged_chain_invisible_to_peer_threads(spark, duck, tmp_path):
     assert peer_counts == [300, 301], peer_counts
 
 
-def test_staged_version_not_time_travel_readable(spark, duck, tmp_path):
+def test_staged_version_not_time_travel_readable(spark, tmp_path):
     raw, agg = _pair(spark, tmp_path)
     t = transaction([raw, agg]).__enter__()
     append_snapshot(
@@ -375,7 +375,7 @@ def test_staged_version_not_time_travel_readable(spark, duck, tmp_path):
     assert snapshot_versions(raw) == [1]
 
 
-def test_single_table_commits_pay_no_marker_io(spark, duck, tmp_path):
+def test_single_table_commits_pay_no_marker_io(spark, tmp_path):
     """Outside a transaction nothing changes: no txn2 stamp, no _txns
     directory, latest advances immediately."""
     raw, agg = _pair(spark, tmp_path)
@@ -388,7 +388,7 @@ def test_single_table_commits_pay_no_marker_io(spark, duck, tmp_path):
     assert head["version"] == snapshot_versions(raw)[-1] == 2
 
 
-def test_marker_gc_after_both_vacuums(spark, duck, tmp_path):
+def test_marker_gc_after_both_vacuums(spark, tmp_path):
     """Marker retirement protocol: each table's vacuum INLINES the
     transaction outcome into its kept manifests; once every
     participant has, vacuum_txn_markers deletes the shared marker —
@@ -404,7 +404,7 @@ def test_marker_gc_after_both_vacuums(spark, duck, tmp_path):
             spark.createDataFrame([(1000, 1)], "k long, v long"),
         )
         merge_upsert(
-            spark, duck, agg, "k",
+            spark, agg, "k",
             spark.createDataFrame([(0, 777)], "k long, total long"),
         )
     assert os.path.exists(t.marker)
