@@ -22,30 +22,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def long_format_stats(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    metric_cols: Sequence[str],
-    time_col: str | None = None,
-    round_decimals: int | None = None,
-) -> DataFrame:
-    """Per-group, per-metric stats in long format (reference A1-A8).
-
-    Returns columns: *group_cols, metric_name, min_value, max_value,
-    avg_value, std_dev_value, record_count [, aggregation_time].
-    """
-    ids = list(group_cols) + ([time_col] if time_col else [])
-    long_df = df.unpivot(
-        ids=ids,
-        values=list(metric_cols),
-        variableColumnName="metric_name",
-        valueColumnName="value",
-    )
-
+def long_format_aggs(time_col: str | None = None) -> list[Column]:
+    """The aggregate Columns of ``long_format_stats`` over its unpivoted
+    ``value`` column; a caller that aggregates many frames (one per
+    micro-batch) builds them once and passes them in."""
     aggs = [
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
@@ -61,7 +45,33 @@ def long_format_stats(
         # so nulls are NOT filtered before the aggregate (Spark's
         # min/max/avg/stddev skip them natively anyway).
         aggs.append(F.min(time_col).alias("aggregation_time"))
+    return aggs
 
+
+def long_format_stats(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    metric_cols: Sequence[str],
+    time_col: str | None = None,
+    round_decimals: int | None = None,
+    aggs: list[Column] | None = None,
+) -> DataFrame:
+    """Per-group, per-metric stats in long format (reference A1-A8).
+
+    Returns columns: *group_cols, metric_name, min_value, max_value,
+    avg_value, std_dev_value, record_count [, aggregation_time].
+    ``aggs`` is ``long_format_aggs(time_col)``, prebuilt by the caller
+    or built here.
+    """
+    ids = list(group_cols) + ([time_col] if time_col else [])
+    long_df = df.unpivot(
+        ids=ids,
+        values=list(metric_cols),
+        variableColumnName="metric_name",
+        valueColumnName="value",
+    )
+    if aggs is None:
+        aggs = long_format_aggs(time_col)
     out = long_df.groupBy(*group_cols, "metric_name").agg(*aggs)
     # A8: a group whose metric is entirely null emits no row
     # (pipeline.py:196); count("value") counted non-nulls only.

@@ -20,7 +20,7 @@ from dataclasses import dataclass
 from collections.abc import Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_project_spark.config import (
@@ -32,6 +32,7 @@ from data_pipeline_project_spark.config import (
 
 ERROR_COL = "error_reason"
 ROW_COL = "_csv_row"  # CSV line number: header = 1, first data row = 2
+SCAN_ID_COL = "_scan_id"  # the scan's monotonically_increasing_id: line order
 
 
 def na_token_columns(cols: Sequence[str]) -> dict[str, Column]:
@@ -138,78 +139,130 @@ def sensor_rules(bounds: ValidationBounds) -> list[Rule]:
 
 def with_error_reason(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     """F8 — attach ``error_reason``: all failing rules' messages joined
-    with '; ' (pipeline.py:162-164); empty string ⇒ row valid. If the
-    frame carries a CSV row number column, messages get the reference's
-    "Row {n}: " prefix (header = line 1 ⇒ first data row = 2)."""
-    parts = [F.when(r.fails, r.message) for r in rules]
-    reason = F.concat_ws("; ", *parts)
-    if ROW_COL in df.columns:
-        prefix = F.concat(F.lit("Row "), F.col(ROW_COL).cast("string"), F.lit(": "))
-        reason = F.when(reason != "", F.concat(prefix, reason)).otherwise(reason)
-    return df.withColumn(ERROR_COL, reason)
+    with '; ' (pipeline.py:162-164); empty string ⇒ row valid. The
+    "Row {n}: " line prefix is added after the split, to rows of
+    flagged files only (``SensorChecks.prefixed``)."""
+    return df.withColumn(ERROR_COL, _joined_reason(rules))
 
 
-def split_valid_invalid(
-    df: DataFrame,
-    rules: Sequence[Rule],
-    file_col: str | None = None,
-    strict: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """F7 — split into (valid, invalid, flagged) frames.
+def _joined_reason(rules: Sequence[Rule]) -> Column:
+    return F.concat_ws("; ", *[F.when(r.fails, r.message) for r in rules])
 
-    The flagged frame (``df`` plus ``error_reason``) is persisted, so
-    the bad-file probe, both splits and every downstream output (the
-    raw, aggregate and quarantine sinks) read it once instead of each
-    re-running the scan and the rules. It is returned so the caller can
-    ``unpersist`` it once its outputs are written.
 
-    strict + file_col: ANY bad row poisons its whole file
-    (pipeline.py:161-165) — valid rows of a poisoned file land in the
-    invalid frame. The distinct bad-file names are collected in one job,
-    which also fills the cache; like the header probe of
-    ``run_sensor_batch`` the list is bounded by the batch's file COUNT,
-    never its bytes. The split is then a null-safe literal IN-filter: a
-    row whose file is NULL never matches and stays valid, as it would
-    under an anti-join on the file column.
+@dataclass(frozen=True)
+class SensorChecks:
+    """Every Column the validation of one sensor frame uses, built once
+    by ``sensor_checks``. A stream builds one per query and applies it
+    to each micro-batch: a Column belongs to the session that built
+    it, so this is per stream, never a module global."""
 
-    lenient (strict=False): row-level split only (the historical
-    `MainPipeline` variant).
-    """
-    flagged = with_error_reason(df, rules).persist(StorageLevel.MEMORY_AND_DISK)
+    file_col: str
+    reason: Column  # F8 joined messages, '' ⇒ valid
+    file_bad: Column  # per-file verdict: does any row fail?
+    line: Column  # F8 CSV line number within the file
+    prefixed: Column  # error_reason with the "Row {n}: " prefix
+    # P4/P5 post-validation bulk casts (pipeline.py:170-173): timestamp
+    # via the lenient parser, metrics to double
+    casts: dict[str, Column]
+    first_bad: list[Column]  # K5 per-file first failing row
+    summary: Column  # K5 quarantine reason line
+
+
+def sensor_checks(rules: Sequence[Rule], file_col: str) -> SensorChecks:
+    """Build the ``SensorChecks`` for ``rules`` over frames whose files
+    are named by ``file_col``.
+
+    The line number is a row_number over a per-file window ordered by
+    ``SCAN_ID_COL``, the scan's ``monotonically_increasing_id`` (see
+    ``sources/csv_source.py`` for why that is physical line order);
+    +1 because the header is line 1 (pipeline.py:117)."""
     row_bad = F.col(ERROR_COL) != ""
-    if strict and file_col is not None:
-        bad = [r[0] for r in flagged.where(row_bad).select(file_col).distinct().collect()]
-        hit = F.coalesce(F.col(file_col).isin(bad), F.lit(False))
-        return flagged.where(~hit), flagged.where(hit), flagged
-    return flagged.where(~row_bad), flagged.where(row_bad), flagged
-
-
-def cast_validated(df: DataFrame) -> DataFrame:
-    """P4/P5 — post-validation bulk casts (pipeline.py:170-173):
-    timestamp via the lenient parser, metrics to double."""
+    row = F.col(ROW_COL)
+    error = F.col(ERROR_COL)
     casts = {"timestamp": parse_timestamp_lenient(F.col("timestamp"))}
     casts.update({m: F.col(m).try_cast("double") for m in METRIC_COLUMNS})
-    return df.withColumns(casts)
-
-
-def file_error_summary(invalid: DataFrame, file_col: str) -> DataFrame:
-    """K5 — quarantine reason log: one line per poisoned file,
-    'Validation failed at row {N}: {first row's reasons}' where N is the
-    first failing CSV row (pipeline.py:165, 264-271; golden examples
-    quarantine/quarantine_log.txt:1-5)."""
-    row_bad = F.col(ERROR_COL) != ""
-    order = F.col(ROW_COL) if ROW_COL in invalid.columns else F.monotonically_increasing_id()
-    first_bad = (
-        invalid.where(row_bad)
-        .groupBy(file_col)
-        .agg(F.min_by(ERROR_COL, order).alias("first_error"), F.min(order).alias("first_row"))
-    )
-    return first_bad.select(
-        file_col,
-        F.concat(
+    return SensorChecks(
+        file_col=file_col,
+        reason=_joined_reason(rules),
+        file_bad=F.max(row_bad).alias("bad"),
+        line=F.row_number().over(
+            Window.partitionBy(file_col).orderBy(SCAN_ID_COL)
+        ) + 1,
+        prefixed=F.when(
+            row_bad,
+            F.concat(F.lit("Row "), row.cast("string"), F.lit(": "), error),
+        ).otherwise(error),
+        casts=casts,
+        first_bad=[
+            F.min_by(ERROR_COL, row).alias("first_error"),
+            F.min(row).alias("first_row"),
+        ],
+        summary=F.concat(
             F.lit("Validation failed at row "),
             F.col("first_row").cast("string"),
             F.lit(": "),
             F.col("first_error"),
         ).alias("quarantine_reason"),
+    )
+
+
+def split_valid_invalid(
+    df: DataFrame,
+    checks: SensorChecks,
+    strict: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
+    """F7 — split into (valid, invalid, flagged, verdicts).
+
+    The flagged frame (``df`` plus ``error_reason``) is persisted, so
+    the probe, both splits and every downstream output (the raw,
+    aggregate and quarantine sinks) read it once instead of each
+    re-running the scan and the rules. It is returned so the caller can
+    ``unpersist`` it once its outputs are written.
+
+    One probe job, which also fills the cache, collects ``verdicts``:
+    {file: True if any of its rows fails}, bounded by the frame's file
+    COUNT, never its bytes (like the header probe of
+    ``run_sensor_batch``). An empty dict means the frame held no rows.
+
+    strict: ANY bad row poisons its whole file (pipeline.py:161-165) —
+    valid rows of a poisoned file land in the invalid frame. The split
+    is a null-safe literal IN-filter on the bad files: a row whose file
+    is NULL never matches and stays valid, as it would under an
+    anti-join on the file column.
+
+    lenient (strict=False): row-level split only (the historical
+    `MainPipeline` variant).
+
+    Only the rows of bad files are numbered (``ROW_COL``, the CSV line),
+    so valid rows are never shuffled for it; in lenient mode a bad
+    file's rows are numbered before its good rows are dropped, so each
+    bad row keeps its true line.
+    """
+    f = checks.file_col
+    flagged = df.withColumn(ERROR_COL, checks.reason).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    verdicts = dict(map(tuple, flagged.groupBy(f).agg(checks.file_bad).collect()))
+    bad = [name for name, is_bad in verdicts.items() if is_bad]
+    # lenient: where IN is NULL (a NULL file name, or a NULL among the bad
+    # names) the rows are numbered too; the row filter keeps the bad ones
+    hit = F.coalesce(F.col(f).isin(bad), F.lit(not strict)) if bad else F.lit(False)
+    numbered = flagged.where(hit).withColumn(ROW_COL, checks.line)
+    if strict:
+        return flagged.where(~hit), numbered, flagged, verdicts
+    row_bad = F.col(ERROR_COL) != ""
+    return flagged.where(~row_bad), numbered.where(row_bad), flagged, verdicts
+
+
+def file_error_summary(invalid: DataFrame, checks: SensorChecks) -> DataFrame:
+    """K5 — quarantine reason log: one line per poisoned file,
+    'Validation failed at row {N}: {first row's reasons}' where N is the
+    first failing CSV row (pipeline.py:165, 264-271; golden examples
+    quarantine/quarantine_log.txt:1-5). ``invalid`` carries ``ROW_COL``
+    and the prefixed reasons."""
+    return (
+        invalid.where(F.col(ERROR_COL) != "")
+        .groupBy(checks.file_col)
+        .agg(*checks.first_bad)
+        .select(checks.file_col, checks.summary)
     )

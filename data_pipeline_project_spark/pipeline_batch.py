@@ -2,9 +2,10 @@
 (pipeline.py:273-356), one declarative dataflow instead of per-file
 control flow.
 
-    read CSVs (all-string, NA tokens, lineage, line numbers)
-      → validate F1-F8 (columnar rules)
+    read CSVs (all-string, NA tokens, lineage, scan id)
+      → validate F1-F8 (columnar rules), one probe collects per-file verdicts
       → strict per-file gate (IN-filter on collected bad files) or lenient row split
+      → CSV line numbers for the rows of flagged files only (F8)
       → cast valid rows (P4/P5)           → raw table      (K1)
       → long-format aggregates (A1-A8)    → agg table      (K2)
       → invalid rows + per-file reasons   → quarantine     (K5)
@@ -16,20 +17,19 @@ code runs unchanged in ``foreachBatch`` under Structured Streaming.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_project_spark.config import METRIC_COLUMNS, PipelineConfig
-from data_pipeline_project_spark.operators.aggregates import long_format_stats
+from data_pipeline_project_spark.config import EXPECTED_COLUMNS, METRIC_COLUMNS, PipelineConfig
+from data_pipeline_project_spark.operators.aggregates import long_format_aggs, long_format_stats
 from data_pipeline_project_spark.operators.validation import (
     ERROR_COL,
     ROW_COL,
-    Rule,
-    cast_validated,
+    SensorChecks,
     file_error_summary,
+    sensor_checks,
     sensor_rules,
     split_valid_invalid,
 )
@@ -50,10 +50,30 @@ class SensorBatchResult:
     quarantined_rows: DataFrame  # all rows of rejected files, with error_reason
     quarantine_log: DataFrame  # one reason line per rejected file (K5)
     cached: DataFrame  # the persisted flagged frame all four read
+    files: dict[str, bool]  # the validated rows' files: {file_name: had a bad row}
 
     def release(self) -> None:
         """Drop the cached flagged frame once every output is written."""
         self.cached.unpersist()
+
+
+@dataclass(frozen=True)
+class SensorExprs:
+    """The Column expressions ``process_sensor_frame`` applies, built
+    once by ``sensor_exprs``: the validation checks (reasons, line
+    numbers, casts, quarantine summary) and the aggregate list. The
+    stream builds one per query, so a micro-batch only assembles its
+    plan from them."""
+
+    checks: SensorChecks
+    aggs: list[Column]
+
+
+def sensor_exprs(config: PipelineConfig) -> SensorExprs:
+    return SensorExprs(
+        checks=sensor_checks(sensor_rules(config.bounds), FILE_COL),
+        aggs=long_format_aggs("timestamp"),
+    )
 
 
 def run_sensor_batch(
@@ -79,38 +99,36 @@ def run_sensor_batch(
         # recompute — the common zero-bad-files batch skips it entirely
         df = df.where(~F.col(FILE_COL).isin(bad_names))
     result = process_sensor_frame(df, config)
-    return SensorBatchResult(
-        raw=result.raw,
-        aggregates=result.aggregates,
-        quarantined_rows=result.quarantined_rows,
-        quarantine_log=result.quarantine_log.unionByName(bad_log),
-        cached=result.cached,
-    )
+    result.quarantine_log = result.quarantine_log.unionByName(bad_log)
+    return result
 
 
 def process_sensor_frame(
     df: DataFrame,
     config: PipelineConfig | None = None,
-    rules: Sequence[Rule] | None = None,
+    exprs: SensorExprs | None = None,
 ) -> SensorBatchResult:
-    """Validate/split/cast/aggregate one already-read sensor frame.
+    """Validate/split/cast/aggregate one already-read sensor frame
+    (``read_sensor_csv``'s columns, or a stream batch with
+    ``sensor_scan_columns`` applied).
 
     Shared verbatim between the batch entry point and the streaming
     ``foreachBatch`` (SURVEY.md §7 M3 — the cleanest Spark idiom for
-    the reference's whole-file micro-batching). ``rules`` defaults to
-    ``sensor_rules(config.bounds)``; the stream builds them once and
-    passes them to every micro-batch. In strict mode the call runs one
-    job (the bad-file probe) and leaves the flagged frame cached until
+    the reference's whole-file micro-batching). ``exprs`` defaults to
+    ``sensor_exprs(config)``; the stream builds it once and passes it
+    to every micro-batch. The call runs one job (the per-file verdict
+    probe, ``result.files``) and leaves the flagged frame cached until
     ``release()``.
     """
     config = config or PipelineConfig()
-    if rules is None:
-        rules = sensor_rules(config.bounds)
-    valid, invalid, flagged = split_valid_invalid(
-        df, rules, file_col=FILE_COL, strict=config.strict
-    )
+    if exprs is None:
+        exprs = sensor_exprs(config)
+    checks = exprs.checks
+    valid, invalid, flagged, files = split_valid_invalid(df, checks, config.strict)
+    # F8: the "Row {n}: " prefix, on the numbered rows of flagged files
+    invalid = invalid.withColumn(ERROR_COL, checks.prefixed)
 
-    raw = cast_validated(valid).select(
+    raw = valid.withColumns(checks.casts).select(
         "sensor_id", "timestamp", *METRIC_COLUMNS, FILE_COL
     )
 
@@ -119,22 +137,17 @@ def process_sensor_frame(
         group_cols=[FILE_COL, "sensor_id"],
         metric_cols=list(METRIC_COLUMNS),
         time_col="timestamp",
+        aggs=exprs.aggs,
     ).withColumnsRenamed({"timestamp": "aggregation_time"})
-
-    quarantine_log = file_error_summary(invalid, FILE_COL)
-    quarantined_rows = invalid.select(FILE_COL, ROW_COL, *_csv_cols(df), ERROR_COL)
 
     return SensorBatchResult(
         raw=raw,
         aggregates=aggregates,
-        quarantined_rows=quarantined_rows,
-        quarantine_log=quarantine_log,
+        quarantined_rows=invalid.select(FILE_COL, ROW_COL, *EXPECTED_COLUMNS, ERROR_COL),
+        quarantine_log=file_error_summary(invalid, checks),
         cached=flagged,
+        files=files,
     )
-
-
-def _csv_cols(df: DataFrame) -> list[str]:
-    return [c for c in df.columns if c not in (FILE_COL, ROW_COL, ERROR_COL)]
 
 
 def batch_metrics(result: SensorBatchResult) -> DataFrame:

@@ -344,8 +344,7 @@ def table_health(
     """
     import os
 
-    import pyarrow.parquet as pq
-
+    from data_pipeline_project_spark.sinks import manifest
     from data_pipeline_project_spark.sinks.manifest import (
         PARTITION_FMTS,
         QUARANTINE_DIR,
@@ -362,7 +361,22 @@ def table_health(
 
     files = _data_files(path)
     sizes = [os.path.getsize(f) for f in files]
-    rows = sum(pq.read_metadata(f).num_rows for f in files)
+    # the head manifest (None for a plain directory): row counts, sketch
+    # coverage, the partition-era audit and the clustering audit read it
+    latest = os.path.join(path, "_manifests", "latest.json")
+    head = None
+    if os.path.exists(latest):
+        try:
+            head = read_manifest(latest)
+        except FileNotFoundError:
+            pass
+    # row counts from the head's entries; a footer only for a listed
+    # file the head does not pin
+    logged = {f["path"]: f["rows"] for f in head["files"]} if head else {}
+    rows = 0
+    for f in files:
+        n = logged.get(os.path.relpath(f, path).replace("\\", "/"))
+        rows += n if n is not None else manifest._read_footer(f).num_rows
 
     def _dir_footprint(sub):
         root = os.path.join(path, sub)
@@ -432,15 +446,6 @@ def table_health(
             }
             for d, ss in sorted(by_dir.items())
         }
-    # the head manifest (None for a plain directory): sketch coverage,
-    # the partition-era audit and the clustering audit all read it
-    latest = os.path.join(path, "_manifests", "latest.json")
-    head = None
-    if os.path.exists(latest):
-        try:
-            head = read_manifest(latest)
-        except FileNotFoundError:
-            pass
     # NDV sketch coverage (r11): files without a sketch blind the
     # distribution-driven advice (join cardinality, skew, in-memory
     # broadcast sizing); analyze_table backfills them explicitly

@@ -405,14 +405,21 @@ def _entry_stats(md, priority_cols=()) -> tuple[dict | None, int]:
             else:
                 rec["nulls_ok"] = False
             if st.has_min_max:
-                k = _classify(st.min)
-                k2 = _classify(st.max)
+                try:
+                    smin, smax = st.min, st.max
+                except NotImplementedError:
+                    # pyarrow cannot decode the min/max of an INT32- or
+                    # INT64-backed decimal (Spark's precision <= 18)
+                    rec["ok"] = False
+                    continue
+                k = _classify(smin)
+                k2 = _classify(smax)
                 if k is None or k != k2 or (
                     rec["kind"] is not None and rec["kind"] != k
                 ):
                     rec["ok"] = False
                     continue
-                emn, emx = _stats_encode(st.min, k), _stats_encode(st.max, k)
+                emn, emx = _stats_encode(smin, k), _stats_encode(smax, k)
                 rec["kind"] = k
                 rec["mn"] = emn if rec["mn"] is None else min(rec["mn"], emn)
                 rec["mx"] = emx if rec["mx"] is None else max(rec["mx"], emx)
@@ -1297,6 +1304,7 @@ def write_manifest(path: str, manifest_path: str | None = None) -> dict:
 
     files = []
     total_rows = 0
+    footer_schema = None
     for f in _data_files(path):
         md = pq.read_metadata(f)
         total_rows += md.num_rows
@@ -1304,12 +1312,15 @@ def write_manifest(path: str, manifest_path: str | None = None) -> dict:
         # at bootstrap scale sketching would read the whole table;
         # analyze_table backfills explicitly
         files.append(_file_entry(path, os.path.relpath(f, path), md))
+        footer_schema = footer_schema or _footer_schema(files[-1]["path"], md)
     manifest = {
         "root": os.path.abspath(path),
         "n_files": len(files),
         "total_rows": total_rows,
         "files": files,
     }
+    if footer_schema:
+        manifest["footer_schema"] = footer_schema
     target = manifest_path or os.path.join(path, "_manifest.json")
     tmp = target + ".tmp"
     with open(tmp, "w") as fh:
@@ -2640,10 +2651,15 @@ def commit_optimistic(
     # executor-side Spark job (r12 — ``collect_ndv`` gates it per
     # call: an explicit parameter, not a global flip, so concurrent
     # commits in one process never see each other's gate, r11 ADVICE).
-    added_entry_objs = [
-        _file_entry(path, rel, priority_cols=stats_priority_cols)
-        for rel in added
-    ]
+    import pyarrow.parquet as pq
+
+    added_entry_objs, footer_schema = [], None
+    for rel in added:
+        md = pq.read_metadata(os.path.join(path, rel))
+        added_entry_objs.append(
+            _file_entry(path, rel, md, priority_cols=stats_priority_cols)
+        )
+        footer_schema = footer_schema or _footer_schema(rel, md)
     if collect_ndv:
         _attach_sketches(
             path, added_entry_objs, priority_cols=stats_priority_cols
@@ -2725,6 +2741,9 @@ def commit_optimistic(
             "committed_at": int(_time.time() * 1000),
             "txn": intent,
         }
+        fs = footer_schema or head.get("footer_schema")
+        if fs and any(f["path"] == fs["path"] for f in files):
+            manifest["footer_schema"] = fs
         if schema_json == {}:
             pass  # explicit clear: the commit pins NO logical schema
         elif schema_json is not None:
@@ -3140,17 +3159,83 @@ def table_null_counts(
 
 
 def table_schema(spark, path: str):
-    """The table's LOGICAL schema: the manifest-pinned one when the log
-    carries it (schema-evolved tables, where per-file footers disagree
-    by design), else plain parquet inference."""
+    """The table's LOGICAL schema, as ``spark.read.parquet(path).schema``
+    gives it, but from the log where it can be:
+
+    - the head's pinned ``schema_json`` (schema-evolved tables, where
+      per-file footers disagree by design);
+    - else, on an unpartitioned head, the Spark schema that every
+      Spark-written footer stores: the head's ``footer_schema``, which
+      each commit records from a footer it read anyway and carries
+      while that file stays pinned, or, on a head without one, the
+      footer of the head's last-listed file. No directory listing and
+      no Spark job (see ``_head_schema``);
+    - else (a partitioned head, whose partition columns are in no
+      footer; a footer without Spark's schema; no head) Spark's own
+      inference, which lists the directory and runs a job."""
     mpath = os.path.join(path, "_manifests", "latest.json")
     if os.path.exists(mpath):
-        sj = read_manifest(mpath).get("schema_json")
-        if sj is not None:
-            from pyspark.sql.types import StructType
-
-            return StructType.fromJson(sj)
+        return _head_schema(spark, path, read_manifest(mpath))
     return spark.read.parquet(path).schema
+
+
+# the footer key under which Spark's parquet writer stores the Spark
+# schema, and from which its own schema inference reads it back
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _head_schema(spark, path: str, head: dict):
+    """``table_schema`` for a known head manifest. Spark's inference
+    parses one footer's stored schema and makes it nullable, so doing
+    the same on the driver with a pinned file's stored schema gives the
+    same StructType (``tests/test_table_schema.py`` holds the two equal
+    per type)."""
+    from pyspark.sql.types import StructType
+
+    sj = head.get("schema_json")
+    if sj is not None:
+        return StructType.fromJson(sj)
+    files = [f["path"] for f in head["files"]]
+    if files and not _partition_cols_of(files):
+        fs = head.get("footer_schema")
+        if fs is None:  # a head written before commits recorded it
+            last = _resolve_snapshot_file(head["root"], files[-1])
+            try:
+                fs = last and _footer_schema(files[-1], _read_footer(last))
+            except OSError:  # vacuumed by a concurrent commit since the head
+                fs = None
+        if fs:
+            return _as_nullable(StructType.fromJson(fs["schema"]))
+    return spark.read.parquet(path).schema
+
+
+def _footer_schema(rel: str, md) -> dict | None:
+    """The log's record of the Spark schema one pinned file's footer
+    stores ({path, schema}), from a footer the commit already read;
+    None for a footer Spark did not write."""
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return {"path": rel, "schema": json.loads(raw)} if raw else None
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable``: every field, array element and
+    map value nullable, at every depth."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
 
 
 def table_renames(path: str) -> dict:
@@ -3637,8 +3722,11 @@ def append_snapshot(
     a detected conflict instead of a silent anomaly.
 
     Schema must match the target by name (types normalize to the
-    target's — the same cast contract as merge_upsert); column ADDs go
-    through merge_upsert(schema_evolution=True). Requires an existing
+    target's — the same cast contract as merge_upsert — and only the
+    columns whose type differs get a cast); column ADDs go through
+    merge_upsert(schema_evolution=True). The target schema comes from
+    the base head's log record (``_head_schema``), so the commit reads
+    no pre-existing footer and lists no directory. Requires an existing
     snapshot: a BOOTSTRAP must pin whatever files the directory held
     before the table was ever snapshotted, which only the listing-based
     write_versioned_manifest sees. Returns {version, files_added,
@@ -3659,22 +3747,27 @@ def append_snapshot(
     head = read_manifest(
         os.path.join(path, "_manifests", f"v{base_version}.json")
     )
-    target_schema = table_schema(spark, path)
+    target_schema = _head_schema(spark, path, head)
     target_cols = [f.name for f in target_schema.fields]
-    if sorted(df.columns) != sorted(target_cols):
+    have = {f.name: f.dataType for f in df.schema.fields}
+    if sorted(have) != sorted(target_cols):
         raise ValueError(
-            f"append schema mismatch: data {sorted(df.columns)} != "
+            f"append schema mismatch: data {sorted(have)} != "
             f"target {sorted(target_cols)} (column ADDs go through "
             f"merge_upsert(schema_evolution=True))"
         )
     if key_col is not None and key_col not in target_cols:
         raise ValueError(f"no such key column {key_col!r}")
-    df = df.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in target_schema.fields
-        ]
-    )
+    casts = [f for f in target_schema.fields if have[f.name] != f.dataType]
+    if casts or list(have) != target_cols:
+        df = df.select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                if f in casts
+                else f.name
+                for f in target_schema.fields
+            ]
+        )
 
     version = base_version + 1  # optimistic: a rebase may commit higher
     stamp = _uuid.uuid4().hex[:8]

@@ -11,23 +11,32 @@ Design:
   choice at scale: a bad cell never kills a 100 TB scan);
 - ``_metadata.file_name`` for lineage (P9) — no ``input_file_name()``,
   which is undefined under joins;
-- per-file CSV line numbers for error messages (F8): row_number over a
-  per-file window ordered by ``monotonically_increasing_id``.
+- per-file CSV line numbers for error messages (F8), for the rows of
+  flagged files only: the scan stamps every row with
+  ``monotonically_increasing_id`` (``SCAN_ID_COL``, stored in the
+  cached flagged frame), and after the split a row_number over a
+  per-file window ordered by it numbers just the files that hold a bad
+  row (``operators/validation.sensor_checks``). Valid rows are never
+  shuffled for a number only quarantine messages print.
   Correctness argument: Spark assigns split partition indices in file
   offset order and ``monotonically_increasing_id`` is
   ``(partition_id << 33) + row_in_partition``, so ordering by it within
   one file reproduces physical line order even when a big file is split
-  across tasks. +1 because the header is line 1 (pipeline.py:117).
+  across tasks. The id is taken in the scan's own projection, below any
+  filter or shuffle, and numbering a file needs only its own rows, so
+  numbering a subset of files gives each row the number it had when
+  every file was numbered. +1 because the header is line 1
+  (pipeline.py:117).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_project_spark.config import EXPECTED_COLUMNS
-from data_pipeline_project_spark.operators.validation import ROW_COL, na_token_columns
+from data_pipeline_project_spark.operators.validation import SCAN_ID_COL, na_token_columns
 
 FILE_COL = "file_name"
 
@@ -36,32 +45,35 @@ SENSOR_CSV_SCHEMA = T.StructType(
 )
 
 
-def read_sensor_csv(
-    spark: SparkSession,
-    path: str,
-    with_row_numbers: bool = True,
-) -> DataFrame:
+def sensor_scan_columns() -> dict[str, Column]:
+    """The ``withColumns`` map every sensor scan gets: NA tokens to
+    nulls, and ``SCAN_ID_COL`` for line order. A stream builds it once
+    and applies it to each micro-batch (the streaming source itself
+    cannot carry ``monotonically_increasing_id``)."""
+    return {
+        **na_token_columns(EXPECTED_COLUMNS),
+        SCAN_ID_COL: F.monotonically_increasing_id(),
+    }
+
+
+def read_sensor_csv(spark: SparkSession, path: str) -> DataFrame:
     """S5 — all-string CSV scan with NA-token normalization, lineage
-    file name, and (optionally) per-file CSV line numbers.
+    file name, and the scan id line numbers are later taken from.
 
     Corrupt lines survive as partially-null rows (PERMISSIVE mode) and
     are then rejected by the validation predicates — same verdict as the
     reference's malformed-file quarantine (S7), decided row-wise in the
     dataflow instead of by exception control flow.
     """
-    df = (
+    return (
         spark.read.schema(SENSOR_CSV_SCHEMA)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("enforceSchema", True)
         .csv(path)
         .select(F.col("_metadata.file_name").alias(FILE_COL), "*")
+        .withColumns(sensor_scan_columns())
     )
-    df = df.withColumns(na_token_columns(EXPECTED_COLUMNS))
-    if with_row_numbers:
-        w = Window.partitionBy(FILE_COL).orderBy(F.monotonically_increasing_id())
-        df = df.withColumn(ROW_COL, F.row_number().over(w) + 1)
-    return df
 
 
 _HEAD_BYTES = 65536

@@ -12,12 +12,27 @@ F7 alignment: the file source assigns WHOLE files to a micro-batch
 (listing granularity is per-file), so the per-file all-or-nothing gate
 inside ``process_sensor_frame`` can never see half a file.
 
-Each epoch runs its validation once: the rules, NA-token map and
-row-number column are built once per stream, and the flagged frame is
-cached by one bad-file probe job and released when the epoch ends. The
-raw and aggregate commits are independent, so they run at the same time
-on a 2-thread pool; the quarantine write starts only after both have
-returned, as the reference quarantines after its database writes.
+What one epoch runs. Every Column expression (NA-token map, scan id,
+rules, line numbers, casts, aggregates, quarantine summary) is built
+once per stream (``sensor_scan_columns``, ``sensor_exprs``); an epoch
+only assembles its plan from them. Then:
+
+1. one probe job caches the flagged frame and collects a verdict per
+   file (``split_valid_invalid``). A batch with no rows stops here:
+   the probe saw no file, so nothing is written. The file source
+   starts no empty micro-batch for this stateless query, so no
+   separate emptiness probe runs;
+2. the raw and aggregate commits, which are independent, run at the
+   same time on a 2-thread pool, each one staged write plus a commit
+   whose target schema comes from the log or one footer
+   (``append_snapshot``);
+3. after both have returned, the quarantine write, as the reference
+   quarantines after its database writes. It runs in every epoch with
+   rows, also a clean one: an empty frame then, whose plan Spark
+   prunes to an empty relation. Only the rows of files with a bad row
+   are numbered, so a clean epoch shuffles nothing for line numbers.
+
+The flagged frame is released when the epoch ends.
 
 Retry semantics (K6): a failing sink raises → the query stops and
 restarts from the checkpoint, replaying the batch. Because the raw and
@@ -34,19 +49,18 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from data_pipeline_project_spark.config import EXPECTED_COLUMNS, PipelineConfig
-from data_pipeline_project_spark.operators.validation import (
-    ROW_COL,
-    na_token_columns,
-    sensor_rules,
-)
-from data_pipeline_project_spark.pipeline_batch import process_sensor_frame
+from data_pipeline_project_spark.config import PipelineConfig
+from data_pipeline_project_spark.pipeline_batch import process_sensor_frame, sensor_exprs
 from data_pipeline_project_spark.sinks import Sink
-from data_pipeline_project_spark.sources.csv_source import FILE_COL, SENSOR_CSV_SCHEMA
+from data_pipeline_project_spark.sources.csv_source import (
+    FILE_COL,
+    SENSOR_CSV_SCHEMA,
+    sensor_scan_columns,
+)
 
 
 def sensor_stream_source(
@@ -92,17 +106,14 @@ def run_sensor_stream(
     stream = sensor_stream_source(
         spark, input_dir, max_files_per_trigger, archive_dir
     )
-    rules = sensor_rules(config.bounds)
-    na_cols = na_token_columns(EXPECTED_COLUMNS)
-    w = Window.partitionBy(FILE_COL).orderBy(F.monotonically_increasing_id())
-    row_col = F.row_number().over(w) + 1
+    scan_cols = sensor_scan_columns()
+    exprs = sensor_exprs(config)
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        df = batch_df.withColumns(na_cols).withColumn(ROW_COL, row_col)
-        res = process_sensor_frame(df, config, rules)
+        res = process_sensor_frame(batch_df.withColumns(scan_cols), config, exprs)
         try:
+            if not res.files:  # the probe saw no row
+                return
             # the wrapper carries this epoch's job group, description and
             # tags over to the commit threads
             inherit = inheritable_thread_target(batch_df.sparkSession)

@@ -22,6 +22,8 @@ statistics, re-expressed for the JSON manifest chain.
 
 import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -475,7 +477,15 @@ def test_table_health_clustering_from_log(spark, tmp_path, footer_reads):
     write_versioned_manifest(path)
     h = table_health(path, key_col="k")
     assert h["clustering_overlap"] == 0.0  # range-clustered: disjoint
-    assert footer_reads == []
+    assert h["total_rows"] == 3_000
+    assert footer_reads == []  # row counts come from the head too
+    # a file the head does not pin costs its own footer, and only it
+    stray = os.path.join(path, "stray.parquet")
+    pq.write_table(pa.table({"k": [5, 6], "v": [0, 1]}), stray)
+    assert table_health(path)["total_rows"] == 3_002
+    assert footer_reads == [stray]
+    os.remove(stray)
+    footer_reads.clear()
     # and the log path agrees with the footers of a stats-less head
     latest = os.path.join(path, "_manifests", "latest.json")
     head = read_manifest(latest)

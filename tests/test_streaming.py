@@ -304,6 +304,155 @@ def test_quarantine_failure_replays_exactly_once(spark, tmp_path):
     _assert_exactly_once(spark, paths)
 
 
+def _sensor_rows(n, bad=()):
+    """``n`` valid sensor rows; the ones at the indexes in ``bad`` carry
+    a non-numeric temperature."""
+    return [
+        f"2025-05-26 10:{i % 60:02d}:00,S{i % 3},{'abc' if i in bad else '20.0'},0.5,1000.0"
+        for i in range(n)
+    ]
+
+
+# 40 rows a file (~1.6 KB), split into ~0.5 KB scan partitions by
+# _small_splits, so line numbers are taken across split files
+_LINE_FILES = {
+    "mid.csv": _sensor_rows(40, bad=(21,)),  # a bad row mid-file: line 23
+    "first.csv": _sensor_rows(40, bad=(0,)),  # the first data row: line 2
+    "two.csv": _sensor_rows(40, bad=(1, 33)),  # lines 3 and 35
+    "clean.csv": _sensor_rows(40),
+}
+
+
+@pytest.fixture
+def _small_splits(spark):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    yield
+    spark.conf.set(key, old)
+
+
+def _line_files(tmp_path):
+    data = tmp_path / "data"
+    data.mkdir()
+    t0 = time.time() - 100
+    for k, (name, rows) in enumerate(_LINE_FILES.items()):
+        _write(data, name, rows)
+        os.utime(data / name, (t0 + k, t0 + k))
+    return data
+
+
+def _stream_lines(spark, tmp_path, data, config=None):
+    """Run the sensor stream over ``data``, two files an epoch; return
+    the quarantine table as {(file, line): error_reason}."""
+    sinks = [
+        ManifestTableSink(spark, str(tmp_path / name), name)
+        for name in ("raw", "agg", "quar")
+    ]
+    q = run_sensor_stream(
+        spark, str(data), *sinks, str(tmp_path / "ckpt"), config=config,
+        trigger={"availableNow": True}, max_files_per_trigger=2,
+    )
+    _run_until_done(q)
+    assert q.exception() is None
+    quar = read_version(spark, str(tmp_path / "quar")).collect()
+    return {(r.file_name, r._csv_row): r.error_reason for r in quar}
+
+
+def test_stream_and_batch_quarantine_agree(spark, tmp_path, _small_splits, monkeypatch):
+    """The stream numbers only the rows of flagged files, per epoch; the
+    batch run over the same files gives the same line numbers, reasons
+    and quarantine-log lines, also with files split across tasks. The
+    stream writes no log, so each epoch's log frame is collected where
+    the epoch builds it."""
+    from data_pipeline_project_spark.streaming import sensor_stream
+
+    real = sensor_stream.process_sensor_frame
+    logs = []
+
+    def logging_frame(*args):
+        res = real(*args)
+        logs.extend(map(tuple, res.quarantine_log.collect()))
+        return res
+
+    monkeypatch.setattr(sensor_stream, "process_sensor_frame", logging_frame)
+    data = _line_files(tmp_path)
+    batch = run_sensor_batch(spark, str(data))
+    want_rows = {
+        (r.file_name, r._csv_row): r.error_reason
+        for r in batch.quarantined_rows.collect()
+    }
+    want_log = sorted(map(tuple, batch.quarantine_log.collect()))
+    batch.release()
+
+    got_rows = _stream_lines(spark, tmp_path, data)
+    assert got_rows == want_rows
+    assert sorted(logs) == want_log
+    # every row of the three bad files, numbered 2..41 in each
+    assert sorted(want_rows) == [
+        (f, line) for f in ("first.csv", "mid.csv", "two.csv") for line in range(2, 42)
+    ]
+    number = "'temperature' ('abc') is not a valid number."
+    assert want_rows[("mid.csv", 23)] == f"Row 23: {number}"
+    assert want_rows[("mid.csv", 22)] == ""
+    assert dict(want_log) == {
+        "first.csv": f"Validation failed at row 2: Row 2: {number}",
+        "mid.csv": f"Validation failed at row 23: Row 23: {number}",
+        "two.csv": f"Validation failed at row 3: Row 3: {number}",
+    }
+    assert want_rows[("two.csv", 35)] == f"Row 35: {number}"
+
+
+def test_lenient_stream_quarantines_only_bad_rows(spark, tmp_path, _small_splits):
+    """strict=False: each bad row alone is quarantined, with its true
+    CSV line, and every good row of its file reaches the raw table."""
+    from data_pipeline_project_spark.config import PipelineConfig
+
+    data = _line_files(tmp_path)
+    got = _stream_lines(spark, tmp_path, data, config=PipelineConfig(strict=False))
+    number = "'temperature' ('abc') is not a valid number."
+    assert got == {
+        ("mid.csv", 23): f"Row 23: {number}",
+        ("first.csv", 2): f"Row 2: {number}",
+        ("two.csv", 3): f"Row 3: {number}",
+        ("two.csv", 35): f"Row 35: {number}",
+    }
+    assert read_version(spark, str(tmp_path / "raw")).count() == 4 * 40 - 4
+
+
+def test_clean_epoch_job_count(spark, tmp_path):
+    """A clean 3-file epoch runs at most 7 Spark jobs: the verdict probe
+    (cache fill, shuffle map, result), the raw staged write, the
+    aggregate write (shuffle map, result) and the quarantine write of
+    an empty frame. No emptiness probe, no schema-inference job, and no
+    line-number shuffle."""
+    data = tmp_path / "data"
+    data.mkdir()
+    sinks = [
+        ManifestTableSink(spark, str(tmp_path / "raw"), "raw"),
+        ManifestTableSink(spark, str(tmp_path / "agg"), "agg"),
+        ParquetAppendSink(str(tmp_path / "quar")),
+    ]
+    sc = spark.sparkContext
+
+    def epoch(prefix):
+        for k in range(3):
+            _write(data, f"{prefix}{k}.csv", _sensor_rows(30))
+        q = run_sensor_stream(
+            spark, str(data), *sinks, str(tmp_path / "ckpt"),
+            trigger={"availableNow": True},
+        )
+        _run_until_done(q)
+        assert q.exception() is None
+        # the query thread runs every job of the run under its runId
+        return sc.statusTracker().getJobIdsForGroup(str(q.runId))
+
+    epoch("warm")  # bootstraps both tables
+    jobs = epoch("clean")
+    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert read_version(spark, str(tmp_path / "raw")).count() == 6 * 30
+
+
 def test_streaming_ewma_stateful(spark, tmp_path):
     """applyInPandasWithState: per-key EWMA state carried across
     micro-batches matches the batch recurrence."""

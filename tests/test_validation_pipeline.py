@@ -348,6 +348,7 @@ def test_split_matches_broadcast_join_form(spark, tmp_path):
 
     from data_pipeline_project_spark.operators.validation import (
         ERROR_COL,
+        sensor_checks,
         sensor_rules,
         split_valid_invalid,
         with_error_reason,
@@ -370,7 +371,9 @@ def test_split_matches_broadcast_join_form(spark, tmp_path):
     df = df.unionByName(null_row)
     rules = sensor_rules(ValidationBounds())
 
-    valid, invalid, flagged = split_valid_invalid(df, rules, file_col=FILE_COL)
+    valid, invalid, flagged, verdicts = split_valid_invalid(
+        df, sensor_checks(rules, FILE_COL)
+    )
     ref = with_error_reason(df, rules)
     bad_files = ref.where(F.col(ERROR_COL) != "").select(FILE_COL).distinct()
     ref_valid = ref.join(F.broadcast(bad_files), FILE_COL, "left_anti")
@@ -385,5 +388,8 @@ def test_split_matches_broadcast_join_form(spark, tmp_path):
         assert {r[FILE_COL] for r in valid.collect()} == {"clean1.csv", "clean2.csv", None}
         assert {r[FILE_COL] for r in invalid.collect()} == {"poisoned.csv"}
         assert invalid.count() == 2
+        assert verdicts == {
+            "clean1.csv": False, "clean2.csv": False, "poisoned.csv": True, None: False
+        }
     finally:
         flagged.unpersist()
