@@ -458,178 +458,150 @@ def simhash_near_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming, found by
-    banding the fingerprint into SIMHASH_BANDS chunks (pigeonhole: any
-    pair within distance SIMHASH_BANDS-1 shares >=1 exact chunk), then
-    verifying the true distance with bit_count(xor)."""
+    """Near-dup pairs with Hamming(simhash) <= max_hamming: the SimHash
+    fingerprint scan fed to :func:`banded_hamming_pairs` (pigeonhole
+    over SIMHASH_BANDS chunks, true distance verified with
+    bit_count(xor))."""
     from data_pipeline_project_spark.functions.persist_scope import scoped_persist
 
-    chunk = SIMHASH_BITS // SIMHASH_BANDS
     # Persist: both sides of the band self-join consume the fingerprint
     # scan; unmaterialized it is computed twice (simhash is the most
     # expensive per-row expression in the engine).
     fp = scoped_persist(
         docs.select(F.col(id_col).alias("doc_id"), simhash(F.col(text_col)).alias("fp"))
     )
-    bands = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("fp"), b * chunk)
-                        .bitwiseAND((1 << chunk) - 1)
-                        .alias("key"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "fp", "bk.band", "bk.key")
+    return banded_hamming_pairs(fp, max_hamming=max_hamming)
 
-    left, right = bands.alias("l"), bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"),
-            F.col("r.doc_id").alias("id_b"),
-            F.bit_count(F.col("l.fp").bitwiseXOR(F.col("r.fp"))).alias("hamming"),
-        )
-        # filter BEFORE the dedup shuffle (r13): a pair sharing k bands
-        # appears k times, so the distinct is required — but hamming is
-        # determined by the pair, so filtering first is identical and
-        # the exchange carries only true near-pairs instead of every
-        # band collision (collisions >> near-pairs at corpus scale).
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+
+# Pair-count gate of connected_components: an edge list of at most this
+# many pairs (~32 MB of longs, the driver-memory class of the broadcast
+# key sets the targeted-delete path accepts) resolves with driver-side
+# union-find; a larger one runs the distributed rounds.
+LOCAL_CC_MAX_PAIRS = 2_000_000
 
 
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
-    pointer_jumping: bool = False,
-    local_threshold: int = 2_000_000,
 ) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: (node, cluster_id) where
+    """Resolve near-dup PAIRS into CLUSTERS: (doc_id, cluster_id) where
     cluster_id = min doc id reachable through the pair graph — the
-    keeper-selection step of a dedup pipeline.
+    keeper-selection step of a dedup pipeline. Ids must be integral
+    (TypeError otherwise, whatever the input size).
 
-    Algorithm: min-label propagation. Each node starts labeled with
-    itself; every iteration each node takes the min of its own and its
-    neighbors' labels; converged when no label changes. Iterations are
-    bounded by the cluster diameter — near-dup graphs are shallow
-    (mostly pairs/triangles), so this is 2-4 rounds in practice. Each
-    round is one shuffle (join on dst + groupBy src); localCheckpoint
-    truncates the growing lineage so round N doesn't replay rounds
-    1..N-1.
-
-    ``pointer_jumping=True`` adds a label-of-label contraction to each
-    round (label <- label[label]): path lengths to the component min
-    halve every round, so convergence is O(log diameter) instead of
-    O(diameter) — the Kiveris-et-al. star-contraction family's
-    behavior. Costs one extra self-join per round; worth it exactly
-    when components can be DEEP (long chains — e.g. near-dup edges
-    through successively-edited document versions). For the shallow
-    graphs LSH banding emits, plain propagation does fewer total
-    shuffles; both converge to identical labels (pinned in
-    tests/test_llmops.py).
-
-    Size-gated LOCAL solve: an edge list of ``local_threshold`` pairs
-    or fewer (default 2M ≈ 32 MB of longs — the same driver-memory
-    class as the broadcast key sets the targeted-delete path accepts)
-    resolves with driver-side union-find instead of shuffle rounds:
-    the verified near-dup pair list is orders of magnitude smaller
-    than the corpus (it IS the dedup signal), so at any corpus scale
-    the edge list usually fits long after the corpus stopped fitting
-    anywhere. Each distributed round costs 2-3 fixed-latency jobs;
-    union-find on the collected pairs is linear alpha(n) and replaces
-    all of them. Above the threshold the distributed min-label /
-    pointer-jumping rounds run exactly as before — identical labels
-    either way (pinned by test). Pass ``local_threshold=0`` to force
-    the distributed path.
+    The pair list is checkpointed and counted. At most
+    ``LOCAL_CC_MAX_PAIRS`` pairs resolve with driver-side union-find:
+    the verified near-dup pair list is orders of magnitude smaller than
+    the corpus (it IS the dedup signal), so it usually fits long after
+    the corpus stopped fitting anywhere, and union-find replaces every
+    fixed-latency round with one linear pass. A larger list runs
+    distributed min-label propagation with pointer jumping
+    (:func:`_label_rounds`, the star-contraction family of Kiveris et
+    al., SoCC 2014). Both sides give identical labels (pinned in
+    tests/test_llmops.py and by the differential fuzzer).
     """
+    from pyspark.sql.types import IntegralType
+
+    p = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    for f in p.schema:
+        if not isinstance(f.dataType, IntegralType):
+            raise TypeError(
+                f"connected_components needs integral ids, got {f.dataType.simpleString()}"
+            )
     # Materialize the PAIR LIST itself before symmetrizing: the union
     # has two branches over `pairs`, and an unmaterialized expensive
     # subtree (e.g. the full MinHash candidate + verification pipeline)
     # would execute once PER BRANCH — measured ~2x the whole query's
     # cost for dedup_clusters. After the checkpoint the union is a
     # narrow transform over stored blocks.
-    p = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).localCheckpoint()
-    if local_threshold and p.count() <= local_threshold:
-        spark = p.sparkSession
-        parent: dict = {}
+    p = p.localCheckpoint()
+    if p.count() <= LOCAL_CC_MAX_PAIRS:
+        return _union_find_labels(p)
+    return _label_rounds(p)
 
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
 
-        nodes: set = set()
-        for a, b in p.collect():
-            nodes.add(a)
-            nodes.add(b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN root: the label contract is
-                # cluster_id == min reachable id, so the smaller root
-                # always wins — no rank heuristic needed (path
-                # compression alone keeps this near-linear)
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        from pyspark.sql.types import StructField, StructType
+def _union_find_labels(p: DataFrame) -> DataFrame:
+    """Driver-side union-find over the collected (a, b) pairs."""
+    from pyspark.sql.types import StructField, StructType
 
-        id_type = p.schema[0].dataType  # labels keep the ids' own type
-        return spark.createDataFrame(
-            [(n, find(n)) for n in sorted(nodes)],
-            StructType(
-                [
-                    StructField("doc_id", id_type),
-                    StructField("cluster_id", id_type),
-                ]
-            ),
-        )
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    nodes: set = set()
+    for a, b in p.collect():
+        nodes.add(a)
+        nodes.add(b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN root: the label contract is
+            # cluster_id == min reachable id, so the smaller root
+            # always wins — no rank heuristic needed (path
+            # compression alone keeps this near-linear)
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    id_type = p.schema[0].dataType  # labels keep the ids' own type
+    return p.sparkSession.createDataFrame(
+        [(n, find(n)) for n in sorted(nodes)],
+        StructType(
+            [
+                StructField("doc_id", id_type),
+                StructField("cluster_id", id_type),
+            ]
+        ),
+    )
+
+
+def _label_sum(labels: DataFrame):
+    """Sum of the label column as decimal(38,0), so billions of 64-bit
+    ids cannot overflow it."""
+    return labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+
+
+def _label_rounds(p: DataFrame) -> DataFrame:
+    """Distributed min-label propagation with pointer jumping over the
+    checkpointed (a, b) pairs.
+
+    Each node starts labeled with the min of itself and its neighbors.
+    A round takes the min of a node's label and its neighbors' labels
+    (one join on dst + groupBy src), then contracts label <- label[label]
+    (one self-join), so path lengths to the component min halve every
+    round: O(log diameter) rounds on deep chains, 2-4 on the shallow
+    graphs LSH banding emits. Each round is localCheckpointed so round
+    N does not replay rounds 1..N-1.
+
+    Labels are integers that never rise (every update is a least()), so
+    an unchanged label sum means no label moved and the labels are the
+    fixpoint: the loop stops there, after at most diameter + 1 rounds.
+    The sum costs one aggregate scan where comparing old and new labels
+    would cost a join and a count.
+    """
     sym = p.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         p.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    # Seed with round 1 already applied: label = min(self, neighbors).
-    # Saves one full join+checkpoint+convergence-check cycle.
     labels = (
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("min_nbr"))
         .select("node", F.least("node", "min_nbr").alias("label"))
         .localCheckpoint()
     )
-
-    # Convergence check: labels are monotonically non-increasing (every
-    # update is a least()), so the label SUM is strictly decreasing
-    # until the fixpoint — comparing sums round-over-round detects
-    # convergence with one aggregate scan instead of the
-    # join-old-vs-new + count a direct comparison costs. decimal(38,0)
-    # so billions of 64-bit ids cannot overflow the sum.
-    def _label_sum(lbl: DataFrame):
-        return lbl.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-
     prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
+    while True:
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        # materialized so both sides of the pointer-jump join read one
+        # result
+        hop = (
             labels.join(nbr_min, labels.node == nbr_min.src, "left")
             .select(
                 "node",
@@ -639,26 +611,21 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        if pointer_jumping:
-            # label <- label[label]: every label value is itself a node
-            # (labels are initialized from node ids), so the self-join
-            # always resolves; taking the least keeps monotonicity.
-            # Materialized above so both join sides read one result.
-            l2 = new_labels.select(
-                F.col("node").alias("_jn"), F.col("label").alias("_jl")
+        # label <- label[label]: every label value is itself a node
+        # (labels are initialized from node ids), so the self-join
+        # always resolves; taking the least keeps monotonicity.
+        l2 = hop.select(F.col("node").alias("_jn"), F.col("label").alias("_jl"))
+        labels = (
+            hop.join(l2, hop.label == l2._jn, "left")
+            .select(
+                "node",
+                F.least(F.col("label"), F.coalesce("_jl", F.col("label"))).alias(
+                    "label"
+                ),
             )
-            new_labels = (
-                new_labels.join(l2, new_labels.label == l2._jn, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce("_jl", F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
+            .localCheckpoint()
+        )
+        new_sum = _label_sum(labels)
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -679,9 +646,9 @@ def banded_hamming_pairs(
     chunks, equi-join on (band, chunk), verify with bit_count(xor).
     Pigeonhole guarantees completeness for distance <= bands - 1;
     callers wanting larger radii raise ``bands`` (recall) at the cost
-    of hotter buckets. Same plan shape as simhash_near_pairs: one
-    shuffle on (band, key), bucket sizes bounded by fingerprint
-    entropy."""
+    of hotter buckets. One shuffle on (band, key), bucket sizes
+    bounded by fingerprint entropy; :func:`simhash_near_pairs` is this
+    over the SimHash scan."""
     chunk = bits // bands
     bands_df = fp_df.select(
         F.col(id_col).alias("doc_id"),
@@ -714,8 +681,11 @@ def banded_hamming_pairs(
             F.col("r.doc_id").alias("id_b"),
             F.bit_count(F.col("l.fp").bitwiseXOR(F.col("r.fp"))).alias("hamming"),
         )
-        # same order as simhash_near_pairs (r13): hamming is determined
-        # by the pair, so filter first and dedup only true near-pairs
+        # filter BEFORE the dedup shuffle (r13): a pair sharing k bands
+        # appears k times, so the distinct is required — but hamming is
+        # determined by the pair, so filtering first is identical and
+        # the exchange carries only true near-pairs instead of every
+        # band collision (collisions >> near-pairs at corpus scale).
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -61,6 +61,11 @@ def _cosine_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(sim)
 
 
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (a zero row stays zero)."""
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+
+
 # pandas_udf construction parses the return type against the active
 # session, so build lazily on first use (module import must not require
 # a SparkContext).
@@ -68,6 +73,14 @@ _UDF_CACHE: dict[str, object] = {}
 
 
 def _udf(name: str, kernel, ret: str):
+    """The pandas_udf for ``kernel``, built once per ``name``.
+
+    A later call with the same name gets the FIRST call's kernel, so
+    this is only for kernels that their name fully determines: a fixed
+    function, or a factory whose arguments are all spelled in the name
+    (``simhash_{bits}``, ``jl_proj_{k}``). A kernel whose closure holds
+    call data (centroids, codebooks, query vectors) is built with
+    ``F.pandas_udf`` at each call instead, as :func:`ivf_lists` does."""
     if name not in _UDF_CACHE:
         _UDF_CACHE[name] = F.pandas_udf(kernel, ret)
     return _UDF_CACHE[name]
@@ -87,6 +100,30 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """The ranking contract of every top-k search here: from
+    (query_id, neighbor_id, qv, cv) candidates, drop the self pair,
+    score round(cosine, 6), rank per query by (sim desc, id asc) and
+    keep rank <= k."""
+    sims = cands.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _lcg(state: int):
+    """The module's deterministic 64-bit LCG: the endless stream of raw
+    states after ``state``. No numpy RNG state, so every caller's draws
+    are identical across runs and engines; each caller keeps its own
+    seed and maps a state to its own range."""
+    while True:
+        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
+        yield state
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -103,32 +140,14 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
     )
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(c.crossJoin(F.broadcast(q)), k)
 
 
 def _hyperplanes(dim: int = EMB_DIM, n: int = N_HYPERPLANES) -> list[list[float]]:
-    """Fixed pseudo-random unit-free hyperplanes from a deterministic
-    LCG (no numpy RNG state; identical across runs and engines)."""
-    planes: list[list[float]] = []
-    state = 0x2545F4914F6CDD1D
-    for _ in range(n):
-        row = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            # map top 32 bits to (-1, 1)
-            row.append(((state >> 32) / 2**31) - 1.0)
-        planes.append(row)
-    return planes
+    """Fixed pseudo-random unit-free hyperplanes from the module's LCG,
+    each state's top 32 bits mapped to (-1, 1)."""
+    states = _lcg(0x2545F4914F6CDD1D)
+    return [[((next(states) >> 32) / 2**31) - 1.0 for _ in range(dim)] for _ in range(n)]
 
 
 def _bucket_kernel(vecs: pd.Series) -> pd.Series:
@@ -279,17 +298,7 @@ def lsh_cosine_topk(
     # masks are distinct, so bucket0 ^ mask enumerates distinct probe
     # buckets — each (query, neighbor) pair matches at most once and a
     # dedup would only re-shuffle every scored candidate (r13).
-    sims = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(c.join(F.broadcast(q), "bucket"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -300,6 +309,22 @@ def lsh_cosine_topk(
 # production case for embedding stores; faiss's IndexIVFFlat is the
 # canonical shape).
 # ---------------------------------------------------------------------------
+
+
+def _training_sample(
+    corpus: DataFrame, vec_col: str, id_col: str, sample_size: int
+) -> np.ndarray:
+    """The bounded, deterministic training sample every trainer here
+    uses: at most ``sample_size`` vectors, chosen by a hash-order rank
+    over ids (uniform, reproducible, independent of partitioning),
+    collected and L2-normalised driver-side."""
+    sample = (
+        corpus.select(_as_double(F.col(vec_col)).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
+        .orderBy("h")
+        .limit(sample_size)
+        .select("v")
+    )
+    return _unit_rows(np.vstack([r["v"] for r in sample.collect()]).astype(np.float64))
 
 
 def train_ivf_centroids(
@@ -320,30 +345,18 @@ def train_ivf_centroids(
     indexes are trained in practice (sample -> train -> assign the full
     corpus in one linear pass).
     """
-    sample = (
-        corpus.select(_as_double(F.col(vec_col)).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h")
-        .limit(sample_size)
-        .select("v")
-    )
-    x = np.vstack([r["v"] for r in sample.collect()]).astype(np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _training_sample(corpus, vec_col, id_col, sample_size)
 
     # k-means++ seeding with the module's deterministic LCG
-    state = 0x9E3779B97F4A7C15
-    def nxt():
-        nonlocal state
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        return (state >> 11) / float(1 << 53)
-
-    cents = [x[int(nxt() * len(x))]]
+    u = ((s >> 11) / float(1 << 53) for s in _lcg(0x9E3779B97F4A7C15))
+    cents = [x[int(next(u) * len(x))]]
     for _ in range(1, n_list):
         d2 = np.min(
             [1.0 - x @ c for c in cents], axis=0
         )  # angular distance proxy on unit vectors
         d2 = np.maximum(d2, 0)
         probs = d2 / d2.sum() if d2.sum() > 0 else np.full(len(x), 1.0 / len(x))
-        cents.append(x[int(np.searchsorted(np.cumsum(probs), nxt()))])
+        cents.append(x[int(np.searchsorted(np.cumsum(probs), next(u)))])
     c = np.vstack(cents)
 
     for _ in range(iters):
@@ -362,9 +375,7 @@ def _ivf_assign_kernel_factory(centroids: list[list[float]], n_probe: int):
     def kernel(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="object")
-        m = _mat(vecs)
-        norms = np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = (m / norms) @ cmat.T
+        sims = _unit_rows(_mat(vecs)) @ cmat.T
         # top-n_probe centroid ids per row, best first
         idx = np.argsort(-sims, axis=1)[:, :n_probe]
         return pd.Series(list(idx.astype(np.int64)))
@@ -422,20 +433,26 @@ def ivf_cosine_topk(
     # most once — a dedup here would be a no-op that costs a full
     # shuffle of every scored candidate (r13: removed; was the largest
     # exchange in the query).
-    sims = (
-        c.join(F.broadcast(q), "list_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(c.join(F.broadcast(q), "list_id"), k)
 
 
 # ---- persisted IVF index ---------------------------------------------------
+
+def _write_centroids(spark: SparkSession, path: str, centroids: list[list[float]]) -> None:
+    """The index's parquet centroid sidecar, ``{path}/centroids``."""
+    spark.createDataFrame(
+        [(i, c) for i, c in enumerate(centroids)],
+        "centroid_id int, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list[list[float]]:
+    """The centroids :func:`_write_centroids` stored, in id order."""
+    return [
+        r.centroid
+        for r in spark.read.parquet(f"{path}/centroids").orderBy("centroid_id").collect()
+    ]
+
 
 def build_ivf_index(
     corpus: DataFrame,
@@ -468,10 +485,7 @@ def build_ivf_index(
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(
         f"{path}/lists"
     )
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "centroid_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, centroids)
     return centroids
 
 
@@ -491,12 +505,7 @@ def query_ivf_index(
     cosine. Identical ranking contract to ``ivf_cosine_topk`` (round-6
     cosine, id tiebreak), so the two are interchangeable — pinned by
     tests/test_ann_index.py."""
-    cents = [
-        r.centroid
-        for r in spark.read.parquet(f"{path}/centroids")
-        .orderBy("centroid_id")
-        .collect()
-    ]
+    cents = _read_centroids(spark, path)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).withColumn("list_id", F.explode(ivf_lists(F.col("qv"), cents, n_probe)))
@@ -515,19 +524,7 @@ def query_ivf_index(
     # No distinct — same argument as ivf_cosine_topk: one list per
     # corpus row, distinct probe ids per query, so the join emits each
     # (query, neighbor) pair at most once (r13).
-    sims = (
-        c.join(F.broadcast(q), "list_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(c.join(F.broadcast(q), "list_id"), k)
 
 
 def semantic_dedup(
@@ -597,7 +594,7 @@ def _jl_sign_matrix(d: int, k: int) -> "np.ndarray":
     md5('jl:<i>:<j>') (1-based, the exact formula the DuckDB oracle
     evaluates in SQL), so the projection is reproducible across runs,
     engines, and cluster sizes without shipping a matrix artifact.
-    d*k md5 calls on the driver — microseconds for any practical k."""
+    d*k md5 calls — microseconds for any practical k."""
     import hashlib
 
     m = np.empty((d, k), dtype=np.float64)
@@ -606,6 +603,25 @@ def _jl_sign_matrix(d: int, k: int) -> "np.ndarray":
             h = int(hashlib.md5(f"jl:{i}:{j}".encode()).hexdigest()[:15], 16)
             m[i - 1, j - 1] = 1.0 if h % 2 == 0 else -1.0
     return m
+
+
+def _jl_kernel_factory(k: int):
+    signs: dict[int, np.ndarray] = {}  # sign matrix per input dimension
+
+    def kernel(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype=object)
+        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        sign = signs.get(m.shape[1])
+        if sign is None:
+            sign = signs[m.shape[1]] = _jl_sign_matrix(m.shape[1], k)
+        acc = np.zeros((m.shape[0], k), dtype=np.float64)
+        for i in range(m.shape[1]):  # sequential over dims = SQL fold order
+            acc = acc + m[:, i : i + 1] * sign[i]
+        out = acc / np.sqrt(float(k))
+        return pd.Series([row for row in out])
+
+    return kernel
 
 
 def random_projection(
@@ -622,36 +638,17 @@ def random_projection(
     candidate generation can run on 4x-smaller vectors and rerank on
     the originals). Composes with build_ivf_index/cosine_topk.
 
-    Scale: one narrow scan, zero shuffles — the sign matrix rides into
-    the Arrow kernel closure (k*D doubles, KBs). The kernel folds input
-    dims SEQUENTIALLY (vectorized across rows) so every IEEE rounding
-    step matches the oracle's list_sum order — same trick as _fold_dot.
-    Returns (id, out_col array<double>) UNROUNDED; callers round for
-    cross-engine hashing.
+    Scale: one narrow scan, zero shuffles, and no Spark job at plan
+    build. The kernel builds the sign matrix for the length of the
+    vectors it sees (D*k md5 calls, once per dimension per kernel
+    instance) and folds input dims SEQUENTIALLY (vectorized across
+    rows) so every IEEE rounding step matches the oracle's list_sum
+    order — same trick as _fold_dot. Returns (id, out_col
+    array<double>) UNROUNDED; callers round for cross-engine hashing.
     """
-
-    def make_kernel(sign: "np.ndarray", kk: int):
-        def kernel(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype=object)
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-            acc = np.zeros((m.shape[0], kk), dtype=np.float64)
-            for i in range(m.shape[1]):  # sequential over dims = SQL fold order
-                acc = acc + m[:, i : i + 1] * sign[i]
-            out = acc / np.sqrt(float(kk))
-            return pd.Series([row for row in out])
-
-        return kernel
-
-    # Dimension from one row (bounded driver read; at 100 TB the dim is
-    # catalog metadata — the probe is a limit-1 scan, not a pass).
-    first = df.select(F.size(vec_col).alias("d")).limit(1).first()
-    if first is None:
-        return df.select(id_col).withColumn(out_col, F.lit(None).cast("array<double>"))
-    sign = _jl_sign_matrix(int(first["d"]), k)
     return df.select(
         id_col,
-        _udf(f"jl_proj_{k}_{int(first['d'])}", make_kernel(sign, k), "array<double>")(
+        _udf(f"jl_proj_{k}", _jl_kernel_factory(k), "array<double>")(
             _as_double(F.col(vec_col))
         ).alias(out_col),
     )
@@ -664,46 +661,103 @@ def append_to_ivf_index(
     vec_col: str = "embedding",
 ) -> int:
     """Incremental index maintenance: assign NEW vectors to the
-    EXISTING centroids and append them to their list partitions —
-    ingest-sized work (one Arrow assignment pass over the batch, an
-    append write into the touched ``list_id=k/`` directories), never a
-    retrain or corpus rescan. Centroids drift as the distribution
-    drifts; rebuild on a cadence (or when
-    :func:`plans.llmops_queries.distribution_drift_psi` alarms), append
-    between rebuilds — the standard serving pattern. Returns the number
-    of vectors appended.
+    EXISTING centroids and append them to their list partitions — one
+    Arrow assignment pass over the batch and an append write into the
+    touched ``list_id=k/`` directories, never a retrain or corpus
+    rescan. Centroids drift as the distribution drifts; rebuild on a
+    cadence (or when :func:`plans.llmops_queries.distribution_drift_psi`
+    alarms), append between rebuilds — the standard serving pattern.
+
+    The index holds ONE list row per non-NULL id (query_ivf_index's
+    candidate join emits each (query, neighbor) pair at most once
+    because of it), so a NULL id (no query could return it: the self
+    filter ``query_id != neighbor_id`` is NULL) is not appended, a
+    repeated id in the batch is appended once, and an id already in
+    the index is not appended again (a null-safe anti join). That join
+    reads the index's ``vec_id`` column across every list: a
+    column-pruned scan of 8 bytes per indexed vector, the one cost
+    here that grows with the index rather than the batch. Returns the
+    number of vectors appended.
 
     Append visibility relies on the reader listing files at query time
     (query_ivf_index reads the directory per query) — a pinned
     :mod:`sinks.manifest` snapshot deliberately would NOT see appends.
     """
     spark = new_vectors.sparkSession
-    cents = [
-        r.centroid
-        for r in spark.read.parquet(f"{path}/centroids")
-        .orderBy("centroid_id")
-        .collect()
-    ]
-    # Index contract (r13 advice): query_ivf_index relies on ONE list
-    # row per vec_id — its candidate join emits each (query, neighbor)
-    # pair at most once, which is what let r13 drop the probe-path
-    # distinct. Within-batch duplicates are collapsed here (ingest-
-    # sized); ids already in the index are the CALLER's precondition
-    # (an anti-join against the existing lists would rescan the index
-    # per append, breaking this function's O(batch) posture — callers
-    # replaying a batch must route through an exactly-once envelope,
-    # e.g. the lakehouse ingest's replay guard, not this append).
-    assigned = new_vectors.select(F.col(id_col), F.col(vec_col)).dropDuplicates(
-        [id_col]
-    ).withColumn(
+    cents = _read_centroids(spark, path)
+    indexed = spark.read.parquet(f"{path}/lists").select(F.col(id_col).alias("_indexed"))
+    fresh = (
+        new_vectors.select(F.col(id_col), F.col(vec_col))
+        .where(F.col(id_col).isNotNull())
+        .dropDuplicates([id_col])
+        .join(indexed, F.col(id_col).eqNullSafe(F.col("_indexed")), "left_anti")
+    )
+    assigned = fresh.withColumn(
         "list_id", F.element_at(ivf_lists(F.col(vec_col), cents, 1), 1)
     )
     n = assigned.count()
-    assigned.write.mode("append").partitionBy("list_id").parquet(f"{path}/lists")
+    if n:
+        assigned.write.mode("append").partitionBy("list_id").parquet(f"{path}/lists")
     return n
 
 
 # ---- product quantization (PQ) ---------------------------------------------
+
+def _subspace_codebooks(x: np.ndarray, m: int, n_codes: int, iters: int, seed: int) -> list:
+    """Per-subspace L2 k-means: each row of ``x`` splits into ``m``
+    subvectors and each subspace gets ``n_codes`` centers, k-means++
+    seeded from the module's LCG at ``seed``, then ``iters`` Lloyd
+    steps. Plain and residual PQ are this trainer on different inputs
+    (Jégou et al., TPAMI 2011). Returns an (m, n_codes, d/m) nested
+    list."""
+    d = x.shape[1]
+    if d % m:
+        raise ValueError(f"dim {d} not divisible by m={m}")
+    dsub = d // m
+    u = ((s >> 11) / float(1 << 53) for s in _lcg(seed))
+    books = []
+    for j in range(m):
+        xs = np.ascontiguousarray(x[:, j * dsub : (j + 1) * dsub])
+        cents = [xs[int(next(u) * len(xs))]]
+        for _ in range(1, n_codes):
+            d2 = np.min([((xs - c) ** 2).sum(axis=1) for c in cents], axis=0)
+            tot = d2.sum()
+            probs = d2 / tot if tot > 0 else np.full(len(xs), 1.0 / len(xs))
+            cents.append(xs[int(np.searchsorted(np.cumsum(probs), next(u)))])
+        c = np.vstack(cents)
+        for _ in range(iters):
+            dist = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+            assign = np.argmin(dist, axis=1)
+            for q in range(n_codes):
+                members = xs[assign == q]
+                if len(members):
+                    c[q] = members.mean(axis=0)
+        books.append(c.tolist())
+    return books
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(B, m) code words: per subspace, the nearest of the (m, n_codes,
+    dsub) ``books`` centers to each row's subvector."""
+    m, _n_codes, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int64)
+    for j in range(m):
+        xs = x[:, j * dsub : (j + 1) * dsub]
+        # (B, n_codes) squared distances to this subspace's codebook
+        d2 = ((xs[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _adc_lut(q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(m, n_codes) lookup table of squared distances from each
+    subvector of the full-precision ``q`` to its subspace's centers:
+    scoring a code word against ``q`` is then m lookups."""
+    m, _n_codes, dsub = books.shape
+    return np.stack(
+        [((books[j] - q[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1) for j in range(m)]
+    )
+
 
 def train_pq_codebooks(
     corpus: DataFrame,
@@ -724,67 +778,17 @@ def train_pq_codebooks(
     regardless of corpus size, LCG-seeded k-means++ — identical
     codebooks on any cluster/partitioning. Returns an (m, n_codes,
     d/m) nested list."""
-    sample = (
-        corpus.select(
-            _as_double(F.col(vec_col)).alias("v"),
-            F.xxhash64(F.col(id_col)).alias("h"),
-        )
-        .orderBy("h")
-        .limit(sample_size)
-        .select("v")
-    )
-    x = np.vstack([r["v"] for r in sample.collect()]).astype(np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-
-    state = 0x51ED2701A63C1D1F
-
-    def nxt():
-        nonlocal state
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        return (state >> 11) / float(1 << 53)
-
-    books = []
-    for j in range(m):
-        xs = np.ascontiguousarray(x[:, j * dsub : (j + 1) * dsub])
-        cents = [xs[int(nxt() * len(xs))]]
-        for _ in range(1, n_codes):
-            d2 = np.min(
-                [((xs - c) ** 2).sum(axis=1) for c in cents], axis=0
-            )
-            tot = d2.sum()
-            probs = d2 / tot if tot > 0 else np.full(len(xs), 1.0 / len(xs))
-            cents.append(xs[int(np.searchsorted(np.cumsum(probs), nxt()))])
-        c = np.vstack(cents)
-        for _ in range(iters):
-            dist = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(dist, axis=1)
-            for q in range(n_codes):
-                members = xs[assign == q]
-                if len(members):
-                    c[q] = members.mean(axis=0)
-        books.append(c.tolist())
-    return books
+    x = _training_sample(corpus, vec_col, id_col, sample_size)
+    return _subspace_codebooks(x, m, n_codes, iters, seed=0x51ED2701A63C1D1F)
 
 
 def _pq_encode_kernel_factory(codebooks: list):
     books = np.asarray(codebooks, dtype=np.float64)  # (m, n_codes, dsub)
-    m, _n_codes, dsub = books.shape
 
     def kernel(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="object")
-        x = _mat(vecs)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xs = x[:, j * dsub : (j + 1) * dsub]
-            # (B, n_codes) squared distances to this subspace's codebook
-            d2 = ((xs[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
+        codes = _pq_codes(_unit_rows(_mat(vecs)), books)
         return pd.Series([row.tolist() for row in codes])
 
     return kernel
@@ -800,11 +804,7 @@ def pq_encode(
     kernel projection, no shuffle; the compressed column is what a
     100 TB ANN serving layer stores and scans instead of raw floats
     (64-dim float32 -> 8 bytes here: 32x)."""
-    k = _udf(
-        f"pq_encode_{id(codebooks) & 0xffff}",
-        _pq_encode_kernel_factory(codebooks),
-        "array<int>",
-    )
+    k = F.pandas_udf(_pq_encode_kernel_factory(codebooks), "array<int>")
     return df.withColumn(out_col, k(F.col(vec_col)))
 
 
@@ -829,22 +829,10 @@ def pq_adc_topk(
     matters (pq_topk_reranked in the tests does exactly that)."""
     qrows = queries.select(id_col, _as_double(F.col(vec_col)).alias("v")).collect()
     books = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = books.shape
+    m = books.shape[0]
     q_ids = [r[id_col] for r in qrows]
-    qmat = np.vstack([r["v"] for r in qrows]).astype(np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    # per query: (m, n_codes) LUT of subspace squared distances
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    ((books[j] - q[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-            for q in qmat
-        ]
-    )  # (Q, m, n_codes)
+    qmat = _unit_rows(np.vstack([r["v"] for r in qrows]).astype(np.float64))
+    luts = np.stack([_adc_lut(q, books) for q in qmat])  # (Q, m, n_codes)
 
     def kernel(codes: pd.Series) -> pd.Series:
         if len(codes) == 0:
@@ -856,7 +844,7 @@ def pq_adc_topk(
             acc += luts[:, j, cm[:, j]].T
         return pd.Series([row.tolist() for row in acc])
 
-    kd = _udf(f"pq_adc_{id(codebooks) & 0xffff}", kernel, "array<double>")
+    kd = F.pandas_udf(kernel, "array<double>")
     scored = corpus.select(
         F.col(id_col).alias("neighbor_id"), kd(F.col(code_col)).alias("_d")
     ).select(
@@ -864,8 +852,6 @@ def pq_adc_topk(
         F.posexplode("_d").alias("_qi", "approx_dist"),
     )
     qmap = F.array(*[F.lit(i) for i in q_ids])
-    from pyspark.sql import Window
-
     w = Window.partitionBy("_qi").orderBy("approx_dist", "neighbor_id")
     return (
         scored.withColumn("_rk", F.row_number().over(w))
@@ -895,50 +881,21 @@ def _residual_pq_codebooks(
     so the same code budget quantizes them far more accurately than
     raw vectors. Bounded deterministic sample, driver-side Lloyd."""
     cmat = np.asarray(centroids, dtype=np.float64)
-    sample = (
-        corpus.select(
-            _as_double(F.col(vec_col)).alias("v"),
-            F.xxhash64(F.col(id_col)).alias("h"),
-        )
-        .orderBy("h")
-        .limit(sample_size)
-        .select("v")
-    )
-    x = np.vstack([r["v"] for r in sample.collect()]).astype(np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    assign = np.argmax(x @ cmat.T, axis=1)
-    resid = x - cmat[assign]
-    d = resid.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
+    x = _training_sample(corpus, vec_col, id_col, sample_size)
+    resid = x - cmat[np.argmax(x @ cmat.T, axis=1)]
+    return _subspace_codebooks(resid, m, n_codes, iters, seed=0x2545F4914F6CDD1D)
 
-    state = 0x2545F4914F6CDD1D
 
-    def nxt():
-        nonlocal state
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        return (state >> 11) / float(1 << 53)
+def _ivfpq_encode_kernel_factory(cmat: np.ndarray, bmat: np.ndarray):
+    def kernel(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:
+            return pd.Series([], dtype="object")
+        x = _unit_rows(_mat(vecs))
+        assign = np.argmax(x @ cmat.T, axis=1)
+        out = np.column_stack([assign, _pq_codes(x - cmat[assign], bmat)])
+        return pd.Series([row.tolist() for row in out])
 
-    books = []
-    for j in range(m):
-        xs = np.ascontiguousarray(resid[:, j * dsub : (j + 1) * dsub])
-        cents = [xs[int(nxt() * len(xs))]]
-        for _ in range(1, n_codes):
-            d2 = np.min([((xs - c) ** 2).sum(axis=1) for c in cents], axis=0)
-            tot = d2.sum()
-            probs = d2 / tot if tot > 0 else np.full(len(xs), 1.0 / len(xs))
-            cents.append(xs[int(np.searchsorted(np.cumsum(probs), nxt()))])
-        c = np.vstack(cents)
-        for _ in range(iters):
-            dist = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(dist, axis=1)
-            for qq in range(n_codes):
-                members = xs[a == qq]
-                if len(members):
-                    c[qq] = members.mean(axis=0)
-        books.append(c.tolist())
-    return books
+    return kernel
 
 
 def build_ivfpq_index(
@@ -965,26 +922,11 @@ def build_ivfpq_index(
     books = _residual_pq_codebooks(
         corpus, centroids, m, n_codes, vec_col, id_col
     )
-    cmat = np.asarray(centroids, dtype=np.float64)
     bmat = np.asarray(books, dtype=np.float64)
-    dsub = bmat.shape[2]
-
-    def enc_kernel(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="object")
-        x = _mat(vecs)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        assign = np.argmax(x @ cmat.T, axis=1)
-        resid = x - cmat[assign]
-        out = np.empty((len(x), m + 1), dtype=np.int64)
-        out[:, 0] = assign
-        for j in range(m):
-            xs = resid[:, j * dsub : (j + 1) * dsub]
-            d2 = ((xs[:, None, :] - bmat[j][None, :, :]) ** 2).sum(axis=2)
-            out[:, j + 1] = np.argmin(d2, axis=1)
-        return pd.Series([row.tolist() for row in out])
-
-    ek = _udf(f"ivfpq_enc_{n_list}_{m}_{n_codes}", enc_kernel, "array<bigint>")
+    ek = F.pandas_udf(
+        _ivfpq_encode_kernel_factory(np.asarray(centroids, dtype=np.float64), bmat),
+        "array<bigint>",
+    )
     assigned = corpus.select(
         F.col(id_col), F.col(vec_col), ek(F.col(vec_col)).alias("_lc")
     ).select(
@@ -994,10 +936,7 @@ def build_ivfpq_index(
         F.slice("_lc", 2, m).alias("pq_codes"),
     )
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/lists")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "centroid_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, centroids)
     spark.createDataFrame(
         [(j, q, bmat[j][q].tolist()) for j in range(m) for q in range(n_codes)],
         "subspace int, code int, center array<double>",
@@ -1023,39 +962,28 @@ def query_ivfpq_index(
     never touches the float column — ReadSchema shows codes only).
     Same ranking contract as query_ivf_index (round-6 cosine, id
     tiebreak, self excluded)."""
-    cents = [
-        r.centroid
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("centroid_id").collect()
-    ]
+    cmat = np.asarray(_read_centroids(spark, path), dtype=np.float64)
     cb = spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
     m = 1 + max(r.subspace for r in cb)
     n_codes = 1 + max(r.code for r in cb)
     bmat = np.zeros((m, n_codes, len(cb[0].center)))
     for r in cb:
         bmat[r.subspace][r.code] = r.center
-    cmat = np.asarray(cents, dtype=np.float64)
-    dsub = bmat.shape[2]
 
     qrows = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).collect()
     q_ids = [r.query_id for r in qrows]
-    qmat = np.vstack([r.qv for r in qrows]).astype(np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
+    qmat = _unit_rows(np.vstack([r.qv for r in qrows]).astype(np.float64))
     # per query: the n_probe nearest centroids
     order = np.argsort(-(qmat @ cmat.T), axis=1)[:, :n_probe]
     probed = sorted({int(l) for row in order for l in row})
     # LUTs per (query, list): residual q - c_l per subspace vs codebook
-    lut = {}
-    for qi, row in enumerate(order):
-        for l in row:
-            r = qmat[qi] - cmat[int(l)]
-            lut[(qi, int(l))] = np.stack(
-                [
-                    ((bmat[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
+    lut = {
+        (qi, int(l)): _adc_lut(qmat[qi] - cmat[int(l)], bmat)
+        for qi, row in enumerate(order)
+        for l in row
+    }
 
     n_q = len(q_ids)
 
@@ -1076,7 +1004,7 @@ def query_ivfpq_index(
             out[mask, qi] = acc
         return pd.Series([row.tolist() for row in out])
 
-    kd = _udf(f"ivfpq_adc_{id(lut) & 0xffff}", adc_kernel, "array<double>")
+    kd = F.pandas_udf(adc_kernel, "array<double>")
     scan = (
         spark.read.parquet(f"{path}/lists")
         .where(F.col("list_id").isin(probed))
@@ -1103,15 +1031,4 @@ def query_ivfpq_index(
         [(i, v.tolist()) for i, v in zip(q_ids, qmat)],
         "query_id long, qv array<double>",
     )
-    sims = (
-        short.join(raw, "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    return _rank_topk(short.join(raw, "neighbor_id").join(F.broadcast(qdf), "query_id"), k)

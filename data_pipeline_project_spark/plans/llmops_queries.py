@@ -625,19 +625,15 @@ SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster resolution: connected components over the
     verified MinHash pair graph (cluster_id = min reachable doc id —
-    the canonical keeper). Spark side is iterative min-label
-    propagation (operators/dedup.connected_components); the oracle
+    the canonical keeper). Spark side is operators/dedup.
+    connected_components (union-find on a small pair list, min-label
+    rounds with pointer jumping on a large one); the oracle
     computes the same transitive closure with a recursive CTE, so even
     the iterative-algorithm surface gets an exact value check."""
     from data_pipeline_project_spark.operators.dedup import connected_components
 
     d = load_table(spark, "documents", sf_dir)
-    # pointer_jumping: halves path lengths every round — at corpus
-    # scale a near-dup chain through edited document versions converges
-    # in O(log diameter) rounds instead of O(diameter).
-    return connected_components(
-        minhash_lsh_pairs(d, threshold=0.5), pointer_jumping=True
-    )
+    return connected_components(minhash_lsh_pairs(d, threshold=0.5))
 
 
 # ---- composite pipelines ---------------------------------------------------
@@ -1728,9 +1724,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_project_spark.operators.text import token_hash
 
     d = load_table(spark, "documents", sf_dir)
-    clusters = connected_components(
-        minhash_lsh_pairs(d, threshold=0.5), pointer_jumping=True
-    )
+    clusters = connected_components(minhash_lsh_pairs(d, threshold=0.5))
     assigned = (
         d.select("doc_id")
         .join(clusters, "doc_id", "left")
@@ -2024,9 +2018,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_project_spark.operators.text import tokens
 
     d = load_table(spark, "documents", sf_dir)
-    clusters = connected_components(
-        minhash_lsh_pairs(d, threshold=0.5), pointer_jumping=True
-    )
+    clusters = connected_components(minhash_lsh_pairs(d, threshold=0.5))
     scored = clusters.join(
         d.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")),
         "doc_id",

@@ -1533,16 +1533,15 @@ def generate_range(seed: int) -> tuple[dict, str]:
 # Family I: connected-components plans (custom iterative operator)
 # ---------------------------------------------------------------------------
 #
-# Fuzzes operators/dedup.connected_components (min-label propagation,
-# optionally with pointer jumping) against a DuckDB recursive-CTE
-# transitive closure. Graph topology is the variable that matters for
-# an iterative algorithm, so edges are derived from lineitem three
-# ways: "hash" (random-ish dense graph), "chain" (maximum-diameter
-# paths — the shape where plain propagation needs diameter rounds and
-# pointer jumping needs log(diameter)), and "star" (hub contraction).
-# Plain-propagation chains keep n small with max_iter = n + 2 (the
-# operator's convergence bound is the diameter, documented); pointer
-# jumping takes the long chains.
+# Fuzzes operators/dedup.connected_components against a DuckDB
+# recursive-CTE transitive closure, on both of its sides: the plan's
+# "side" keeps the pair-count gate (union-find) or patches
+# dedup.LOCAL_CC_MAX_PAIRS to 0 (the distributed min-label rounds with
+# pointer jumping). Graph topology is the variable that matters for an
+# iterative algorithm, so edges are derived from lineitem three ways:
+# "hash" (random-ish dense graph), "chain" (maximum-diameter paths —
+# the shape where pointer jumping needs log(diameter) rounds), and
+# "star" (hub contraction).
 
 CC_TS = None  # no timestamps in this family
 
@@ -1556,12 +1555,9 @@ class CCPlanGen:
         lg = PlanGen(seed=0)
         lg.rng, lg.joined, lg.int_cols = r, False, list(INT_COLS)
         mode = r.choice(["hash", "chain", "star"])
-        pj = r.random() < 0.5
-        if mode == "chain":
-            n = r.choice([200, 1000]) if pj else r.choice([12, 24])
-        else:
-            n = r.choice([10, 50, 200, 1000])
-        return {"mode": mode, "n": n, "pj": pj, "where": lg.pred(1)}
+        side = r.choice(["union_find", "rounds"])
+        n = r.choice([200, 1000] if mode == "chain" else [10, 50, 200, 1000])
+        return {"mode": mode, "n": n, "side": side, "where": lg.pred(1)}
 
 
 def _cc_edges_sql(plan: dict) -> str:
@@ -1592,7 +1588,11 @@ FROM reach GROUP BY node
 
 
 def render_cc_spark(plan: dict, spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_project_spark.operators.dedup import connected_components
+    """The plan's components on its side. Records in ``plan["ran"]``
+    which side actually ran, so the caller can check the patch."""
+    from unittest import mock
+
+    from data_pipeline_project_spark.operators import dedup
     from data_pipeline_project_spark.sources.tables import load_table
 
     n = plan["n"]
@@ -1608,15 +1608,12 @@ def render_cc_spark(plan: dict, spark: SparkSession, sf_dir: str) -> DataFrame:
         "star": F.col("l_orderkey") % 7,
     }[plan["mode"]]
     pairs = li.select(a.alias("id_a"), b.alias("id_b")).distinct()
-    out = connected_components(
-        pairs,
-        pointer_jumping=plan["pj"],
-        max_iter=20 if plan["pj"] else max(20, n + 2),
-        # keep BOTH resolution paths under differential fire: pj seeds
-        # take the size-gated local union-find, the rest force the
-        # distributed min-label rounds (local_threshold=0)
-        local_threshold=2_000_000 if plan["pj"] else 0,
-    )
+    gate = 0 if plan["side"] == "rounds" else dedup.LOCAL_CC_MAX_PAIRS
+    with mock.patch.object(dedup, "LOCAL_CC_MAX_PAIRS", gate), mock.patch.object(
+        dedup, "_label_rounds", wraps=dedup._label_rounds
+    ) as rounds:
+        out = dedup.connected_components(pairs)
+    plan["ran"] = "rounds" if rounds.call_count else "union_find"
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),

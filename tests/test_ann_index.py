@@ -165,6 +165,27 @@ def test_random_projection_candidate_generation_contains_true_topk(spark):
     assert len(exact & cand_set) / len(exact) >= 0.65
 
 
+def test_random_projection_plan_build_starts_no_job(spark):
+    """embedding_random_projection builds its plan without a Spark
+    job: the kernel learns the vector length from the batches it sees."""
+    from data_pipeline_project_spark.plans.llmops_queries import (
+        embedding_random_projection,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    load_table(spark, "embeddings", sf)  # the schema memo: a repeat load runs no job
+    sc = spark.sparkContext
+    group = "random-projection-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = embedding_random_projection(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 16 * load_table(spark, "embeddings", sf).count()
+
+
 def test_append_to_index_equals_rebuild(spark, tmp_path):
     """Appending a batch to a built index must serve the same top-k as
     an index REBUILT over the union with the same centroids — and the
@@ -191,6 +212,39 @@ def test_append_to_index_equals_rebuild(spark, tmp_path):
     a = _rows(query_ivf_index(spark, p1, q, k=5, n_probe=8))
     b = _rows(query_ivf_index(spark, p2, q, k=5, n_probe=8))
     assert a == b
+
+
+def test_append_skips_indexed_and_null_ids(spark, tmp_path):
+    """An append keeps the index at one list row per non-NULL id: a
+    batch that repeats indexed ids and carries a NULL id appends only
+    its new ids, and a query whose nearest vector was re-sent gets that
+    neighbour once."""
+    from data_pipeline_project_spark.operators.similarity import (
+        append_to_ivf_index,
+        build_ivf_index,
+        query_ivf_index,
+    )
+
+    emb = load_table(spark, "embeddings", SF).select("vec_id", "embedding")
+    base = emb.where(F.col("vec_id") % 5 != 0)
+    new = emb.where(F.col("vec_id") % 5 == 0)
+    batch = new.unionByName(base.where(F.col("vec_id") < 40)).unionByName(
+        emb.where(F.col("vec_id") == 7).select(
+            F.lit(None).cast("long").alias("vec_id"), "embedding"
+        )
+    )
+    path = str(tmp_path / "idx")
+    build_ivf_index(base, path, n_list=8)
+    assert append_to_ivf_index(batch, path) == new.count()
+
+    lists = spark.read.parquet(f"{path}/lists")
+    assert lists.where(F.col("vec_id").isNull()).count() == 0
+    assert lists.count() == lists.select("vec_id").distinct().count() == emb.count()
+
+    # vector 7 under an id the index does not hold: 7 is its nearest
+    probe = emb.where(F.col("vec_id") == 7).select(F.lit(-1).cast("long").alias("vec_id"), "embedding")
+    got = [r.neighbor_id for r in query_ivf_index(spark, path, probe, k=5, n_probe=8).collect()]
+    assert got.count(7) == 1 and len(set(got)) == len(got), got
 
 
 # ---- product quantization ---------------------------------------------------
@@ -270,6 +324,21 @@ def test_pq_adc_recall_and_reranked_recall(spark):
     row = coded.select("pq_codes").first()
     assert len(row.pq_codes) == 8 and all(0 <= c < 16 for c in row.pq_codes)
 
+    # a second query set over the same codebooks scores its own
+    # queries: the kernel of the first call (its LUTs) is not reused
+    from data_pipeline_project_spark.operators.similarity import _UDF_CACHE
+
+    def adc_rows(q):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.approx_dist)
+            for r in pq_adc_topk(coded, q, books, k=10).collect()
+        )
+
+    queries2 = emb.where(F.col("vec_id").between(100, 104))
+    second = adc_rows(queries2)
+    _UDF_CACHE.clear()
+    assert second == adc_rows(queries2)
+
 
 # ---- IVFPQ ------------------------------------------------------------------
 
@@ -340,3 +409,22 @@ def test_ivfpq_codes_compress_32x(spark, tmp_path):
     build_ivfpq_index(emb, path, n_list=4, m=8, n_codes=16)
     row = spark.read.parquet(f"{path}/lists").select("pq_codes").first()
     assert len(row.pq_codes) == 8 and all(0 <= c < 16 for c in row.pq_codes)
+
+    # a second index of the same shape, on the corpus under a random
+    # rotation, assigns each vector to the nearest of ITS OWN centroids
+    # (not through the first build's encoder)
+    import numpy as np
+
+    rows = emb.select("vec_id", "embedding").collect()
+    rot, _ = np.linalg.qr(np.random.default_rng(5).standard_normal((64, 64)))
+    rotated = spark.createDataFrame(
+        [(r.vec_id, (np.asarray(r.embedding, dtype=np.float64) @ rot).tolist()) for r in rows],
+        "vec_id long, embedding array<double>",
+    )
+    cents, _books = build_ivfpq_index(rotated, str(tmp_path / "rot"), n_list=4, m=8, n_codes=16)
+    stored = spark.read.parquet(str(tmp_path / "rot/lists")).select("list_id", "embedding").collect()
+    x = np.asarray([r.embedding for r in stored])
+    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    own = np.argmax(x @ np.asarray(cents).T, axis=1)
+    agree = float(np.mean(own == np.asarray([r.list_id for r in stored])))
+    assert agree >= 0.99, agree

@@ -191,26 +191,27 @@ N_CC_SEEDS = 10  # iterative operator, ~3 s/seed — keep CI bounded
 
 @pytest.mark.parametrize("seed", range(N_CC_SEEDS))
 def test_random_connected_components_parity(spark, duck, seed):
-    """Fuzzes connected_components (min-label propagation, optional
-    pointer jumping) against a recursive-CTE transitive closure over
+    """Fuzzes connected_components, union-find side and distributed
+    rounds, against a recursive-CTE transitive closure over
     hash/chain/star graph topologies."""
     plan, sql = generate_cc(seed)
     spark_pd = render_cc_spark(plan, spark, SF_SMALL).toPandas()
     oracle_pd = run_oracle(duck, sql, SF_SMALL)
+    # an empty pair list takes the union-find side whatever the gate
+    assert plan["ran"] == plan["side"] or spark_pd.empty, plan
     problems = compare(spark_pd, oracle_pd)
     assert not problems, (
-        f"cc seed {seed} ({plan['mode']}, pj={plan['pj']}, n={plan['n']}): {problems}"
+        f"cc seed {seed} ({plan['mode']}, side={plan['side']}, n={plan['n']}): {problems}"
     )
 
 
 def test_cc_generator_exercises_every_shape():
-    modes = set()
-    pjs = set()
-    for seed in range(N_CC_SEEDS * 3):
+    shapes = set()
+    for seed in range(N_CC_SEEDS):
         plan, _ = generate_cc(seed)
-        modes.add(plan["mode"])
-        pjs.add(plan["pj"])
-    assert modes == {"hash", "chain", "star"} and pjs == {True, False}
+        shapes.add((plan["mode"], plan["side"]))
+    assert {m for m, _ in shapes} == {"hash", "chain", "star"}
+    assert ("chain", "rounds") in shapes and ("chain", "union_find") in shapes
 
 
 N_RANGE_SEEDS = 20

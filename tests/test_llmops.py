@@ -88,6 +88,29 @@ def test_resize_media_shapes(spark):
         assert (r.width, r.height) == (8, 4)
 
 
+def _cc_both_sides(edges):
+    """connected_components labels from the union-find side (the
+    default pair-count gate) and from the distributed rounds (the gate
+    patched to 0 in the owning module), each with a spy asserting which
+    side ran. Returns (union_find_labels, rounds_labels, rounds)."""
+    from unittest import mock
+
+    from data_pipeline_project_spark.operators import dedup
+
+    def labels():
+        return {r.doc_id: r.cluster_id for r in dedup.connected_components(edges).collect()}
+
+    with mock.patch.object(dedup, "_label_rounds", wraps=dedup._label_rounds) as spy:
+        local = labels()
+    assert spy.call_count == 0
+    with mock.patch.object(dedup, "LOCAL_CC_MAX_PAIRS", 0), mock.patch.object(
+        dedup, "_label_rounds", wraps=dedup._label_rounds
+    ) as spy, mock.patch.object(dedup, "_label_sum", wraps=dedup._label_sum) as sums:
+        dist = labels()
+    assert spy.call_count == 1, "the patched gate did not reach the rounds"
+    return local, dist, sums.call_count - 1
+
+
 def test_connected_components_chain_and_islands(spark):
     """A 4-node chain collapses to one cluster (needs >1 propagation
     round); disjoint pairs stay separate."""
@@ -99,8 +122,8 @@ def test_connected_components_chain_and_islands(spark):
     got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
     # the size-gated local union-find (default here) and the forced
-    # distributed rounds resolve IDENTICAL labels — on the chain, with
-    # pointer jumping, and on a random graph
+    # distributed rounds resolve IDENTICAL labels — on the chain and
+    # on a random graph
     import random
 
     rng = random.Random(13)
@@ -108,21 +131,9 @@ def test_connected_components_chain_and_islands(spark):
         [(rng.randrange(60), rng.randrange(60)) for _ in range(150)],
         ["id_a", "id_b"],
     )
-    for pj in (False, True):
-        for edges in (pairs, rand_pairs):
-            local = {
-                r.doc_id: r.cluster_id
-                for r in connected_components(
-                    edges, pointer_jumping=pj
-                ).collect()
-            }
-            dist = {
-                r.doc_id: r.cluster_id
-                for r in connected_components(
-                    edges, pointer_jumping=pj, local_threshold=0
-                ).collect()
-            }
-            assert local == dist, (pj, len(edges.columns))
+    for edges in (pairs, rand_pairs):
+        local, dist, _ = _cc_both_sides(edges)
+        assert local == dist
 
 
 def test_ivf_ann_recall_vs_bruteforce(spark):
@@ -157,45 +168,24 @@ def test_ivf_ann_recall_vs_bruteforce(spark):
 
 
 def test_pointer_jumping_converges_on_deep_chain(spark):
-    """A 150-node path has diameter 149: plain min-label propagation
-    moves the min one hop per round (unconverged at max_iter=10), while
-    pointer jumping halves remaining distances every round and fully
-    converges in ~log2(149) rounds — the deep-graph scale path."""
-    from data_pipeline_project_spark.operators.dedup import connected_components
-
+    """A 150-node path has diameter 149: propagation alone moves the
+    min one hop per round, while the rounds' pointer jumping halves
+    remaining distances, so the distributed side converges to the
+    union-find labels in ~log2(149) rounds, with no round cap."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(149)], "id_a long, id_b long"
     )
-    # local_threshold=0: this test is ABOUT the distributed rounds'
-    # convergence behavior (the size-gated union-find is exact in one
-    # pass and would trivially satisfy both assertions)
-    plain = connected_components(edges, max_iter=10, local_threshold=0)
-    assert any(r.cluster_id != 0 for r in plain.collect())  # still spreading
-
-    jumped = connected_components(
-        edges, max_iter=10, pointer_jumping=True, local_threshold=0
-    )
-    rows = jumped.collect()
-    assert len(rows) == 150
-    assert all(r.cluster_id == 0 for r in rows)
+    local, dist, rounds = _cc_both_sides(edges)
+    assert dist == local == {i: 0 for i in range(150)}
+    assert rounds <= 12, rounds
 
 
-def test_pointer_jumping_matches_plain_and_union_find(spark):
-    """Both modes must produce identical labels, equal to a reference
-    union-find, on a random sparse graph."""
-    import random
-
-    from data_pipeline_project_spark.operators.dedup import connected_components
-
-    rng = random.Random(7)
-    n = 120
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
-    edges = [(a, b) for a, b in edges if a != b]
-
-    parent = list(range(n))
+def _reference_components(edges):
+    """{node: min node of its component} by a textbook union-find."""
+    parent = {}
 
     def find(x):
-        while parent[x] != x:
+        while parent.setdefault(x, x) != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
@@ -204,27 +194,43 @@ def test_pointer_jumping_matches_plain_and_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    touched = sorted({x for e in edges for x in e})
-    want = {x: find(x) for x in touched}
-    # union-find roots are not necessarily component minima; normalize
-    comp_min = {}
-    for x in touched:
-        comp_min.setdefault(find(x), x)  # touched is sorted: first is min
-    want = {x: comp_min[find(x)] for x in touched}
+    return {x: find(x) for x in parent}
 
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    plain = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(df, max_iter=40).collect()
-    }
-    jumped = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            df, max_iter=40, pointer_jumping=True
-        ).collect()
-    }
-    assert plain == want
-    assert jumped == want
+
+def test_connected_components_sides_match_union_find(spark):
+    """Both sides give labels equal to a reference union-find on a
+    random sparse graph."""
+    import random
+
+    rng = random.Random(7)
+    n = 120
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
+    edges = [(a, b) for a, b in edges if a != b]
+    want = _reference_components(edges)
+
+    local, dist, _ = _cc_both_sides(spark.createDataFrame(edges, "id_a long, id_b long"))
+    assert local == want
+    assert dist == want
+
+
+def test_connected_components_rejects_string_ids(spark):
+    """Labels are compared through an integral sum, so string ids are
+    refused from the schema on both sides, before either side runs —
+    not accepted below the pair-count gate and failing a cast above it."""
+    from unittest import mock
+
+    import pytest
+
+    from data_pipeline_project_spark.operators import dedup
+
+    pairs = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+    for gate in (dedup.LOCAL_CC_MAX_PAIRS, 0):
+        with mock.patch.object(dedup, "LOCAL_CC_MAX_PAIRS", gate), mock.patch.object(
+            dedup, "_union_find_labels", wraps=dedup._union_find_labels
+        ) as uf, mock.patch.object(dedup, "_label_rounds", wraps=dedup._label_rounds) as rounds:
+            with pytest.raises(TypeError, match="integral ids"):
+                dedup.connected_components(pairs)
+        assert uf.call_count == rounds.call_count == 0
 
 
 # ---- SemDeDup semantic dedup ----------------------------------------------
@@ -342,7 +348,7 @@ def test_leakage_safe_split_no_pair_straddles_splits(spark):
     sf = "/root/testdata/sf0.01"
     d = load_table(spark, "documents", sf)
     pairs = minhash_lsh_pairs(d, threshold=0.5).select("id_a", "id_b")
-    clusters = connected_components(pairs, pointer_jumping=True)
+    clusters = connected_components(pairs)
     assigned = (
         d.select("doc_id")
         .join(clusters, "doc_id", "left")
